@@ -149,7 +149,6 @@ class AlterTableMixin:
 
     def _replace_view(self, name: str, df: DataFrame) -> None:
         df.createOrReplaceTempView(name)
-        self._schema_cols_cache = None
         # Replacing a CATALOG table's view invalidates the session's
         # registration marker (hopspark.catalog.register), so the next
         # Engine construction re-registers the pristine catalog views —

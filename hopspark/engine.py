@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from hopspark import catalog
@@ -48,18 +49,9 @@ class Engine(AlterTableMixin):
         # rewrites canonical aggregate statements calling these into the
         # salted two-stage partial/merge plan (hopspark/uda.py)
         self._mergeable_udas: set[str] = set()
-        # lazily-built catalog knowledge for the translator's type
-        # dispatches (|| on bare boolean columns; string->int cast
-        # parse guards); invalidated on view DDL
-        self._schema_cols_cache: (
-            tuple[
-                frozenset[str],
-                frozenset[str],
-                frozenset[str],
-                frozenset[str],
-            ]
-            | None
-        ) = None
+        # the statement's catalog relations, lowercased name -> DataFrame
+        # (None: no such table or view); see _relation
+        self._relations: dict[str, DataFrame | None] = {}
         register_all(self.spark)
         if register_tables:
             catalog.register(self.spark, sf_dir)
@@ -187,9 +179,8 @@ class Engine(AlterTableMixin):
             # Spark's catalog is case-insensitive; compare lowercased so
             # IF NOT EXISTS V no-ops against an existing v (Impala
             # analyzer semantics: table/view names are case-insensitive).
-            # SHOW TABLES (one round trip) instead of listTables (r13 —
-            # listTables builds per-table metadata objects; see
-            # _schema_columns_for).
+            # SHOW TABLES (one round trip) instead of listTables, which
+            # builds a metadata object per table.
             exists = any(
                 r.tableName.lower() == name.lower() and r.isTemporary
                 for r in self.spark.sql("SHOW TABLES").collect()
@@ -201,20 +192,7 @@ class Engine(AlterTableMixin):
                 # (fe CreateViewStmt analysis) — plain CREATE must not
                 # silently replace.
                 raise ValueError(f"view already exists: {name}")
-            body = self._qualify_collection_fields(body)
-            body = self._rewrite_table_path_scans(body)
-            body = self._rewrite_subplan_derived_tables(body)
-            body = self._rewrite_relative_struct_scans(body)
-            _b, _s, _t, _d, _bi = self._schema_columns_for(body)
-            translated = translate(
-                body,
-                options=self.options,
-                bool_columns=_b,
-                string_columns=_s,
-                timestamp_columns=_t,
-                double_columns=_d,
-                bigint_columns=_bi,
-            )
+            translated = self._translate_statement(body)
             if col_list:
                 cols = [c.strip() for c in col_list.strip("()").split(",")]
                 if any(not c.isidentifier() for c in cols):
@@ -232,14 +210,12 @@ class Engine(AlterTableMixin):
             else:
                 body_sql = f"AS {body_sql}"
             self._view_defs[name.lower()] = f"CREATE VIEW {name} {body_sql}"
-            self._schema_cols_cache = None
             return self.spark.sql("SELECT 1 AS ok WHERE false")
         m = self._DROP_VIEW_RE.match(impala_sql)
         if m:
             if_exists, name = m.groups()
             dropped = self.spark.catalog.dropTempView(name)
             self._view_defs.pop(name.lower(), None)
-            self._schema_cols_cache = None
             # Dropping a CATALOG table's view invalidates the session's
             # registration marker, mirroring _replace_view: the next
             # Engine() restores the pristine catalog view (pre-r12
@@ -308,20 +284,7 @@ class Engine(AlterTableMixin):
             return self.spark.createDataFrame(
                 [(ln,) for ln in lines], "`Explain String` string"
             )
-        impala_sql = self._qualify_collection_fields(impala_sql)
-        impala_sql = self._rewrite_table_path_scans(impala_sql)
-        impala_sql = self._rewrite_subplan_derived_tables(impala_sql)
-        impala_sql = self._rewrite_relative_struct_scans(impala_sql)
-        bools, strs, tss, dbls, bigints = self._schema_columns_for(impala_sql)
-        translated = translate(
-            impala_sql,
-            options=self.options,
-            bool_columns=bools,
-            string_columns=strs,
-            timestamp_columns=tss,
-            double_columns=dbls,
-            bigint_columns=bigints,
-        )
+        translated = self._translate_statement(impala_sql)
         if self._mergeable_udas and re.search(
             r"\b(" + "|".join(map(re.escape, self._mergeable_udas)) + r")\s*\(",
             translated,
@@ -333,9 +296,44 @@ class Engine(AlterTableMixin):
             if rewritten is not None:
                 try:
                     return self.spark.sql(rewritten)
-                except Exception:  # noqa: BLE001 — fall back to whole-group
-                    pass
+                except AnalysisException:
+                    pass  # Catalyst rejects the rewrite: whole-group plan
         return self.spark.sql(translated)
+
+    def _translate_statement(self, impala_sql: str) -> str:
+        """Spark SQL for a query or view body: the four schema-aware engine
+        rewrites, then the dialect translator, typed from the relations
+        the statement reads.  Starts the statement's relation memo."""
+        self._relations = {}
+        impala_sql = self._qualify_collection_fields(impala_sql)
+        impala_sql = self._rewrite_table_path_scans(impala_sql)
+        impala_sql = self._rewrite_subplan_derived_tables(impala_sql)
+        impala_sql = self._rewrite_relative_struct_scans(impala_sql)
+        bools, strs, tss, dbls, bigints = self._schema_columns_for(impala_sql)
+        return translate(
+            impala_sql,
+            options=self.options,
+            bool_columns=bools,
+            string_columns=strs,
+            timestamp_columns=tss,
+            double_columns=dbls,
+            bigint_columns=bigints,
+        )
+
+    def _relation(self, name: str) -> DataFrame | None:
+        """The catalog table or view ``name`` (one identifier) as the
+        statement being translated reads it, or None when there is none.
+        One memo per statement, so nothing needs invalidating: existence
+        comes from ``catalog.tableExists`` (a miss raises nothing), the
+        schema from ``spark.table``."""
+        key = name.lower()
+        if key not in self._relations:
+            quoted = "`" + name.replace("`", "``") + "`"
+            self._relations[key] = (
+                self.spark.table(quoted)
+                if self.spark.catalog.tableExists(quoted) else None
+            )
+        return self._relations[key]
 
     #: words that may follow a FROM item and are therefore NOT an alias
     _FROM_TAIL_WORDS = frozenset({
@@ -424,24 +422,15 @@ class Engine(AlterTableMixin):
         if not any(len(segs) > 1 for _j, segs, _a, _e in items):
             return impala_sql
         # ---- pass 2: resolve aliases to element types --------------------
-        tables: set[str] | None = None
         alias_dtype: dict[str, tuple[str, object, tuple]] = {}
         bindings = []  # (alias_as_written, block, fields|None, kind)
         for j, segs, alias, aend in items:
-            if tables is None:
-                # SHOW TABLES: one round trip (r13; see _schema_columns_for)
-                tables = {
-                    r.tableName.lower()
-                    for r in self.spark.sql("SHOW TABLES").collect()
-                }
             root = segs[0].lower()
             blk = self._query_block_bounds(toks, j)
             if len(segs) == 1:
-                if root in tables:
-                    try:
-                        schema = self.spark.table(segs[0]).schema
-                    except Exception:  # noqa: BLE001
-                        continue
+                rel = self._relation(segs[0])
+                if rel is not None:
+                    schema = rel.schema
                     alias_dtype[alias.lower()] = ("row", schema, blk)
                     bindings.append((
                         alias, blk,
@@ -451,13 +440,11 @@ class Engine(AlterTableMixin):
                 continue
             base = alias_dtype.get(root)
             from_alias = base is not None
-            if base is None and root in tables:
-                try:
-                    base = ("row", self.spark.table(segs[0]).schema, blk)
-                except Exception:  # noqa: BLE001
-                    base = None
             if base is None:
-                continue
+                rel = self._relation(segs[0])
+                if rel is None:
+                    continue
+                base = ("row", rel.schema, blk)
             if from_alias and base[2] != blk:
                 # a subquery FROM rooted at an OUTER alias (table OR
                 # collection) is a correlated SUBPLAN target — its own
@@ -630,7 +617,6 @@ class Engine(AlterTableMixin):
         from hopspark.dialect.translate import _in_from_clause
 
         toks = tokenize(impala_sql)
-        tables: set[str] | None = None
         changed = False
         i = 0
         while i < len(toks):
@@ -658,13 +644,8 @@ class Engine(AlterTableMixin):
             if len(segs) < 2:
                 i = j + 1
                 continue
-            if tables is None:
-                # SHOW TABLES: one round trip (r13; see _schema_columns_for)
-                tables = {
-                    r.tableName.lower()
-                    for r in self.spark.sql("SHOW TABLES").collect()
-                }
-            if segs[0].lower() not in tables:
+            rel = self._relation(segs[0])
+            if rel is None:
                 i = j + 1
                 continue
             # Impala Path resolution prefers an ENCLOSING query block's
@@ -738,7 +719,9 @@ class Engine(AlterTableMixin):
 
             want_item = _mentions("item")
             want_pos = _mentions("pos")
-            res = self._table_path_subquery(segs, want_pos, want_item)
+            res = self._table_path_subquery(
+                segs, rel.schema, want_pos, want_item
+            )
             if res is None:
                 i = j + 1
                 continue
@@ -1455,15 +1438,11 @@ class Engine(AlterTableMixin):
                 i += 1
                 continue
             table = self._alias_table_name(toks, segs[0])
-            if table is None:
+            rel = None if table is None else self._relation(table)
+            if rel is None:
                 i += 1
                 continue
-            try:
-                schema = self.spark.table(table).schema
-            except Exception:  # noqa: BLE001 - not a table
-                i += 1
-                continue
-            r = self._walk_collection_path(segs[0], schema, segs[1:])
+            r = self._walk_collection_path(segs[0], rel.schema, segs[1:])
             if (
                 r is None
                 or not isinstance(r[1], T.ArrayType)
@@ -1539,19 +1518,20 @@ class Engine(AlterTableMixin):
         dropped, like the reference's scan); a field name on an
         array<struct> maps to a per-element transform; ``value`` on a map
         takes map_values.  ``root_info`` is ``("table", <name>)`` /
-        ``("collection", None)`` / ``("derived", None)`` — the
-        decorrelation-landmine guard needs the provenance."""
+        ``("collection", (<root word>, <root table or None>, <top-level
+        column>))`` / ``("derived", None)`` — the decorrelation-landmine
+        guard needs the provenance."""
         for table in candidates:
-            try:
-                schema = self.spark.table(table).schema
-            except Exception:  # noqa: BLE001 - not a table: next
+            rel = self._relation(table)
+            if rel is None:
                 continue
-            r = self._walk_collection_path(segs[0], schema, segs[1:])
+            r = self._walk_collection_path(segs[0], rel.schema, segs[1:])
             if r is not None:
                 return (*r, ("table", table))
         r = self._from_collection_alias_target(toks, segs)
         if r is not None:
-            return (*r, ("collection", None))
+            expr, dt, root = r
+            return expr, dt, ("collection", root)
         schema = self._derived_alias_schema(toks, segs[0])
         if schema is not None:
             r = self._walk_collection_path(segs[0], schema, segs[1:])
@@ -1640,7 +1620,10 @@ class Engine(AlterTableMixin):
         """segs[0] bound by a DOTTED FROM item (``<root>.<path> alias``):
         the alias names that collection's ELEMENTS (post-translate, the
         exploded column keeps the alias name), so the walk continues from
-        the element type with the bare alias as the base expression."""
+        the element type with the bare alias as the base expression.
+        Returns ``(expr, dtype, root)`` or None; ``root`` is the binding
+        item's ``(root word, root table or None when derived, top-level
+        column)``, which the decorrelation-landmine guard normalizes."""
         from hopspark.dialect.translate import _next_code, _prev_code
 
         alias = segs[0].lower()
@@ -1684,30 +1667,23 @@ class Engine(AlterTableMixin):
             rt = self._alias_table_name(toks, path[0])
             if rt:
                 root_cands.append(rt)
-            for table in root_cands:
-                try:
-                    schema = self.spark.table(table).schema
-                except Exception:  # noqa: BLE001 - not a table
+            for table in [*root_cands, None]:
+                if table is None:
+                    # root bound to a DERIVED table (e.g. the landmine
+                    # guard's own normalization wrapper): probe its schema
+                    schema = self._derived_alias_schema(toks, path[0])
+                else:
+                    rel = self._relation(table)
+                    schema = None if rel is None else rel.schema
+                if schema is None:
                     continue
                 r = self._walk_collection_path(path[0], schema, path[1:])
                 if r is None or not hasattr(r[1], "elementType"):
                     continue
-                elem = r[1].elementType
-                # stash the root binding for the decorrelation-landmine
-                # guard: (root word, resolved table, top-level column)
-                self._last_collection_root = (path[0], table, path[1])
-                return self._walk_collection_path(segs[0], elem, segs[1:])
-            # root bound to a DERIVED table (e.g. the landmine guard's
-            # own normalization wrapper): probe its schema
-            d_schema = self._derived_alias_schema(toks, path[0])
-            if d_schema is not None:
-                r = self._walk_collection_path(path[0], d_schema, path[1:])
-                if r is not None and hasattr(r[1], "elementType"):
-                    elem = r[1].elementType
-                    self._last_collection_root = (path[0], None, path[1])
-                    return self._walk_collection_path(
-                        segs[0], elem, segs[1:]
-                    )
+                r = self._walk_collection_path(
+                    segs[0], r[1].elementType, segs[1:]
+                )
+                return None if r is None else (*r, (path[0], table, path[1]))
         return None
 
     def _alias_table_name(self, toks, alias):
@@ -1952,102 +1928,57 @@ class Engine(AlterTableMixin):
         ValueError when a hazard is detected but not normalizable."""
         from hopspark.dialect.translate import untokenize
 
-        kind, table = root_info
+        kind, binding = root_info
         alias = segs[0]
-        key = (alias.lower(), (table or kind).lower())
+        key = (alias.lower(), binding.lower() if kind == "table" else kind)
         if key in guarded:
             return []
         guarded.add(key)
-        if kind == "table":
-            df = self.spark.table(table)
+        word, table, col = alias, binding, segs[1]
+        if kind == "collection":
+            # collection-alias root: normalize the ROOT binding of the
+            # dotted FROM item (deep sort covers the inner collections)
+            word, table, col = binding
+        if table is not None:
+            df = self._relation(table)
             if not self._plan_is_order_nondet(df):
                 return []
             inner = self._normalize_wrap_sql(
-                df.schema, segs[1], f"{table} __ndg"
+                df.schema, col, f"{table} __ndg"
             )
             if inner is None:
                 return []
-            # after wrapping, the alias re-resolves as a derived root —
+            # after wrapping, the word re-resolves as a derived root —
             # pre-mark it so the rescan doesn't wrap a second time
-            guarded.add((alias.lower(), "derived"))
-            spans = self._table_binding_spans(toks, table, alias)
+            guarded.add((word.lower(), "derived"))
+            spans = self._table_binding_spans(toks, table, word)
             if not spans:
                 raise ValueError(
-                    f"correlated subplan over {alias}.{segs[1]}: the "
-                    "source builds the collection with an order-"
-                    "nondeterministic aggregate and the engine could not "
-                    "locate the binding FROM item to normalize it — "
-                    "sort_array the collection when building the view"
+                    f"correlated subplan over {alias}.{segs[1]}: {table!r} "
+                    "builds the collection with an order-nondeterministic "
+                    "aggregate and the engine could not locate the FROM "
+                    f"item binding {word!r} to normalize it — sort_array "
+                    "the collection when building the view"
                 )
-            return [
-                (s0, s1, f" {inner} {alias} ") for s0, s1 in spans
-            ]
-        if kind == "derived":
-            span = self._derived_item_span(toks, alias)
-            if span is None:
-                return []
-            open_i, close_i, item_end = span
-            body = untokenize(toks[open_i + 1 : close_i])
-            if "__ndg" in body:
-                return []  # already a guard-emitted wrapper
-            try:
-                bdf = self.spark.sql(body)
-            except Exception:  # noqa: BLE001 - correlated body: the
-                return []  # enclosing scope's guard covers its sources
-            if not self._plan_is_order_nondet(bdf):
-                return []
-            inner = self._normalize_wrap_sql(
-                bdf.schema, segs[1], f"({body}) __ndg"
-            )
-            if inner is None:
-                return []
-            return [(open_i, item_end, f" {inner} {alias} ")]
-        # collection-alias root: normalize the ROOT table binding the
-        # dotted FROM item (deep sort covers the inner collections too)
-        root = getattr(self, "_last_collection_root", None)
-        if root is None:
+            return [(s0, s1, f" {inner} {word} ") for s0, s1 in spans]
+        # derived-table root — wrap the derived item itself
+        span = self._derived_item_span(toks, word)
+        if span is None:
             return []
-        root_word, root_table, top_col = root
-        if root_table is None:
-            # derived-table root — wrap the derived item itself
-            span = self._derived_item_span(toks, root_word)
-            if span is None:
-                return []
-            open_i, close_i, item_end = span
-            body = untokenize(toks[open_i + 1 : close_i])
-            if "__ndg" in body:
-                return []
-            try:
-                bdf = self.spark.sql(body)
-            except Exception:  # noqa: BLE001 - correlated body
-                return []
-            if not self._plan_is_order_nondet(bdf):
-                return []
-            inner = self._normalize_wrap_sql(
-                bdf.schema, top_col, f"({body}) __ndg"
-            )
-            if inner is None:
-                return []
-            return [(open_i, item_end, f" {inner} {root_word} ")]
-        df = self.spark.table(root_table)
-        if not self._plan_is_order_nondet(df):
+        open_i, close_i, item_end = span
+        body = untokenize(toks[open_i + 1 : close_i])
+        if "__ndg" in body:
+            return []  # already a guard-emitted wrapper
+        try:
+            bdf = self.spark.sql(body)
+        except Exception:  # noqa: BLE001 - correlated body: the
+            return []  # enclosing scope's guard covers its sources
+        if not self._plan_is_order_nondet(bdf):
             return []
-        inner = self._normalize_wrap_sql(
-            df.schema, top_col, f"{root_table} __ndg"
-        )
+        inner = self._normalize_wrap_sql(bdf.schema, col, f"({body}) __ndg")
         if inner is None:
             return []
-        guarded.add((root_word.lower(), "derived"))
-        spans = self._table_binding_spans(toks, root_table, root_word)
-        if not spans:
-            raise ValueError(
-                f"correlated subplan over collection alias {alias!r}: "
-                f"the root table {root_table!r} builds the collection "
-                "with an order-nondeterministic aggregate and the engine "
-                "could not normalize the dotted FROM item — sort_array "
-                "the collection when building the view"
-            )
-        return [(s0, s1, f" {inner} {root_word} ") for s0, s1 in spans]
+        return [(open_i, item_end, f" {inner} {word} ")]
 
     def _map_root_wrap(self, toks, segs, root_info, qpath):
         """Handle a subplan path rooted at a top-level MAP column, whose
@@ -2074,13 +2005,10 @@ class Engine(AlterTableMixin):
             return None
         kind, table = root_info
         if kind == "table":
-            try:
-                dt = {
-                    f.name.lower(): f.dataType
-                    for f in self.spark.table(table).schema.fields
-                }.get(col.lower())
-            except Exception:  # noqa: BLE001
-                return None
+            dt = {
+                f.name.lower(): f.dataType
+                for f in self._relation(table).schema.fields
+            }.get(col.lower())
             if not isinstance(dt, T.MapType):
                 return None
             spans = self._table_binding_spans(toks, table, segs[0])
@@ -2812,20 +2740,18 @@ class Engine(AlterTableMixin):
             joined = re.sub(rf"{var}\s*\.\s*item\b", var, joined)
         return joined
 
+    @staticmethod
     def _table_path_subquery(
-        self, segs: list[str], want_pos: bool, want_item: bool
+        segs: list[str], schema, want_pos: bool, want_item: bool
     ) -> tuple[str, list[str], bool] | None:
-        """Inline subquery SQL for a table-rooted collection path, or None
-        when the path does not resolve to a collection scan.  Returns
+        """Inline subquery SQL for a collection path rooted at the table
+        ``segs[0]`` (whose schema is ``schema``), or None when the path
+        does not resolve to a collection scan.  Returns
         ``(sql, star_cols, has_virtual)``: the columns the reference's
         ``*`` exposes, and whether any VIRTUAL column (pos / item-on-
         struct) was added to the subquery beyond them."""
         from pyspark.sql import types as T
 
-        try:
-            schema = self.spark.table(segs[0]).schema
-        except Exception:  # noqa: BLE001 - unreadable table: not a scan
-            return None
         cur_dt: object = schema
         cur_expr: str | None = None
         steps: list[tuple[str, str]] = []  # (kind, source expr)
@@ -2950,14 +2876,17 @@ class Engine(AlterTableMixin):
         frozenset[str] | None,
         frozenset[str] | None,
     ]:
-        """Catalog knowledge for the translator's type dispatches: the
-        set of unambiguously-BOOLEAN column names (`||` → OR, the
-        analyzer's CompoundVerticalBarExpr dispatch) and of
-        unambiguously-STRING names (string→int cast parse guard).  Only
-        computed when the statement can need it — a full catalog schema
-        scan is not free.  Column names that appear with MIXED types
-        across tables are excluded (ambiguous, like the analyzer's
-        unresolved-column path)."""
+        """Column knowledge for the translator's type dispatches, taken
+        from the relations the statement reads (catalog FROM/JOIN items at
+        any depth, and CAST-typed derived-table columns), like the
+        analyzer typing a column from the statement's table refs: the
+        names that are unambiguously BOOLEAN
+        (`||` → OR, the analyzer's CompoundVerticalBarExpr dispatch),
+        STRING (string→int cast parse guard), TIMESTAMP, DOUBLE/FLOAT and
+        BIGINT.  A name that appears with MIXED types across those
+        relations is excluded (ambiguous, like the analyzer's
+        unresolved-column path).  Only computed when the statement can
+        need it."""
         up = impala_sql.upper()
         need = (
             "||" in impala_sql
@@ -2968,64 +2897,106 @@ class Engine(AlterTableMixin):
             # arithmetic anywhere can hit the BIGINT->DECIMAL(19,0)
             # promotion (_rewrite_bigint_decimal_arith) — without this
             # trigger `SELECT big_col + 1.1 FROM t` silently skipped the
-            # schema scan and the result type depended on unrelated
+            # schema lookup and the result type depended on unrelated
             # keywords (round-8 advice, low)
             or any(ch in impala_sql for ch in "+-*/%")
         )
         if not need:
             return None, None, None, None, None
-        if self._schema_cols_cache is None:
-            # r13: one SHOW TABLES + ONE LIMIT-0 cross-join analysis
-            # instead of catalog.listTables() + a schema fetch per table.
-            # listTables materializes a full Table object (description,
-            # namespace, ...) per entry — measured 707 ms on a session
-            # with 30 temp views vs 55 ms for this shape; in a bench
-            # session the catalog accumulates fixture views, so the old
-            # scan grew with SUITE AGE, not query complexity.  Semantics
-            # identical: the concatenated field list of the cross join is
-            # exactly the per-table field union the loop built.  Fallback
-            # to the per-table loop when any single view fails analysis
-            # (the loop skips just that view).
-            seen: dict[str, set[str]] = {}
-            names = [
-                r.tableName for r in self.spark.sql("SHOW TABLES").collect()
-            ]
-            fields: list | None = []
-            if names:
-                try:
-                    fields = self.spark.sql(
-                        "SELECT * FROM "
-                        + ", ".join(f"`{n}`" for n in names)
-                        + " LIMIT 0"
-                    ).schema.fields
-                except Exception:  # noqa: BLE001 - fall back per table
-                    fields = None
-            if fields is None:
-                fields = []
-                for n in names:
-                    try:
-                        fields.extend(self.spark.table(n).schema.fields)
-                    except Exception:  # noqa: BLE001 - unreadable: skip
-                        continue
-            for f in fields:
+        names, seen = self._statement_columns(impala_sql)
+        for name in names:
+            rel = self._relation(name)
+            if rel is None:
+                continue
+            for f in rel.schema.fields:
                 seen.setdefault(f.name.lower(), set()).add(
                     f.dataType.typeName()
                 )
-            self._schema_cols_cache = (
-                frozenset(
-                    n for n, ts in seen.items() if ts == {"boolean"}
-                ),
-                frozenset(n for n, ts in seen.items() if ts == {"string"}),
-                frozenset(
-                    n for n, ts in seen.items() if ts == {"timestamp"}
-                ),
-                frozenset(
-                    n for n, ts in seen.items()
-                    if ts and ts <= {"double", "float"}
-                ),
-                frozenset(n for n, ts in seen.items() if ts == {"long"}),
-            )
-        return self._schema_cols_cache
+        return (
+            frozenset(n for n, ts in seen.items() if ts == {"boolean"}),
+            frozenset(n for n, ts in seen.items() if ts == {"string"}),
+            frozenset(n for n, ts in seen.items() if ts == {"timestamp"}),
+            frozenset(
+                n for n, ts in seen.items() if ts <= {"double", "float"}
+            ),
+            frozenset(n for n, ts in seen.items() if ts == {"long"}),
+        )
+
+    #: CAST target -> Spark typeName, for the types the dispatches read
+    _CAST_TYPE_NAMES = {
+        "BIGINT": "long", "BOOLEAN": "boolean", "DOUBLE": "double",
+        "FLOAT": "float", "STRING": "string", "TIMESTAMP": "timestamp",
+    }
+
+    @classmethod
+    def _statement_columns(
+        cls, impala_sql: str
+    ) -> tuple[set[str], dict[str, set[str]]]:
+        """What the statement itself says about the relations it reads:
+        the names of its undotted FROM/JOIN items at any depth, less its
+        own WITH names (the candidate catalog relations), and the type
+        names of the columns its derived tables and VALUES rows define as
+        ``CAST(... AS <type>) [AS] name``."""
+        if "FROM" not in impala_sql.upper():
+            return set(), {}
+        from hopspark.dialect.translate import (
+            _in_from_clause, _matching_paren, _next_code, _prev_code,
+            _span_cast_type, tokenize,
+        )
+
+        toks = tokenize(impala_sql)
+        names: set[str] = set()
+        ctes: set[str] = set()
+        typed: dict[str, set[str]] = {}
+        for i, t in enumerate(toks):
+            if t.kind == "word" and t.upper == "CAST":
+                o = _next_code(toks, i + 1)
+                if o >= len(toks) or toks[o].text != "(":
+                    continue
+                try:
+                    close = _matching_paren(toks, o)
+                except ValueError:
+                    break  # unbalanced: Spark's parser reports it
+                ty = _span_cast_type(toks, i, close)
+                a = _next_code(toks, close + 1)
+                if a < len(toks) and toks[a].upper == "AS":
+                    a = _next_code(toks, a + 1)
+                n = _next_code(toks, a + 1)
+                if (
+                    ty and a < len(toks) and toks[a].kind == "word"
+                    and toks[a].upper not in cls._QCF_KEYWORDS
+                    and (n >= len(toks) or toks[n].text in (",", ")")
+                         or toks[n].upper == "FROM")
+                ):
+                    typed.setdefault(toks[a].text.lower(), set()).add(
+                        cls._CAST_TYPE_NAMES.get(ty, ty.lower())
+                    )
+                continue
+            if t.kind == "word" and t.upper == "AS":
+                # `WITH w AS (` / `, w AS (` binds a WITH name
+                n = _next_code(toks, i + 1)
+                w = _prev_code(toks, i - 1)
+                p = _prev_code(toks, w - 1)
+                if (
+                    n < len(toks) and toks[n].text == "(" and w >= 0
+                    and p >= 0 and (toks[p].text == ","
+                                    or toks[p].upper == "WITH")
+                ):
+                    ctes.add(toks[w].text.lower())
+                continue
+            if not (
+                (t.kind == "word" and t.upper in ("FROM", "JOIN"))
+                or (t.text == "," and _in_from_clause(toks, i))
+            ):
+                continue
+            j = _next_code(toks, i + 1)
+            if j >= len(toks) or toks[j].kind not in ("word", "bquote"):
+                continue
+            n = _next_code(toks, j + 1)
+            if n < len(toks) and toks[n].text in (".", "("):
+                continue  # a collection path or a table function
+            names.add(toks[j].text.strip("`").lower())
+        return names - ctes, typed
 
     def set_option(self, name: str, value: bool) -> None:
         """SET <query option> equivalent."""

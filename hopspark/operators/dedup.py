@@ -548,9 +548,11 @@ def _simhash_from_tokens(th: DataFrame) -> DataFrame:
                 if len(lens_arr)
                 else np.zeros(0, dtype=np.int64)
             )
-            # list_flatten skips null entries, matching the fill_null(0)
-            # lengths above, so offsets stay aligned.
-            flat = np.asarray(pc.list_flatten(lst)).view(np.uint64)
+            # list_flatten skips null lists, matching the fill_null(0)
+            # lengths above, so offsets stay aligned.  It keeps null
+            # ELEMENTS: fill them so the uint64 view reads integer bits.
+            flat_arr = pc.list_flatten(lst)
+            flat = np.asarray(flat_arr.fill_null(0)).view(np.uint64)
             ends = np.cumsum(lens)
             starts = ends - lens
             sim = np.zeros(len(lens), dtype=np.int64)
@@ -571,6 +573,11 @@ def _simhash_from_tokens(th: DataFrame) -> DataFrame:
                 sim[lo:hi] = (simbits << J).sum(axis=1, dtype=np.uint64).view(
                     np.int64
                 )
+            if flat_arr.null_count:
+                # the fold's vote accumulator turns NULL at a null token
+                # and then sets no bit: such documents hash to 0
+                null_pos = np.flatnonzero(np.asarray(flat_arr.is_null()))
+                sim[np.searchsorted(ends, null_pos, side="right")] = 0
             out = pa.array(sim, mask=null_mask if null_mask.any() else None)
             yield pa.record_batch([doc, out], names=["doc_id", "simhash"])
 

@@ -231,7 +231,7 @@ def test_simhash_kernel_matches_fold(spark, sf_dir):
     """The r13 numpy mapInArrow SimHash kernel must be BIT-EQUAL to the
     Catalyst fold reference (_simhash_fold) — same integer bit-vote
     arithmetic, so any divergence is a kernel bug.  Also covers null and
-    empty token lists, which the corpus never produces."""
+    empty token lists and a null token, which the corpus never produces."""
     from pyspark.sql import functions as F
 
     from hopspark.operators import dedup as D
@@ -242,7 +242,7 @@ def test_simhash_kernel_matches_fold(spark, sf_dir):
     assert fast == slow and len(fast) > 0
 
     edge = spark.createDataFrame(
-        [(1, [7, -3]), (2, []), (3, None), (4, [0])],
+        [(1, [7, -3]), (2, []), (3, None), (4, [0]), (5, [7, None, -3])],
         "doc_id long, th array<long>",
     )
     fe = {r.doc_id: r.simhash for r in D._simhash_from_tokens(edge).collect()}

@@ -1,0 +1,105 @@
+"""Type dispatch from the statement's own relations.
+
+The translator's typed passes (BIGINT -> DECIMAL promotion, ``||`` on
+boolean columns, string -> int cast guards) type a bare column from the
+catalog relations the statement reads, the way the reference's analyzer
+types a column from the statement's table refs
+(fe/.../analysis/Analyzer.java).  A statement's values and result type
+must not change when an unrelated table or view with a conflicting column
+name is registered.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from hopspark.engine import Engine
+
+
+@pytest.fixture()
+def eng(spark, sf_dir):
+    e = Engine(spark=spark, sf_dir=sf_dir)
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW rs_t1 AS SELECT * FROM VALUES "
+        "(CAST(7 AS BIGINT), true, false), (CAST(-2 AS BIGINT), false, false)"
+        " AS t(rs_big, rs_flag, rs_flag2)"
+    )
+    yield e
+    for v in ("rs_t1", "rs_other", "rs_nested"):
+        spark.catalog.dropTempView(v)
+
+
+def _result(eng, sql):
+    df = eng.sql(sql)
+    return df.schema.simpleString(), sorted(df.collect())
+
+
+@pytest.mark.parametrize(
+    "query, schema, other",
+    [
+        # BIGINT + DECIMAL: the reference promotes BIGINT to DECIMAL(19,0)
+        (
+            "SELECT rs_big + 1.1 AS r FROM rs_t1",
+            "struct<r:decimal(21,1)>",
+            "SELECT CAST(1.5 AS DOUBLE) AS rs_big",
+        ),
+        # || on two BOOLEAN columns is OR, not string concatenation
+        (
+            "SELECT rs_flag || rs_flag2 AS r FROM rs_t1",
+            "struct<r:boolean>",
+            "SELECT 'x' AS rs_flag, 'y' AS rs_flag2",
+        ),
+    ],
+)
+def test_unrelated_view_does_not_change_result(eng, query, schema, other):
+    before = _result(eng, query)
+    assert before[0] == schema
+    eng.sql(f"CREATE VIEW rs_other AS {other}")
+    assert _result(eng, query) == before
+
+
+def test_from_less_statement_makes_one_spark_sql_call(spark, monkeypatch):
+    """A statement that reads no relation needs no catalog lookup: the
+    only Spark SQL call is the translated statement itself."""
+    eng = Engine(spark=spark, register_tables=False)
+    calls = []
+    real_sql = spark.sql
+
+    def counting_sql(*args, **kwargs):
+        calls.append(args[0])
+        return real_sql(*args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", counting_sql)
+    assert eng.sql("SELECT 1 + 2 AS s").collect()[0].s == 3
+    assert len(calls) == 1, calls
+
+
+def test_replaced_view_is_seen_by_the_next_statement(eng, spark):
+    """The relation memo lasts one statement, so a view replaced outside
+    the engine needs no invalidation."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW rs_nested AS "
+        "SELECT array(1, 2) AS arr"
+    )
+    rows = eng.sql("SELECT item FROM rs_nested.arr").collect()
+    assert sorted(r.item for r in rows) == [1, 2]
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW rs_nested AS "
+        "SELECT array(named_struct('a', 5)) AS arr"
+    )
+    assert [r.a for r in eng.sql("SELECT a FROM rs_nested.arr").collect()] == [5]
+
+
+def test_statement_columns():
+    cols = Engine._statement_columns
+    assert cols("SELECT 1 + 2") == (set(), {})
+    assert cols(
+        "WITH w AS (SELECT CAST(a AS BIGINT) AS a FROM t1), "
+        "v AS (SELECT b FROM `T2`) "
+        "SELECT * FROM w JOIN v ON true, t3 x, c.arr, range(3) r, "
+        "(VALUES((1 k, CAST('2024-01-01' AS TIMESTAMP) ts)), ((2, NULL))) d "
+        "WHERE EXISTS (SELECT CAST(1 AS INT) FROM t4)"
+    ) == (
+        {"t1", "t2", "t3", "t4"},
+        {"a": {"long"}, "ts": {"timestamp"}},
+    )

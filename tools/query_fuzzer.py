@@ -1687,8 +1687,8 @@ class SubplanGen:
     """Round-9 nested surfaces: correlated subplan subqueries over a
     relative collection (EXISTS / NOT EXISTS / scalar COUNT / derived
     table — nested-types-subplan.test idioms) and the rootless table-path
-    scan, generated as IMPALA SQL and run through the ENGINE pre-passes
-    (the schema-resolved subplan/table-path rewrites) + translate(),
+    scan, generated as IMPALA SQL and run through the engine's statement
+    translation (the schema-resolved rewrites + translate()),
     against DuckDB list-lambda twins.  The nested fixture is a per-key
     collect_list over a base table — the element MULTISET is
     deterministic even though element order is not, so only order-free
@@ -1704,7 +1704,6 @@ class SubplanGen:
     def gen(self) -> tuple[str, str]:
         from pyspark.sql import SparkSession
 
-        from hopspark.dialect.translate import translate
         from hopspark.engine import Engine
 
         r = self.rng
@@ -1917,12 +1916,7 @@ class SubplanGen:
                 f"(SELECT unnest(arr) AS u FROM t) WHERE u.x > {thr} "
                 f"ORDER BY x, y"
             )
-        spark_sql = translate(
-            eng._rewrite_subplan_derived_tables(
-                eng._rewrite_table_path_scans(imp)
-            )
-        )
-        return spark_sql, duck
+        return eng._translate_statement(imp), duck
 
 
 REGION_GENS = {
