@@ -6374,15 +6374,113 @@ def _in_from_clause(toks: list[Tok], i: int) -> bool:
             u = tk.upper
             if u == "FROM":
                 return True
-            # not ON: an ON condition is itself part of the FROM clause
-            # (a depth-0 comma after it starts a new FROM item), so the
-            # walk continues through it to the owning FROM
-            if u in (
-                "SELECT", "WHERE", "GROUP", "ORDER", "HAVING",
-                "LIMIT", "QUALIFY", "WINDOW",
-            ):
+            if u in _FROM_CLAUSE_ENDS:
                 return False
     return False
+
+
+#: clause keywords that end a FROM clause at their paren level.  Not ON:
+#: an ON condition is itself part of the FROM clause (a comma after it
+#: starts a new FROM item).
+_FROM_CLAUSE_ENDS = frozenset({
+    "SELECT", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "QUALIFY",
+    "WINDOW",
+})
+
+
+#: words that may follow a FROM item and are therefore not its alias
+_FROM_TAIL_WORDS = frozenset({
+    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET", "UNION",
+    "INTERSECT", "EXCEPT", "JOIN", "ON", "LEFT", "RIGHT", "FULL",
+    "INNER", "CROSS", "OUTER", "LATERAL", "USING", "TABLESAMPLE",
+    "WINDOW", "QUALIFY", "WHEN", "AND", "OR",
+})
+
+
+@dataclass
+class FromItem:
+    """One FROM-clause item: a dotted path ``a.b.c [AS] x`` or a derived
+    table ``( … ) [AS] x``."""
+
+    trigger: int  # the FROM / JOIN / comma token that opens the item
+    start: int  # the path's first token, or the derived item's "("
+    end: int  # the path's last token, or the derived item's ")"
+    segs: list[str]  # path segments as written; [] when derived
+    alias: str | None  # explicit alias, else the path's last segment
+    explicit: bool
+    stop: int  # the item's last token, alias included
+    block: int  # the "(" enclosing the item, -1 at statement level
+    clause: int  # the FROM token that owns the item
+
+
+def _from_items(toks: list[Tok]) -> list[FromItem]:
+    """Every FROM item of the statement, in token order, at any depth.
+    An item starts after FROM, JOIN or a FROM-clause comma.  A table
+    function (``range(3)``) is a one-segment path followed by "("."""
+    items: list[FromItem] = []
+    # per paren level: the enclosing "(", the last FROM, and whether a
+    # FROM clause is open (what _in_from_clause answers walking back)
+    opens, owners, in_from = [-1], [-1], [False]
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        if t.text == "(":
+            opens.append(i)
+            owners.append(-1)
+            in_from.append(False)
+        elif t.text == ")" and len(opens) > 1:
+            opens.pop()
+            owners.pop()
+            in_from.pop()
+        elif t.kind == "word" and t.upper in _FROM_CLAUSE_ENDS:
+            in_from[-1] = False
+        trig = t.kind == "word" and t.upper in ("FROM", "JOIN")
+        if not (trig or (t.text == "," and in_from[-1])):
+            i += 1
+            continue
+        if t.upper == "FROM":
+            owners[-1] = i
+            in_from[-1] = True
+        j = _next_code(toks, i + 1)
+        if j >= len(toks):
+            break
+        segs: list[str] = []
+        if toks[j].text == "(":
+            try:
+                end = _matching_paren(toks, j)
+            except ValueError:
+                break
+        elif toks[j].kind in ("word", "bquote"):
+            segs.append(toks[j].text)
+            end = j
+            k = _next_code(toks, j + 1)
+            while k < len(toks) and toks[k].text == ".":
+                nx = _next_code(toks, k + 1)
+                if nx >= len(toks) or toks[nx].kind not in ("word", "bquote"):
+                    break
+                segs.append(toks[nx].text)
+                end = nx
+                k = _next_code(toks, nx + 1)
+        else:
+            i += 1
+            continue
+        alias, explicit, stop = (segs[-1] if segs else None), False, end
+        a = _next_code(toks, end + 1)
+        if a < len(toks) and toks[a].kind == "word":
+            if toks[a].upper == "AS":
+                b = _next_code(toks, a + 1)
+                if b < len(toks) and toks[b].kind == "word":
+                    alias, explicit, stop = toks[b].text, True, b
+            elif toks[a].upper not in _FROM_TAIL_WORDS:
+                n = _next_code(toks, a + 1)
+                if not (n < len(toks) and toks[n].text in (".", "(")):
+                    alias, explicit, stop = toks[a].text, True, a
+        items.append(FromItem(
+            i, j, end, segs, alias, explicit, stop, opens[-1], owners[-1],
+        ))
+        # a derived item's body holds items of its own
+        i = j if not segs else stop + 1
+    return items
 
 
 _FROM_ITEM_KEYWORDS = {

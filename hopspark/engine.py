@@ -15,10 +15,15 @@ import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from hopspark import catalog
 from hopspark.ddl import AlterTableMixin
 from hopspark.dialect import translate
+from hopspark.dialect.translate import (
+    FromItem, Tok, _from_items, _is_code, _matching_paren, _next_code,
+    _prev_code, _select_clause_here, _span_cast_type, tokenize, untokenize,
+)
 from hopspark.functions import register_all
 from hopspark.session import get_spark
 
@@ -301,17 +306,23 @@ class Engine(AlterTableMixin):
         return self.spark.sql(translated)
 
     def _translate_statement(self, impala_sql: str) -> str:
-        """Spark SQL for a query or view body: the four schema-aware engine
-        rewrites, then the dialect translator, typed from the relations
-        the statement reads.  Starts the statement's relation memo."""
+        """Spark SQL for a query or view body: the three schema-aware
+        engine rewrites edit one token list in place, each handing on the
+        statement's FROM items (re-parsed only after an edit), then the
+        dialect translator runs, typed from the relations the statement
+        reads.  Starts the statement's relation memo."""
         self._relations = {}
-        impala_sql = self._qualify_collection_fields(impala_sql)
-        impala_sql = self._rewrite_table_path_scans(impala_sql)
-        impala_sql = self._rewrite_subplan_derived_tables(impala_sql)
-        impala_sql = self._rewrite_relative_struct_scans(impala_sql)
-        bools, strs, tss, dbls, bigints = self._schema_columns_for(impala_sql)
+        toks = tokenize(impala_sql)
+        items = _from_items(toks)
+        items = self._qualify_collection_fields(toks, items)
+        items = self._rewrite_table_path_scans(toks, items)
+        items = self._rewrite_subplan_derived_tables(toks, items)
+        sql = untokenize(toks)
+        bools, strs, tss, dbls, bigints = self._schema_columns_for(
+            sql, toks, items
+        )
         return translate(
-            impala_sql,
+            sql,
             options=self.options,
             bool_columns=bools,
             string_columns=strs,
@@ -335,14 +346,6 @@ class Engine(AlterTableMixin):
             )
         return self._relations[key]
 
-    #: words that may follow a FROM item and are therefore NOT an alias
-    _FROM_TAIL_WORDS = frozenset({
-        "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET", "UNION",
-        "INTERSECT", "EXCEPT", "JOIN", "ON", "LEFT", "RIGHT", "FULL",
-        "INNER", "CROSS", "OUTER", "LATERAL", "USING", "TABLESAMPLE",
-        "WINDOW", "QUALIFY",
-    })
-
     #: words never treated as bare element-field references
     _QCF_KEYWORDS = frozenset({
         "SELECT", "FROM", "WHERE", "GROUP", "BY", "ORDER", "HAVING",
@@ -355,7 +358,9 @@ class Engine(AlterTableMixin):
         "PARTITION", "ROWS", "RANGE", "VALUES", "DIV",
     })
 
-    def _qualify_collection_fields(self, impala_sql: str) -> str:
+    def _qualify_collection_fields(
+        self, toks: list[Tok], items: list[FromItem]
+    ) -> list[FromItem]:
         """Impala resolves a BARE column name against the struct element
         of any collection join item in scope — ``FROM customer c,
         c.c_orders o WHERE o_orderdate < ...`` binds ``o_orderdate`` to
@@ -364,67 +369,19 @@ class Engine(AlterTableMixin):
         is schema-blind, so qualify such refs here: a bare word that
         matches exactly ONE same-block collection alias's element field
         (and no flat table column in that block) becomes
-        ``alias.`field``."""
-        if "." not in impala_sql:
-            return impala_sql
-        from pyspark.sql import types as T
-
-        from hopspark.dialect.translate import (
-            _in_from_clause, _next_code, _prev_code, tokenize, untokenize,
-        )
-
-        toks = tokenize(impala_sql)
-        # ---- pass 1: FROM/JOIN/comma items -------------------------------
-        items = []  # (first_tok_i, segs, alias, last_item_tok_i)
-        i = 0
-        while i < len(toks):
-            t = toks[i]
-            trig = (
-                (t.kind == "word" and t.upper in ("FROM", "JOIN"))
-                or (t.text == "," and _in_from_clause(toks, i))
-            )
-            if not trig:
-                i += 1
-                continue
-            j = _next_code(toks, i + 1)
-            if j >= len(toks) or toks[j].kind != "word":
-                i += 1
-                continue
-            segs = [toks[j].text]
-            end = j
-            k = _next_code(toks, j + 1)
-            while k < len(toks) and toks[k].text == ".":
-                nx = _next_code(toks, k + 1)
-                if nx >= len(toks) or toks[nx].kind not in ("word", "bquote"):
-                    break
-                segs.append(toks[nx].text)
-                end = nx
-                k = _next_code(toks, nx + 1)
-            alias = None
-            aend = end
-            a = _next_code(toks, end + 1)
-            if a < len(toks) and toks[a].kind == "word":
-                if toks[a].upper == "AS":
-                    b = _next_code(toks, a + 1)
-                    if b < len(toks) and toks[b].kind == "word":
-                        alias, aend = toks[b].text, b
-                elif toks[a].upper not in self._FROM_TAIL_WORDS:
-                    nxt = _next_code(toks, a + 1)
-                    if not (nxt < len(toks)
-                            and toks[nxt].text in (".", "(")):
-                        alias, aend = toks[a].text, a
-            if alias is None:
-                alias = segs[-1]
-            items.append((j, segs, alias, aend))
-            i = aend + 1
+        ``alias.`field``.  Edits ``toks`` in place; returns its FROM
+        items."""
+        paths = [
+            (it.start, it.segs, it.alias, it.stop) for it in items if it.segs
+        ]
         # catalog lookups only pay off when a dotted FROM item exists —
         # flat queries (the vast majority) exit with zero schema calls
-        if not any(len(segs) > 1 for _j, segs, _a, _e in items):
-            return impala_sql
+        if not any(len(segs) > 1 for _j, segs, _a, _e in paths):
+            return items
         # ---- pass 2: resolve aliases to element types --------------------
         alias_dtype: dict[str, tuple[str, object, tuple]] = {}
         bindings = []  # (alias_as_written, block, fields|None, kind)
-        for j, segs, alias, aend in items:
+        for j, segs, alias, aend in paths:
             root = segs[0].lower()
             blk = self._query_block_bounds(toks, j)
             if len(segs) == 1:
@@ -513,9 +470,9 @@ class Engine(AlterTableMixin):
             if kind == "table" and flds
         ]
         if not elem_binds:
-            return impala_sql
+            return items
         item_idx: set[int] = set()
-        for j, segs, alias, aend in items:
+        for j, segs, alias, aend in paths:
             item_idx.update(range(j, aend + 1))
         repls = []  # (tok index, alias, field)
         oh_cache: dict = {}  # block -> (order/having spans, out aliases)
@@ -584,14 +541,16 @@ class Engine(AlterTableMixin):
                 continue
             repls.append((m, inner[0][0], inner[0][1]))
         if not repls:
-            return impala_sql
+            return items
         # plain identifiers (no backticks): the translate layer's
         # collection-join scans match word tokens only
         for m, alias, orig in reversed(repls):
             toks[m : m + 1] = tokenize(f"{alias}.{orig}")
-        return untokenize(toks)
+        return _from_items(toks)
 
-    def _rewrite_table_path_scans(self, impala_sql: str) -> str:
+    def _rewrite_table_path_scans(
+        self, toks: list[Tok], items: list[FromItem]
+    ) -> list[FromItem]:
         """Rootless collection scans — the reference idiom ``FROM
         tbl.arr_col`` (nested-types-scanner-*.test; fe Path.java
         resolution): a FROM/JOIN item whose dotted path starts at a
@@ -607,46 +566,15 @@ class Engine(AlterTableMixin):
         ``item``, map as key/value) — ``pos``, and ``item`` on struct
         elements, are virtual and exposed only when the statement
         mentions them (matching their absence from the reference's
-        ``*``)."""
-        if "." not in impala_sql:
-            return impala_sql
-        from hopspark.dialect.translate import (
-            _is_code, _next_code, _prev_code, tokenize, untokenize,
-        )
-
-        from hopspark.dialect.translate import _in_from_clause
-
-        toks = tokenize(impala_sql)
-        changed = False
-        i = 0
-        while i < len(toks):
-            t = toks[i]
-            if not (
-                (t.kind == "word" and t.upper in ("FROM", "JOIN"))
-                or (t.text == "," and _in_from_clause(toks, i))
-            ):
-                i += 1
-                continue
-            j = _next_code(toks, i + 1)
-            if j >= len(toks) or toks[j].kind != "word":
-                i += 1
-                continue
-            segs = [toks[j].text]
-            end = j
-            k = _next_code(toks, j + 1)
-            while k < len(toks) and toks[k].text == ".":
-                nx = _next_code(toks, k + 1)
-                if nx >= len(toks) or toks[nx].kind != "word":
-                    break
-                segs.append(toks[nx].text)
-                end = nx
-                k = _next_code(toks, nx + 1)
+        ``*``).  Edits ``toks`` in place; returns its FROM items."""
+        todo = list(items)
+        while todo:
+            it = todo.pop(0)
+            segs, j = it.segs, it.start
             if len(segs) < 2:
-                i = j + 1
                 continue
             rel = self._relation(segs[0])
             if rel is None:
-                i = j + 1
                 continue
             # Impala Path resolution prefers an ENCLOSING query block's
             # table alias over the catalog: a path inside a subquery
@@ -656,45 +584,19 @@ class Engine(AlterTableMixin):
             # _rewrite_subplan_derived_tables.  An aliased outer item
             # (FROM cust x) forfeits the name, so the path stays
             # rootless.
-            depth_j = sum(
-                1 if t2.text == "(" else -1 if t2.text == ")" else 0
-                for t2 in toks[:j]
-            )
-            if depth_j > 0 and self._bare_from_item_elsewhere(
-                toks, segs[0], j
+            if it.block >= 0 and any(
+                x is not it and not x.explicit
+                and [s.lower() for s in x.segs] == [segs[0].lower()]
+                for x in items
             ):
-                i = j + 1
                 continue
-            # optional [AS] alias after the path (parsed BEFORE the
-            # virtual-column scan: qualified pos/item refs must match
-            # THIS path's alias, not any column named pos/item on an
-            # unrelated joined table)
-            a = _next_code(toks, end + 1)
-            alias = None
-            consumed_to = end
-            if (
-                a < len(toks)
-                and toks[a].kind == "word"
-                and toks[a].upper == "AS"
-            ):
-                b = _next_code(toks, a + 1)
-                if b < len(toks) and toks[b].kind == "word":
-                    alias = toks[b].text
-                    consumed_to = b
-            elif (
-                a < len(toks)
-                and toks[a].kind == "word"
-                and toks[a].upper not in self._FROM_TAIL_WORDS
-            ):
-                alias = toks[a].text
-                consumed_to = a
-            if alias is None:
-                alias = segs[-1]
             # item/pos are virtual: exposed only when referenced OUTSIDE
             # this path's own segments (the path `...d.item` itself must
             # not leak `item` into SELECT *), and only when the reference
             # is unqualified or qualified by this path's alias — a
             # `x.pos` on a joined table x is NOT a mention
+            alias = it.alias
+            consumed_to = it.stop
             path_idx = set(range(j, consumed_to + 1))
 
             def _mentions(word: str) -> bool:
@@ -723,61 +625,28 @@ class Engine(AlterTableMixin):
                 segs, rel.schema, want_pos, want_item
             )
             if res is None:
-                i = j + 1
                 continue
             sub, star_cols, has_virtual = res
             if has_virtual and star_cols:
+                # a lone bare `*` expands only over a single-item FROM
+                single = toks[it.trigger].upper == "FROM" and not any(
+                    x is not it and x.clause == it.trigger for x in items
+                )
                 delta = self._expand_table_path_stars(
-                    toks, i, alias, star_cols
+                    toks, it.trigger, alias, star_cols, single
                 )
                 j += delta
                 consumed_to += delta
             repl = tokenize(f"{sub} {alias}")
             toks[j : consumed_to + 1] = repl
-            changed = True
-            i = j + len(repl)
-        return untokenize(toks) if changed else impala_sql
-
-    def _bare_from_item_elsewhere(
-        self, toks, name: str, skip_i: int
-    ) -> bool:
-        """True when ``name`` appears somewhere else in the statement as
-        an UNALIASED FROM/JOIN item (``FROM name`` / ``JOIN name`` /
-        ``, name`` with no dot and no alias after it) — i.e. its table
-        name is live as an implicit correlation alias."""
-        from hopspark.dialect.translate import _next_code, _prev_code
-
-        low = name.lower()
-        for w, t in enumerate(toks):
-            if (
-                w == skip_i
-                or t.kind != "word"
-                or t.text.lower() != low
-            ):
-                continue
-            p = _prev_code(toks, w - 1)
-            if p < 0 or not (
-                toks[p].text == ","
-                or (toks[p].kind == "word"
-                    and toks[p].upper in ("FROM", "JOIN"))
-            ):
-                continue
-            nx = _next_code(toks, w + 1)
-            if nx < len(toks):
-                t2 = toks[nx]
-                if t2.text == ".":
-                    continue  # dotted: a path, not a bare item
-                if t2.kind == "word" and t2.upper not in (
-                    self._FROM_TAIL_WORDS | {"AS"}
-                ):
-                    continue  # aliased: the name is forfeited
-                if t2.kind == "word" and t2.upper == "AS":
-                    continue  # aliased
-            return True
-        return False
+            resume = j + len(repl)
+            items = _from_items(toks)
+            todo = [x for x in items if x.trigger >= resume]
+        return items
 
     def _expand_table_path_stars(
-        self, toks, from_i: int, alias: str, star_cols: list[str]
+        self, toks, from_i: int, alias: str, star_cols: list[str],
+        single: bool,
     ) -> int:
         """The reference's ``*`` never includes the virtual columns
         (``pos``, ``item`` on struct elements) even when the statement
@@ -786,11 +655,10 @@ class Engine(AlterTableMixin):
         expanding ``alias.*`` (and a lone bare ``*`` when this path is
         the only FROM item) in the OWNING select list to the explicit
         non-virtual columns.  A bare ``*`` over a multi-item FROM is
-        left alone (expanding it needs every sibling's schema).
+        left alone (expanding it needs every sibling's schema); the
+        caller says which case holds through ``single``.
         Returns the net token-count delta (every edit sits before
         ``from_i``, so the caller shifts its saved indices by it)."""
-        from hopspark.dialect.translate import _prev_code, tokenize
-
         # owning SELECT: nearest SELECT before from_i at the same depth
         sel_i = -1
         depth = 0
@@ -807,30 +675,6 @@ class Engine(AlterTableMixin):
                 break
         if sel_i < 0:
             return 0
-        # single-item FROM? a comma/JOIN trigger always has a preceding
-        # sibling (the forward scan below would never see it), so only a
-        # literal FROM can open a single-item list; then scan forward
-        # from from_i at depth 0 until a clause keyword — a comma or
-        # JOIN means multiple items
-        single = toks[from_i].kind == "word" and toks[from_i].upper == "FROM"
-        depth = 0
-        for x in range(from_i + 1, len(toks)):
-            t = toks[x]
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-                if depth < 0:
-                    break
-            elif depth == 0:
-                if t.text == "," or (t.kind == "word" and t.upper == "JOIN"):
-                    single = False
-                    break
-                if t.kind == "word" and t.upper in (
-                    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
-                    "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-                ):
-                    break
         qcols = ", ".join(f"{alias}.`{c}`" for c in star_cols)
         delta = 0
         # walk the select list (sel_i..from_i) for stars at depth 0
@@ -875,7 +719,9 @@ class Engine(AlterTableMixin):
             x += 1
         return delta
 
-    def _rewrite_subplan_derived_tables(self, impala_sql: str) -> str:
+    def _rewrite_subplan_derived_tables(
+        self, toks: list[Tok], items: list[FromItem]
+    ) -> list[FromItem]:
         """Impala subplans — a correlated subquery over a RELATIVE
         collection (nested-types-subplan.test, planner SubplanNode):
 
@@ -894,18 +740,10 @@ class Engine(AlterTableMixin):
         for array<struct> (element fields, matching the reference's ``*``
         on a subplan), explode()/posexplode() AS item[/pos] for scalar
         arrays, explode() for maps (key/value).  Needs the live schema
-        for the generator choice, hence engine-side."""
-        if "(" not in impala_sql or "." not in impala_sql:
-            return impala_sql
-        from pyspark.sql import types as T
-
-        from hopspark.dialect.translate import (
-            Tok, _in_from_clause, _matching_paren, _next_code,
-            _prev_code, tokenize, untokenize,
-        )
-
-        toks = tokenize(impala_sql)
-        changed = False
+        for the generator choice, hence engine-side.  Edits ``toks`` in
+        place; returns its FROM items."""
+        if not any(len(x.segs) > 1 and x.block >= 0 for x in items):
+            return items
         # (alias, root) pairs already checked by the decorrelation-
         # landmine guard this statement — checked-safe or normalized
         guarded: set = set()
@@ -923,119 +761,54 @@ class Engine(AlterTableMixin):
                 close = _matching_paren(toks, o)
             except ValueError:
                 break
-            # depth-1 FROMs inside the subquery: more than one when the
+            # depth-1 FROM items of the subquery: more than one when the
             # body is a UNION of legs — take the FIRST whose target is a
             # rewritable dotted path (an already-rewritten leg's target
-            # is a paren and parses as nothing).  A correlated relative
-            # ref inside a WITH body (IMPALA-2414,
+            # is a paren).  JOIN items are not subplan targets.  A
+            # correlated relative ref inside a WITH body (IMPALA-2414,
             # nested-types-with-clause.test) is reached naturally: the
             # CTE body is itself a `( SELECT` block and rewrites in
             # place — only the ENCLOSING derived table then needs the
             # LATERAL keyword (added below).
-            depth = 0
-            from_is: list[int] = []
-            for k in range(o, close):
-                if toks[k].text == "(":
-                    depth += 1
-                elif toks[k].text == ")":
-                    depth -= 1
-                elif depth == 1 and (
-                    (toks[k].kind == "word" and toks[k].upper == "FROM")
-                    or (toks[k].text == ","
-                        and _in_from_clause(toks, k))
+            own = [x for x in items if x.block == o]
+            targets = [x for x in own if toks[x.trigger].upper != "JOIN"]
+            it = None
+            for x in targets:
+                if len(x.segs) < 2:
+                    continue
+                root_low = x.segs[0].lower()
+                if toks[x.trigger].text == "," and any(
+                    y.clause == x.clause and y.trigger < x.trigger
+                    and root_low in {
+                        (y.alias or "").lower(), "".join(y.segs[-1:]).lower()
+                    }
+                    for y in own
                 ):
-                    # comma items too: a JOIN of two relative refs inside
-                    # one subplan (nested-types-subplan.test's hash-join
-                    # row) needs EVERY item rewritten
-                    from_is.append(k)
-            segs: list[str] = []
-            from_i = end = -1
-            for fi in from_is:
-                q = _next_code(toks, fi + 1)
-                if q >= len(toks) or toks[q].kind != "word":
-                    continue
-                cand_segs = [toks[q].text]
-                cand_end = q
-                k = _next_code(toks, q + 1)
-                while k < close and toks[k].text == ".":
-                    nx = _next_code(toks, k + 1)
-                    if nx >= close or toks[nx].kind != "word":
-                        break
-                    cand_segs.append(toks[nx].text)
-                    cand_end = nx
-                    k = _next_code(toks, nx + 1)
-                if len(cand_segs) < 2:
-                    continue
-                if toks[fi].text == ",":
                     # a comma item whose root is bound by an EARLIER
                     # SIBLING of the same FROM clause is a plain
                     # collection join (the translate layer's job), not a
                     # correlated subplan target — only roots bound
                     # OUTSIDE the subquery qualify (the hash-join-inside-
                     # subplan row of nested-types-subplan.test)
-                    own_from = max(
-                        (f2 for f2 in from_is
-                         if f2 < fi and toks[f2].kind == "word"),
-                        default=-1,
-                    )
-                    bound_inside = False
-                    root_low = cand_segs[0].lower()
-                    for w2 in range(own_from + 1, fi):
-                        t2 = toks[w2]
-                        if (
-                            t2.kind == "word"
-                            and t2.text.lower() == root_low
-                        ):
-                            n2 = _next_code(toks, w2 + 1)
-                            if not (n2 < len(toks)
-                                    and toks[n2].text == "."):
-                                bound_inside = True
-                                break
-                    if bound_inside:
-                        continue
-                from_i, end, segs = fi, cand_end, cand_segs
+                    continue
+                it = x
                 break
-            if from_i < 0:
+            if it is None:
                 i += 1
                 continue
-            # resolve the qualifier: every statement position where the
-            # alias word follows another word (skipping AS) names a
-            # candidate table — the schema walk below arbitrates.  The
-            # binding FROM item may sit before (WHERE/derived-table
-            # context) or after (select-list scalar subquery) this point.
-            alias = segs[0].lower()
-            ranked: list[tuple[int, str]] = []
-            for w_i, tw in enumerate(toks):
-                if tw.kind != "word" or tw.text.lower() != alias:
-                    continue
-                p = _prev_code(toks, w_i - 1)
-                if p >= 0 and toks[p].kind == "word":
-                    cand_i = p
-                    cand = toks[p].text
-                    if cand.upper() == "AS":
-                        p2 = _prev_code(toks, p - 1)
-                        if p2 < 0 or toks[p2].kind != "word":
-                            continue
-                        cand_i = p2
-                        cand = toks[p2].text
-                    if cand.lower() != alias:
-                        # candidates that are themselves FROM/JOIN items
-                        # outrank arbitrary statement positions (a
-                        # same-named alias in an unrelated scope must not
-                        # shadow the lexically-binding table)
-                        pb = _prev_code(toks, cand_i - 1)
-                        in_from = pb >= 0 and (
-                            toks[pb].text == ","
-                            or (toks[pb].kind == "word"
-                                and toks[pb].upper in ("FROM", "JOIN"))
-                        )
-                        ranked.append((0 if in_from else 1, cand))
-            # the qualifier word itself may BE the table (unaliased:
-            # FROM customer, (SELECT * FROM customer.c_orders) v)
-            ranked.append((2, segs[0]))
-            ranked.sort(key=lambda rc: rc[0])
-            candidates = [c for _, c in ranked]
-            res = self._resolve_subplan_target(toks, segs, candidates)
+            segs, from_i = it.segs, it.trigger
+            # the qualifier names a table when a FROM item binds it as
+            # an alias (`FROM customer c`), or is the table itself
+            # (unaliased: FROM customer, (SELECT * FROM customer.c_orders)
+            # v); the schema walk below arbitrates
+            candidates = [
+                x.segs[0] for x in items
+                if x.explicit and len(x.segs) == 1
+                and x.alias.lower() == segs[0].lower()
+            ] + [segs[0]]
+            res = self._resolve_subplan_target(
+                toks, items, segs, candidates
+            )
             if res is None:
                 i += 1
                 continue
@@ -1046,12 +819,12 @@ class Engine(AlterTableMixin):
             # column (t.map_map_col.value — with-clause.test#4), wrap
             # the binding FROM item so the correlated ref is the
             # pre-computed map_entries ARRAY instead, then re-resolve.
-            mw = self._map_root_wrap(toks, segs, root_info, qpath)
+            mw = self._map_root_wrap(toks, items, segs, root_info, qpath)
             if mw is not None:
                 if mw[0] == "respan":
                     for s0, s1, w_txt in sorted(mw[1], reverse=True):
                         toks[s0:s1] = tokenize(w_txt)
-                    changed = True
+                    items = _from_items(toks)
                     i = 0
                     continue
                 qpath = mw[1]
@@ -1099,22 +872,20 @@ class Engine(AlterTableMixin):
             # the derived table would take Catalyst's array-keyed
             # decorrelated join, which Spark REJECTS for correlated
             # array-typed refs in several shapes).
-            if (
-                from_i == from_is[0]
-                and toks[first].upper != "WITH"
-                and self._subplan_lateral_agg(
-                    toks, o, close, first, from_i, qpath, coll_dt
-                )
+            # the derived FROM item this block is the body of, if any
+            derived = next((x for x in items if x.start == o), None)
+            if it is targets[0] and self._subplan_lateral_agg(
+                toks, o, close, first, it, derived, qpath, coll_dt
             ):
-                changed = True
+                items = _from_items(toks)
                 i = 0  # spans shifted: rescan
                 continue
-            # a derived table (comma FROM item) needs the LATERAL keyword;
-            # expression subqueries (EXISTS/IN/scalar) must NOT get it
+            # a derived table (comma/JOIN FROM item) needs the LATERAL
+            # keyword; expression subqueries (EXISTS/IN/scalar) must NOT
+            # get it
             p = _prev_code(toks, o - 1)
-            lateral = p >= 0 and (
-                (toks[p].text == "," and _in_from_clause(toks, p))
-                or (toks[p].kind == "word" and toks[p].upper == "JOIN")
+            lateral = (
+                derived is not None and toks[derived.trigger].upper != "FROM"
             )
             # a CTE body (`WITH w AS (<this block>)`) correlates through
             # its ENCLOSING derived table — that is where Spark wants
@@ -1140,15 +911,14 @@ class Engine(AlterTableMixin):
                             bal2 -= 1
                     if open_x < 0:
                         break
-                    pe2 = _prev_code(toks, open_x - 1)
-                    if pe2 >= 0 and (
-                        (toks[pe2].text == ","
-                         and _in_from_clause(toks, pe2))
-                        or (toks[pe2].kind == "word"
-                            and toks[pe2].upper == "JOIN")
+                    if any(
+                        x.start == open_x
+                        and toks[x.trigger].upper != "FROM"
+                        for x in items
                     ):
                         enclose_lateral = open_x
                         break
+                    pe2 = _prev_code(toks, open_x - 1)
                     if (
                         pe2 >= 0 and toks[pe2].kind == "word"
                         and toks[pe2].upper == "AS"
@@ -1158,33 +928,16 @@ class Engine(AlterTableMixin):
                     break
             # a collection alias after the path (FROM c.c_orders o)
             # becomes the exploded subquery's alias
-            sp_alias = "__sp"
-            tail_from = end + 1
-            a2 = _next_code(toks, end + 1)
-            if a2 < close and toks[a2].kind == "word":
-                u2 = toks[a2].upper
-                if u2 == "AS":
-                    a3 = _next_code(toks, a2 + 1)
-                    if a3 < close and toks[a3].kind == "word":
-                        sp_alias = toks[a3].text
-                        tail_from = a3 + 1
-                elif u2 not in self._FROM_TAIL_WORDS and u2 not in (
-                    "WHEN", "AND", "OR",
-                ):
-                    sp_alias = toks[a2].text
-                    tail_from = a2 + 1
-            t1 = None if (
-                from_i != from_is[0] or toks[first].upper == "WITH"
-            ) else self._subplan_fast_path(
-                toks, o, close, first, from_i, tail_from,
-                None if sp_alias == "__sp" else sp_alias,
-                qpath, coll_dt, p, lateral,
+            salias = it.alias if it.explicit else None
+            tail_from = it.stop + 1
+            t1 = None if it is not targets[0] else self._subplan_fast_path(
+                toks, o, close, first, from_i, tail_from, salias,
+                qpath, coll_dt, p, derived if lateral else None,
             )
             if t1 is not None:
                 start, stop, text = t1
-                repl = tokenize(text)
-                toks[start:stop] = repl
-                changed = True
+                toks[start:stop] = tokenize(text)
+                items = _from_items(toks)
                 i = start
                 continue
             # GENERAL path: Catalyst decorrelates this subquery into a
@@ -1196,12 +949,12 @@ class Engine(AlterTableMixin):
             # collection column (deep sort_array) before rewriting, or
             # raise when normalization is impossible.
             g_spans = self._nondet_guard_spans(
-                toks, segs, root_info, guarded
+                toks, items, segs, root_info, guarded
             )
             if g_spans:
                 for g0, g1, g_txt in sorted(g_spans, reverse=True):
                     toks[g0:g1] = tokenize(g_txt)
-                changed = True
+                items = _from_items(toks)
                 i = 0  # spans shifted: rescan from the top
                 continue
             sub_text = untokenize(toks[o + 1 : from_i])
@@ -1209,23 +962,23 @@ class Engine(AlterTableMixin):
             kw = " LATERAL " if lateral else " "
             joiner = "," if toks[from_i].text == "," else "FROM"
             repl = tokenize(
-                f"{kw}({sub_text}{joiner} ({gen}) {sp_alias}{tail})"
+                f"{kw}({sub_text}{joiner} ({gen}) {salias or '__sp'}{tail})"
             )
             toks[o : close + 1] = repl
             if enclose_lateral is not None:
                 toks[enclose_lateral:enclose_lateral] = [
                     Tok("synth", " LATERAL ")
                 ]
-            changed = True
+            items = _from_items(toks)
             # re-scan from the replacement start: sibling subqueries
             # inside the rewritten block may also need the rewrite; the
             # block itself no longer matches (its FROM target is a paren)
             i = o
-        return untokenize(toks) if changed else impala_sql
+        return items
 
     def _subplan_fast_path(
         self, toks, o, close, first, from_i, tail_from, salias,
-        qpath, coll_dt, p, lateral,
+        qpath, coll_dt, p, derived,
     ):
         """Zero-join lowering for the common subplan shapes.  Catalyst
         decorrelates a LATERAL / expression subquery over a relative
@@ -1240,14 +993,9 @@ class Engine(AlterTableMixin):
           * ``, (SELECT * FROM c.path [x] [WHERE pred] [LIMIT n]) v``
             -> ``LATERAL VIEW inline/explode(slice(filter(c.path,..),1,n))``
 
-        Returns (start, stop, replacement_sql) or None to take the
-        general decorrelated path."""
-        from pyspark.sql import types as T
-
-        from hopspark.dialect.translate import (
-            _is_code, _next_code, untokenize,
-        )
-
+        ``derived`` is the comma/JOIN derived FROM item whose body the
+        block is, None for an expression subquery.  Returns (start, stop,
+        replacement_sql) or None to take the general decorrelated path."""
         if isinstance(coll_dt, T.MapType):
             # a MAP subplan target exposes key/value (MapType.java);
             # lower onto map_entries() so the array machinery below
@@ -1340,7 +1088,7 @@ class Engine(AlterTableMixin):
                 p, close + 1,
                 f" coalesce(exists({qpath}, __sx -> ({cond})), false) ",
             )
-        if not lateral:
+        if derived is None:
             # scalar aggregate subquery — (SELECT COUNT(*)/SUM/MIN/MAX/
             # AVG(col) FROM c.path [WHERE pred]) — the reference's most
             # common subplan idiom after EXISTS (nested-types-subplan
@@ -1362,21 +1110,8 @@ class Engine(AlterTableMixin):
             return None
         if limit_n is not None:
             arr = f"slice({arr}, 1, {limit_n})"
-        oa = _next_code(toks, close + 1)
-        stop = close + 1
-        valias = None
-        if oa < len(toks) and toks[oa].kind == "word":
-            u = toks[oa].upper
-            if u == "AS":
-                ob = _next_code(toks, oa + 1)
-                if ob < len(toks) and toks[ob].kind == "word":
-                    valias = toks[ob].text
-                    stop = ob + 1
-            elif u not in self._FROM_TAIL_WORDS:
-                valias = toks[oa].text
-                stop = oa + 1
-        if valias is None:
-            valias = "__spv"
+        stop = derived.stop + 1
+        valias = derived.alias if derived.explicit else "__spv"
         if fields is not None:
             cols = ", ".join(f"`{f}`" for f in fields)
             text = f" LATERAL VIEW inline({arr}) {valias} AS {cols} "
@@ -1384,130 +1119,7 @@ class Engine(AlterTableMixin):
             text = f" LATERAL VIEW explode({arr}) {valias} AS item "
         return p, stop, text  # p = the comma: consumed by LATERAL VIEW
 
-    def _rewrite_relative_struct_scans(self, impala_sql: str) -> str:
-        """Schema-aware rewrite for UNALIASED relative collection items
-        whose element is a STRUCT and whose fields are referenced BARE —
-        ``FROM complextypestbl t, t.nested_struct.c.d.item`` then
-        ``select id, e, f`` (nested-types-scanner-array-materialization
-        .test).  The translate layer's blind collection join cannot know
-        the element fields, so it cannot expose them; here the alias's
-        table schema resolves the element type and the item lowers to
-        ``LATERAL VIEW inline(<collection expr>)``, whose output columns
-        ARE the struct fields."""
-        if "." not in impala_sql or "," not in impala_sql:
-            return impala_sql
-        from pyspark.sql import types as T
-
-        from hopspark.dialect.translate import (
-            _in_from_clause, _next_code, _prev_code, tokenize, untokenize,
-        )
-
-        toks = tokenize(impala_sql)
-        changed = False
-        i = 0
-        while i < len(toks):
-            t = toks[i]
-            if not (t.text == "," and _in_from_clause(toks, i)):
-                i += 1
-                continue
-            q = _next_code(toks, i + 1)
-            if q >= len(toks) or toks[q].kind != "word":
-                i += 1
-                continue
-            segs = [toks[q].text]
-            end = q
-            k = _next_code(toks, q + 1)
-            while k < len(toks) and toks[k].text == ".":
-                nx = _next_code(toks, k + 1)
-                if nx >= len(toks) or toks[nx].kind != "word":
-                    break
-                segs.append(toks[nx].text)
-                end = nx
-                k = _next_code(toks, nx + 1)
-            if len(segs) < 3:  # needs at least alias.field.item depth
-                i += 1
-                continue
-            # must be UNALIASED (an explicit alias goes through the
-            # translate-layer join, which handles qualified refs)
-            a = _next_code(toks, end + 1)
-            if (
-                a < len(toks)
-                and toks[a].kind == "word"
-                and toks[a].upper not in self._FROM_TAIL_WORDS
-            ):
-                i += 1
-                continue
-            table = self._alias_table_name(toks, segs[0])
-            rel = None if table is None else self._relation(table)
-            if rel is None:
-                i += 1
-                continue
-            r = self._walk_collection_path(segs[0], rel.schema, segs[1:])
-            if (
-                r is None
-                or not isinstance(r[1], T.ArrayType)
-                or not isinstance(r[1].elementType, T.StructType)
-            ):
-                i += 1
-                continue
-            expr, dt = r
-            fnames = {f.name.lower() for f in dt.elementType.fields}
-            # bare refs to element fields anywhere outside the path?
-            path_idx = set(range(q, end + 1))
-            has_bare = False
-            uses_pos = False
-            for m, tk in enumerate(toks):
-                if tk.kind != "word" or m in path_idx:
-                    continue
-                lo = tk.text.lower()
-                pv = _prev_code(toks, m - 1)
-                nv = _next_code(toks, m + 1)
-                if pv >= 0 and toks[pv].text == ".":
-                    continue
-                if nv < len(toks) and toks[nv].text in (".", "("):
-                    continue
-                if lo in fnames:
-                    has_bare = True
-                if lo == "pos":
-                    uses_pos = True
-            if not has_bare or uses_pos:
-                i += 1
-                continue
-            # Spark's grammar puts lateral views AFTER all join relations:
-            # when more FROM items follow this one (`FROM t, t.s.c.d.item,
-            # u`), splicing LATERAL VIEW in place is a parse error — find
-            # the clause end and splice there instead (the explode
-            # commutes with the later cross joins)
-            ins_at = len(toks)
-            d2 = 0
-            for x in range(end + 1, len(toks)):
-                t2 = toks[x]
-                if t2.text == "(":
-                    d2 += 1
-                elif t2.text == ")":
-                    d2 -= 1
-                    if d2 < 0:
-                        ins_at = x
-                        break
-                elif d2 == 0 and t2.kind == "word" and t2.upper in (
-                    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
-                    "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-                ):
-                    ins_at = x
-                    break
-            repl = tokenize(
-                f" LATERAL VIEW inline({expr}) __cji{q} "
-            )
-            del toks[i : end + 1]
-            ins_at -= end + 1 - i
-            toks[ins_at:ins_at] = repl
-            changed = True
-            # stay at i: the next FROM item (if any) now starts here and
-            # may itself be a relative path; the spliced LATERAL VIEW
-            # lies beyond ins_at and is skipped naturally
-        return untokenize(toks) if changed else impala_sql
-
-    def _resolve_subplan_target(self, toks, segs, candidates):
+    def _resolve_subplan_target(self, toks, items, segs, candidates):
         """Resolve a subquery FROM target path to ``(collection_expr_sql,
         collection_dtype, root_info)`` or None.  Roots, in order: a
         candidate TABLE (or temp view); a COLLECTION ALIAS bound by an
@@ -1528,11 +1140,11 @@ class Engine(AlterTableMixin):
             r = self._walk_collection_path(segs[0], rel.schema, segs[1:])
             if r is not None:
                 return (*r, ("table", table))
-        r = self._from_collection_alias_target(toks, segs)
+        r = self._from_collection_alias_target(toks, items, segs)
         if r is not None:
             expr, dt, root = r
             return expr, dt, ("collection", root)
-        schema = self._derived_alias_schema(toks, segs[0])
+        schema = self._derived_alias_schema(toks, items, segs[0])
         if schema is not None:
             r = self._walk_collection_path(segs[0], schema, segs[1:])
             if r is not None:
@@ -1544,8 +1156,6 @@ class Engine(AlterTableMixin):
         """Walk ``rest`` from ``(base_expr, base_dt)`` per the reference's
         Path resolution; returns (expr, dtype) when the terminal is a
         collection, else None."""
-        from pyspark.sql import types as T
-
         cur_expr, cur_dt = base_expr, base_dt
         for idx, seg in enumerate(rest):
             sl = seg.lower()
@@ -1616,62 +1226,30 @@ class Engine(AlterTableMixin):
             return cur_expr, cur_dt
         return None
 
-    def _from_collection_alias_target(self, toks, segs):
-        """segs[0] bound by a DOTTED FROM item (``<root>.<path> alias``):
-        the alias names that collection's ELEMENTS (post-translate, the
+    def _from_collection_alias_target(self, toks, items, segs):
+        """segs[0] bound by a DOTTED FROM item (``<root>.<path> [alias]``;
+        without an alias the trailing path segment doubles as it): the
+        alias names that collection's ELEMENTS (post-translate, the
         exploded column keeps the alias name), so the walk continues from
         the element type with the bare alias as the base expression.
         Returns ``(expr, dtype, root)`` or None; ``root`` is the binding
         item's ``(root word, root table or None when derived, top-level
         column)``, which the decorrelation-landmine guard normalizes."""
-        from hopspark.dialect.translate import _next_code, _prev_code
-
         alias = segs[0].lower()
-        for w_i, tw in enumerate(toks):
-            if tw.kind != "word" or tw.text.lower() != alias:
+        for item in items:
+            path = item.segs
+            if len(path) < 2 or item.alias.lower() != alias:
                 continue
-            p1 = _prev_code(toks, w_i - 1)
-            if p1 >= 0 and toks[p1].text == ".":
-                # IMPLICIT alias: the binding item's trailing path segment
-                # doubles as the alias (`FROM t.nested_struct.c.d` binds
-                # d) — but only when this occurrence ENDS a FROM item
-                nx = _next_code(toks, w_i + 1)
-                if nx < len(toks) and (
-                    toks[nx].text in (".", "(")
-                    or (toks[nx].kind == "word"
-                        and toks[nx].upper not in self._FROM_TAIL_WORDS)
-                ):
-                    continue
-                p1 = w_i  # the path includes this segment
-            elif p1 < 0 or toks[p1].kind != "word":
-                continue
-            # walk the dotted path backwards to its root word
-            path = [toks[p1].text]
-            k = p1
-            while True:
-                d = _prev_code(toks, k - 1)
-                if d < 0 or toks[d].text != ".":
-                    break
-                w2 = _prev_code(toks, d - 1)
-                if w2 < 0 or toks[w2].kind != "word":
-                    break
-                path.insert(0, toks[w2].text)
-                k = w2
-            if len(path) < 2:
-                continue
-            # root must resolve through a table / table alias: reuse the
-            # candidate machinery one level up (tables only — chained
-            # collection-alias roots recurse naturally via this method)
-            root_cands = [path[0]]
-            # the root may itself be an alias of a table: find its table
-            rt = self._alias_table_name(toks, path[0])
-            if rt:
-                root_cands.append(rt)
+            # the root word is a table, or an alias a FROM item binds to
+            # one; failing both, a DERIVED table (e.g. the landmine
+            # guard's own normalization wrapper) whose schema is probed
+            root_cands = [path[0]] + [
+                x.segs[0] for x in items
+                if len(x.segs) == 1 and x.alias.lower() == path[0].lower()
+            ]
             for table in [*root_cands, None]:
                 if table is None:
-                    # root bound to a DERIVED table (e.g. the landmine
-                    # guard's own normalization wrapper): probe its schema
-                    schema = self._derived_alias_schema(toks, path[0])
+                    schema = self._derived_alias_schema(toks, items, path[0])
                 else:
                     rel = self._relation(table)
                     schema = None if rel is None else rel.schema
@@ -1686,60 +1264,28 @@ class Engine(AlterTableMixin):
                 return None if r is None else (*r, (path[0], table, path[1]))
         return None
 
-    def _alias_table_name(self, toks, alias):
-        """Table name bound to ``alias`` in a FROM/JOIN item, or None."""
-        from hopspark.dialect.translate import _prev_code
-
-        for w_i, tw in enumerate(toks):
-            if tw.kind != "word" or tw.text.lower() != alias.lower():
-                continue
-            p = _prev_code(toks, w_i - 1)
-            if p < 0 or toks[p].kind != "word":
-                continue
-            cand = toks[p].text
-            if cand.upper() == "AS":
-                p2 = _prev_code(toks, p - 1)
-                if p2 < 0 or toks[p2].kind != "word":
-                    continue
-                cand = toks[p2].text
-            if cand.lower() != alias.lower():
-                return cand
-        return None
-
-    def _derived_alias_schema(self, toks, alias):
+    def _derived_alias_schema(self, toks, items, alias):
         """Schema of the derived table bound to ``alias`` (``(...) alias``),
         via an analysis-only probe.  None when the alias is not a derived
         table or its body does not analyze standalone (correlated)."""
-        from hopspark.dialect.translate import (
-            _next_code, _prev_code, untokenize,
-        )
+        item = self._derived_item(items, alias)
+        if item is None:
+            return None
+        try:
+            return self.spark.sql(
+                untokenize(toks[item.start + 1 : item.end])
+            ).schema
+        except AnalysisException:  # correlated: not standalone SQL
+            return None
 
-        for w_i, tw in enumerate(toks):
-            if tw.kind != "word" or tw.text.lower() != alias.lower():
-                continue
-            p = _prev_code(toks, w_i - 1)
-            if p >= 0 and toks[p].kind == "word" and toks[p].upper == "AS":
-                p = _prev_code(toks, p - 1)
-            if p < 0 or toks[p].text != ")":
-                continue
-            depth = 0
-            open_i = None
-            for k in range(p, -1, -1):
-                if toks[k].text == ")":
-                    depth += 1
-                elif toks[k].text == "(":
-                    depth -= 1
-                    if depth == 0:
-                        open_i = k
-                        break
-            if open_i is None:
-                continue
-            body = untokenize(toks[open_i + 1 : p])
-            try:
-                return self.spark.sql(body).schema
-            except Exception:  # noqa: BLE001 - not standalone SQL
-                return None
-        return None
+    @staticmethod
+    def _derived_item(items, alias):
+        """The derived-table FROM item ``( body ) [AS] alias``, or None."""
+        return next(
+            (x for x in items if not x.segs and x.alias
+             and x.alias.lower() == alias.lower()),
+            None,
+        )
 
     # --- nondeterministic-decorrelation landmine guard (round 12) -----
     #
@@ -1783,8 +1329,6 @@ class Engine(AlterTableMixin):
 
     @classmethod
     def _dtype_has_array(cls, dt) -> bool:
-        from pyspark.sql import types as T
-
         if isinstance(dt, T.ArrayType):
             return True
         if isinstance(dt, T.StructType):
@@ -1799,8 +1343,6 @@ class Engine(AlterTableMixin):
         """A MapType reachable under an ArrayType element makes the array
         unsortable (Spark ordering is undefined for maps) — returns the
         offending type string, or None when deep sort_array is legal."""
-        from pyspark.sql import types as T
-
         if isinstance(dt, T.MapType):
             if under_array:
                 return dt.simpleString()
@@ -1822,8 +1364,6 @@ class Engine(AlterTableMixin):
         render byte-equal values: every array level is sort_array()ed
         innermost-first.  Returns ``expr`` unchanged when the type holds
         no arrays."""
-        from pyspark.sql import types as T
-
         if isinstance(dt, T.ArrayType):
             var = f"__ds{depth}"
             inner = cls._deep_sort_sql(var, dt.elementType, depth + 1)
@@ -1846,48 +1386,15 @@ class Engine(AlterTableMixin):
         return expr
 
     @staticmethod
-    def _table_binding_spans(toks, table, alias):
-        """Token spans of every FROM/JOIN item binding ``alias`` to
-        ``table`` (``FROM table [AS] alias`` / unaliased ``FROM table``
-        when alias == table) — the spans the landmine guard wraps."""
-        from hopspark.dialect.translate import (
-            _in_from_clause, _next_code, _prev_code,
-        )
-
-        spans = []
+    def _table_binding_spans(items, table, alias):
+        """Token spans of every FROM item binding ``alias`` to ``table``
+        (``FROM table [AS] alias`` / unaliased ``FROM table`` when alias
+        == table) — the spans the landmine guard wraps."""
         tl, al = table.lower(), alias.lower()
-        for w_i, tw in enumerate(toks):
-            if tw.kind != "word" or tw.text.lower() != tl:
-                continue
-            p = _prev_code(toks, w_i - 1)
-            in_from = p >= 0 and (
-                (toks[p].kind == "word"
-                 and toks[p].upper in ("FROM", "JOIN"))
-                or (toks[p].text == "," and _in_from_clause(toks, p))
-            )
-            if not in_from:
-                continue
-            n1 = _next_code(toks, w_i + 1)
-            if tl == al:
-                # unaliased: the item must end here (a trailing alias
-                # word or dotted path binds something else)
-                if n1 < len(toks):
-                    nt = toks[n1]
-                    if nt.text == "." or (
-                        nt.kind == "word"
-                        and (nt.upper == "AS"
-                             or nt.upper not in Engine._FROM_TAIL_WORDS)
-                    ):
-                        continue
-                spans.append((w_i, w_i + 1))
-                continue
-            if (n1 < len(toks) and toks[n1].kind == "word"
-                    and toks[n1].upper == "AS"):
-                n1 = _next_code(toks, n1 + 1)
-            if (n1 < len(toks) and toks[n1].kind == "word"
-                    and toks[n1].text.lower() == al):
-                spans.append((w_i, n1 + 1))
-        return spans
+        return [
+            (x.start, x.stop + 1) for x in items
+            if [sg.lower() for sg in x.segs] == [tl] and x.alias.lower() == al
+        ]
 
     def _normalize_wrap_sql(self, schema, top_col, source_sql):
         """``(SELECT ..cols.., <deep sort> AS top_col FROM source)`` —
@@ -1921,13 +1428,11 @@ class Engine(AlterTableMixin):
                 cols.append(f"`{f.name}`")
         return f"(SELECT {', '.join(cols)} FROM {source_sql})"
 
-    def _nondet_guard_spans(self, toks, segs, root_info, guarded):
+    def _nondet_guard_spans(self, toks, items, segs, root_info, guarded):
         """Replacement spans that deep-sort the outer relation's
         collection column before a general-path subplan rewrite.
         Returns [] when provably safe or already guarded; raises
         ValueError when a hazard is detected but not normalizable."""
-        from hopspark.dialect.translate import untokenize
-
         kind, binding = root_info
         alias = segs[0]
         key = (alias.lower(), binding.lower() if kind == "table" else kind)
@@ -1951,7 +1456,7 @@ class Engine(AlterTableMixin):
             # after wrapping, the word re-resolves as a derived root —
             # pre-mark it so the rescan doesn't wrap a second time
             guarded.add((word.lower(), "derived"))
-            spans = self._table_binding_spans(toks, table, word)
+            spans = self._table_binding_spans(items, table, word)
             if not spans:
                 raise ValueError(
                     f"correlated subplan over {alias}.{segs[1]}: {table!r} "
@@ -1962,35 +1467,30 @@ class Engine(AlterTableMixin):
                 )
             return [(s0, s1, f" {inner} {word} ") for s0, s1 in spans]
         # derived-table root — wrap the derived item itself
-        span = self._derived_item_span(toks, word)
-        if span is None:
+        item = self._derived_item(items, word)
+        if item is None:
             return []
-        open_i, close_i, item_end = span
-        body = untokenize(toks[open_i + 1 : close_i])
+        body = untokenize(toks[item.start + 1 : item.end])
         if "__ndg" in body:
             return []  # already a guard-emitted wrapper
         try:
             bdf = self.spark.sql(body)
-        except Exception:  # noqa: BLE001 - correlated body: the
-            return []  # enclosing scope's guard covers its sources
+        except AnalysisException:  # correlated body: the enclosing
+            return []  # scope's guard covers its sources
         if not self._plan_is_order_nondet(bdf):
             return []
         inner = self._normalize_wrap_sql(bdf.schema, col, f"({body}) __ndg")
         if inner is None:
             return []
-        return [(open_i, item_end, f" {inner} {word} ")]
+        return [(item.start, item.stop + 1, f" {inner} {word} ")]
 
-    def _map_root_wrap(self, toks, segs, root_info, qpath):
+    def _map_root_wrap(self, toks, items, segs, root_info, qpath):
         """Handle a subplan path rooted at a top-level MAP column, whose
         correlated reference Catalyst rejects.  Returns ``("respan",
         spans)`` to wrap the binding FROM item with a map_entries
         pre-computation (caller splices + rescans), ``("patch",
         new_qpath)`` once the wrapper is in place (the correlated ref
         rides the entries ARRAY), or None when not applicable."""
-        from pyspark.sql import types as T
-
-        from hopspark.dialect.translate import untokenize
-
         if len(segs) < 2:
             return None
         col = segs[1]
@@ -2011,7 +1511,7 @@ class Engine(AlterTableMixin):
             }.get(col.lower())
             if not isinstance(dt, T.MapType):
                 return None
-            spans = self._table_binding_spans(toks, table, segs[0])
+            spans = self._table_binding_spans(items, table, segs[0])
             if not spans:
                 return None
             wrapped = (
@@ -2022,10 +1522,10 @@ class Engine(AlterTableMixin):
                 (s0, s1, f" {wrapped} {segs[0]} ") for s0, s1 in spans
             ])
         if kind == "derived":
-            span = self._derived_item_span(toks, segs[0])
-            if span is None:
+            item = self._derived_item(items, segs[0])
+            if item is None:
                 return None
-            body = untokenize(toks[span[0] + 1 : span[1]])
+            body = untokenize(toks[item.start + 1 : item.end])
             if f"__me_{col}" not in body:
                 return None
             return ("patch", qpath.replace(
@@ -2034,48 +1534,17 @@ class Engine(AlterTableMixin):
             ))
         return None
 
-    @staticmethod
-    def _derived_item_span(toks, alias):
-        """``(open_i, close_i, item_end)`` of the derived-table FROM item
-        ``( body ) [AS] alias`` — item_end is one past the alias word."""
-        from hopspark.dialect.translate import _prev_code
-
-        for w_i, tw in enumerate(toks):
-            if tw.kind != "word" or tw.text.lower() != alias.lower():
-                continue
-            p = _prev_code(toks, w_i - 1)
-            if p >= 0 and toks[p].kind == "word" and toks[p].upper == "AS":
-                p = _prev_code(toks, p - 1)
-            if p < 0 or toks[p].text != ")":
-                continue
-            depth = 0
-            for k in range(p, -1, -1):
-                if toks[k].text == ")":
-                    depth += 1
-                elif toks[k].text == "(":
-                    depth -= 1
-                    if depth == 0:
-                        return (k, p, w_i + 1)
-            return None
-        return None
-
     def _subplan_lateral_agg(
-        self, toks, o, close, first, from_i, qpath, coll_dt
+        self, toks, o, close, first, target, derived, qpath, coll_dt
     ) -> bool:
         """Lower ``, (SELECT <agg>(arg) [AS] name [, <agg>(arg) [AS]
         name ...] FROM c.path [x] [WHERE pred]) v`` to inline HOF
         expressions, deleting the derived table and substituting refs to
         each output name (multi-item support: r10 verdict item 4 — for
         struct-rooted paths Catalyst REJECTS the correlated fallback, so
-        these shapes have no other plan).  Returns True when rewritten
-        in place."""
-        from pyspark.sql import types as T
-
-        from hopspark.dialect.translate import (
-            _in_from_clause, _is_code, _next_code, _prev_code,
-            tokenize, untokenize,
-        )
-
+        these shapes have no other plan).  ``target`` is the block's
+        ``c.path [x]`` FROM item, ``derived`` the FROM item the block is
+        the body of.  Returns True when rewritten in place."""
         if isinstance(coll_dt, T.MapType):
             # key/value over map_entries(), like the expression path
             qpath = f"map_entries({qpath})"
@@ -2085,12 +1554,14 @@ class Engine(AlterTableMixin):
             ]))
         if not isinstance(coll_dt, T.ArrayType):
             return False
-        p = _prev_code(toks, o - 1)
-        if p < 0 or toks[p].text != "," or not _in_from_clause(toks, p):
+        if derived is None or toks[derived.trigger].text != ",":
             return False
+        p = derived.trigger
         # select list: one or more comma-separated aggregates, each WITH
         # an output name
-        sel_code = [t for t in toks[first + 1 : from_i] if _is_code(t)]
+        sel_code = [
+            t for t in toks[first + 1 : target.trigger] if _is_code(t)
+        ]
         item_codes: list[list] = [[]]
         depth0 = 0
         for t in sel_code:
@@ -2123,30 +1594,10 @@ class Engine(AlterTableMixin):
             named.append((name, code))
         if len({n.lower() for n, _c in named}) != len(named):
             return False  # duplicate output names: ambiguous
-        # target end: skip the segs tokens after FROM
-        end = _next_code(toks, from_i + 1)
-        while True:
-            d = _next_code(toks, end + 1)
-            if d < close and toks[d].text == ".":
-                w2 = _next_code(toks, d + 1)
-                if w2 < close and toks[w2].kind == "word":
-                    end = w2
-                    continue
-            break
         # optional collection alias, then an optional WHERE; nothing else
-        salias = None
-        a2 = _next_code(toks, end + 1)
-        if a2 < close and toks[a2].kind == "word":
-            u2 = toks[a2].upper
-            if u2 == "AS":
-                a3 = _next_code(toks, a2 + 1)
-                if a3 >= close or toks[a3].kind != "word":
-                    return False
-                salias, end = toks[a3].text, a3
-            elif u2 not in self._FROM_TAIL_WORDS:
-                salias, end = toks[a2].text, a2
+        salias = target.alias if target.explicit else None
         pred_sql = None
-        w_i2 = _next_code(toks, end + 1)
+        w_i2 = _next_code(toks, target.stop + 1)
         elem = coll_dt.elementType
         fields = (
             [f.name for f in elem.fields]
@@ -2172,18 +1623,8 @@ class Engine(AlterTableMixin):
             if agg is None:
                 return False
             aggs.append((name, agg))
-        # [AS] v alias after the close
-        stop = close + 1
-        valias = None
-        a4 = _next_code(toks, close + 1)
-        if a4 < len(toks) and toks[a4].kind == "word":
-            if toks[a4].upper == "AS":
-                a5 = _next_code(toks, a4 + 1)
-                if a5 < len(toks) and toks[a5].kind == "word":
-                    valias, stop = toks[a5].text, a5 + 1
-            elif toks[a4].upper not in self._FROM_TAIL_WORDS:
-                valias, stop = toks[a4].text, a4 + 1
-        del toks[p:stop]
+        valias = derived.alias if derived.explicit else None
+        del toks[p : derived.stop + 1]
         self._substitute_output_names(
             toks, {n.lower(): (n, a) for n, a in aggs}, valias, bind_i=p,
         )
@@ -2266,8 +1707,6 @@ class Engine(AlterTableMixin):
         select items (``count(*) c``, ``'x' o_comment``).  Bare
         single-column items are excluded — their output name IS the
         column, so qualification stays correct for them."""
-        from hopspark.dialect.translate import _next_code, _prev_code
-
         s, e = blk
         aliases: set = set()
         sel_i = -1
@@ -2337,10 +1776,6 @@ class Engine(AlterTableMixin):
         its own column of the same name), qualified ``valias.name``
         anywhere inside the block (correlated inner refs are
         unambiguous)."""
-        from hopspark.dialect.translate import (
-            _next_code, _prev_code, _select_clause_here, tokenize,
-        )
-
         if bind_i is None:
             blk_s, blk_e = 0, len(toks)
         else:
@@ -2562,8 +1997,6 @@ class Engine(AlterTableMixin):
         NULL collection is 0; SUM/MIN/MAX/AVG ignore NULL elements and
         return NULL when nothing qualifies; SUM of integrals is BIGINT,
         AVG is DOUBLE."""
-        from hopspark.dialect.translate import _is_code
-
         code = [t for t in toks[first + 1 : from_i] if _is_code(t)]
         # optional [AS] alias on the select item — irrelevant to a
         # scalar result
@@ -2593,8 +2026,6 @@ class Engine(AlterTableMixin):
         and + - * / % arithmetic.  Anything else returns None (general
         path).  Returns (expr_sql, kinds) where kinds classifies the
         fields used: 'int' (integral), 'float', 'other'."""
-        from pyspark.sql import types as T
-
         def _kind(dt):
             if isinstance(
                 dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -2750,8 +2181,6 @@ class Engine(AlterTableMixin):
         ``(sql, star_cols, has_virtual)``: the columns the reference's
         ``*`` exposes, and whether any VIRTUAL column (pos / item-on-
         struct) was added to the subquery beyond them."""
-        from pyspark.sql import types as T
-
         cur_dt: object = schema
         cur_expr: str | None = None
         steps: list[tuple[str, str]] = []  # (kind, source expr)
@@ -2868,7 +2297,7 @@ class Engine(AlterTableMixin):
         )
 
     def _schema_columns_for(
-        self, impala_sql: str
+        self, impala_sql: str, toks: list[Tok], items: list[FromItem]
     ) -> tuple[
         frozenset[str] | None,
         frozenset[str] | None,
@@ -2886,7 +2315,8 @@ class Engine(AlterTableMixin):
         BIGINT.  A name that appears with MIXED types across those
         relations is excluded (ambiguous, like the analyzer's
         unresolved-column path).  Only computed when the statement can
-        need it."""
+        need it.  ``toks``/``items`` are ``impala_sql``'s tokens and FROM
+        items."""
         up = impala_sql.upper()
         need = (
             "||" in impala_sql
@@ -2903,7 +2333,7 @@ class Engine(AlterTableMixin):
         )
         if not need:
             return None, None, None, None, None
-        names, seen = self._statement_columns(impala_sql)
+        names, seen = self._statement_columns(toks, items)
         for name in names:
             rel = self._relation(name)
             if rel is None:
@@ -2930,22 +2360,22 @@ class Engine(AlterTableMixin):
 
     @classmethod
     def _statement_columns(
-        cls, impala_sql: str
+        cls, toks: list[Tok], items: list[FromItem]
     ) -> tuple[set[str], dict[str, set[str]]]:
         """What the statement itself says about the relations it reads:
         the names of its undotted FROM/JOIN items at any depth, less its
         own WITH names (the candidate catalog relations), and the type
         names of the columns its derived tables and VALUES rows define as
-        ``CAST(... AS <type>) [AS] name``."""
-        if "FROM" not in impala_sql.upper():
+        ``CAST(... AS <type>) [AS] name``.  ``items`` are the FROM items
+        of ``toks``."""
+        if not items:
             return set(), {}
-        from hopspark.dialect.translate import (
-            _in_from_clause, _matching_paren, _next_code, _prev_code,
-            _span_cast_type, tokenize,
-        )
-
-        toks = tokenize(impala_sql)
+        # one-segment items that are not table functions (`range(3)`)
         names: set[str] = set()
+        for x in items:
+            n = _next_code(toks, x.end + 1)
+            if len(x.segs) == 1 and (n >= len(toks) or toks[n].text != "("):
+                names.add(x.segs[0].strip("`").lower())
         ctes: set[str] = set()
         typed: dict[str, set[str]] = {}
         for i, t in enumerate(toks):
@@ -2983,19 +2413,6 @@ class Engine(AlterTableMixin):
                                     or toks[p].upper == "WITH")
                 ):
                     ctes.add(toks[w].text.lower())
-                continue
-            if not (
-                (t.kind == "word" and t.upper in ("FROM", "JOIN"))
-                or (t.text == "," and _in_from_clause(toks, i))
-            ):
-                continue
-            j = _next_code(toks, i + 1)
-            if j >= len(toks) or toks[j].kind not in ("word", "bquote"):
-                continue
-            n = _next_code(toks, j + 1)
-            if n < len(toks) and toks[n].text in (".", "("):
-                continue  # a collection path or a table function
-            names.add(toks[j].text.strip("`").lower())
         return names - ctes, typed
 
     def set_option(self, name: str, value: bool) -> None:
@@ -3619,8 +3036,6 @@ class Engine(AlterTableMixin):
 
 def _impala_type_name(dt) -> str:
     """Spark type → Impala DDL type name (PrimitiveType.java:25-58)."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.LongType):
         return "BIGINT"
     if isinstance(dt, T.IntegerType):

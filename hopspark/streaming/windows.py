@@ -14,7 +14,10 @@ Design notes for cluster scale:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,9 +116,9 @@ def run_stream_to_completion(
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
     try:
         if output_mode == "append":
-            import tempfile
-
+            # the returned frame reads the sink lazily: remove it at exit
             out_dir = tempfile.mkdtemp(prefix=f"hopspark_{qname}_")
+            atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
             data_dir = os.path.join(out_dir, "data")
             os.makedirs(data_dir, exist_ok=True)
             q = (

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pytest
 
+from hopspark.dialect.translate import _from_items, tokenize
 from hopspark.engine import Engine
 
 
@@ -74,6 +75,32 @@ def test_from_less_statement_makes_one_spark_sql_call(spark, monkeypatch):
     assert len(calls) == 1, calls
 
 
+def test_statement_is_tokenized_once_by_engine_and_translator(
+    eng, monkeypatch
+):
+    """The engine rewrites share one token list; translate() tokenizes
+    the rewritten text once more."""
+    import sys
+
+    import hopspark.engine as engine_mod
+
+    translate_mod = sys.modules["hopspark.dialect.translate"]
+    real_tokenize = translate_mod.tokenize
+    calls = []
+
+    def counting_tokenize(sql):
+        calls.append(sql)
+        return real_tokenize(sql)
+
+    monkeypatch.setattr(translate_mod, "tokenize", counting_tokenize)
+    monkeypatch.setattr(engine_mod, "tokenize", counting_tokenize)
+    rows = eng.sql(
+        "SELECT n.n_name FROM nation n WHERE n.n_nationkey + 1 > 3"
+    ).collect()
+    assert rows
+    assert len(calls) == 2, calls
+
+
 def test_replaced_view_is_seen_by_the_next_statement(eng, spark):
     """The relation memo lasts one statement, so a view replaced outside
     the engine needs no invalidation."""
@@ -91,7 +118,10 @@ def test_replaced_view_is_seen_by_the_next_statement(eng, spark):
 
 
 def test_statement_columns():
-    cols = Engine._statement_columns
+    def cols(sql):
+        toks = tokenize(sql)
+        return Engine._statement_columns(toks, _from_items(toks))
+
     assert cols("SELECT 1 + 2") == (set(), {})
     assert cols(
         "WITH w AS (SELECT CAST(a AS BIGINT) AS a FROM t1), "

@@ -309,3 +309,32 @@ def test_events_ts_sniff_rekeys_on_rewrite(tmp_path):
     )
     os.utime(p, (2000, 2000))
     assert _events_ts_is_int64(str(p)) is False
+
+
+def test_append_stream_sink_removed_at_exit(spark, sf_dir, monkeypatch):
+    """An append-mode stream's temp sink and checkpoint dir outlive the
+    call (the returned frame reads the sink lazily) but are registered
+    for removal at interpreter exit."""
+    import atexit
+
+    from hopspark.streaming.windows import run_stream_to_completion
+
+    registered = []
+    monkeypatch.setattr(
+        atexit, "register",
+        lambda fn, *args, **kwargs: registered.append((fn, args, kwargs)),
+    )
+    out = run_stream_to_completion(
+        spark, stream_events(spark, sf_dir).select("event_id"),
+        "append_sink_cleanup", "append", 2,
+    )
+    assert out.count() == read_table(spark, "events", sf_dir).count()
+    sinks = [
+        args[0] for fn, args, _kw in registered
+        if fn is shutil.rmtree
+        and os.path.basename(args[0]).startswith("hopspark_append_sink_cleanup")
+    ]
+    assert len(sinks) == 1 and os.path.isdir(sinks[0])
+    for fn, args, kwargs in registered:
+        fn(*args, **kwargs)
+    assert not os.path.exists(sinks[0])

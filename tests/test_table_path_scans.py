@@ -459,15 +459,18 @@ def eng4(spark, sf_dir):
 
 def test_lateral_agg_over_collection_alias(eng4):
     # (SELECT COUNT(a2.item) cnt FROM a1.item a2) over the exploded
-    # inner-array alias — lowers to an inline HOF, zero joins
-    df = eng4.sql(
-        "select id, cnt from ct4 t, t.arr_arr a1,"
-        " (select count(a2.item) cnt from a1.item a2) v order by id, cnt"
-    )
-    assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
-    assert [tuple(r) for r in df.collect()] == [
-        (1, 2), (1, 2), (2, 0), (2, 0), (2, 1),
-    ]
+    # inner-array alias — lowers to an inline HOF, zero joins.  A
+    # qualified `t.id` before the FROM clause must not be taken for the
+    # item binding the alias t.
+    for head in ("id", "t.id"):
+        df = eng4.sql(
+            f"select {head}, cnt from ct4 t, t.arr_arr a1,"
+            " (select count(a2.item) cnt from a1.item a2) v order by id, cnt"
+        )
+        assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
+        assert [tuple(r) for r in df.collect()] == [
+            (1, 2), (1, 2), (2, 0), (2, 0), (2, 1),
+        ]
 
 
 def test_lateral_agg_with_where(eng4):
@@ -527,11 +530,12 @@ def test_subplan_union_legs_both_rewritten(eng4):
 def test_implicit_collection_alias_binding(eng4):
     # FROM t.ns.c.d binds the implicit alias d; the subplan counts the
     # inner arrays of each d element
-    df = eng4.sql(
-        "select id, cnt from ct4 t, t.ns.c.d,"
-        " (select count(*) cnt from d.item) v order by id, cnt"
-    )
-    assert [tuple(r) for r in df.collect()] == [(1, 1), (1, 2)]
+    for head in ("id", "t.id"):
+        df = eng4.sql(
+            f"select {head}, cnt from ct4 t, t.ns.c.d,"
+            " (select count(*) cnt from d.item) v order by id, cnt"
+        )
+        assert [tuple(r) for r in df.collect()] == [(1, 1), (1, 2)]
 
 
 # ---- round-11 advice regressions -----------------------------------------
