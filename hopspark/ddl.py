@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -332,7 +333,7 @@ class AlterTableMixin:
             for r in rows:
                 if r.col_name == "Location":
                     return re.sub(r"^file:(//)?", "", r.data_type)
-        except Exception:  # noqa: BLE001 - fall through to engine catalog
+        except AnalysisException:  # not a catalog table: engine catalog
             pass
         return self._table_root(table)
 
@@ -343,7 +344,7 @@ class AlterTableMixin:
         of itself — same schema, no rows, no data touched."""
         try:
             df = self.spark.table(table)
-        except Exception:
+        except AnalysisException:
             if if_exists:
                 return self._msg("Table does not exist.")
             raise ValueError(f"Table does not exist: {table}") from None

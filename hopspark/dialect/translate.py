@@ -609,69 +609,29 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
             i = k
             continue
         if up == "CAST":
-            j = _next_code(toks, i + 1)
-            if j >= len(toks) or toks[j].text != "(":
+            c = _parse_cast(toks, i)
+            if c is None or c.fmt is not None:
                 i += 1
                 continue
-            close = _matching_paren(toks, j)
-            # find the depth-1 AS and check the target type + no FORMAT
-            depth = 0
-            as_idx = -1
-            has_format = False
-            for k in range(j, close):
-                tk = toks[k]
-                if tk.text == "(":
-                    depth += 1
-                elif tk.text == ")":
-                    depth -= 1
-                elif depth == 1 and tk.kind == "word":
-                    if tk.upper == "AS":
-                        as_idx = k
-                    elif tk.upper == "FORMAT" and as_idx >= 0:
-                        has_format = True
-            if as_idx < 0 or has_format:
-                i += 1
-                continue
-            type_idx = _next_code(toks, as_idx + 1)
-            tgt_up = toks[type_idx].upper
-            if tgt_up in ("TINYINT", "SMALLINT", "INT", "INTEGER"):
+            j, as_idx, close = c.open, c.as_, c.close
+            if c.ty in ("TINYINT", "SMALLINT", "INT") and _static_type(
+                toks, j + 1, as_idx
+            ) == "TIMESTAMP":
                 # CAST(<timestamp> AS intN): the reference converts to
                 # epoch seconds then TRUNCATES to the int width (C++
                 # static_cast wrap) — Spark NULLs the overflow
                 # (expr-test.cc:3459 pins -128; :7063-7065 pin 77/-4787)
-                inner_code = [
-                    k for k in range(j + 1, as_idx) if _is_code(toks[k])
-                ]
-                first = toks[inner_code[0]] if inner_code else None
-                prov_ts = (
-                    first is not None
-                    and first.kind == "word"
-                    and (
-                        first.text.lower() in (
-                            "to_utc_timestamp", "from_utc_timestamp"
-                        )
-                        or (
-                            first.upper == "CAST"
-                            and _span_cast_type(
-                                toks, inner_code[0], inner_code[-1]
-                            ) == "TIMESTAMP"
-                        )
-                    )
+                inner = untokenize(
+                    _rewrite_timestamp_range(toks[j + 1 : as_idx])
+                ).strip()
+                repl = tokenize(
+                    f"CAST(sxw(to_unix_timestamp({inner}), "
+                    f"{_INT_WIDTH_TYPES[c.ty]}) AS {toks[c.type_s].text})"
                 )
-                if prov_ts:
-                    w = {"TINYINT": 8, "SMALLINT": 16,
-                         "INT": 32, "INTEGER": 32}[tgt_up]
-                    inner = untokenize(
-                        _rewrite_timestamp_range(toks[j + 1 : as_idx])
-                    ).strip()
-                    repl = tokenize(
-                        f"CAST(sxw(to_unix_timestamp({inner}), {w}) "
-                        f"AS {toks[type_idx].text})"
-                    )
-                    toks[i : close + 1] = repl
-                    i += len(repl)
-                    continue
-            if tgt_up != "TIMESTAMP" or _in_guard_context(toks, i):
+                toks[i : close + 1] = repl
+                i += len(repl)
+                continue
+            if c.ty != "TIMESTAMP" or _in_guard_context(toks, i):
                 i += 1
                 continue
             # STRING-LITERAL shape validation (static): the reference
@@ -690,15 +650,18 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
             # the reference NULLs epochs outside [1400-01-01, 10000-01-01)
             # where Spark's int64 micros arithmetic silently WRAPS
             # (expr-test.cc:3435-3447 pin NULL for ±2^63-scale decimals)
-            inner_txt = untokenize(toks[j + 1 : as_idx]).strip()
-            m_num = re.fullmatch(
-                r"(?is)(-?\d+(?:\.\d+)?)"
-                r"|CAST\s*\(\s*(-?\d+)\s+AS\s+DECIMAL"
-                r"\s*(?:\(\s*\d+\s*(?:,\s*\d+)?\s*\))?\s*\)",
-                inner_txt,
-            )
+            num, num_re = toks[j + 1 : as_idx], r"-?\d+(?:\.\d+)?"
+            dec = _parse_cast(toks, lit_code[0]) if lit_code else None
+            if (
+                dec is not None
+                and dec.close == lit_code[-1]
+                and dec.fmt is None
+                and dec.ty.startswith("DECIMAL")
+            ):
+                num, num_re = toks[dec.open + 1 : dec.as_], r"-?\d+"
+            m_num = re.fullmatch(num_re, untokenize(num).strip())
             if m_num:
-                v = float(m_num.group(1) or m_num.group(2))
+                v = float(m_num.group())
                 if not (-17987443200 <= v < 253402300800):
                     toks[i : close + 1] = tokenize("CAST(NULL AS TIMESTAMP)")
                     continue
@@ -793,7 +756,8 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
                     and toks[_prev_code(toks, prev_g - 1)].upper == "DATE"
                 )
                 if inside_date_g or (
-                    len(args_g) == 2 and _is_date_typed(toks, args_g[1])
+                    len(args_g) == 2
+                    and _static_type(toks, *args_g[1]) == "DATE"
                 ):
                     lo_override = 1
             inner = t.text + untokenize(
@@ -1031,24 +995,15 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
         # round/dround over a FLOAT argument: the reference widens to
         # DOUBLE before rounding, so round(cast(1.1 as float), 2) is a
         # clean 1.1 (exprs.test:1775, IMPALA-1508); Spark rounds within
-        # FLOAT and the widened display keeps the float artifact. Only the
-        # provably-FLOAT shape (a top-level CAST ... AS FLOAT/REAL) is
-        # rewritten — DECIMAL/DOUBLE arguments keep Spark's native typing.
+        # FLOAT and the widened display keeps the float artifact. Only a
+        # provably-FLOAT argument is rewritten — DECIMAL/DOUBLE arguments
+        # keep Spark's native typing.
         if name in ("round", "dround"):
             close = _matching_paren(toks, j)
             args = _split_args(toks, j, close)
             if len(args) == 2:
-                a_code = [
-                    toks[k]
-                    for k in range(args[0][0], args[0][1])
-                    if _is_code(toks[k])
-                ]
-                is_float_cast = (
-                    len(a_code) >= 3
-                    and a_code[0].upper == "CAST"
-                    and a_code[-2].upper in ("FLOAT", "REAL")
-                )
-                if is_float_cast:
+                a_ty = _static_type(toks, *args[0])
+                if a_ty == "FLOAT":
                     a = untokenize(
                         _rewrite_functions(toks[args[0][0]:args[0][1]])
                     ).strip()
@@ -1064,7 +1019,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 # s' = max(0, min(s, d)) and carry=1 only when d < s
                 # (rounding can add a digit). Spark's round gives (p+1, d)
                 # — expr-test.cc:8961/8973 pin precision 6 and 4.
-                ps = _decimal_arg_ps(toks, args[0])
+                ps = _decimal_ps(a_ty)
                 d = _int_literal_value(toks, args[1])
                 if ps is not None and d is not None:
                     p, s = ps
@@ -1238,7 +1193,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             args = _split_args(toks, j, close)
             if len(args) == 4:
                 def _needs_precise(sp):
-                    if _decimal_arg_ps(toks, sp) is not None:
+                    if _decimal_ps(_static_type(toks, *sp)) is not None:
                         return True
                     lc = [k for k in range(*sp) if _is_code(toks[k])]
                     lit = None
@@ -1275,9 +1230,11 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 toks[i] = Tok("word", "factorial_k")
                 i += 1
                 continue
-        # typeof of an INTEGER LITERAL folds to the reference's
-        # smallest-fit literal type (fe LiteralExpr: 1 is TINYINT, 128
-        # SMALLINT, ...); typeof(NULL) is BOOLEAN (NullLiteral's type)
+        # typeof folds what Spark answers differently: an INTEGER
+        # LITERAL's smallest-fit type (fe LiteralExpr: 1 is TINYINT, 128
+        # SMALLINT, ...), a CAST's declared CHAR/VARCHAR (Spark erases both
+        # to STRING at runtime) and typeof(NULL), which is BOOLEAN
+        # (NullLiteral's type)
         if name == "typeof":
             close = _matching_paren(toks, j)
             args = _split_args(toks, j, close)
@@ -1285,44 +1242,16 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 code = [
                     k for k in range(*args[0]) if _is_code(toks[k])
                 ]
-                lit = None
-                if len(code) == 1 and toks[code[0]].kind == "num":
-                    lit = toks[code[0]].text
-                elif (
-                    len(code) == 2
-                    and toks[code[0]].text == "-"
-                    and toks[code[1]].kind == "num"
-                ):
-                    lit = "-" + toks[code[1]].text
-                if (
-                    len(code) == 1
-                    and toks[code[0]].kind == "word"
-                    and toks[code[0]].upper == "NULL"
-                ):
-                    toks[i : close + 1] = tokenize("'BOOLEAN'")
-                    i += 1
-                    continue
-                if lit is not None and "." not in lit and "e" not in lit.lower():
-                    v = int(lit)
-                    ty = (
-                        "TINYINT" if -(2**7) <= v < 2**7 else
-                        "SMALLINT" if -(2**15) <= v < 2**15 else
-                        "INT" if -(2**31) <= v < 2**31 else "BIGINT"
-                    )
+                ty = _static_type(toks, *args[0])
+                if [toks[k].upper for k in code] == ["NULL"]:
+                    ty = "BOOLEAN"
+                elif ty in _INT_WIDTH_TYPES:
+                    if toks[code[0]].upper == "CAST":
+                        ty = None  # Spark names a CAST's int type itself
+                elif not (ty or "").startswith(("CHAR(", "VARCHAR(")):
+                    ty = None
+                if ty is not None:
                     toks[i : close + 1] = tokenize(f"'{ty}'")
-                    i += 1
-                    continue
-                cast_ty = (
-                    _span_cast_type(toks, code[0], code[-1])
-                    if code
-                    else None
-                )
-                if cast_ty is not None and cast_ty.startswith(
-                    ("CHAR(", "VARCHAR(")
-                ):
-                    # Spark erases CHAR/VARCHAR to STRING at runtime; the
-                    # declared type is knowable statically
-                    toks[i : close + 1] = tokenize(f"'{cast_ty}'")
                     i += 1
                     continue
         # 2-arg ltrim/rtrim: the reference's order is (src, chars) while
@@ -1451,7 +1380,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 # the reference's DATE overloads of trunc/date_trunc keep
                 # DATE (impala_functions.py); Spark's date_trunc always
                 # returns TIMESTAMP — wrap provably-DATE arguments back
-                is_date_arg = _is_date_typed(toks, args[0])
+                is_date_arg = _static_type(toks, *args[0]) == "DATE"
                 if unit in ("MILLENNIUM", "CENTURY", "DECADE"):
                     repl = _era_trunc_sql(a1, unit, is_date_arg)
                     toks[i : close + 1] = tokenize(repl)
@@ -1479,7 +1408,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 i += 1
                 continue
             else:
-                ps = _decimal_arg_ps(toks, args[0])
+                ps = _decimal_ps(_static_type(toks, *args[0]))
                 d = (
                     _int_literal_value(toks, args[1])
                     if len(args) == 2
@@ -1918,7 +1847,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                             toks[args[1][0] : args[1][1]]
                         ).strip()
                         repl = _era_trunc_sql(
-                            x, unit, _is_date_typed(toks, args[1])
+                            x, unit, _static_type(toks, *args[1]) == "DATE"
                         )
                         toks[i : close + 1] = tokenize(repl)
                         i += 1
@@ -1938,7 +1867,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             )
             if (
                 len(args) == 2
-                and _is_date_typed(toks, args[1])
+                and _static_type(toks, *args[1]) == "DATE"
                 and not inside_date
                 and not _in_guard_context(toks, i)
             ):
@@ -2010,7 +1939,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             if (
                 name == "mask"
                 and len(args) in (1, 9)
-                and _is_date_typed(toks, args[0])
+                and _static_type(toks, *args[0]) == "DATE"
             ):
                 a0 = untokenize(toks[args[0][0] : args[0][1]]).strip()
                 if len(args) == 9:
@@ -2026,9 +1955,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 toks[i : close + 1] = repl
                 i += len(repl)
                 continue
-            is_numeric = _is_provably_narrow_int(
-                toks, args[0]
-            ) or _is_provably_bigint_arg(toks, args[0])
+            is_numeric = _static_type(toks, *args[0]) in _INT_WIDTH_TYPES
 
             def _char_arg(span):
                 code = [
@@ -2189,14 +2116,15 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             # width-typed bit kernels (bit-byte-functions-ir.cc: one
             # instantiation per int width — rotation wraps within
             # sizeof(T)*8, countset counts within the width, positions
-            # past the width are errors). The width is inferred from the
-            # first argument: CAST form, or Impala's smallest-fit literal
-            # typing (LiteralExpr); bare columns fall back to 64
-            # (documented — the catalog's int columns would need a
-            # per-width column set to dispatch statically).
+            # past the width are errors). The width is the first
+            # argument's _static_type: CAST form, or Impala's smallest-fit
+            # literal typing (LiteralExpr); columns fall back to 64
+            # (documented — this pass does not see column_types).
             close = _matching_paren(toks, j)
             args = _split_args(toks, j, close)
-            width = _int_arg_width(toks, args[0]) if args else 64
+            width = _INT_WIDTH_TYPES.get(
+                _static_type(toks, *args[0]) if args else None, 64
+            )
             nargs = len(args)
             new_name = {
                 ("rotateleft", 2): "rotl3",
@@ -2218,13 +2146,14 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             # (CAST form / smallest-fit literals); other types unchanged.
             close = _matching_paren(toks, j)
             args = _split_args(toks, j, close)
-            if len(args) == 1 and _is_provably_narrow_int(toks, args[0]):
-                w = _int_arg_width(toks, args[0])
-                if w in (8, 16, 32):
-                    # width-named kernel promotes BEFORE abs (abs(TINYINT
-                    # -128) must be 128 in SMALLINT, not the wrapped -128)
-                    toks[i] = Tok("word", f"abs{w}")
-            elif len(args) == 1 and _is_provably_bigint_arg(toks, args[0]):
+            w = _INT_WIDTH_TYPES.get(
+                _static_type(toks, *args[0]) if len(args) == 1 else None
+            )
+            if w in (8, 16, 32):
+                # width-named kernel promotes BEFORE abs (abs(TINYINT
+                # -128) must be 128 in SMALLINT, not the wrapped -128)
+                toks[i] = Tok("word", f"abs{w}")
+            elif w == 64:
                 # BIGINT has no wider int to promote into: the reference
                 # NULLs the one unrepresentable input (INT64_MIN), Spark
                 # wraps — abs64 kernel pins the NULL
@@ -2241,15 +2170,9 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             close = _matching_paren(toks, j)
             args = _split_args(toks, j, close)
             if len(args) == 2:
-                w = None
-                if _is_provably_narrow_int(toks, args[0]):
-                    w = _int_arg_width(toks, args[0])
-                elif _is_provably_bigint_arg(toks, args[0]):
-                    w = 64
-                ty = {
-                    8: "TINYINT", 16: "SMALLINT", 32: "INT", 64: "BIGINT"
-                }.get(w)
-                if ty is not None:
+                ty = _static_type(toks, *args[0])
+                w = _INT_WIDTH_TYPES.get(ty)
+                if w is not None:
                     a = untokenize(
                         _rewrite_functions(toks[args[0][0]:args[0][1]])
                     ).strip()
@@ -2282,20 +2205,18 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 pat_toks = [
                     tk for tk in toks[args[1][0] : args[1][1]] if _is_code(tk)
                 ]
-                idx_toks = [
-                    tk for tk in toks[args[2][0] : args[2][1]] if _is_code(tk)
-                ]
+                s0, e0 = args[2]
                 # unwrap CAST(<intlit> AS <int type>) around the index
                 # (expr-test.cc:4888 uses cast(2 as bigint))
+                c = _parse_cast(toks, _next_code(toks, s0))
                 if (
-                    len(idx_toks) >= 5
-                    and idx_toks[0].upper == "CAST"
-                    and idx_toks[1].text == "("
-                    and idx_toks[-1].text == ")"
-                    and idx_toks[-2].upper in _INT_WIDTH_TYPES
-                    and idx_toks[-3].upper == "AS"
+                    c is not None
+                    and _next_code(toks, c.close + 1) >= e0
+                    and c.fmt is None
+                    and c.ty in _INT_WIDTH_TYPES
                 ):
-                    idx_toks = idx_toks[2:-3]
+                    s0, e0 = c.open + 1, c.as_
+                idx_toks = [tk for tk in toks[s0:e0] if _is_code(tk)]
                 neg = (
                     len(idx_toks) == 2
                     and idx_toks[0].text == "-"
@@ -2698,39 +2619,16 @@ def _flexible_parse_sql(
 def _rewrite_cast_format(toks: list[Tok]) -> list[Tok]:
     i = 0
     while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.upper == "CAST"):
+        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
+        if c is None or c.fmt is None:
             i += 1
             continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        # find top-level AS then FORMAT inside this cast
-        depth = 0
-        as_idx = fmt_idx = -1
-        for k in range(j + 1, close):
-            txt = toks[k].text
-            if txt == "(":
-                depth += 1
-            elif txt == ")":
-                depth -= 1
-            elif depth == 0 and toks[k].kind == "word":
-                if toks[k].upper == "AS" and as_idx < 0:
-                    as_idx = k
-                elif toks[k].upper == "FORMAT" and as_idx >= 0:
-                    fmt_idx = k
-                    break
-        if as_idx < 0 or fmt_idx < 0:
-            i += 1
-            continue
-        s_idx = _next_code(toks, fmt_idx + 1)
+        j, as_idx, close = c.open, c.as_, c.close
+        s_idx = _next_code(toks, c.fmt + 1)
         if s_idx >= close or toks[s_idx].kind != "str":
             i += 1
             continue
-        type_idx = _next_code(toks, as_idx + 1)
-        type_name = toks[type_idx].upper
+        type_name = toks[c.type_s].upper
         expr = toks[j + 1 : as_idx]
         if type_name in _DATETIME_TYPES:
             fn = "to_timestamp" if type_name == "TIMESTAMP" else "to_date"
@@ -3018,12 +2916,11 @@ def _rewrite_datetime_type_contracts(toks: list[Tok]) -> list[Tok]:
         close = _matching_paren(toks, j)
         args = _split_args(toks, j, close)
         nargs = len(args)
+        is_date = nargs > 0 and _static_type(toks, *args[0]) == "DATE"
         if name == "to_date" and nargs == 1:
             toks[i] = Tok("word", "date_format")
             toks.insert(close, Tok("op", ", 'yyyy-MM-dd'"))
-        elif name == "next_day" and nargs == 2 and not _is_date_typed(
-            toks, args[0]
-        ):
+        elif name == "next_day" and nargs == 2 and not is_date:
             toks[i] = Tok("word", "next_day2")
         elif name == "next_day" and nargs == 2:
             # DATE overload: the result can cross 9999-12-31 (NULL in the
@@ -3037,25 +2934,22 @@ def _rewrite_datetime_type_contracts(toks: list[Tok]) -> list[Tok]:
                 toks[i : close + 1] = repl
                 i += len(repl)
                 continue
-        elif name == "last_day" and nargs == 1 and not _is_date_typed(
-            toks, args[0]
-        ):
+        elif name == "last_day" and nargs == 1 and not is_date:
             toks[i] = Tok("word", "last_day1")
         i += 1
     return toks
 
 
 def _rewrite_timestamp_avg(
-    toks: list[Tok], timestamp_columns: frozenset[str] | None
+    toks: list[Tok], column_types: dict[str, str] | None
 ) -> list[Tok]:
     """avg(TIMESTAMP) returns TIMESTAMP in the reference (BuiltinsDb.java:
     1359, aggregate-functions-ir.cc TimestampAvg*) — Spark's non-ANSI mode
     silently implicit-casts to DOUBLE epoch seconds instead.  Rewrite
-    avg(x) → timestamp_micros(CAST(avg(unix_micros(x)) AS BIGINT)) when x
-    is provably TIMESTAMP: a timestamp literal, CAST(... AS TIMESTAMP), or
-    a (possibly dotted) column whose name is unambiguously TIMESTAMP in
-    the caller's catalog (same knowledge channel as bool_columns).  The
-    window form avg(ts) OVER (...) wraps the whole windowed expression."""
+    avg(x) → timestamp_micros(CAST(avg(unix_micros(x)) AS BIGINT)) when
+    _static_type proves x TIMESTAMP (a column through the caller's
+    ``column_types``).  The window form avg(ts) OVER (...) wraps the
+    whole windowed expression."""
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -3068,9 +2962,9 @@ def _rewrite_timestamp_avg(
             continue
         close = _matching_paren(toks, j)
         args = _split_args(toks, j, close)
-        if len(args) != 1 or not _is_timestamp_typed(
-            toks, args[0], timestamp_columns
-        ):
+        if len(args) != 1 or _static_type(
+            toks, *args[0], column_types
+        ) != "TIMESTAMP":
             i += 1
             continue
         x = untokenize(toks[args[0][0] : args[0][1]]).strip()
@@ -3090,45 +2984,6 @@ def _rewrite_timestamp_avg(
         )
         i += 1
     return toks
-
-
-def _is_timestamp_typed(
-    toks: list[Tok],
-    arg: tuple[int, int],
-    timestamp_columns: frozenset[str] | None,
-) -> bool:
-    return _arg_provably_typed(toks, arg, ("TIMESTAMP",), timestamp_columns)
-
-
-def _arg_provably_typed(
-    toks: list[Tok],
-    arg: tuple[int, int],
-    type_names: tuple[str, ...],
-    columns: frozenset[str] | None,
-) -> bool:
-    """True when the argument span is PROVABLY one of `type_names`: a
-    typed literal (`TIMESTAMP '...'`), a top-level CAST to the type, or a
-    bare/dotted column whose leaf name is in the caller's catalog set."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if not code:
-        return False
-    first = toks[code[0]]
-    if first.kind == "word" and first.upper in type_names:
-        return len(code) == 2 and toks[code[1]].kind == "str"
-    if first.kind == "word" and first.upper == "CAST" and len(code) >= 2:
-        if toks[code[1]].text == "(" and _matching_paren(
-            toks, code[1]
-        ) == code[-1]:
-            ty = toks[code[-2]]
-            return ty.kind == "word" and ty.upper in type_names
-    if columns and first.kind == "word":
-        # bare or dotted identifier chain: every token a word or '.'
-        if all(
-            toks[k].kind == "word" or toks[k].text == "." for k in code
-        ):
-            leaf = toks[code[-1]]
-            return leaf.kind == "word" and leaf.text.lower() in columns
-    return False
 
 
 #: RE2/POSIX character classes → Java regex equivalents (the reference's
@@ -3317,24 +3172,16 @@ def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
             # DATE-vs-STRING in an IN list compares as DATE in the
             # reference (date.test:539: the Hive 3.1 implicit-conversion
             # contract) while Spark coerces the DATE side to STRING.
-            # When the LHS primary is provably DATE (a to_date_strict
+            # When the LHS primary is provably DATE (e.g. a to_date_strict
             # call this pass just produced, or a DATE literal), cast the
             # string items.
             p = _prev_code(toks, i - 1)
             if p >= 0 and toks[p].upper == "NOT":  # x NOT IN (...)
                 p = _prev_code(toks, p - 1)
             lstart = _primary_start(toks, p) if p >= 0 else None
-            is_date_lhs = lstart is not None and (
-                (
-                    toks[lstart].kind == "word"
-                    and toks[lstart].text.lower() == "to_date_strict"
-                )
-                or (
-                    toks[lstart].kind == "word"
-                    and toks[lstart].upper == "DATE"
-                    and _next_code(toks, lstart + 1) <= p
-                    and toks[_next_code(toks, lstart + 1)].kind == "str"
-                )
+            is_date_lhs = (
+                lstart is not None
+                and _static_type(toks, lstart, p + 1) == "DATE"
             )
             j = _next_code(toks, i + 1)
             if is_date_lhs and j < len(toks) and toks[j].text == "(":
@@ -3348,30 +3195,12 @@ def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
                         )
                 i += 1
                 continue
-        if t.upper == "CAST":
-            j = _next_code(toks, i + 1)
-            if j >= len(toks) or toks[j].text != "(":
+        c = _parse_cast(toks, i)
+        if c is not None:
+            if c.fmt is not None:
                 i += 1
                 continue
-            close = _matching_paren(toks, j)
-            depth = 0
-            as_idx = -1
-            has_format = False
-            for k in range(j, close):
-                tk = toks[k]
-                if tk.text == "(":
-                    depth += 1
-                elif tk.text == ")":
-                    depth -= 1
-                elif depth == 1 and tk.kind == "word":
-                    if tk.upper == "AS":
-                        as_idx = k
-                    elif tk.upper == "FORMAT" and as_idx >= 0:
-                        has_format = True
-            if as_idx < 0 or has_format:
-                i += 1
-                continue
-            type_idx = _next_code(toks, as_idx + 1)
+            j, as_idx, close, type_idx = c.open, c.as_, c.close, c.type_s
             inner_code = [
                 k for k in range(j + 1, as_idx) if _is_code(toks[k])
             ]
@@ -3453,66 +3282,159 @@ def _primary_end(toks: list[Tok], q: int) -> int | None:
     return None
 
 
-def _span_cast_type(toks: list[Tok], s: int, e: int) -> str | None:
-    """Normalized (upper, space-free) AS-type when toks[s..e] (inclusive)
-    is exactly ``CAST( ... AS TYPE )``, else None."""
-    if toks[s].kind != "word" or toks[s].upper != "CAST":
+#: integer types by bit width (fe LiteralExpr's smallest-fit order)
+_INT_WIDTH_TYPES = {"TINYINT": 8, "SMALLINT": 16, "INT": 32, "BIGINT": 64}
+
+#: written type name -> the name callers compare: INTEGER is INT, bare
+#: DECIMAL is the reference's DECIMAL(9,0), and REAL is FLOAT because the
+#: CAST reaches Spark as written, where REAL is FloatType
+_TYPE_ALIASES = {"INTEGER": "INT", "REAL": "FLOAT", "DECIMAL": "DECIMAL(9,0)"}
+
+
+def _type_name(toks: list[Tok], s: int, e: int) -> str:
+    """Normalized name of the type written at toks[s:e]: upper case, no
+    whitespace, aliases resolved, DECIMAL(p) as DECIMAL(p,0)."""
+    ty = "".join(t.text for t in toks[s:e] if _is_code(t)).upper()
+    ty = _TYPE_ALIASES.get(ty, ty)
+    m = re.fullmatch(r"DECIMAL\((\d+)\)", ty)
+    return f"DECIMAL({m.group(1)},0)" if m else ty
+
+
+@dataclass
+class CastParts:
+    """``CAST ( expr AS type [FORMAT 'fmt'] )`` as token indexes."""
+
+    open: int  # the "(" after CAST
+    as_: int  # the depth-1 AS
+    type_s: int  # the type's first code token
+    type_e: int  # end of the type span: the FORMAT keyword or `close`
+    fmt: int | None  # the FORMAT keyword, None without one
+    close: int  # the ")" closing `open`
+    ty: str  # the normalized type name (see _type_name)
+
+
+def _parse_cast(toks: list[Tok], i: int) -> CastParts | None:
+    """The CAST whose keyword is toks[i]; None when toks[i] is not
+    ``CAST (`` or its parens hold no depth-1 AS.  An unbalanced paren
+    raises ValueError, as in _matching_paren."""
+    if not 0 <= i < len(toks):
         return None
-    j = _next_code(toks, s + 1)
-    if j > e or toks[j].text != "(" or _matching_paren(toks, j) != e:
+    t = toks[i]
+    if t.kind != "word" or len(t.text) != 4 or t.upper != "CAST":
         return None
+    o = _next_code(toks, i + 1)
+    if o >= len(toks) or toks[o].text != "(":
+        return None
+    close = _matching_paren(toks, o)
+    as_ = fmt = None
     depth = 0
-    as_idx = -1
-    for k in range(j, e):
+    for k in range(o + 1, close):
         tk = toks[k]
         if tk.text == "(":
             depth += 1
         elif tk.text == ")":
             depth -= 1
-        elif depth == 1 and tk.kind == "word" and tk.upper == "AS":
-            as_idx = k
-    if as_idx < 0:
+        elif depth == 0 and tk.kind == "word":
+            if as_ is None and tk.upper == "AS":
+                as_ = k
+            elif as_ is not None and tk.upper == "FORMAT":
+                fmt = k
+                break
+    if as_ is None:
         return None
-    return "".join(
-        t.text for t in toks[as_idx + 1 : e] if _is_code(t)
-    ).upper().replace(" ", "")
+    type_e = close if fmt is None else fmt
+    return CastParts(
+        o, as_, _next_code(toks, as_ + 1), type_e, fmt, close,
+        _type_name(toks, as_ + 1, type_e),
+    )
 
 
-def _numeric_operand_kind(
-    toks: list[Tok], s: int, e: int, bigint_columns: frozenset[str] | None
+def _span_cast_type(toks: list[Tok], s: int, e: int) -> str | None:
+    """Normalized target type when toks[s..e] (inclusive) is exactly one
+    CAST (a FORMAT clause is not part of the type), else None."""
+    c = _parse_cast(toks, s)
+    return c.ty if c is not None and c.close == e else None
+
+
+#: calls whose result type is fixed: the DATE(...) cast function, the
+#: strict DATE cast _rewrite_date_casts emits, and the TIMESTAMP producers
+_CALL_TYPES = {
+    "date": "DATE",
+    "to_date_strict": "DATE",
+    "to_utc_timestamp": "TIMESTAMP",
+    "from_utc_timestamp": "TIMESTAMP",
+    "unix_micros_to_utc_timestamp": "TIMESTAMP",
+}
+
+
+def _static_type(
+    toks: list[Tok],
+    s: int,
+    e: int,
+    column_types: dict[str, str] | None = None,
 ) -> str | None:
-    """'bigint' / 'decimal' / 'float' / 'double' when the primary span
-    toks[s..e] (inclusive) is PROVABLY that type: a CAST to it, a decimal
-    literal (digits with '.' and no exponent — analyzer LiteralExpr types
-    those DECIMAL), or a catalog column that is unambiguously BIGINT.
-    float/double are CAST-form only: the catalog's double set mixes float
-    and double names, whose promotions differ ((38,9) vs (38,17))."""
-    ty = _span_cast_type(toks, s, e)
-    if ty is not None:
-        if ty == "BIGINT":
-            return "bigint"
-        if ty.startswith("DECIMAL") or ty.startswith("NUMERIC"):
-            return "decimal"
-        if ty in ("FLOAT", "REAL"):
-            return "float"
-        if ty == "DOUBLE":
-            return "double"
+    """Normalized Impala type of the span toks[s:e] when the span proves
+    it, else None: one type per expression, as the analyzer gives
+    CastExpr, NumericLiteral and SlotRef theirs.
+
+      * a top-level CAST: its target type (_parse_cast);
+      * ``DATE '…'`` and ``TIMESTAMP '…'`` literals;
+      * a whole call in _CALL_TYPES;
+      * a [-]integer literal: the smallest of TINYINT..BIGINT that holds
+        it (fe LiteralExpr); None outside the BIGINT range;
+      * a [-]decimal literal (a '.', no exponent): DECIMAL(p,s), s the
+        digits after the point;
+      * a bare or dotted column: its leaf name in ``column_types``."""
+    code = [k for k in range(s, e) if _is_code(toks[k])]
+    if not code:
         return None
-    if s == e:
-        t = toks[s]
-        if t.kind == "num" and "." in t.text and "e" not in t.text.lower():
-            return "decimal"
+    first = toks[code[0]]
+    if first.kind == "word":
         if (
-            t.kind == "word"
-            and bigint_columns
-            and t.text.lower() in bigint_columns
+            len(code) == 2
+            and first.upper in ("DATE", "TIMESTAMP")
+            and toks[code[1]].kind == "str"
         ):
-            return "bigint"
+            return first.upper
+        if (
+            len(code) > 2
+            and toks[code[1]].text == "("
+            and _matching_paren(toks, code[1]) == code[-1]
+        ):
+            if first.upper == "CAST":
+                c = _parse_cast(toks, code[0])
+                return (c.ty or None) if c is not None else None
+            return _CALL_TYPES.get(first.text.lower())
+        if column_types and all(
+            toks[k].kind == "word" or toks[k].text == "." for k in code
+        ):
+            return column_types.get(toks[code[-1]].text.lower())
+        return None
+    neg = len(code) == 2 and first.text == "-"
+    lit = toks[code[-1]]
+    if not (neg or len(code) == 1) or lit.kind != "num":
+        return None
+    if "e" in lit.text.lower():
+        return None
+    if "." in lit.text:
+        scale = len(lit.text.split(".")[1])
+        digits = len(lit.text.replace(".", "").lstrip("0") or "0")
+        return f"DECIMAL({max(digits, scale)},{scale})"
+    v = -int(lit.text) if neg else int(lit.text)
+    for ty, width in _INT_WIDTH_TYPES.items():
+        if -(2 ** (width - 1)) <= v < 2 ** (width - 1):
+            return ty
     return None
 
 
+def _decimal_ps(ty: str | None) -> tuple[int, int] | None:
+    """(precision, scale) of a normalized DECIMAL type name, else None."""
+    m = re.fullmatch(r"DECIMAL\((\d+),(\d+)\)", ty or "")
+    return (int(m.group(1)), int(m.group(2))) if m else None
+
+
 def _rewrite_bigint_decimal_arith(
-    toks: list[Tok], bigint_columns: frozenset[str] | None
+    toks: list[Tok], column_types: dict[str, str] | None
 ) -> list[Tok]:
     """BIGINT mixed with DECIMAL in +|-|*|/|% : the reference's analyzer
     promotes BIGINT to its min-resolution DECIMAL(19,0)
@@ -3531,12 +3453,31 @@ def _rewrite_bigint_decimal_arith(
     row), while stock Spark widens the decimal side to double.  MULTIPLY
     is excluded — there the reference itself goes to DOUBLE
     (TypesUtil.getArithmeticResultType's floating-point multiply rule),
-    which is Spark's behavior already."""
+    which is Spark's behavior already.
+
+    An operand counts when _static_type proves it BIGINT, DECIMAL,
+    FLOAT or DOUBLE, with three limits: a column only when bare and
+    BIGINT (the column map merges FLOAT into DOUBLE, whose promotions
+    differ), a literal only when decimal, and FLOAT/DOUBLE only as a
+    CAST."""
     _PROMOTIONS = {
         "bigint": "DECIMAL(19,0)",
         "float": "DECIMAL(38,9)",
         "double": "DECIMAL(38,17)",
     }
+
+    def kind(s: int, e: int) -> str | None:
+        ty = _static_type(toks, s, e + 1, column_types if s == e else None)
+        if ty is None:
+            return None
+        if toks[s].upper == "CAST":
+            if ty.startswith(("DECIMAL", "NUMERIC")):
+                return "decimal"
+            return {"BIGINT": "bigint", "FLOAT": "float", "DOUBLE": "double"}.get(ty)
+        if toks[s].kind == "num":
+            return "decimal" if ty.startswith("DECIMAL") else None
+        return "bigint" if ty == "BIGINT" and toks[s].kind == "word" else None
+
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -3551,8 +3492,8 @@ def _rewrite_bigint_decimal_arith(
         if lstart is None or rend is None:
             i += 1
             continue
-        lkind = _numeric_operand_kind(toks, lstart, p, bigint_columns)
-        rkind = _numeric_operand_kind(toks, q, rend, bigint_columns)
+        lkind = kind(lstart, p)
+        rkind = kind(q, rend)
         kinds = {lkind, rkind}
         if "decimal" not in kinds or len(kinds) != 2:
             i += 1
@@ -3581,74 +3522,24 @@ def _rewrite_double_string_casts(toks: list[Tok]) -> list[Tok]:
     """CAST(<provably double/float> AS STRING) renders with gutil's
     shortest-roundtrip %g — 'inf'/'nan' specials, 'e+09' exponents —
     where Java gives 'Infinity'/'1.29387251E9' (expr-test.cc:5675-5676,
-    :7072). Provable: a top-level CAST to DOUBLE/FLOAT, or a depth-0 '/'
-    over non-decimal operands (the reference's `/` is always C++ double
-    division). Routed to the dtos/ftos kernels with an explicit NULL
-    guard (NULL and NaN collapse in the Arrow float64 transfer)."""
+    :7072). Provable: an operand _static_type types DOUBLE/FLOAT, or a
+    depth-0 '/' over non-decimal operands (the reference's `/` is always
+    C++ double division). Routed to the dtos/ftos kernels (TIMESTAMP
+    operands to tstos) with an explicit NULL guard (NULL and NaN
+    collapse in the Arrow float64 transfer)."""
     i = 0
     while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.upper == "CAST"):
+        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
+        if c is None or c.fmt is not None or toks[c.type_s].upper != "STRING":
             i += 1
             continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        depth = 0
-        as_idx = -1
-        has_format = False
-        for k in range(j, close):
-            tk = toks[k]
-            if tk.text == "(":
-                depth += 1
-            elif tk.text == ")":
-                depth -= 1
-            elif depth == 1 and tk.kind == "word":
-                if tk.upper == "AS":
-                    as_idx = k
-                elif tk.upper == "FORMAT" and as_idx >= 0:
-                    has_format = True
-        if as_idx < 0 or has_format:
-            i += 1
-            continue
-        type_idx = _next_code(toks, as_idx + 1)
-        if toks[type_idx].upper != "STRING":
-            i += 1
-            continue
-        code = [k for k in range(j + 1, as_idx) if _is_code(toks[k])]
-        if not code:
-            i += 1
-            continue
-        first = toks[code[0]]
-        kernel = None
-        if first.kind == "word" and first.upper == "CAST":
-            ty = _span_cast_type(toks, code[0], code[-1])
-            if ty == "DOUBLE":
-                kernel = "dtos"
-            elif ty in ("FLOAT", "REAL"):
-                kernel = "ftos"
-            elif ty == "TIMESTAMP":
-                kernel = "tstos"
-        # provably-TIMESTAMP producers render fractions 9-digit
+        j, as_idx, close = c.open, c.as_, c.close
+        # provably-TIMESTAMP operands render fractions 9-digit
         # zero-padded (TimestampValue::ToString via boost posix_time;
         # expr-test.cc:7080 pins '...56.448500000')
-        elif (
-            first.kind == "word"
-            and first.text.lower() in (
-                "to_utc_timestamp", "from_utc_timestamp",
-                "unix_micros_to_utc_timestamp",
-            )
-        ):
-            kernel = "tstos"
-        elif (
-            first.kind == "word"
-            and first.upper == "TIMESTAMP"
-            and len(code) == 2
-            and toks[code[1]].kind == "str"
-        ):
-            kernel = "tstos"
+        kernel = {"DOUBLE": "dtos", "FLOAT": "ftos", "TIMESTAMP": "tstos"}.get(
+            _static_type(toks, j + 1, as_idx)
+        )
         if kernel is None:
             # depth-0 '/' over non-decimal operands → double division
             depth = 0
@@ -4053,47 +3944,19 @@ def _nsf_const_int(toks: list[Tok], i: int):
         r"\d+", toks[j].text
     ):
         return j, sign * int(toks[j].text)
-    if j < len(toks) and toks[j].kind == "word" and toks[j].upper == "CAST":
-        o = _next_code(toks, j + 1)
-        if o < len(toks) and toks[o].text == "(":
-            try:
-                close = _matching_paren(toks, o)
-            except ValueError:
-                return None
-            inner = [k for k in range(o + 1, close) if _is_code(toks[k])]
-            vi, s2 = 0, 1
-            if (
-                inner
-                and toks[inner[0]].kind == "op"
-                and toks[inner[0]].text in "+-"
-            ):
-                if toks[inner[0]].text == "-":
-                    s2 = -1
-                vi = 1
-            if (
-                len(inner) == vi + 3
-                and toks[inner[vi]].kind == "num"
-                and re.fullmatch(r"\d+", toks[inner[vi]].text)
-                and toks[inner[vi + 1]].upper == "AS"
-                and toks[inner[vi + 2]].upper
-                in ("BIGINT", "INT", "INTEGER", "SMALLINT", "TINYINT")
-            ):
-                return close, sign * s2 * int(toks[inner[vi]].text)
+    try:
+        c = _parse_cast(toks, j)
+    except ValueError:
+        return None
+    if c is not None and c.fmt is None and c.ty in _INT_WIDTH_TYPES:
+        r = _nsf_const_int(toks, _next_code(toks, c.open + 1))
+        if (
+            r is not None
+            and toks[r[0]].kind == "num"
+            and _next_code(toks, r[0] + 1) == c.as_
+        ):
+            return c.close, sign * r[1]
     return None
-
-
-def _nsf_depth1_as(toks: list[Tok], open_i: int, close_i: int) -> int:
-    as_idx = -1
-    depth = 0
-    for k in range(open_i, close_i):
-        tk = toks[k]
-        if tk.text == "(":
-            depth += 1
-        elif tk.text == ")":
-            depth -= 1
-        elif depth == 1 and tk.kind == "word" and tk.upper == "AS":
-            as_idx = k
-    return as_idx
 
 
 def _nsf_interval_arg(toks: list[Tok], i: int, end_excl: int):
@@ -4136,33 +3999,23 @@ def _nsf_epoch_numeric(toks: list[Tok], first: int, as_idx: int):
     import datetime as _dt
 
     j = first
-    if (
-        j < len(toks)
-        and toks[j].kind == "word"
-        and toks[j].upper == "CAST"
-    ):
-        o = _next_code(toks, j + 1)
-        if o >= len(toks) or toks[o].text != "(":
-            return None
+    if j < len(toks) and toks[j].upper == "CAST":
         try:
-            close = _matching_paren(toks, o)
+            c = _parse_cast(toks, j)
         except ValueError:
             return None
-        if _next_code(toks, close + 1) != as_idx:
-            return None
-        as2 = _nsf_depth1_as(toks, o, close)
-        if as2 < 0:
-            return None
-        ty2 = "".join(
-            t.text for t in toks[as2 + 1 : close] if _is_code(t)
-        ).upper()
-        if ty2 != "DOUBLE":
-            return None
-        inner = _next_code(toks, o + 1)
         if (
-            inner >= close
+            c is None
+            or c.fmt is not None
+            or c.ty != "DOUBLE"
+            or _next_code(toks, c.close + 1) != as_idx
+        ):
+            return None
+        inner = _next_code(toks, c.open + 1)
+        if (
+            inner >= c.close
             or toks[inner].kind != "num"
-            or _next_code(toks, inner + 1) != as2
+            or _next_code(toks, inner + 1) != c.as_
         ):
             return None
         txt = toks[inner].text
@@ -4234,22 +4087,14 @@ def _nsf_parse(toks: list[Tok], i: int):
     up = toks[i].upper
     node = None
     if up == "CAST":
-        o = _next_code(toks, i + 1)
-        if o >= len(toks) or toks[o].text != "(":
-            return None
         try:
-            close = _matching_paren(toks, o)
+            c = _parse_cast(toks, i)
         except ValueError:
             return None
-        as_idx = _nsf_depth1_as(toks, o, close)
-        if as_idx < 0:
+        if c is None or c.fmt is not None or c.ty != "TIMESTAMP":
             return None
-        ty = "".join(
-            t.text for t in toks[as_idx + 1 : close] if _is_code(t)
-        ).upper()
-        if ty != "TIMESTAMP":
-            return None
-        first = _next_code(toks, o + 1)
+        as_idx, close = c.as_, c.close
+        first = _next_code(toks, c.open + 1)
         if first < close and toks[first].kind == "str":
             if _next_code(toks, first + 1) != as_idx:
                 return None
@@ -4365,19 +4210,15 @@ def _fold_ns_literal_timestamps(toks: list[Tok]) -> list[Tok]:
             i += 1
             continue
         if t.upper == "CAST":
-            o = _next_code(toks, i + 1)
-            if o < len(toks) and toks[o].text == "(":
-                try:
-                    close = _matching_paren(toks, o)
-                except ValueError:
-                    i += 1
-                    continue
-                as_idx = _nsf_depth1_as(toks, o, close)
-                ty = "".join(
-                    tk.text for tk in toks[as_idx + 1 : close] if _is_code(tk)
-                ).upper() if as_idx >= 0 else ""
-                if ty == "STRING":
-                    r = _nsf_parse(toks, _next_code(toks, o + 1))
+            try:
+                c = _parse_cast(toks, i)
+            except ValueError:
+                i += 1
+                continue
+            if c is not None and c.fmt is None:
+                as_idx, close = c.as_, c.close
+                if c.ty == "STRING":
+                    r = _nsf_parse(toks, _next_code(toks, c.open + 1))
                     if r is not None:
                         end, v, ha = r
                         if _next_code(toks, end + 1) == as_idx:
@@ -4392,7 +4233,7 @@ def _fold_ns_literal_timestamps(toks: list[Tok]) -> list[Tok]:
                                 ]
                                 i += 1
                                 continue
-                elif ty == "TIMESTAMP":
+                elif c.ty == "TIMESTAMP":
                     # bare sub-µs literal in a DISPLAY context: the
                     # reference renders the stored ns digits
                     # (expr-test.cc:3276-3484); Spark's TimestampType
@@ -4470,25 +4311,8 @@ def _enclosing_cast_target(toks: list[Tok], i: int) -> str | None:
     prev_p = _prev_code(toks, i - 1)
     if prev_p < 0 or toks[prev_p].text != "(":
         return None
-    prev_f = _prev_code(toks, prev_p - 1)
-    if prev_f < 0 or toks[prev_f].upper != "CAST":
-        return None
-    close = _matching_paren(toks, prev_p)
-    depth = 0
-    as_idx = -1
-    for k in range(prev_p, close):
-        tk = toks[k]
-        if tk.text == "(":
-            depth += 1
-        elif tk.text == ")":
-            depth -= 1
-        elif depth == 1 and tk.kind == "word" and tk.upper == "AS":
-            as_idx = k
-    if as_idx < 0:
-        return None
-    return "".join(
-        t.text for t in toks[as_idx + 1 : close] if _is_code(t)
-    ).upper().replace(" ", "")
+    c = _parse_cast(toks, _prev_code(toks, prev_p - 1))
+    return c.ty if c is not None else None
 
 
 def _rewrite_decimal_sum(toks: list[Tok]) -> list[Tok]:
@@ -4514,10 +4338,11 @@ def _rewrite_decimal_sum(toks: list[Tok]) -> list[Tok]:
         if len(args) != 1:
             i += 1
             continue
-        scale = _decimal_cast_scale(toks, args[0])
-        if scale is None:
+        ps = _decimal_ps(_static_type(toks, *args[0]))
+        if ps is None:
             i += 1
             continue
+        scale = ps[1]
         # idempotency: skip ONLY when the directly-enclosing CAST targets
         # the exact type this pass emits — a user CAST to any other type
         # (STRING, a different DECIMAL) must not suppress the rewrite
@@ -4565,7 +4390,7 @@ def _rewrite_decimal_avg(toks: list[Tok]) -> list[Tok]:
         if len(args) != 1:
             i += 1
             continue
-        ps = _decimal_cast_prec_scale(toks, args[0])
+        ps = _decimal_ps(_static_type(toks, *args[0]))
         if ps is None:
             i += 1
             continue
@@ -4598,76 +4423,6 @@ def _rewrite_decimal_avg(toks: list[Tok]) -> list[Tok]:
     return toks
 
 
-def _decimal_cast_prec_scale(
-    toks: list[Tok], arg: tuple[int, int]
-) -> tuple[int, int] | None:
-    """(precision, scale) when the arg is a top-level
-    CAST(... AS DECIMAL(p[, s])) (bare DECIMAL = (9, 0)), else None."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if len(code) < 4:
-        return None
-    first = toks[code[0]]
-    if not (first.kind == "word" and first.upper == "CAST"):
-        return None
-    if toks[code[1]].text != "(" or _matching_paren(toks, code[1]) != code[-1]:
-        return None
-    t2 = toks[code[-2]]
-    if t2.kind == "word" and t2.upper == "DECIMAL":
-        return (9, 0)
-    if toks[code[-2]].text != ")" or toks[code[-3]].kind != "num":
-        return None
-    n1 = int(toks[code[-3]].text)
-    if toks[code[-4]].text == ",":
-        if toks[code[-5]].kind != "num" or toks[code[-6]].text != "(":
-            return None
-        ty = toks[code[-7]]
-        if ty.kind == "word" and ty.upper == "DECIMAL":
-            return (int(toks[code[-5]].text), n1)
-        return None
-    if toks[code[-4]].text == "(":
-        ty = toks[code[-5]]
-        if ty.kind == "word" and ty.upper == "DECIMAL":
-            return (n1, 0)
-        return None
-    return None
-
-
-def _decimal_arg_ps(
-    toks: list[Tok], arg: tuple[int, int]
-) -> tuple[int, int] | None:
-    """(p, s) when the arg is a top-level CAST(... AS DECIMAL[(p[,s])]) or
-    a numeric literal containing '.' (reference literal typing), else
-    None."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if not code:
-        return None
-    first = toks[code[0]]
-    neg = (
-        len(code) == 2
-        and first.text == "-"
-        and toks[code[1]].kind == "num"
-    )
-    lit = toks[code[1]] if neg else (first if len(code) == 1 else None)
-    if (
-        lit is not None
-        and lit.kind == "num"
-        and "." in lit.text
-        and "e" not in lit.text.lower()
-    ):
-        digs = lit.text.replace(".", "").lstrip("0") or "0"
-        s = len(lit.text.split(".")[1])
-        return (max(len(digs), s), s)
-    if first.kind == "word" and first.upper == "CAST":
-        ty = _span_cast_type(toks, code[0], code[-1])
-        if ty:
-            m = re.fullmatch(r"DECIMAL(\((\d+)(,(\d+))?\))?", ty)
-            if m:
-                p = int(m.group(2)) if m.group(2) else 9
-                s = int(m.group(4)) if m.group(4) else 0
-                return (p, s)
-    return None
-
-
 def _int_literal_value(toks: list[Tok], arg: tuple[int, int]) -> int | None:
     """Value of an (optionally negated) integer-literal argument."""
     code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
@@ -4683,52 +4438,17 @@ def _int_literal_value(toks: list[Tok], arg: tuple[int, int]) -> int | None:
     return None
 
 
-def _decimal_cast_scale(toks: list[Tok], arg: tuple[int, int]) -> int | None:
-    """Scale s when the arg is a top-level CAST(... AS DECIMAL(p, s)) (or
-    DECIMAL(p) — scale 0), else None."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if len(code) < 4:
-        return None
-    first = toks[code[0]]
-    if not (first.kind == "word" and first.upper == "CAST"):
-        return None
-    if toks[code[1]].text != "(" or _matching_paren(toks, code[1]) != code[-1]:
-        return None
-    # tail shapes before the cast's close paren (code[-1]):
-    #   ... DECIMAL ( p , s ) )   → scale s
-    #   ... DECIMAL ( p ) )       → scale 0
-    #   ... DECIMAL )             → scale 0 (bare DECIMAL = DECIMAL(9,0))
-    t2 = toks[code[-2]]
-    if t2.kind == "word" and t2.upper == "DECIMAL":
-        return 0
-    if t2.text != ")":
-        return None
-    if toks[code[-3]].kind != "num":
-        return None
-    n1 = int(toks[code[-3]].text)
-    if toks[code[-4]].text == ",":
-        if toks[code[-5]].kind != "num" or toks[code[-6]].text != "(":
-            return None
-        ty = toks[code[-7]]
-        return n1 if ty.kind == "word" and ty.upper == "DECIMAL" else None
-    if toks[code[-4]].text == "(":
-        ty = toks[code[-5]]
-        return 0 if ty.kind == "word" and ty.upper == "DECIMAL" else None
-    return None
-
-
 _CEIL_FLOOR_FNS = ("ceil", "ceiling", "dceil", "floor", "dfloor")
 
 
 def _rewrite_double_ceil_floor(
-    toks: list[Tok], double_columns: frozenset[str] | None
+    toks: list[Tok], column_types: dict[str, str] | None
 ) -> list[Tok]:
     """ceil/floor over DOUBLE return DOUBLE in the reference
     (impala_functions.py:348-349 — DOUBLE→DOUBLE; the DECIMAL overloads
     return DECIMAL, which Spark matches); Spark's ceil/floor of a double
-    return BIGINT.  Wrap provably-double arguments (CAST to
-    DOUBLE/FLOAT, or a catalog column unambiguously double) with a cast
-    back to DOUBLE."""
+    return BIGINT.  Wrap arguments _static_type proves DOUBLE or FLOAT
+    with a cast back to DOUBLE."""
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -4741,9 +4461,9 @@ def _rewrite_double_ceil_floor(
             continue
         close = _matching_paren(toks, j)
         args = _split_args(toks, j, close)
-        if len(args) == 1 and _arg_provably_typed(
-            toks, args[0], ("DOUBLE", "FLOAT", "REAL"), double_columns
-        ):
+        if len(args) == 1 and _static_type(
+            toks, *args[0], column_types
+        ) in ("DOUBLE", "FLOAT"):
             inner = untokenize(toks[i : close + 1])
             repl = tokenize(f"CAST({inner} AS DOUBLE)")
             toks[i : close + 1] = repl
@@ -4753,170 +4473,6 @@ def _rewrite_double_ceil_floor(
             continue
         i += 1
     return toks
-
-
-def _is_date_typed(toks: list[Tok], arg: tuple[int, int]) -> bool:
-    """Statically-provable DATE argument: a DATE '...' literal or a
-    top-level CAST(... AS DATE). The reference's DATE overloads of
-    next_day/last_day return DATE (impala_functions.py:273-274), so those
-    calls keep Spark's native DATE-returning form; everything else is
-    treated as the TIMESTAMP overload."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if not code:
-        return False
-    first = toks[code[0]]
-    if first.kind == "word" and first.upper == "DATE":
-        if (
-            len(code) >= 2
-            and toks[code[1]].text == "("
-            and _matching_paren(toks, code[1]) == code[-1]
-        ):
-            return True  # DATE(...) cast-function form
-        return len(code) == 2 and toks[code[1]].kind == "str"
-    # a top-level to_date_strict(...) call is our own emitted DATE cast —
-    # without this, re-translating translated SQL (stored view bodies)
-    # flipped next_day/last_day from the DATE-returning native form to the
-    # TIMESTAMP kernel (round-8 advice, medium)
-    if (
-        first.kind == "word"
-        and first.text.lower() == "to_date_strict"
-        and len(code) >= 2
-        and toks[code[1]].text == "("
-        and _matching_paren(toks, code[1]) == code[-1]
-    ):
-        return True
-    if first.kind == "word" and first.upper == "CAST" and len(code) >= 2:
-        if toks[code[1]].text == "(" and _matching_paren(
-            toks, code[1]
-        ) == code[-1]:
-            ty = toks[code[-2]]
-            return ty.kind == "word" and ty.upper == "DATE"
-    return False
-
-
-_INT_WIDTH_TYPES = {
-    "TINYINT": 8,
-    "SMALLINT": 16,
-    "INT": 32,
-    "INTEGER": 32,
-    "BIGINT": 64,
-}
-
-
-def _is_provably_bigint_arg(toks: list[Tok], arg: tuple[int, int]) -> bool:
-    """True when the argument is PROVABLY BIGINT: a top-level CAST to
-    BIGINT, or an integer literal (optional sign) outside the INT32 range
-    but inside INT64 (reference smallest-fit literal typing)."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if not code:
-        return False
-    first = toks[code[0]]
-    if first.kind == "word" and first.upper == "CAST" and len(code) >= 2:
-        if toks[code[1]].text == "(" and _matching_paren(
-            toks, code[1]
-        ) == code[-1]:
-            ty = toks[code[-2]]
-            return ty.kind == "word" and ty.upper == "BIGINT"
-        return False
-    lit = None
-    if len(code) == 1 and first.kind == "num" and "." not in first.text:
-        lit = first.text
-    elif (
-        len(code) == 2
-        and first.text == "-"
-        and toks[code[1]].kind == "num"
-        and "." not in toks[code[1]].text
-    ):
-        lit = "-" + toks[code[1]].text
-    if lit is None:
-        return False
-    try:
-        v = int(lit)
-    except ValueError:
-        return False
-    return not (-(2**31) <= v <= 2**31 - 1) and -(2**63) <= v <= 2**63 - 1
-
-
-def _is_provably_narrow_int(toks: list[Tok], arg: tuple[int, int]) -> bool:
-    """True when the argument is PROVABLY a sub-64-bit integer: a top-level
-    CAST to TINYINT/SMALLINT/INT, or an integer literal that fits one of
-    those widths (reference smallest-fit literal typing). Distinct from
-    _int_arg_width's 64 fallback, which conflates 'provably BIGINT' with
-    'unknown type' — callers that must not touch DOUBLE/DECIMAL arguments
-    gate on this first."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if not code:
-        return False
-    first = toks[code[0]]
-    if first.kind == "word" and first.upper == "CAST" and len(code) >= 2:
-        if toks[code[1]].text == "(" and _matching_paren(
-            toks, code[1]
-        ) == code[-1]:
-            ty = toks[code[-2]]
-            return (
-                ty.kind == "word"
-                and ty.upper in _INT_WIDTH_TYPES
-                and _INT_WIDTH_TYPES[ty.upper] < 64
-            )
-        return False
-    lit = None
-    if len(code) == 1 and first.kind == "num" and "." not in first.text:
-        lit = first.text
-    elif (
-        len(code) == 2
-        and first.text == "-"
-        and toks[code[1]].kind == "num"
-        and "." not in toks[code[1]].text
-    ):
-        lit = "-" + toks[code[1]].text
-    if lit is None:
-        return False
-    try:
-        return -(2**31) <= int(lit) <= 2**31 - 1
-    except ValueError:
-        return False
-
-
-def _int_arg_width(toks: list[Tok], arg: tuple[int, int]) -> int:
-    """Bit width of a provably-typed integer argument: a top-level CAST to
-    an int type, or an integer literal under the reference's smallest-fit
-    literal typing (fe LiteralExpr: 1 is TINYINT, 1000 SMALLINT, …).
-    Unprovable shapes (bare columns, expressions) fall back to 64."""
-    code = [k for k in range(arg[0], arg[1]) if _is_code(toks[k])]
-    if not code:
-        return 64
-    first = toks[code[0]]
-    if first.kind == "word" and first.upper == "CAST" and len(code) >= 2:
-        if toks[code[1]].text == "(" and _matching_paren(
-            toks, code[1]
-        ) == code[-1]:
-            ty = toks[code[-2]]
-            if ty.kind == "word" and ty.upper in _INT_WIDTH_TYPES:
-                return _INT_WIDTH_TYPES[ty.upper]
-        return 64
-    # [-]<int literal>
-    lit = None
-    if len(code) == 1 and first.kind == "num" and "." not in first.text:
-        lit = first.text
-    elif (
-        len(code) == 2
-        and first.text == "-"
-        and toks[code[1]].kind == "num"
-        and "." not in toks[code[1]].text
-    ):
-        lit = "-" + toks[code[1]].text
-    if lit is not None:
-        try:
-            v = int(lit)
-        except ValueError:
-            return 64
-        if -(2**7) <= v <= 2**7 - 1:
-            return 8
-        if -(2**15) <= v <= 2**15 - 1:
-            return 16
-        if -(2**31) <= v <= 2**31 - 1:
-            return 32
-    return 64
 
 
 def _count_capture_groups(pattern: str) -> int:
@@ -5442,21 +4998,21 @@ def _rewrite_count_distinct_to_ndv(toks: list[Tok]) -> list[Tok]:
 def translate(
     sql: str,
     options: dict[str, bool] | None = None,
-    bool_columns: frozenset[str] | None = None,
-    string_columns: frozenset[str] | None = None,
-    timestamp_columns: frozenset[str] | None = None,
-    double_columns: frozenset[str] | None = None,
-    bigint_columns: frozenset[str] | None = None,
+    column_types: dict[str, str] | None = None,
 ) -> str:
     """Rewrite an Impala-dialect SQL string into Spark-SQL.
 
     `options` mirrors the reference's query options (query-options.h);
     supported: appx_count_distinct (CountDistinctToNdvRule), utf8_mode
     (UTF8_MODE — default false, i.e. byte-oriented string semantics like
-    the reference).  `bool_columns` is the caller's catalog knowledge:
-    column names that are unambiguously BOOLEAN across registered
-    tables, used to type-dispatch ``||`` on bare column operands the way
-    the reference's analyzer does."""
+    the reference).  `column_types` is the caller's knowledge of the
+    columns the statement reads: lower-case column name → Impala type
+    name (BOOLEAN, STRING, TIMESTAMP, DOUBLE, BIGINT, ...) for the names
+    whose type is unambiguous.  _static_type reads it to type bare and
+    dotted column operands the way the reference's analyzer does: ``||``
+    on BOOLEAN columns is OR, STRING columns get the string→int cast
+    guard, and TIMESTAMP, DOUBLE and BIGINT columns drive the avg,
+    ceil/floor and DECIMAL promotion rewrites."""
     sql = _rewrite_create_table_ddl(sql)
     toks = tokenize(sql)
     toks = _rewrite_escape_residue(toks)
@@ -5466,17 +5022,17 @@ def translate(
     toks = _rewrite_values_rows(toks)
     toks = _rewrite_values_aliases(toks)
     toks = _rewrite_null_lhs_not_in(toks)
-    toks = _rewrite_logical_ops(toks, bool_columns)
+    toks = _rewrite_logical_ops(toks, column_types)
     toks = _rewrite_postfix_factorial(toks)
-    toks = _rewrite_string_int_casts(toks, string_columns)
+    toks = _rewrite_string_int_casts(toks, column_types)
     toks = _rewrite_datetime_type_contracts(toks)
-    toks = _rewrite_timestamp_avg(toks, timestamp_columns)
+    toks = _rewrite_timestamp_avg(toks, column_types)
     toks = _rewrite_decimal_sum(toks)
     toks = _rewrite_decimal_avg(toks)
-    toks = _rewrite_bigint_decimal_arith(toks, bigint_columns)
+    toks = _rewrite_bigint_decimal_arith(toks, column_types)
     toks = _rewrite_double_string_casts(toks)
     toks = _rewrite_div_by_zero_literal(toks)
-    toks = _rewrite_double_ceil_floor(toks, double_columns)
+    toks = _rewrite_double_ceil_floor(toks, column_types)
     toks = _rewrite_char_casts(toks)
     toks = _rewrite_tablesample(toks)
     toks = _rewrite_right_semi_anti(toks)
@@ -5705,15 +5261,12 @@ def _rewrite_null_lhs_not_in(toks: list[Tok]) -> list[Tok]:
             o = _matching_paren_rev(toks, p)
             if o is not None:
                 c_i = _prev_code(toks, o - 1)
+                c = _parse_cast(toks, c_i)
                 arg = _next_code(toks, o + 1)
-                as_i = _next_code(toks, arg + 1) if arg < len(toks) else -1
                 if (
-                    c_i >= 0
-                    and toks[c_i].upper == "CAST"
-                    and arg < len(toks)
+                    c is not None
                     and toks[arg].upper == "NULL"
-                    and 0 <= as_i < p
-                    and toks[as_i].upper == "AS"
+                    and _next_code(toks, arg + 1) == c.as_
                 ):
                     lhs_lo = c_i
         if lhs_lo is None:
@@ -5755,31 +5308,20 @@ def _rewrite_null_predicates(toks: list[Tok]) -> list[Tok]:
                 toks[i : i + 1] = tokenize("CAST(NULL AS BOOLEAN)")
                 i += 1
                 continue
-        if t.kind == "word" and t.upper == "CAST":
-            j = _next_code(toks, i + 1)
-            if j < len(toks) and toks[j].text == "(":
-                close = _matching_paren(toks, j)
-                s_i = _next_code(toks, j + 1)
-                as_i = _next_code(toks, s_i + 1)
-                ty_i = _next_code(toks, as_i + 1)
-                if (
-                    toks[s_i].kind == "str"
-                    and as_i < close
-                    and toks[as_i].upper == "AS"
-                    and ty_i < close
-                    and toks[ty_i].upper == "BOOLEAN"
-                    and _next_code(toks, ty_i + 1) == close
-                ):
-                    lit = toks[s_i].text[1:-1].strip().lower()
-                    if lit == "true":
-                        repl = "TRUE"
-                    elif lit == "false":
-                        repl = "FALSE"
-                    else:
-                        repl = "CAST(NULL AS BOOLEAN)"
-                    toks[i : close + 1] = tokenize(repl)
-                    i += 1
-                    continue
+        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
+        if c is not None and c.fmt is None and c.ty == "BOOLEAN":
+            s_i = _next_code(toks, c.open + 1)
+            if toks[s_i].kind == "str" and _next_code(toks, s_i + 1) == c.as_:
+                lit = toks[s_i].text[1:-1].strip().lower()
+                if lit == "true":
+                    repl = "TRUE"
+                elif lit == "false":
+                    repl = "FALSE"
+                else:
+                    repl = "CAST(NULL AS BOOLEAN)"
+                toks[i : c.close + 1] = tokenize(repl)
+                i += 1
+                continue
         i += 1
     return toks
 
@@ -7320,7 +6862,7 @@ _OPERAND_BOUNDARY_KWS = {
 
 
 def _rewrite_logical_ops(
-    toks: list[Tok], bool_columns: frozenset[str] | None = None
+    toks: list[Tok], column_types: dict[str, str] | None = None
 ) -> list[Tok]:
     """Impala's C-style logical operators (sql-scanner.flex): ``&&`` is
     AND, ``!`` is NOT, and ``||`` is CompoundVerticalBarExpr — boolean
@@ -7330,11 +6872,11 @@ def _rewrite_logical_ops(
     or predicate keyword in an operand span means the operands are
     boolean — in that case emit OR; otherwise leave ``||`` for Spark,
     whose concat matches the string branch.  A bare COLUMN operand with
-    no predicate marker is resolved through ``bool_columns`` — the
-    caller's catalog knowledge (Engine passes the set of column names
-    that are unambiguously BOOLEAN across registered tables), the same
-    type dispatch the reference's analyzer does.  Without catalog
-    knowledge that corner stays on the concat path — documented."""
+    no predicate marker is resolved through ``column_types`` — the
+    caller's knowledge of the statement's columns (Engine passes the
+    types of the relations the statement reads), the same type dispatch
+    the reference's analyzer does.  Without that knowledge the corner
+    stays on the concat path — documented."""
     i = 0
     while i < len(toks):
         if toks[i].kind == "op" and toks[i].text == "&&":
@@ -7351,8 +6893,8 @@ def _rewrite_logical_ops(
         if (
             _bars_operand_boolish(toks, i, -1)
             or _bars_operand_boolish(toks, i, +1)
-            or _bars_operand_bool_column(toks, i, -1, bool_columns)
-            or _bars_operand_bool_column(toks, i, +1, bool_columns)
+            or _bars_operand_bool_column(toks, i, -1, column_types)
+            or _bars_operand_bool_column(toks, i, +1, column_types)
         ):
             toks[i : i + 1] = [Tok("ws", " "), Tok("word", "OR"), Tok("ws", " ")]
             i += 2
@@ -7361,14 +6903,14 @@ def _rewrite_logical_ops(
 
 
 def _bars_operand_bool_column(
-    toks: list[Tok], i: int, step: int, bool_columns: frozenset[str] | None
+    toks: list[Tok], i: int, step: int, column_types: dict[str, str] | None
 ) -> bool:
     """Catalog-informed type dispatch for the one ``||`` shape the token
     scan cannot decide: a BARE column operand (identifier or dotted path,
     no comparison/predicate marker anywhere in the span).  True iff the
-    operand is exactly such a path and its leaf column name is known
-    BOOLEAN in the caller's catalog."""
-    if not bool_columns:
+    operand is exactly such a path and its leaf column name is BOOLEAN
+    in ``column_types``."""
+    if not column_types:
         return False
     rng = range(i - 1, -1, -1) if step < 0 else range(i + 1, len(toks))
     path: list[Tok] = []
@@ -7411,7 +6953,7 @@ def _bars_operand_bool_column(
     # the || on the left walk, farthest on the right walk
     words = [p for p in path if p.kind == "word"]
     leaf = words[0] if step < 0 else words[-1]
-    return leaf.text.lower() in bool_columns
+    return column_types.get(leaf.text.lower()) == "BOOLEAN"
 
 
 #: Boundary keywords that can only introduce a PREDICATE — meeting one at
@@ -7599,7 +7141,6 @@ def _rewrite_postfix_factorial(toks: list[Tok]) -> list[Tok]:
     return toks
 
 
-_INT_CAST_TYPES = {"TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT"}
 #: the reference's integer parse (util/string-parser.h StringToIntInternal:
 #: 295-345): optional sign, digits only, trailing whitespace allowed,
 #: leading whitespace allowed via the SkipLeadingWhitespace retry — any
@@ -7608,50 +7149,24 @@ _REF_INT_RE = re.compile(r"^\s*[+-]?[0-9]+\s*$")
 
 
 def _rewrite_string_int_casts(
-    toks: list[Tok], string_columns: frozenset[str] | None = None
+    toks: list[Tok], column_types: dict[str, str] | None = None
 ) -> list[Tok]:
     """CAST(string AS integer type): the reference parses with
     StringToInt (digits + sign + surrounding whitespace ONLY; '3.9' is
     PARSE_FAILURE -> NULL, cast-functions-ir.cc CAST_FROM_STRING:113-127)
     while Spark's non-ANSI cast truncates through the decimal point.
     String LITERALS are folded here; bare STRING-typed column operands
-    (catalog knowledge, like the || dispatch) get a digits-only guard."""
+    (``column_types``, like the || dispatch) get a digits-only guard."""
     i = 0
     while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.upper == "CAST"):
+        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
+        if c is None or c.ty not in _INT_WIDTH_TYPES:
             i += 1
             continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        depth = 0
-        as_i = None
-        for k in range(j + 1, close):
-            tk = toks[k]
-            if not _is_code(tk):
-                continue
-            if tk.text == "(":
-                depth += 1
-            elif tk.text == ")":
-                depth -= 1
-            elif depth == 0 and tk.kind == "word" and tk.upper == "AS":
-                as_i = k
-        if as_i is None:
-            i += 1
-            continue
-        ty_i = _next_code(toks, as_i + 1)
-        if ty_i >= close or toks[ty_i].upper not in _INT_CAST_TYPES:
-            i += 1
-            continue
+        close, ty = c.close, c.ty
         operand = [
-            toks[k] for k in range(j + 1, as_i) if _is_code(toks[k])
+            toks[k] for k in range(c.open + 1, c.as_) if _is_code(toks[k])
         ]
-        ty = toks[ty_i].upper
-        if ty == "INTEGER":
-            ty = "INT"
         if len(operand) == 1 and operand[0].kind == "str":
             # literal: fold with the reference parser contract
             lit = operand[0].text[1:-1]
@@ -7661,7 +7176,7 @@ def _rewrite_string_int_casts(
             toks[i : close + 1] = tokenize(f"CAST(NULL AS {ty})")
             i += 1
             continue
-        if string_columns and operand:
+        if column_types and operand:
             words = [p for p in operand if p.kind == "word"]
             is_path = all(
                 (p.kind == "word") or (p.text == ".") for p in operand
@@ -7669,7 +7184,7 @@ def _rewrite_string_int_casts(
             if (
                 is_path
                 and len(words) <= 2
-                and words[-1].text.lower() in string_columns
+                and column_types.get(words[-1].text.lower()) == "STRING"
             ):
                 col = untokenize(operand).strip()
                 repl = (
@@ -7692,33 +7207,12 @@ def _rewrite_char_casts(toks: list[Tok]) -> list[Tok]:
     for CHAR results."""
     i = 0
     while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.upper == "CAST"):
+        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
+        if c is None:
             i += 1
             continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        # find top-level AS inside
-        depth = 0
-        as_i = None
-        for k in range(j + 1, close):
-            tk = toks[k]
-            if not _is_code(tk):
-                continue
-            if tk.text == "(":
-                depth += 1
-            elif tk.text == ")":
-                depth -= 1
-            elif depth == 0 and tk.kind == "word" and tk.upper == "AS":
-                as_i = k
-        if as_i is None:
-            i += 1
-            continue
-        ty_i = _next_code(toks, as_i + 1)
-        if ty_i < close and toks[ty_i].upper == "STRING":
+        j, as_i, close = c.open, c.as_, c.close
+        if c.ty == "STRING":
             # Impala renders CAST(boolean AS STRING) as '1'/'0' — the
             # boolean goes through the exact-numeric print path
             # (cast-functions-ir.cc CAST_EXACT_NUMERIC_TO_STRING with
@@ -7726,35 +7220,20 @@ def _rewrite_char_casts(toks: list[Tok]) -> list[Tok]:
             # When the cast operand is PROVABLY boolean (top-level
             # predicate marker), route through INT first.  No FORMAT
             # clause may follow (that path belongs to the format rewrite).
-            nxt = _next_code(toks, ty_i + 1)
-            has_format = (
-                nxt < close
-                and toks[nxt].kind == "word"
-                and toks[nxt].upper == "FORMAT"
-            )
-            if not has_format and _span_has_predicate_marker(
+            if c.fmt is None and _span_has_predicate_marker(
                 toks, j + 1, as_i
             ):
                 expr = untokenize(toks[j + 1 : as_i]).strip()
                 toks[i : close + 1] = tokenize(
                     f"CAST(CAST(({expr}) AS INT) AS STRING)"
                 )
-                i += 1
-                continue
             i += 1
             continue
-        if ty_i >= close or toks[ty_i].upper not in ("CHAR", "VARCHAR"):
+        m = re.fullmatch(r"(CHAR|VARCHAR)\((\d+)\)", c.ty)
+        if m is None:
             i += 1
             continue
-        p_i = _next_code(toks, ty_i + 1)
-        if p_i >= close or toks[p_i].text != "(":
-            i += 1
-            continue
-        n_i = _next_code(toks, p_i + 1)
-        if toks[n_i].kind != "num":
-            i += 1
-            continue
-        n = toks[n_i].text
+        n = m.group(2)
         # typeof(CAST(x AS CHAR/VARCHAR(n))) folds to the DECLARED type —
         # Spark erases both to STRING at runtime, but the analyzer's
         # answer is static (expr-test typeOf CHAR/VARCHAR rows). Detect
@@ -7771,8 +7250,7 @@ def _rewrite_char_casts(toks: list[Tok]) -> list[Tok]:
                 and after < len(toks)
                 and toks[after].text == ")"
             ):
-                lit = f"'{toks[ty_i].upper}({n})'"
-                toks[fn_i : after + 1] = tokenize(lit)
+                toks[fn_i : after + 1] = tokenize(f"'{c.ty}'")
                 i = fn_i + 1
                 continue
         expr = untokenize(toks[j + 1 : as_i]).strip()
@@ -7783,18 +7261,12 @@ def _rewrite_char_casts(toks: list[Tok]) -> list[Tok]:
         # _rewrite_cast_format, which translates it to date_format) and
         # apply the truncate/pad to the formatted result. Without this
         # guard the FORMAT clause was silently dropped.
-        p_close = _matching_paren(toks, p_i)
-        fmt_i = _next_code(toks, p_close + 1)
-        if (
-            fmt_i < close
-            and toks[fmt_i].kind == "word"
-            and toks[fmt_i].upper == "FORMAT"
-        ):
-            s_i = _next_code(toks, fmt_i + 1)
+        if c.fmt is not None:
+            s_i = _next_code(toks, c.fmt + 1)
             if s_i < close and toks[s_i].kind == "str":
                 inner = f"CAST(({expr}) AS STRING FORMAT {toks[s_i].text})"
                 cut = f"substr({inner}, 1, {n})"
-                if toks[ty_i].upper == "CHAR":
+                if m.group(1) == "CHAR":
                     repl = (
                         f"concat({cut}, repeat(' ', "
                         f"greatest({n} - octet_length({cut}), 0)))"
@@ -7812,7 +7284,7 @@ def _rewrite_char_casts(toks: list[Tok]) -> list[Tok]:
             # STRING cast uses)
             expr = f"CAST(({expr}) AS INT)"
         cut = f"substr(CAST(({expr}) AS STRING), 1, {n})"
-        if toks[ty_i].upper == "CHAR":
+        if m.group(1) == "CHAR":
             # pad by OCTET length — CHAR(n) is n BYTES (ScalarType CHAR);
             # a char-count rpad would over-pad multibyte values in the
             # default byte mode

@@ -22,7 +22,7 @@ from hopspark.ddl import AlterTableMixin
 from hopspark.dialect import translate
 from hopspark.dialect.translate import (
     FromItem, Tok, _from_items, _is_code, _matching_paren, _next_code,
-    _prev_code, _select_clause_here, _span_cast_type, tokenize, untokenize,
+    _parse_cast, _prev_code, _select_clause_here, tokenize, untokenize,
 )
 from hopspark.functions import register_all
 from hopspark.session import get_spark
@@ -318,17 +318,10 @@ class Engine(AlterTableMixin):
         items = self._rewrite_table_path_scans(toks, items)
         items = self._rewrite_subplan_derived_tables(toks, items)
         sql = untokenize(toks)
-        bools, strs, tss, dbls, bigints = self._schema_columns_for(
-            sql, toks, items
-        )
         return translate(
             sql,
             options=self.options,
-            bool_columns=bools,
-            string_columns=strs,
-            timestamp_columns=tss,
-            double_columns=dbls,
-            bigint_columns=bigints,
+            column_types=self._schema_columns_for(sql, toks, items),
         )
 
     def _relation(self, name: str) -> DataFrame | None:
@@ -2298,25 +2291,17 @@ class Engine(AlterTableMixin):
 
     def _schema_columns_for(
         self, impala_sql: str, toks: list[Tok], items: list[FromItem]
-    ) -> tuple[
-        frozenset[str] | None,
-        frozenset[str] | None,
-        frozenset[str] | None,
-        frozenset[str] | None,
-        frozenset[str] | None,
-    ]:
+    ) -> dict[str, str] | None:
         """Column knowledge for the translator's type dispatches, taken
         from the relations the statement reads (catalog FROM/JOIN items at
         any depth, and CAST-typed derived-table columns), like the
-        analyzer typing a column from the statement's table refs: the
-        names that are unambiguously BOOLEAN
-        (`||` → OR, the analyzer's CompoundVerticalBarExpr dispatch),
-        STRING (string→int cast parse guard), TIMESTAMP, DOUBLE/FLOAT and
-        BIGINT.  A name that appears with MIXED types across those
-        relations is excluded (ambiguous, like the analyzer's
-        unresolved-column path).  Only computed when the statement can
-        need it.  ``toks``/``items`` are ``impala_sql``'s tokens and FROM
-        items."""
+        analyzer typing a column from the statement's table refs: lower-
+        case column name → Impala type name.  A name that appears with
+        MIXED types across those relations is left out (ambiguous, like
+        the analyzer's unresolved-column path), except that FLOAT mixed
+        with DOUBLE, or FLOAT alone, maps to DOUBLE.  Only computed when
+        the statement can need it.  ``toks``/``items`` are
+        ``impala_sql``'s tokens and FROM items."""
         up = impala_sql.upper()
         need = (
             "||" in impala_sql
@@ -2332,7 +2317,7 @@ class Engine(AlterTableMixin):
             or any(ch in impala_sql for ch in "+-*/%")
         )
         if not need:
-            return None, None, None, None, None
+            return None
         names, seen = self._statement_columns(toks, items)
         for name in names:
             rel = self._relation(name)
@@ -2340,23 +2325,13 @@ class Engine(AlterTableMixin):
                 continue
             for f in rel.schema.fields:
                 seen.setdefault(f.name.lower(), set()).add(
-                    f.dataType.typeName()
+                    _impala_type_name(f.dataType)
                 )
-        return (
-            frozenset(n for n, ts in seen.items() if ts == {"boolean"}),
-            frozenset(n for n, ts in seen.items() if ts == {"string"}),
-            frozenset(n for n, ts in seen.items() if ts == {"timestamp"}),
-            frozenset(
-                n for n, ts in seen.items() if ts <= {"double", "float"}
-            ),
-            frozenset(n for n, ts in seen.items() if ts == {"long"}),
-        )
-
-    #: CAST target -> Spark typeName, for the types the dispatches read
-    _CAST_TYPE_NAMES = {
-        "BIGINT": "long", "BOOLEAN": "boolean", "DOUBLE": "double",
-        "FLOAT": "float", "STRING": "string", "TIMESTAMP": "timestamp",
-    }
+        return {
+            n: "DOUBLE" if ts <= {"FLOAT", "DOUBLE"} else next(iter(ts))
+            for n, ts in seen.items()
+            if len(ts) == 1 or ts <= {"FLOAT", "DOUBLE"}
+        }
 
     @classmethod
     def _statement_columns(
@@ -2364,10 +2339,10 @@ class Engine(AlterTableMixin):
     ) -> tuple[set[str], dict[str, set[str]]]:
         """What the statement itself says about the relations it reads:
         the names of its undotted FROM/JOIN items at any depth, less its
-        own WITH names (the candidate catalog relations), and the type
-        names of the columns its derived tables and VALUES rows define as
-        ``CAST(... AS <type>) [AS] name``.  ``items`` are the FROM items
-        of ``toks``."""
+        own WITH names (the candidate catalog relations), and the Impala
+        type names of the columns its derived tables and VALUES rows
+        define as ``CAST(... AS <type>) [AS] name``.  ``items`` are the
+        FROM items of ``toks``."""
         if not items:
             return set(), {}
         # one-segment items that are not table functions (`range(3)`)
@@ -2380,27 +2355,23 @@ class Engine(AlterTableMixin):
         typed: dict[str, set[str]] = {}
         for i, t in enumerate(toks):
             if t.kind == "word" and t.upper == "CAST":
-                o = _next_code(toks, i + 1)
-                if o >= len(toks) or toks[o].text != "(":
-                    continue
                 try:
-                    close = _matching_paren(toks, o)
+                    c = _parse_cast(toks, i)
                 except ValueError:
                     break  # unbalanced: Spark's parser reports it
-                ty = _span_cast_type(toks, i, close)
-                a = _next_code(toks, close + 1)
+                if c is None:
+                    continue
+                a = _next_code(toks, c.close + 1)
                 if a < len(toks) and toks[a].upper == "AS":
                     a = _next_code(toks, a + 1)
                 n = _next_code(toks, a + 1)
                 if (
-                    ty and a < len(toks) and toks[a].kind == "word"
+                    c.ty and a < len(toks) and toks[a].kind == "word"
                     and toks[a].upper not in cls._QCF_KEYWORDS
                     and (n >= len(toks) or toks[n].text in (",", ")")
                          or toks[n].upper == "FROM")
                 ):
-                    typed.setdefault(toks[a].text.lower(), set()).add(
-                        cls._CAST_TYPE_NAMES.get(ty, ty.lower())
-                    )
+                    typed.setdefault(toks[a].text.lower(), set()).add(c.ty)
                 continue
             if t.kind == "word" and t.upper == "AS":
                 # `WITH w AS (` / `, w AS (` binds a WITH name

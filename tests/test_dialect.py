@@ -543,12 +543,12 @@ def test_bars_bool_column_catalog_dispatch(spark, sf_dir):
     from hopspark.dialect.translate import translate
     from hopspark.engine import Engine
 
-    bc = frozenset({"is_big", "is_disc"})
-    assert " OR " in translate("select is_big || is_disc from f", bool_columns=bc)
-    assert " OR " in translate("select a || is_disc || c from f", bool_columns=bc)
+    bc = {"is_big": "BOOLEAN", "is_disc": "BOOLEAN"}
+    assert " OR " in translate("select is_big || is_disc from f", column_types=bc)
+    assert " OR " in translate("select a || is_disc || c from f", column_types=bc)
     # string columns / unknown names keep concat; function calls opaque
-    assert "||" in translate("select s1 || s2 from f", bool_columns=bc)
-    assert "||" in translate("select is_big(x) || s from f", bool_columns=bc)
+    assert "||" in translate("select s1 || s2 from f", column_types=bc)
+    assert "||" in translate("select is_big(x) || s from f", column_types=bc)
     # no catalog knowledge: unchanged legacy behavior
     assert "||" in translate("select is_big || is_disc from f")
 
@@ -860,7 +860,7 @@ def test_date_trunc_date_overload_range(spark, sf_dir):
 def test_retranslate_keeps_date_kernels():
     """Round-8 advice (medium): re-translating translated SQL (stored view
     bodies) must keep next_day/last_day on the DATE-returning native form —
-    _is_date_typed recognizes to_date_strict(...) and DATE(...)."""
+    _static_type types to_date_strict(...) and DATE(...) as DATE."""
     from hopspark.dialect.translate import translate
 
     for sql in (
@@ -871,6 +871,29 @@ def test_retranslate_keeps_date_kernels():
         again = translate(once)
         assert again == once
         assert "next_day2" not in again and "last_day1" not in again
+
+
+def test_format_casts_keep_their_type(spark, sf_dir):
+    """A CAST with a FORMAT clause has its target type: next_day/last_day
+    over ``CAST(... AS DATE FORMAT ...)`` stay on the DATE overload and
+    avg over ``CAST(... AS TIMESTAMP FORMAT ...)`` returns a TIMESTAMP,
+    exactly as the plain CAST forms do."""
+    import datetime
+
+    from hopspark.engine import Engine
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    d = "CAST('2020-01-01' AS DATE FORMAT 'YYYY-MM-DD')"
+    df = eng.sql(f"SELECT next_day({d}, 'MO') n, last_day({d}) l")
+    assert [t for _, t in df.dtypes] == ["date", "date"]
+    assert tuple(df.collect()[0]) == (
+        datetime.date(2020, 1, 6), datetime.date(2020, 1, 31)
+    )
+    df = eng.sql(
+        "SELECT avg(CAST('2020-01-01' AS TIMESTAMP FORMAT 'YYYY-MM-DD')) a"
+    )
+    assert df.dtypes == [("a", "timestamp")]
+    assert df.collect()[0].a == datetime.datetime(2020, 1, 1)
 
 
 def test_mask_char_codepoint_out_of_range():

@@ -100,3 +100,116 @@ def test_strings_and_comments_untouched():
     assert "'isnull(a,b) ORDER BY x'" in out
     assert "-- ORDER BY comment" in out
     assert "/* aggif(p, x) in comment */" in out
+
+
+# --- one static type per operand (_parse_cast / _static_type) -----------
+
+_WS = st.sampled_from(["", " ", "  ", "\n", "\t "])
+
+
+@st.composite
+def _mixed_case(draw, word: str) -> str:
+    flips = draw(st.lists(st.booleans(), min_size=len(word), max_size=len(word)))
+    return "".join(c.upper() if f else c.lower() for c, f in zip(word, flips))
+
+
+@st.composite
+def _cast_type(draw) -> tuple[str, str]:
+    """(the type as written, its normalized name)."""
+    ws = draw(_WS)
+    name = draw(st.sampled_from([
+        "TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "BOOLEAN",
+        "FLOAT", "REAL", "DOUBLE", "STRING", "DATE", "TIMESTAMP",
+        "DECIMAL", "CHAR", "VARCHAR",
+    ]))
+    written = draw(_mixed_case(name))
+    norm = {"INTEGER": "INT", "REAL": "FLOAT"}.get(name, name)
+    if name in ("DECIMAL", "CHAR", "VARCHAR"):
+        p = draw(st.integers(1, 38))
+        s = draw(st.integers(0, p))
+        shape = draw(st.sampled_from(
+            ["bare", "p", "ps"] if name == "DECIMAL" else ["p"]
+        ))
+        if shape == "bare":
+            norm = "DECIMAL(9,0)"
+        elif shape == "p":
+            written += f"{ws}({ws}{p}{ws})"
+            norm = f"{name}({p},0)" if name == "DECIMAL" else f"{name}({p})"
+        else:
+            written += f"{ws}({ws}{p}{ws},{ws}{s}{ws})"
+            norm = f"DECIMAL({p},{s})"
+    return written, norm
+
+
+_OPERAND_LEAF = st.one_of(
+    _IDENT,
+    st.integers(-1000, 1000).map(str),
+    st.sampled_from(["'a b'", "'(as)'", "NULL", "1.5"]),
+)
+
+
+@st.composite
+def _operand(draw, depth: int = 0) -> str:
+    """An expression with nested parens, calls and inner CASTs, so the
+    parser must find the AS at depth 1 only."""
+    if depth >= 3 or draw(st.booleans()):
+        return draw(_OPERAND_LEAF)
+    inner = draw(_operand(depth + 1))
+    ws = draw(_WS)
+    form = draw(st.sampled_from(["paren", "call", "cast", "arith"]))
+    if form == "paren":
+        return f"({ws}{inner}{ws})"
+    if form == "call":
+        return f"f({inner},{ws}({draw(_OPERAND_LEAF)}))"
+    if form == "cast":
+        written, _ = draw(_cast_type())
+        return f"{draw(_mixed_case('cast'))}({inner} AS {written})"
+    return f"{inner} + ({draw(_operand(depth + 1))})"
+
+
+@given(
+    operand=_operand(),
+    ty=_cast_type(),
+    fmt=st.booleans(),
+    cast_kw=_mixed_case("cast"),
+    as_kw=_mixed_case("as"),
+    fmt_kw=_mixed_case("format"),
+    ws=_WS,
+)
+@settings(max_examples=300, deadline=None)
+def test_static_type_of_a_cast_is_its_target(
+    operand, ty, fmt, cast_kw, as_kw, fmt_kw, ws
+):
+    from hopspark.dialect.translate import (
+        _is_code, _parse_cast, _span_cast_type, _static_type,
+    )
+
+    written, norm = ty
+    tail = f" {fmt_kw}{ws}'YYYY-MM-DD'" if fmt else ""
+    sql = f"{ws}{cast_kw}{ws}({ws}{operand} {as_kw} {written}{tail}{ws}){ws}"
+    toks = tokenize(sql)
+    code = [k for k, t in enumerate(toks) if _is_code(t)]
+    c = _parse_cast(toks, code[0])
+    assert c is not None and c.close == code[-1], sql
+    assert toks[c.as_].upper == "AS" and c.ty == norm, sql
+    assert untokenize(toks[c.type_s : c.type_e]).strip() == written.strip()
+    assert (c.fmt is not None) == fmt, sql
+    assert untokenize(toks[c.open + 1 : c.as_]).strip() == operand.strip()
+    assert _span_cast_type(toks, code[0], code[-1]) == norm
+    assert _static_type(toks, 0, len(toks)) == norm
+
+
+@given(v=st.one_of(
+    st.integers(-(2**63), 2**63 - 1),
+    st.sampled_from([
+        b + d for b in (2**7, 2**15, 2**31, 2**63) for d in (-1, 0)
+    ] + [-b + d for b in (2**7, 2**15, 2**31, 2**63) for d in (-1, 0)]),
+).filter(lambda v: -(2**63) <= v < 2**63))
+@settings(max_examples=300, deadline=None)
+def test_static_type_of_an_int_literal_is_the_folded_typeof(v):
+    from hopspark.dialect.translate import _static_type
+
+    toks = tokenize(str(v))
+    ty = _static_type(toks, 0, len(toks))
+    assert ty in ("TINYINT", "SMALLINT", "INT", "BIGINT")
+    assert translate(f"SELECT typeof({v})") == f"SELECT '{ty}'"

@@ -131,5 +131,8 @@ def test_statement_columns():
         "WHERE EXISTS (SELECT CAST(1 AS INT) FROM t4)"
     ) == (
         {"t1", "t2", "t3", "t4"},
-        {"a": {"long"}, "ts": {"timestamp"}},
+        {"a": {"BIGINT"}, "ts": {"TIMESTAMP"}},
     )
+    assert cols(
+        "SELECT d FROM (SELECT CAST(x AS DATE FORMAT 'YYYY') d FROM t5) v"
+    ) == ({"t5"}, {"d": {"DATE"}})
