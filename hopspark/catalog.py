@@ -15,7 +15,9 @@ dynamic partition pruning take over; nothing in the API changes.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -203,30 +205,42 @@ def _register_key(sf_dir: str) -> tuple:
     return (sf_dir, tuple(stats))
 
 
-def _views_verified(spark: SparkSession) -> bool:
+def _views_verified(spark: SparkSession, sf_dir: str) -> bool:
     """One-round-trip structural check that the catalog temp views are
     still the ones register() created: analyze a 10-way cross join of all
     views (never executed — .schema only triggers analysis) and compare the
-    concatenated (name, dataType) list against the declared schemas.
+    concatenated (name, dataType) list against the declared schemas; then
+    check that the sentinel view (the first table) still reads its file
+    under `sf_dir`.
 
     This is the guard against OUT-OF-BAND view replacement that the session
     marker cannot see — e.g. tools/query_fuzzer.register_views clobbering
     `events` with a raw parquet read whose `ts` is physical int64 nanos,
     which silently changes the translator's type dispatch
-    (avg(TIMESTAMP)→TIMESTAMP rewrite, bool `||`, cast guards).  One py4j
-    analysis call ≪ the 10 read+createOrReplaceTempView round trips it
-    replaces (nullability is ignored: reads through withColumn may relax
-    it without changing any type dispatch)."""
+    (avg(TIMESTAMP)→TIMESTAMP rewrite, bool `||`, cast guards), or
+    re-registering the views from another sf_dir, which keeps every
+    schema and only the file path tells apart.  One analysis and one
+    sentinel file lookup ≪ the 10 read+createOrReplaceTempView round trips
+    they replace (nullability is ignored: reads through withColumn may
+    relax it without changing any type dispatch)."""
     try:
         probe = spark.sql(
             "SELECT * FROM " + ", ".join(TABLES) + " LIMIT 0"
         ).schema
-    except Exception:
+    except AnalysisException:
         return False  # a view was dropped or is unreadable
     declared = [
         (f.name, f.dataType) for name in TABLES for f in SCHEMAS[name].fields
     ]
-    return [(f.name, f.dataType) for f in probe.fields] == declared
+    if [(f.name, f.dataType) for f in probe.fields] != declared:
+        return False
+    root = os.path.abspath(table_path(sf_dir, TABLES[0]))
+    files = [
+        unquote(urlparse(f).path) for f in spark.table(TABLES[0]).inputFiles()
+    ]
+    return bool(files) and all(
+        f == root or f.startswith(root + os.sep) for f in files
+    )
 
 
 def register(
@@ -247,7 +261,7 @@ def register(
     if (
         not force
         and getattr(spark, "_hopspark_tables_registered", None) == key
-        and _views_verified(spark)
+        and _views_verified(spark, sf_dir)
     ):
         return
     for name in TABLES:

@@ -4995,6 +4995,73 @@ def _rewrite_count_distinct_to_ndv(toks: list[Tok]) -> list[Tok]:
 # ---------------------------------------------------------------------------
 
 
+#: the one-row source of a FROM-less query block.  Catalyst folds a
+#: projection, filter or limit over it into a LocalRelation, which
+#: collect() returns from the driver; the bare SELECT's OneRowRelation
+#: scan runs a Spark job.  The names are ones no statement uses: Spark
+#: resolves a name against the source before a lateral alias.
+_CONSTANT_SOURCE = " FROM (VALUES (0)) AS _hs_one_row(_hs_one_row_c)"
+
+#: depth-0 words that end a FROM-less block's select list; GROUP, ORDER,
+#: SORT, CLUSTER and DISTRIBUTE only when BY follows
+_SELECT_LIST_ENDS = frozenset({"WHERE", "HAVING", "WINDOW", "LIMIT", "OFFSET"})
+_SELECT_LIST_ENDS_BY = frozenset({"GROUP", "ORDER", "SORT", "CLUSTER", "DISTRIBUTE"})
+_SET_OPERATORS = frozenset({"UNION", "INTERSECT", "EXCEPT", "MINUS"})
+
+
+def _add_constant_sources(toks: list[Tok]) -> list[Tok]:
+    """Give each FROM-less query block at statement level (the main
+    query, after any WITH clause, and each set-operation branch) the
+    one-row source ``_CONSTANT_SOURCE``, inserted right after its select
+    list, the way the reference runs such a block as constant rows in the
+    coordinator with no scan (union-node.h).  A block whose select list
+    has a ``*`` or ``q.*`` item keeps its bare form (``select *`` is zero
+    columns and one row); nested blocks are left alone."""
+    # the rewrites emit spliced text as one token: split it, so that its
+    # parens and keywords count
+    toks = [
+        part for t in toks
+        for part in ([t] if _TOKEN_RE.fullmatch(t.text) else tokenize(t.text))
+    ]
+    owned = {it.clause for it in _from_items(toks) if it.block == -1}
+    spots: list[int] = []
+    # the open block's SELECT, the end of its select list, and whether it
+    # owns a FROM or has a star item
+    start = end = None
+    skip = False
+    depth = 0
+    padded = toks + [Tok("op", ";")]
+    for i, t in enumerate(padded):
+        if t.text == "(":
+            depth += 1
+            continue
+        if t.text == ")":
+            depth -= 1
+            if depth >= 0:
+                continue
+        if depth > 0 or not _is_code(t):
+            continue
+        u = t.upper
+        if u in ("SELECT", ";", ")") or u in _SET_OPERATORS:
+            if start is not None and not skip:
+                spots.append(_prev_code(toks, (end or i) - 1) + 1)
+            start = i if u == "SELECT" else None
+            end, skip, depth = None, False, 0
+        elif start is None or end is not None:
+            continue
+        elif i in owned or t.text == "*" and padded[
+            _prev_code(padded, i - 1)
+        ].upper in ("SELECT", "DISTINCT", "ALL", ",", "."):
+            skip = True
+        elif u in _SELECT_LIST_ENDS or u in _SELECT_LIST_ENDS_BY and (
+            padded[_next_code(padded, i + 1)].upper == "BY"
+        ):
+            end = i
+    for spot in reversed(spots):
+        toks[spot:spot] = tokenize(_CONSTANT_SOURCE)
+    return toks
+
+
 def translate(
     sql: str,
     options: dict[str, bool] | None = None,
@@ -5012,7 +5079,14 @@ def translate(
     dotted column operands the way the reference's analyzer does: ``||``
     on BOOLEAN columns is OR, STRING columns get the string→int cast
     guard, and TIMESTAMP, DOUBLE and BIGINT columns drive the avg,
-    ceil/floor and DECIMAL promotion rewrites."""
+    ceil/floor and DECIMAL promotion rewrites.
+
+    Last, each FROM-less query block at statement level (the main query
+    and each set-operation branch, but not one with a ``*`` item) gets the
+    one-row source ``FROM (VALUES (0)) AS _hs_one_row(_hs_one_row_c)``
+    right after its select list (_add_constant_sources).  Catalyst folds
+    a projection, filter or limit over it into a LocalRelation, so the
+    statement returns from the driver without a Spark job."""
     sql = _rewrite_create_table_ddl(sql)
     toks = tokenize(sql)
     toks = _rewrite_escape_residue(toks)
@@ -5098,6 +5172,7 @@ def translate(
     toks = _rewrite_iregexp(toks)
     toks = _rewrite_null_ordering(toks)
     toks = _rewrite_null_predicates(toks)
+    toks = _add_constant_sources(toks)
     return untokenize(toks)
 
 
@@ -5955,14 +6030,29 @@ class FromItem:
     clause: int  # the FROM token that owns the item
 
 
+def _distinct_from(toks: list[Tok], i: int) -> bool:
+    """True when the FROM at token i is the one of ``IS [NOT] DISTINCT
+    FROM``, a comparison operator and not a FROM clause."""
+    p = _prev_code(toks, i - 1)
+    if p < 0 or toks[p].upper != "DISTINCT":
+        return False
+    q = _prev_code(toks, p - 1)
+    return q >= 0 and toks[q].upper in ("IS", "NOT")
+
+
 def _from_items(toks: list[Tok]) -> list[FromItem]:
     """Every FROM item of the statement, in token order, at any depth.
     An item starts after FROM, JOIN or a FROM-clause comma.  A table
-    function (``range(3)``) is a one-segment path followed by "("."""
+    function (``range(3)``) is a one-segment path followed by "(".
+    FROM opens a clause at statement level or in parens that hold a
+    SELECT, so the FROM of a function's arguments (``extract(year from
+    x)``, ``trim(both 'x' from s)``) and of ``IS [NOT] DISTINCT FROM``
+    opens none."""
     items: list[FromItem] = []
-    # per paren level: the enclosing "(", the last FROM, and whether a
-    # FROM clause is open (what _in_from_clause answers walking back)
-    opens, owners, in_from = [-1], [-1], [False]
+    # per paren level: the enclosing "(", the last FROM, whether a FROM
+    # clause is open (what _in_from_clause answers walking back) and
+    # whether the level holds a query block
+    opens, owners, in_from, queries = [-1], [-1], [False], [True]
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -5970,13 +6060,19 @@ def _from_items(toks: list[Tok]) -> list[FromItem]:
             opens.append(i)
             owners.append(-1)
             in_from.append(False)
+            queries.append(False)
         elif t.text == ")" and len(opens) > 1:
             opens.pop()
             owners.pop()
             in_from.pop()
+            queries.pop()
         elif t.kind == "word" and t.upper in _FROM_CLAUSE_ENDS:
             in_from[-1] = False
-        trig = t.kind == "word" and t.upper in ("FROM", "JOIN")
+            queries[-1] = queries[-1] or t.upper == "SELECT"
+        trig = t.kind == "word" and (
+            t.upper == "JOIN"
+            or t.upper == "FROM" and queries[-1] and not _distinct_from(toks, i)
+        )
         if not (trig or (t.text == "," and in_from[-1])):
             i += 1
             continue

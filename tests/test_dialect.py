@@ -814,6 +814,33 @@ def test_avg_timestamp_survives_view_clobber(spark, sf_dir):
     ]
 
 
+def test_same_schema_view_clobber_is_healed(spark, sf_dir, tmp_path):
+    """A catalog view replaced out-of-band by one with the SAME schema
+    (the table read from another directory) passes the schema check; the
+    sentinel view's file path must still tell the next Engine() to
+    re-register."""
+    import pyarrow.parquet as pq
+
+    from hopspark import catalog
+    from hopspark.engine import Engine
+
+    Engine(spark=spark, sf_dir=sf_dir)
+    table = catalog.TABLES[0]
+    rows = pq.read_table(catalog.table_path(sf_dir, table))
+    pq.write_table(rows.slice(0, 1), catalog.table_path(str(tmp_path), table))
+    try:
+        catalog.read_table(spark, table, str(tmp_path)).createOrReplaceTempView(
+            table
+        )
+        assert spark.table(table).count() == 1
+        eng = Engine(spark=spark, sf_dir=sf_dir)
+        assert eng.sql(f"select count(*) c from {table}").collect()[0].c == (
+            rows.num_rows
+        )
+    finally:
+        catalog.register(spark, sf_dir, force=True)
+
+
 def test_ceil_floor_double_returns_double(spark, sf_dir):
     """ceil/floor over DOUBLE return DOUBLE (impala_functions.py:348-349);
     Spark natives return BIGINT. DECIMAL inputs keep Spark's DECIMAL."""

@@ -5,11 +5,13 @@ so rewrites must be stable under re-application)."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hopspark.dialect import translate
-from hopspark.dialect.translate import tokenize, untokenize
+from hopspark.dialect.translate import _CONSTANT_SOURCE, tokenize, untokenize
 
 # Identifiers that never collide with rewrite triggers.
 _IDENT = st.text(alphabet="abcxyz_", min_size=1, max_size=8).filter(
@@ -212,4 +214,94 @@ def test_static_type_of_an_int_literal_is_the_folded_typeof(v):
     toks = tokenize(str(v))
     ty = _static_type(toks, 0, len(toks))
     assert ty in ("TINYINT", "SMALLINT", "INT", "BIGINT")
-    assert translate(f"SELECT typeof({v})") == f"SELECT '{ty}'"
+    assert translate(f"SELECT typeof({v})") == f"SELECT '{ty}'" + _CONSTANT_SOURCE
+
+
+# --- one-row source for FROM-less query blocks (_add_constant_sources) ---
+
+_SP = st.sampled_from([" ", "  ", "\n", "\t ", " \n "])
+
+
+@st.composite
+def _select_item(draw) -> tuple[str, bool]:
+    """(a select-list item, whether it is a star item)."""
+    sp = draw(_SP)
+    kw = lambda w: draw(_mixed_case(w))  # noqa: E731
+    form = draw(st.sampled_from(
+        ["term", "distinct", "subquery", "call", "star"]
+    ))
+    if form == "star":
+        return draw(st.sampled_from(["*", "q.*", "q .*"])), True
+    if form == "distinct":
+        nt = f"{kw('not')}{sp}" if draw(st.booleans()) else ""
+        return (
+            f"{draw(_TERM)}{sp}{kw('is')}{sp}{nt}{kw('distinct')}{sp}"
+            f"{kw('from')}{sp}{draw(_TERM)}"
+        ), False
+    if form == "subquery":
+        src = f"{sp}{kw('from')}{sp}{draw(_IDENT)}" if draw(st.booleans()) else ""
+        return f"({kw('select')}{sp}{draw(_TERM)}{src})", False
+    if form == "call":
+        return draw(st.sampled_from([
+            f"coalesce({draw(_TERM)},{sp}{draw(_TERM)})",
+            f"trim({kw('both')}{sp}'x'{sp}{kw('from')}{sp}{draw(_IDENT)})",
+            f"count(*){sp}{draw(_IDENT)}",
+        ])), False
+    return draw(_TERM), False
+
+
+@st.composite
+def _query_block(draw) -> tuple[str, int]:
+    """(a query block, the number of sources it should get)."""
+    sp = draw(_SP)
+    kw = lambda w: draw(_mixed_case(w))  # noqa: E731
+    items = draw(st.lists(_select_item(), min_size=1, max_size=4))
+    sql = f"{kw('select')}{sp}" + f",{draw(_SP)}".join(t for t, _ in items)
+    has_from = draw(st.booleans())
+    if has_from:
+        sql += f"{sp}{kw('from')}{sp}{draw(_IDENT)} q"
+    if draw(st.booleans()):
+        nt = f"{kw('not')}{sp}" if draw(st.booleans()) else ""
+        sql += (
+            f"{sp}{kw('where')}{sp}{draw(_TERM)}{sp}{kw('is')}{sp}{nt}"
+            f"{kw('distinct')}{sp}{kw('from')}{sp}{draw(_TERM)}"
+        )
+    star = any(s for _, s in items)
+    return sql, int(not (has_from or star))
+
+
+_SET_OP = st.sampled_from(["union all", "union", "intersect", "except"])
+
+
+@given(
+    blocks=st.lists(_query_block(), min_size=1, max_size=3),
+    ops=st.lists(_SET_OP.flatmap(_mixed_case), min_size=2, max_size=2),
+    order=st.booleans(),
+    limit=st.booleans(),
+    sp=_SP,
+)
+@settings(max_examples=300, deadline=None)
+def test_each_from_less_block_gets_one_source(blocks, ops, order, limit, sp):
+    """Exactly one source per statement-level FROM-less block without a
+    star item, right after its select list; none in nested blocks;
+    translating the output adds none."""
+    sql = blocks[0][0]
+    for (block, _), op in zip(blocks[1:], ops):
+        sql += f"{sp}{op}{sp}{block}"
+    if order:
+        sql += f"{sp}ORDER BY 1"
+    if limit:
+        sql += f"{sp}limit 3"
+    out = translate(sql)
+    branches = re.split(r"\b(?:union|intersect|except)\b", out, flags=re.I)
+    assert len(branches) == len(blocks), out
+    for branch, (_, want) in zip(branches, blocks):
+        assert branch.count(_CONSTANT_SOURCE) == want, (sql, out)
+        if want:
+            at = branch.index(_CONSTANT_SOURCE)
+            head, rest = branch[:at], branch[at + len(_CONSTANT_SOURCE):]
+            assert head.count("(") == head.count(")"), out
+            assert not head[-1:].isspace(), out
+            words = rest.split()
+            assert not words or words[0].upper() in ("WHERE", "ORDER", "LIMIT")
+    assert translate(out).count(_CONSTANT_SOURCE) == out.count(_CONSTANT_SOURCE)

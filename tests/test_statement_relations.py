@@ -136,3 +136,19 @@ def test_statement_columns():
     assert cols(
         "SELECT d FROM (SELECT CAST(x AS DATE FORMAT 'YYYY') d FROM t5) v"
     ) == ({"t5"}, {"d": {"DATE"}})
+
+
+@pytest.mark.parametrize(
+    "sql, segs",
+    [
+        ("select x from t where a is not distinct from b", [["t"]]),
+        ("select x from t where a IS DISTINCT\nFROM b", [["t"]]),
+        ("select extract(year from now())", []),
+        ("select trim(both 'x' from s) from t", [["t"]]),
+        ("select coalesce((select max(a) from u), 0) from t", [["u"], ["t"]]),
+    ],
+)
+def test_from_items_skip_non_clause_froms(sql, segs):
+    """``IS [NOT] DISTINCT FROM`` and the FROM of a function's arguments
+    open no FROM clause, so they name no relation to type from."""
+    assert [it.segs for it in _from_items(tokenize(sql))] == segs

@@ -7,8 +7,10 @@ case of ``tests/golden/*.test`` through ``golden.run_case`` in the corpus
 order the golden test uses, and writes one JSON line per
 ``Engine._translate_statement`` call: the golden file and case index that
 made it, the Impala-dialect input and the Spark SQL output (or the error
-the translation raised).  Run it at two commits and compare the files to
-see which translations a change moved:
+the translation raised).  Each case also gets one line with the number of
+Spark jobs it launched, counted under its own job group.  Run it at two
+commits and compare the files to see which translations a change moved
+and how many jobs each side launched:
 
     python tools/golden_translations.py --out /tmp/a.jsonl   # commit A
     python tools/golden_translations.py --out /tmp/b.jsonl   # commit B
@@ -57,33 +59,46 @@ def record(out_path: str) -> None:
         return row["output"]
 
     eng._translate_statement = recording
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     failed = 0
     paths = sorted(glob.glob(os.path.join(ROOT, "tests", "golden", "*.test")))
     for path in paths:
         where["file"] = os.path.basename(path)
         for i, case in enumerate(parse_test_file(path)):
             where["case"] = i
+            group = f"golden-translations-{where['file']}-{i}"
+            sc.setJobGroup(group, group)
             try:
                 failed += bool(run_case(eng, case))
             except Exception:  # noqa: BLE001 - counted, the recording stays
                 failed += 1
+            jobs = len(tracker.getJobIdsForGroup(group))
+            rows.append(dict(where, jobs=jobs))
     with open(out_path, "w") as f:
         for row in rows:
             f.write(json.dumps(row) + "\n")
     print(
-        f"{len(rows)} translations written to {out_path}; "
+        f"{sum('jobs' not in r for r in rows)} translations and "
+        f"{sum(r.get('jobs', 0) for r in rows)} Spark jobs written to "
+        f"{out_path}; "
         f"{failed} golden cases failed their check",
         file=sys.stderr,
     )
 
 
 def compare(old_path: str, new_path: str) -> int:
-    """Print how many recorded translations differ; 1 when any does."""
-    def load(path: str) -> list[dict]:
+    """Print how many recorded translations differ, and each side's
+    Spark-job total; 1 when any translation differs."""
+    def load(path: str) -> tuple[list[dict], int]:
         with open(path) as f:
-            return [json.loads(line) for line in f]
+            rows = [json.loads(line) for line in f]
+        cases = [r for r in rows if "jobs" in r]
+        return [r for r in rows if "jobs" not in r], sum(
+            r["jobs"] for r in cases
+        )
 
-    old, new = load(old_path), load(new_path)
+    (old, old_jobs), (new, new_jobs) = load(old_path), load(new_path)
     keys = ("file", "case", "input", "output", "error")
     differ = [
         (a, b) for a, b in zip(old, new)
@@ -93,7 +108,8 @@ def compare(old_path: str, new_path: str) -> int:
         print(json.dumps({"old": a, "new": b}))
     print(
         f"{min(len(old), len(new))} statements compared, {len(differ)} "
-        f"differ; {len(old)} vs {len(new)} recorded",
+        f"differ; {len(old)} vs {len(new)} recorded; Spark jobs "
+        f"{old_jobs} vs {new_jobs}",
         file=sys.stderr,
     )
     return int(bool(differ) or len(old) != len(new))
