@@ -243,6 +243,16 @@ def _views_verified(spark: SparkSession, sf_dir: str) -> bool:
     )
 
 
+def forget_registration(spark: SparkSession, name: str) -> None:
+    """Invalidate the session's registration marker (see register) when
+    the view of catalog table ``name`` is replaced or dropped, so the next
+    Engine() re-registers the pristine catalog views."""
+    if name.lower() in SCHEMAS and hasattr(
+        spark, "_hopspark_tables_registered"
+    ):
+        spark._hopspark_tables_registered = None
+
+
 def register(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, force: bool = False
 ) -> None:

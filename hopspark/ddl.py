@@ -30,6 +30,8 @@ import re
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
+from hopspark import catalog
+
 
 def split_top_level(s: str, sep: str = ",") -> list[str]:
     """Split on `sep` outside (), <> and single quotes — column-def lists
@@ -150,16 +152,7 @@ class AlterTableMixin:
 
     def _replace_view(self, name: str, df: DataFrame) -> None:
         df.createOrReplaceTempView(name)
-        # Replacing a CATALOG table's view invalidates the session's
-        # registration marker (hopspark.catalog.register), so the next
-        # Engine construction re-registers the pristine catalog views —
-        # the exact pre-r12 behavior (every Engine() re-registered).
-        from hopspark import catalog as _catalog
-
-        if name.lower() in _catalog.SCHEMAS and hasattr(
-            self.spark, "_hopspark_tables_registered"
-        ):
-            self.spark._hopspark_tables_registered = None
+        catalog.forget_registration(self.spark, name)
 
     # -- dispatch ---------------------------------------------------------
 
@@ -450,16 +443,8 @@ class AlterTableMixin:
         view_def = self._view_defs.pop(old.lower(), None)
         self._replace_view(new, df)
         self.spark.catalog.dropTempView(old)
-        # Renaming a CATALOG table AWAY drops its view while _replace_view
-        # only invalidates the marker when the NEW name is a catalog table;
-        # invalidate for the OLD name too so the next Engine() restores the
-        # pristine catalog view (pre-r12 behavior) — r12 ADVICE.
-        from hopspark import catalog as _catalog
-
-        if old.lower() in _catalog.SCHEMAS and hasattr(
-            self.spark, "_hopspark_tables_registered"
-        ):
-            self.spark._hopspark_tables_registered = None
+        # renaming a catalog table away drops its view too
+        catalog.forget_registration(self.spark, old)
         if view_def is not None:
             self._view_defs[new.lower()] = view_def
         for attr in ("_tbl_props", "_col_comments", "_stats", "_inc_stats"):

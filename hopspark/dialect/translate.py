@@ -4662,27 +4662,14 @@ def _rewrite_byte_semantics(toks: list[Tok]) -> list[Tok]:
 # top-level comma), it is wrapped in parentheses — Spark accepts a
 # parenthesized joined relation and alias qualifiers survive.
 
-_JOIN_TREE_STARTERS = {
-    "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "ANTI", "SEMI",
-}
-_CLAUSE_ENDERS = {
-    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "UNION",
-    "INTERSECT", "EXCEPT", "MINUS", "WINDOW", "QUALIFY", "LATERAL",
-}
-
-
 def _rewrite_right_semi_anti(toks: list[Tok]) -> list[Tok]:
+    if not any(t.kind == "word" and t.upper in ("SEMI", "ANTI") for t in toks):
+        return toks
+    toks = _real_tokens(toks)
     changed = True
     while changed:
         changed = False
-        depth = 0
         for i, t in enumerate(toks):
-            if t.text == "(":
-                depth += 1
-                continue
-            if t.text == ")":
-                depth -= 1
-                continue
             if t.kind != "word" or t.upper != "RIGHT":
                 continue
             j = _next_code(toks, i + 1)
@@ -4692,70 +4679,34 @@ def _rewrite_right_semi_anti(toks: list[Tok]) -> list[Tok]:
             k = _next_code(toks, j + 1)
             if k >= len(toks) or toks[k].upper != "JOIN":
                 continue
-            # ---- left operand: back to FROM / ',' at this depth ------
-            d = 0
-            ls = None
-            for b in range(i - 1, -1, -1):
-                tb = toks[b]
-                if tb.text == ")":
-                    d += 1
-                elif tb.text == "(":
-                    if d == 0:
-                        ls = b + 1  # depth opened here: operand starts
-                        break
-                    d -= 1
-                elif d == 0 and (
-                    (tb.kind == "word" and tb.upper == "FROM")
-                    or tb.text == ","
-                ):
-                    ls = b + 1
-                    break
-            if ls is None:
+            qb = _query_blocks(toks)
+            items = _from_items(toks, qb)
+            it = next((x for x in items if x.trigger == k), None)
+            if it is None:
                 continue
-            # ---- right operand: one FROM item ------------------------
-            r0 = _next_code(toks, k + 1)
-            if r0 >= len(toks):
-                continue
-            if toks[r0].text == "(":
-                re_ = _matching_paren(toks, r0) + 1
-            else:
-                re_ = r0 + 1
-                while re_ < len(toks) and toks[re_].text == ".":
-                    re_ = _next_code(toks, re_ + 1) + 1
-            nx = _next_code(toks, re_)
-            if nx < len(toks) and toks[nx].kind == "word":
-                if toks[nx].upper == "AS":
-                    nx2 = _next_code(toks, nx + 1)
-                    re_ = nx2 + 1
-                elif toks[nx].upper not in _JOIN_TREE_STARTERS and (
-                    toks[nx].upper not in _CLAUSE_ENDERS
-                ) and toks[nx].upper != "ON":
-                    re_ = nx + 1
-            # ---- ON condition ----------------------------------------
-            on_i = _next_code(toks, re_)
+            sibs = [
+                x for x in items
+                if x.clause == it.clause and x.block == it.block
+            ]
+            # ---- left operand: since the FROM, the last comma of the
+            # clause or the paren that opens the join ----------------
+            ls = max((
+                x.trigger for x in sibs
+                if x.trigger < i and toks[x.trigger].upper != "JOIN"
+            ), default=it.block) + 1
+            # ---- ON condition: to the next item's join operator or
+            # comma, else the clause's end ----------------------------
+            on_i = _next_code(toks, it.stop + 1)
             if on_i >= len(toks) or toks[on_i].upper != "ON":
                 continue
-            d = 0
-            ce = len(toks)
-            for e in range(on_i + 1, len(toks)):
-                te = toks[e]
-                if te.text == "(":
-                    d += 1
-                elif te.text == ")":
-                    if d == 0:
-                        ce = e
-                        break
-                    d -= 1
-                elif d == 0 and (
-                    te.text == ","
-                    or (te.kind == "word"
-                        and (te.upper in _JOIN_TREE_STARTERS
-                             or te.upper in _CLAUSE_ENDERS))
-                ):
-                    ce = e
-                    break
+            nxt = next((x for x in sibs if x.trigger > it.stop), None)
+            ce = (
+                _from_clause_end(toks, qb, it) if nxt is None
+                else nxt.trigger if toks[nxt.trigger].text == ","
+                else _join_operator(toks, nxt.trigger)[0]
+            )
             left = toks[ls:i]
-            right = toks[r0:re_]
+            right = toks[it.start : it.stop + 1]
             cond = toks[on_i:ce]
             has_join = any(
                 tt.kind == "word" and tt.upper == "JOIN" for tt in left
@@ -4805,6 +4756,7 @@ def _rewrite_hints(toks: list[Tok]) -> list[Tok]:
         ):
             toks[i] = Tok("op", "")
         i += 1
+    hinted: list[Tok] = []  # the first token of each broadcast operand
     i = 0
     while i < len(toks):
         if toks[i].text != "[" or toks[i].kind != "op":
@@ -4818,62 +4770,28 @@ def _rewrite_hints(toks: list[Tok]) -> list[Tok]:
         if k >= len(toks) or toks[k].text != "]":
             i += 1
             continue
-        is_bcast = toks[j].text.lower() == "broadcast"
+        if toks[j].text.lower() == "broadcast":
+            r0 = _next_code(toks, k + 1)
+            if r0 < len(toks):
+                hinted.append(toks[r0])
         toks[i : k + 1] = []
-        if not is_bcast:
-            i += 1
-            continue
-        # Spark only parses /*+ ... */ directly after SELECT — find the
-        # joined operand's alias and hang BROADCAST(alias) off the
-        # owning block's SELECT (a bare comment after JOIN is a parse
-        # error: joins.test#23).
-        r0 = _next_code(toks, i)
-        alias = None
-        if r0 < len(toks):
-            if toks[r0].text == "(":
-                re_ = _matching_paren(toks, r0)
-                a_i = _next_code(toks, re_ + 1)
-            else:
-                a_i = r0
-                nx = _next_code(toks, a_i + 1)
-                while nx < len(toks) and toks[nx].text == ".":
-                    a_i = _next_code(toks, nx + 1)
-                    nx = _next_code(toks, a_i + 1)
-                # `tbl alias` — the trailing word is the alias
-                if (nx < len(toks) and toks[nx].kind == "word"
-                        and toks[nx].upper not in ("ON", "JOIN", "INNER",
-                                                   "LEFT", "RIGHT", "FULL",
-                                                   "CROSS", "WHERE", "AS")):
-                    a_i = nx
-            if a_i < len(toks) and toks[a_i].kind == "word":
-                if toks[a_i].upper == "AS":
-                    a_i = _next_code(toks, a_i + 1)
-                if (a_i < len(toks) and toks[a_i].kind == "word"
-                        and toks[a_i].upper not in ("ON", "JOIN", "INNER",
-                                                    "LEFT", "RIGHT", "FULL",
-                                                    "CROSS", "WHERE")):
-                    alias = toks[a_i].text
-        # owning SELECT: first SELECT at depth 0 scanning backward
-        sel = None
-        d = 0
-        for b in range(i - 1, -1, -1):
-            tb = toks[b]
-            if tb.text == ")":
-                d += 1
-            elif tb.text == "(":
-                if d == 0:
-                    break
-                d -= 1
-            elif (d == 0 and tb.kind == "word"
-                  and tb.upper == "SELECT"):
-                sel = b
-                break
-        if alias and sel is not None:
-            toks.insert(
-                sel + 1, Tok("comment", f" /*+ BROADCAST({alias}) */")
-            )
-            i += 1
         i += 1
+    if not hinted:
+        return toks
+    # Spark only parses /*+ ... */ directly after SELECT — hang
+    # BROADCAST(alias) of each hinted join operand off the owning block's
+    # SELECT (a bare comment after JOIN is a parse error: joins.test#23).
+    # (the split keeps a real token as it is, so the hinted ones survive)
+    toks = _real_tokens(toks)
+    qb = _query_blocks(toks)
+    spots: list[tuple[int, str]] = []
+    for it in _from_items(toks, qb):
+        owner = qb.clause(it.trigger)
+        if owner and it.alias and any(toks[it.start] is h for h in hinted):
+            spots.append((owner[0].select, it.alias))
+    # back to front; one block's hints in their order, each at SELECT + 1
+    for sel, alias in sorted(spots, key=lambda x: -x[0]):
+        toks.insert(sel + 1, Tok("comment", f" /*+ BROADCAST({alias}) */"))
     return toks
 
 
@@ -4886,7 +4804,14 @@ def _rewrite_hints(toks: list[Tok]) -> list[Tok]:
 # ---------------------------------------------------------------------------
 
 
+def _has_unnest(toks: list[Tok]) -> bool:
+    return any(t.kind == "word" and t.text.upper() == "UNNEST" for t in toks)
+
+
 def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
+    if not _has_unnest(toks):
+        return toks
+    toks = _real_tokens(toks)
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -4898,7 +4823,7 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
         if j >= len(toks) or toks[j].text != "(" or prev < 0 or toks[prev].text != ",":
             i += 1
             continue
-        if not _in_from_clause(toks, i):
+        if not _query_blocks(toks).clause_is(i, "FROM"):
             # a comma-preceded unnest in a SELECT list is the zipping
             # select-list form — handled by _rewrite_select_unnest
             i += 1
@@ -4919,6 +4844,8 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
         )
         toks[prev : close + 1] = [Tok("word", lateral)]
         # rewrite `leaf.item` → `_z.leaf` and `leaf.pos` → `pos` everywhere
+        # (one token for one: the parse stays valid)
+        qb = _query_blocks(toks)
         k = 0
         while k < len(toks) - 2:
             a = toks[k]
@@ -4939,8 +4866,7 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
                             nxt2 = _next_code(toks, m + 1)
                             prv2 = _prev_code(toks, k - 1)
                             bare_item = (
-                                not _in_from_clause(toks, k)
-                                and _select_clause_here(toks, k)
+                                qb.clause_is(k, "SELECT")
                                 and (
                                     prv2 < 0
                                     or toks[prv2].text == ","
@@ -5002,11 +4928,17 @@ def _rewrite_count_distinct_to_ndv(toks: list[Tok]) -> list[Tok]:
 #: resolves a name against the source before a lateral alias.
 _CONSTANT_SOURCE = " FROM (VALUES (0)) AS _hs_one_row(_hs_one_row_c)"
 
-#: depth-0 words that end a FROM-less block's select list; GROUP, ORDER,
-#: SORT, CLUSTER and DISTRIBUTE only when BY follows
-_SELECT_LIST_ENDS = frozenset({"WHERE", "HAVING", "WINDOW", "LIMIT", "OFFSET"})
-_SELECT_LIST_ENDS_BY = frozenset({"GROUP", "ORDER", "SORT", "CLUSTER", "DISTRIBUTE"})
-_SET_OPERATORS = frozenset({"UNION", "INTERSECT", "EXCEPT", "MINUS"})
+def _real_tokens(toks: list[Tok]) -> list[Tok]:
+    """``toks`` with each spliced Tok (a rewrite's multi-token text
+    emitted as one token) split into the tokens it holds, so that its
+    parens and keywords count for the block and FROM-item parses."""
+    return [
+        part for t in toks
+        for part in (
+            [t] if t.kind == "ws" or _TOKEN_RE.fullmatch(t.text)
+            else tokenize(t.text)
+        )
+    ]
 
 
 def _add_constant_sources(toks: list[Tok]) -> list[Tok]:
@@ -5017,46 +4949,20 @@ def _add_constant_sources(toks: list[Tok]) -> list[Tok]:
     coordinator with no scan (union-node.h).  A block whose select list
     has a ``*`` or ``q.*`` item keeps its bare form (``select *`` is zero
     columns and one row); nested blocks are left alone."""
-    # the rewrites emit spliced text as one token: split it, so that its
-    # parens and keywords count
-    toks = [
-        part for t in toks
-        for part in ([t] if _TOKEN_RE.fullmatch(t.text) else tokenize(t.text))
-    ]
-    owned = {it.clause for it in _from_items(toks) if it.block == -1}
+    toks = _real_tokens(toks)
+    qb = _query_blocks(toks)
     spots: list[int] = []
-    # the open block's SELECT, the end of its select list, and whether it
-    # owns a FROM or has a star item
-    start = end = None
-    skip = False
-    depth = 0
-    padded = toks + [Tok("op", ";")]
-    for i, t in enumerate(padded):
-        if t.text == "(":
-            depth += 1
+    for b in qb.blocks:
+        if b.open != -1 or "FROM" in b.clauses:
             continue
-        if t.text == ")":
-            depth -= 1
-            if depth >= 0:
-                continue
-        if depth > 0 or not _is_code(t):
-            continue
-        u = t.upper
-        if u in ("SELECT", ";", ")") or u in _SET_OPERATORS:
-            if start is not None and not skip:
-                spots.append(_prev_code(toks, (end or i) - 1) + 1)
-            start = i if u == "SELECT" else None
-            end, skip, depth = None, False, 0
-        elif start is None or end is not None:
-            continue
-        elif i in owned or t.text == "*" and padded[
-            _prev_code(padded, i - 1)
-        ].upper in ("SELECT", "DISTINCT", "ALL", ",", "."):
-            skip = True
-        elif u in _SELECT_LIST_ENDS or u in _SELECT_LIST_ENDS_BY and (
-            padded[_next_code(padded, i + 1)].upper == "BY"
+        end = min(b.clauses.values(), default=b.end)
+        if not any(
+            toks[i].text == "*" and qb.opens[i] == -1
+            and toks[_prev_code(toks, i - 1)].upper
+            in ("SELECT", "DISTINCT", "ALL", ",", ".")
+            for i in range(b.select + 1, end)
         ):
-            end = i
+            spots.append(_prev_code(toks, end - 1) + 1)
     for spot in reversed(spots):
         toks[spot:spot] = tokenize(_CONSTANT_SOURCE)
     return toks
@@ -5771,12 +5677,6 @@ def _rewrite_ignore_nulls(toks: list[Tok]) -> list[Tok]:
     return toks
 
 
-_CLAUSE_STOP = {
-    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "UNION",
-    "INTERSECT", "EXCEPT", "WINDOW", "QUALIFY",
-}
-
-
 def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:
     """Select-list zipping UNNEST (IMPALA-10920; grammar
     sql-parser.cup UNNEST in the select list): ``SELECT unnest(arr1),
@@ -5787,35 +5687,22 @@ def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:
     struct's corresponding field — exactly the plan the FROM-clause
     UNNEST rewrite above produces, so the two spellings share
     semantics."""
+    if not _has_unnest(toks):
+        return toks
+    toks = _real_tokens(toks)
     while True:
-        # locate a SELECT..FROM pair (same depth) whose select list has
-        # top-level unnest() calls; restart after each rewrite because
-        # indices shift.
-        depth = 0
-        stack: list[tuple[int, int]] = []
+        # a block whose select list has top-level unnest() calls;
+        # re-parse after each rewrite because indices shift
         found = None
-        for k, tk in enumerate(toks):
-            if not _is_code(tk):
-                continue
-            if tk.text == "(":
-                depth += 1
-            elif tk.text == ")":
-                depth -= 1
-                while stack and stack[-1][0] > depth:
-                    stack.pop()
-            elif tk.kind == "word":
-                u = tk.upper
-                if u == "SELECT":
-                    stack.append((depth, k))
-                elif u == "FROM" and stack and stack[-1][0] == depth:
-                    d, s = stack.pop()
-                    calls = _unnest_calls(toks, s, k, d)
-                    if calls:
-                        found = (d, s, k, calls)
-                        break
+        for b in _query_blocks(toks).blocks:
+            if "FROM" in b.clauses:
+                calls = _unnest_calls(toks, b.select, b.clauses["FROM"])
+                if calls:
+                    found = (b.select, calls)
+                    break
         if found is None:
             return toks
-        d, s, f, calls = found
+        s, calls = found
         # paths, in select-list order, deduped (same array unnested twice
         # shares one zip field)
         paths: list[str] = []
@@ -5826,27 +5713,6 @@ def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:
         # leaf-name collisions (a.arr and b.arr) would collide in the zip
         # struct; qualify by position instead when that happens.
         use_pos = len(set(leafs)) != len(leafs)
-        # find the end of the FROM clause at depth d
-        depth2 = 0
-        end = len(toks)
-        for k in range(f + 1, len(toks)):
-            tk = toks[k]
-            if not _is_code(tk):
-                continue
-            if tk.text == "(":
-                depth2 += 1
-            elif tk.text == ")":
-                depth2 -= 1
-                if depth2 < 0:
-                    end = k
-                    break
-            elif (
-                depth2 == 0
-                and tk.kind == "word"
-                and tk.upper in _CLAUSE_STOP
-            ):
-                end = k
-                break
         # non-outer for the same drop-empty-rows reference semantics as
         # the FROM-clause form above
         lateral = (
@@ -5861,56 +5727,19 @@ def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:
             else:
                 fieldref = f"_suz.{path.split('.')[-1]}"
             toks[ci : cc + 1] = tokenize(fieldref)
-        # recompute end shift: replacements above are left of `end` only
-        # when the select list precedes FROM — true by construction, but
-        # lengths changed; recompute conservatively by re-scanning.
-        delta = 0
-        # simplest correct approach: re-find the FROM token (it is the
-        # first FROM word after position s at depth d) and re-run the
-        # end-of-clause scan.
-        depth2 = 0
-        f2 = None
-        for k in range(s, len(toks)):
-            tk = toks[k]
-            if not _is_code(tk):
-                continue
-            if tk.text == "(":
-                depth2 += 1
-            elif tk.text == ")":
-                depth2 -= 1
-            elif tk.kind == "word" and tk.upper == "FROM" and depth2 == 0:
-                f2 = k
-                break
-        assert f2 is not None
-        depth2 = 0
-        end = len(toks)
-        for k in range(f2 + 1, len(toks)):
-            tk = toks[k]
-            if not _is_code(tk):
-                continue
-            if tk.text == "(":
-                depth2 += 1
-            elif tk.text == ")":
-                depth2 -= 1
-                if depth2 < 0:
-                    end = k
-                    break
-            elif (
-                depth2 == 0
-                and tk.kind == "word"
-                and tk.upper in _CLAUSE_STOP
-            ):
-                end = k
-                break
+        # the block still starts at s; its FROM clause ends at the next
+        # clause keyword or the block's end
+        b = _query_blocks(toks).at(s)
+        end = b.clause_end(b.clauses["FROM"])
         toks[end:end] = [Tok("word", lateral)]
 
 
 def _unnest_calls(
-    toks: list[Tok], s: int, f: int, d: int
+    toks: list[Tok], s: int, f: int
 ) -> list[tuple[int, int, str]]:
     """unnest(<dotted path>) calls between s and f whose call token sits
-    at depth d (top level of the select list).  Returns
-    (name_idx, close_idx, path)."""
+    at the top level of the select list.  Returns (name_idx, close_idx,
+    path)."""
     out = []
     depth = 0
     k = s
@@ -5945,73 +5774,135 @@ def _unnest_calls(
     return out
 
 
-def _select_clause_here(toks: list[Tok], i: int) -> bool:
-    """True when token i sits directly in a SELECT list: walking backward
-    at the same paren level, SELECT is met before any other clause
-    keyword."""
-    bal = 0
-    for k in range(i - 1, -1, -1):
-        tk = toks[k]
-        if not _is_code(tk):
-            continue
-        if tk.text == ")":
-            bal += 1
-        elif tk.text == "(":
-            if bal == 0:
-                return False
-            bal -= 1
-        elif bal == 0 and tk.kind == "word":
-            u = tk.upper
-            if u == "SELECT":
-                return True
-            if u in ("FROM", "WHERE", "GROUP", "HAVING", "ORDER", "ON"):
-                return False
-    return False
-
-
-def _in_from_clause(toks: list[Tok], i: int) -> bool:
-    """True when token i sits in a FROM clause: walking backward at the
-    same paren level, FROM is met before SELECT (or the enclosing open
-    paren / statement start).  A later clause keyword (WHERE / GROUP /
-    ORDER / HAVING / ON / LIMIT) between FROM and i means the FROM
-    clause already ended — a comma there is a list comma (ORDER BY a,
-    b), not a FROM-item separator."""
-    bal = 0
-    for k in range(i - 1, -1, -1):
-        tk = toks[k]
-        if not _is_code(tk):
-            continue
-        if tk.text == ")":
-            bal += 1
-        elif tk.text == "(":
-            if bal == 0:
-                return False
-            bal -= 1
-        elif bal == 0 and tk.kind == "word":
-            u = tk.upper
-            if u == "FROM":
-                return True
-            if u in _FROM_CLAUSE_ENDS:
-                return False
-    return False
-
-
-#: clause keywords that end a FROM clause at their paren level.  Not ON:
-#: an ON condition is itself part of the FROM clause (a comma after it
-#: starts a new FROM item).
-_FROM_CLAUSE_ENDS = frozenset({
-    "SELECT", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "QUALIFY",
-    "WINDOW",
+#: depth-0 words that open a query block's clauses; the _BY_CLAUSE_WORDS
+#: only when BY follows.  The block parse and the FROM-item parse both
+#: read these, so they agree on where a FROM clause ends.
+_CLAUSE_WORDS = frozenset({
+    "FROM", "WHERE", "HAVING", "WINDOW", "QUALIFY", "LIMIT", "OFFSET",
 })
+_BY_CLAUSE_WORDS = frozenset({
+    "GROUP", "ORDER", "SORT", "CLUSTER", "DISTRIBUTE",
+})
+_SET_OPERATORS = frozenset({"UNION", "INTERSECT", "EXCEPT", "MINUS"})
+_CLAUSE_KEYS = _CLAUSE_WORDS | _BY_CLAUSE_WORDS
+
+
+@dataclass
+class QueryBlock:
+    """One SELECT block of a statement."""
+
+    select: int  # the SELECT token
+    end: int  # the unmatched ")", set operator or ";" after it, or len(toks)
+    open: int  # the "(" enclosing the block, -1 at statement level
+    clauses: dict[str, int]  # depth-0 clause keyword -> its token
+
+    def clause_end(self, k: int) -> int:
+        """The token that ends the clause whose keyword is token k: the
+        block's next clause keyword, else the block's end."""
+        return min(
+            (c for c in self.clauses.values() if c > k), default=self.end
+        )
+
+
+@dataclass
+class QueryBlocks:
+    """The query blocks of one token list, in SELECT order (see
+    _query_blocks)."""
+
+    blocks: list[QueryBlock]
+    opens: list[int]  # per token: the "(" enclosing it, -1 at statement level
+
+    def at(self, i: int) -> QueryBlock | None:
+        """The innermost block that holds token i."""
+        return next(
+            (b for b in reversed(self.blocks) if b.select <= i < b.end), None
+        )
+
+    def span(self, i: int) -> tuple[int, int]:
+        """[start, end) of the innermost block that holds token i, the
+        whole statement when none does."""
+        b = self.at(i)
+        return (b.select, b.end) if b else (0, len(self.opens))
+
+    def clause(self, i: int) -> tuple[QueryBlock, str] | None:
+        """The block, and the clause keyword ("SELECT" for the select
+        list), that own token i at the block's own paren level; None
+        inside a nested paren or outside every block."""
+        b = next((
+            b for b in self.blocks
+            if b.open == self.opens[i] and b.select <= i < b.end
+        ), None)
+        if b is None:
+            return None
+        return b, max(
+            ((c, u) for u, c in b.clauses.items() if c <= i),
+            default=(b.select, "SELECT"),
+        )[1]
+
+    def clause_is(self, i: int, word: str) -> bool:
+        """True when token i sits in clause ``word`` of its block, at the
+        block's own paren level."""
+        c = self.clause(i)
+        return c is not None and c[1] == word
+
+
+def _query_blocks(toks: list[Tok]) -> QueryBlocks:
+    """One forward walk over ``toks``: each SELECT block's span, its
+    enclosing "(" and the position of each depth-0 clause keyword
+    (_CLAUSE_WORDS, _BY_CLAUSE_WORDS before BY).  A block runs from its
+    SELECT to the unmatched ")", a same-level set operator, ";" or a
+    same-level SELECT.  The FROM of ``IS [NOT] DISTINCT FROM`` opens no
+    clause; the FROM of a function's arguments (``extract(year from
+    x)``) and the ORDER BY of ``OVER (…)`` or ``WITHIN GROUP (…)`` sit in
+    a nested paren, so no block owns them."""
+    blocks: list[QueryBlock] = []
+    opens: list[int] = []
+    # per paren level: its "(" and the block open at that level
+    parens: list[int] = [-1]
+    open_blocks: list[QueryBlock | None] = [None]
+    for i, t in enumerate(toks):
+        opens.append(parens[-1])
+        text = t.text
+        if text == "(":
+            parens.append(i)
+            open_blocks.append(None)
+            continue
+        if text == ")" or text == ";":
+            u = text
+        elif t.kind == "word":
+            u = text.upper()
+        else:
+            continue
+        cur = open_blocks[-1]
+        if u in (")", ";", "SELECT") or u in _SET_OPERATORS:
+            if cur is not None:
+                cur.end = i
+                open_blocks[-1] = None
+            if u == ")" and len(parens) > 1:
+                parens.pop()
+                open_blocks.pop()
+            elif u == "SELECT":
+                open_blocks[-1] = QueryBlock(i, len(toks), parens[-1], {})
+                blocks.append(open_blocks[-1])
+        elif cur is not None and u in _CLAUSE_KEYS and _opens_clause(toks, i):
+            cur.clauses.setdefault(u, i)
+    return QueryBlocks(blocks, opens)
+
+
+def _opens_clause(toks: list[Tok], i: int) -> bool:
+    """True when word token i is a clause keyword (see _CLAUSE_WORDS)."""
+    u = toks[i].upper
+    if u in _BY_CLAUSE_WORDS:
+        n = _next_code(toks, i + 1)
+        return n < len(toks) and toks[n].upper == "BY"
+    return u in _CLAUSE_WORDS and not (u == "FROM" and _distinct_from(toks, i))
 
 
 #: words that may follow a FROM item and are therefore not its alias
-_FROM_TAIL_WORDS = frozenset({
-    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET", "UNION",
-    "INTERSECT", "EXCEPT", "JOIN", "ON", "LEFT", "RIGHT", "FULL",
-    "INNER", "CROSS", "OUTER", "LATERAL", "USING", "TABLESAMPLE",
-    "WINDOW", "QUALIFY", "WHEN", "AND", "OR",
-})
+_FROM_TAIL_WORDS = _CLAUSE_WORDS | _BY_CLAUSE_WORDS | _SET_OPERATORS | {
+    "JOIN", "ON", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "OUTER",
+    "SEMI", "ANTI", "LATERAL", "USING", "TABLESAMPLE", "WHEN", "AND", "OR",
+}
 
 
 @dataclass
@@ -6040,45 +5931,34 @@ def _distinct_from(toks: list[Tok], i: int) -> bool:
     return q >= 0 and toks[q].upper in ("IS", "NOT")
 
 
-def _from_items(toks: list[Tok]) -> list[FromItem]:
+def _from_items(
+    toks: list[Tok], qb: QueryBlocks | None = None
+) -> list[FromItem]:
     """Every FROM item of the statement, in token order, at any depth.
-    An item starts after FROM, JOIN or a FROM-clause comma.  A table
-    function (``range(3)``) is a one-segment path followed by "(".
-    FROM opens a clause at statement level or in parens that hold a
-    SELECT, so the FROM of a function's arguments (``extract(year from
-    x)``, ``trim(both 'x' from s)``) and of ``IS [NOT] DISTINCT FROM``
-    opens none."""
+    An item starts after a query block's FROM clause keyword (see
+    _query_blocks; ``qb`` is its parse of ``toks`` when the caller has
+    one), after a comma of that FROM clause, or after JOIN.  A table
+    function (``range(3)``) is a one-segment path followed by "("."""
+    qb = qb or _query_blocks(toks)
+    froms = {b.clauses["FROM"] for b in qb.blocks if "FROM" in b.clauses}
     items: list[FromItem] = []
-    # per paren level: the enclosing "(", the last FROM, whether a FROM
-    # clause is open (what _in_from_clause answers walking back) and
-    # whether the level holds a query block
-    opens, owners, in_from, queries = [-1], [-1], [False], [True]
     i = 0
     while i < len(toks):
         t = toks[i]
-        if t.text == "(":
-            opens.append(i)
-            owners.append(-1)
-            in_from.append(False)
-            queries.append(False)
-        elif t.text == ")" and len(opens) > 1:
-            opens.pop()
-            owners.pop()
-            in_from.pop()
-            queries.pop()
-        elif t.kind == "word" and t.upper in _FROM_CLAUSE_ENDS:
-            in_from[-1] = False
-            queries[-1] = queries[-1] or t.upper == "SELECT"
-        trig = t.kind == "word" and (
-            t.upper == "JOIN"
-            or t.upper == "FROM" and queries[-1] and not _distinct_from(toks, i)
-        )
-        if not (trig or (t.text == "," and in_from[-1])):
+        if i in froms:
+            clause = i
+        elif t.text == "," or t.kind == "word" and t.upper == "JOIN":
+            owner = qb.clause(i)
+            if owner is not None and owner[1] == "FROM":
+                clause = owner[0].clauses["FROM"]
+            elif t.text == ",":
+                i += 1
+                continue
+            else:
+                clause = -1
+        else:
             i += 1
             continue
-        if t.upper == "FROM":
-            owners[-1] = i
-            in_from[-1] = True
         j = _next_code(toks, i + 1)
         if j >= len(toks):
             break
@@ -6114,18 +5994,39 @@ def _from_items(toks: list[Tok]) -> list[FromItem]:
                 if not (n < len(toks) and toks[n].text in (".", "(")):
                     alias, explicit, stop = toks[a].text, True, a
         items.append(FromItem(
-            i, j, end, segs, alias, explicit, stop, opens[-1], owners[-1],
+            i, j, end, segs, alias, explicit, stop, qb.opens[i], clause,
         ))
         # a derived item's body holds items of its own
         i = j if not segs else stop + 1
     return items
 
 
-_FROM_ITEM_KEYWORDS = {
-    "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "OUTER", "SEMI",
-    "ANTI", "ON", "USING", "AS", "LATERAL", "VIEW", "TABLESAMPLE",
-    "UNNEST", "STRAIGHT_JOIN",
-}
+#: words that may stand before JOIN in a join operator
+_JOIN_MODIFIERS = frozenset({
+    "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "OUTER", "SEMI", "ANTI",
+})
+
+
+def _from_clause_end(toks: list[Tok], qb: QueryBlocks, it: FromItem) -> int:
+    """The token that ends the FROM clause (or the parenthesized join)
+    that holds item it; ``qb`` is the block parse of ``toks``."""
+    if it.clause >= 0:
+        return qb.at(it.clause).clause_end(it.clause)
+    return _matching_paren(toks, it.block) if it.block >= 0 else len(toks)
+
+
+def _join_operator(toks: list[Tok], j: int) -> tuple[int, set[str]]:
+    """The first token of the join operator whose JOIN is token j, and
+    the modifier words (_JOIN_MODIFIERS) before that JOIN."""
+    start, mods = j, set()
+    p = _prev_code(toks, j - 1)
+    while (
+        p >= 0 and toks[p].kind == "word" and toks[p].upper in _JOIN_MODIFIERS
+    ):
+        start = p
+        mods.add(toks[p].upper)
+        p = _prev_code(toks, p - 1)
+    return start, mods
 
 
 def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
@@ -6152,101 +6053,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
     #: alias -> (key expr, value expr) for map collection aliases
     cj_maps: dict[str, tuple[str, str]] = {}
 
-    def _block_bounds(i: int) -> tuple[int, int]:
-        """Query-block token range [start, end) owning position i."""
-        start = 0
-        bal = 0
-        for k in range(i - 1, -1, -1):
-            tk = toks[k]
-            if tk.text == ")":
-                bal += 1
-            elif tk.text == "(":
-                if bal == 0:
-                    start = k + 1
-                    break
-                bal -= 1
-            elif bal == 0 and tk.kind == "word" and tk.upper == "SELECT":
-                start = k
-                break
-        end = len(toks)
-        bal = 0
-        for k in range(i, len(toks)):
-            tk = toks[k]
-            if tk.text == "(":
-                bal += 1
-            elif tk.text == ")":
-                if bal == 0:
-                    end = k
-                    break
-                bal -= 1
-        return start, end
-
-    def _alias_bindings() -> list[tuple[str, tuple[int, int]]]:
-        """(alias_lower, block) for every FROM-item alias in the current
-        toks — used to keep one item's reference rewrites out of inner
-        scopes that REBIND the same alias (nested TPC-H q2/q11: the
-        correlated min-cost subquery reuses s/ps)."""
-        out: list[tuple[str, tuple[int, int]]] = []
-        m2 = 0
-        while m2 < len(toks):
-            t2 = toks[m2]
-            trig = (
-                (t2.kind == "word" and t2.upper in ("FROM", "JOIN"))
-                or (t2.text == "," and _in_from_clause(toks, m2))
-            )
-            if not trig:
-                m2 += 1
-                continue
-            j2 = _next_code(toks, m2 + 1)
-            if j2 >= len(toks):
-                m2 += 1
-                continue
-            if toks[j2].text == "(":
-                d3 = 1
-                k2 = j2 + 1
-                while k2 < len(toks) and d3:
-                    if toks[k2].text == "(":
-                        d3 += 1
-                    elif toks[k2].text == ")":
-                        d3 -= 1
-                    k2 += 1
-                e2 = k2 - 1
-            elif toks[j2].kind == "word":
-                e2 = j2
-                k2 = _next_code(toks, j2 + 1)
-                while k2 < len(toks) and toks[k2].text == ".":
-                    nx2 = _next_code(toks, k2 + 1)
-                    if nx2 >= len(toks) or toks[nx2].kind not in (
-                        "word", "bquote",
-                    ):
-                        break
-                    e2 = nx2
-                    k2 = _next_code(toks, nx2 + 1)
-            else:
-                m2 += 1
-                continue
-            al = None
-            a2 = _next_code(toks, e2 + 1)
-            if a2 < len(toks) and toks[a2].kind == "word":
-                if toks[a2].upper == "AS":
-                    b2 = _next_code(toks, a2 + 1)
-                    if b2 < len(toks) and toks[b2].kind == "word":
-                        al, e2 = toks[b2].text, b2
-                elif (
-                    toks[a2].upper not in _FROM_ITEM_KEYWORDS
-                    and toks[a2].upper not in _CLAUSE_STOP
-                ):
-                    nxa = _next_code(toks, a2 + 1)
-                    if not (nxa < len(toks)
-                            and toks[nxa].text in (".", "(")):
-                        al, e2 = toks[a2].text, a2
-            if al is None and toks[j2].kind == "word":
-                al = toks[e2].text  # trailing path segment
-            if al:
-                out.append((al.lower(), _block_bounds(j2)))
-            m2 = e2 + 1
-        return out
-
     def _owns(alias_low: str, blk: tuple[int, int], m2: int,
               binds: list) -> bool:
         """Token m2 belongs to the binding of alias_low at block blk —
@@ -6262,36 +6068,38 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 return False
         return True
 
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        join_form = False
-        outer = False
-        full = False
+    def _binds(items: list[FromItem], qb: QueryBlocks) -> list:
+        """(alias_lower, block span) for every FROM-item alias — used to
+        keep one item's reference rewrites out of inner scopes that
+        REBIND the same alias (nested TPC-H q2/q11: the correlated
+        min-cost subquery reuses s/ps)."""
+        return [(x.alias.lower(), qb.span(x.start)) for x in items if x.alias]
+
+    toks = _real_tokens(toks)
+    qb = _query_blocks(toks)
+    items = _from_items(toks, qb)
+    resume = 0  # the items triggered before it are done
+    while True:
+        it = next((
+            x for x in items
+            if x.trigger >= resume and len(x.segs) >= 2
+            and toks[x.trigger].upper in (",", "JOIN")
+            and toks[x.start].kind == "word"
+        ), None)
+        if it is None:
+            return toks
+        i, resume = it.trigger, it.trigger + 1
+        path, alias, end = it.segs, it.alias, it.stop
+        join_form = toks[i].upper == "JOIN"
+        outer = full = False
         join_mode = None
-        if t.text == "," and _in_from_clause(toks, i):
-            pass
-        elif t.kind == "word" and t.upper == "JOIN":
+        if join_form:
             # JOIN-form collection join, optionally LEFT OUTER and with
             # an ON filter (tpch_nested-q13.test: `customer c left outer
             # join c.c_orders on (o_comment not like ...)`) — lowers to
             # explode[_outer](filter(coll, alias -> pred))
-            join_form = True
-            p0 = _prev_code(toks, i - 1)
-            mods: set[str] = set()
-            del_start = i
-            while (
-                p0 >= 0 and toks[p0].kind == "word"
-                and toks[p0].upper in (
-                    "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "OUTER",
-                    "SEMI", "ANTI",
-                )
-            ):
-                mods.add(toks[p0].upper)
-                del_start = p0
-                p0 = _prev_code(toks, p0 - 1)
+            del_start, mods = _join_operator(toks, i)
             if {"RIGHT", "CROSS"} & mods:
-                i += 1
                 continue
             # FULL OUTER against one's own collection
             # (outer-to-inner-joins.test#19-20): with no ON every item
@@ -6307,75 +6115,15 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 "semi" if "SEMI" in mods
                 else "anti" if "ANTI" in mods else None
             )
-        else:
-            i += 1
-            continue
-        # earlier depth-0 words in this FROM clause = candidate aliases
-        aliases: set[str] = set()
-        bal = 0
-        for k in range(i - 1, -1, -1):
-            tk = toks[k]
-            if not _is_code(tk):
-                continue
-            if tk.text == ")":
-                bal += 1
-            elif tk.text == "(":
-                if bal == 0:
-                    break
-                bal -= 1
-            elif bal == 0 and tk.kind == "word":
-                if tk.upper == "FROM":
-                    break
-                if tk.upper not in _FROM_ITEM_KEYWORDS:
-                    aliases.add(tk.text.lower())
-        # match: , q . col [. col ...] [AS] [alias]
-        q_i = _next_code(toks, i + 1)
-        if (
-            q_i >= len(toks)
-            or toks[q_i].kind != "word"
-            or (
-                toks[q_i].text.lower() not in aliases
-                and toks[q_i].text.lower() not in cj_elems
-                and toks[q_i].text.lower() not in cj_maps
-            )
+        # the path's root is an alias bound by an earlier item of the
+        # same FROM clause, or a collection alias rewritten before
+        root_low = path[0].lower()
+        if root_low not in cj_elems and root_low not in cj_maps and not any(
+            x.clause == it.clause and x.block == it.block and x.trigger < i
+            and (x.alias or "").lower() == root_low
+            for x in items
         ):
-            i += 1
             continue
-        path = [toks[q_i].text]
-        k = q_i
-        while True:
-            d_i = _next_code(toks, k + 1)
-            if d_i < len(toks) and toks[d_i].text == ".":
-                w_i = _next_code(toks, d_i + 1)
-                if w_i < len(toks) and toks[w_i].kind in ("word", "bquote"):
-                    path.append(toks[w_i].text)
-                    k = w_i
-                    continue
-            break
-        if len(path) < 2:
-            i += 1
-            continue
-        end = k  # last path token
-        # optional alias
-        a_i = _next_code(toks, end + 1)
-        alias = None
-        if a_i < len(toks) and toks[a_i].kind == "word":
-            u = toks[a_i].upper
-            if u == "AS":
-                a2 = _next_code(toks, a_i + 1)
-                if a2 < len(toks) and toks[a2].kind == "word":
-                    alias = toks[a2].text
-                    end = a2
-            elif u not in _FROM_ITEM_KEYWORDS and u not in _CLAUSE_STOP:
-                nxt = _next_code(toks, a_i + 1)
-                # a word followed by '.' or '(' is not an alias
-                if not (
-                    nxt < len(toks) and toks[nxt].text in (".", "(")
-                ):
-                    alias = toks[a_i].text
-                    end = a_i
-        if alias is None:
-            alias = path[-1]
         on_pred = None
         if join_form:
             oi = _next_code(toks, end + 1)
@@ -6383,33 +6131,20 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 oi < len(toks) and toks[oi].kind == "word"
                 and toks[oi].upper == "ON"
             ):
-                pe = len(toks)
-                d2 = 0
-                for x in range(oi + 1, len(toks)):
-                    t2 = toks[x]
-                    if t2.text == "(":
-                        d2 += 1
-                    elif t2.text == ")":
-                        d2 -= 1
-                        if d2 < 0:
-                            pe = x
-                            break
-                    elif d2 == 0:
-                        if t2.text == ",":
-                            pe = x
-                            break
-                        if t2.kind == "word" and t2.upper in (
-                            "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
-                            "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-                            "MINUS", "JOIN", "LEFT", "RIGHT", "FULL",
-                            "INNER", "CROSS", "LATERAL",
-                        ):
-                            pe = x
-                            break
+                # the condition runs to the next item of the clause (its
+                # join operator included) or the clause's end
+                nxt = next((
+                    x for x in items if x.trigger > end
+                    and x.clause == it.clause and x.block == it.block
+                ), None)
+                pe = (
+                    _from_clause_end(toks, qb, it) if nxt is None
+                    else nxt.trigger if toks[nxt.trigger].text == ","
+                    else _join_operator(toks, nxt.trigger)[0]
+                )
                 on_pred = untokenize(toks[oi + 1 : pe]).strip()
                 end = pe - 1
             i = del_start  # the splice consumes the join modifiers too
-        root_low = path[0].lower()
         # a path rooted at a COLLECTION alias resolves through its
         # element expression (chained refs); a map alias navigates
         # through its value
@@ -6422,7 +6157,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 rest = rest[1:]
         elif root_low in cj_maps:
             if not rest or rest[0].lower() != "value":
-                i += 1
                 continue  # only value-side navigation can continue
             root_expr = cj_maps[root_low][1]
             rest = rest[1:]
@@ -6468,7 +6202,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
             # SubplanNode/UnnestNode full-outer contract).  Lowered to
             # one explode over a match-tagged pair array; parent refs in
             # the block are guarded with IF(tag, ref, NULL).
-            blk0, blk1 = _block_bounds(del_start)
+            blk0, blk1 = qb.span(del_start)
             root_al = path[0].lower()
             ec = f"__cjf_{alias}"
             # alias.pos needs a tagged posexplode — not supported
@@ -6483,7 +6217,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                                 and toks[w2].text.lower() == "pos"):
                             pos_used = True
             if pos_used:
-                i += 1
                 continue
             arr = dotted
             # inside the lambda, `alias.item` denotes the element value
@@ -6576,7 +6309,8 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                         m2 += 1
                         continue
                 m2 += 1
-            i = del_start
+            qb = _query_blocks(toks)
+            items, resume = _from_items(toks, qb), del_start
             continue
         if on_pred is not None:
             # the ON filter applies per element BEFORE the explode; the
@@ -6589,44 +6323,28 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
             # are exposed, so lower to a WHERE predicate on the parent —
             # no explode, no join, per-row size() check
             if hops:
-                i += 1
                 continue  # multi-hop semi/anti: general path
             # size(NULL) is -1 under legacy sizeOfNull and NULL otherwise:
             # `<= 0` treats both (and empty) as no-elements
             cmp = "> 0" if join_mode == "semi" else "<= 0"
             pred_txt = f" coalesce(size({dotted}), 0) {cmp} "
-            del toks[del_start : end + 1]
             # AND into an existing WHERE, else synthesize one at the
-            # clause end
-            ins2 = len(toks)
-            d3 = 0
-            where_at = -1
-            for x in range(del_start, len(toks)):
-                t3 = toks[x]
-                if t3.text == "(":
-                    d3 += 1
-                elif t3.text == ")":
-                    d3 -= 1
-                    if d3 < 0:
-                        ins2 = x
-                        break
-                elif d3 == 0 and t3.kind == "word":
-                    u3 = t3.upper
-                    if u3 == "WHERE":
-                        where_at = x
-                        break
-                    if u3 in ("GROUP", "ORDER", "HAVING", "LIMIT",
-                              "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-                              "MINUS"):
-                        ins2 = x
-                        break
+            # FROM clause's end
+            n_del = end + 1 - del_start
+            where_at = qb.at(it.clause).clauses.get("WHERE", -1) if (
+                it.clause >= 0
+            ) else -1
+            ins2 = _from_clause_end(toks, qb, it) - n_del
+            del toks[del_start : end + 1]
             if where_at >= 0:
-                toks[where_at + 1 : where_at + 1] = [
+                toks[where_at - n_del + 1 : where_at - n_del + 1] = [
                     Tok("synth", f"{pred_txt} AND ")
                 ]
             else:
                 toks[ins2:ins2] = [Tok("synth", f" WHERE {pred_txt} ")]
-            continue  # i stays: del_start <= i, rescan from here
+            qb = _query_blocks(toks)
+            items, resume = _from_items(toks, qb), del_start
+            continue
         gfn = "explode_outer" if outer else "explode"
         pgfn = "posexplode_outer" if outer else "posexplode"
         # array vs map collection: the column's type is unknowable at
@@ -6635,8 +6353,8 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
         # (MapType.java), an array join item/pos or struct fields.  Treat
         # the alias as a map iff the query touches alias.key/alias.value
         # and never alias.item/alias.pos.
-        item_blk = _block_bounds(i)
-        binds = _alias_bindings()
+        item_blk = qb.span(i)
+        binds = _binds(items, qb)
         alias_low0 = alias.lower()
         suffixes = set()
         m = 0
@@ -6752,41 +6470,21 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
         # the last item, and loop order keeps chained LVs (an LV whose
         # explode target references an earlier _cj_ column) correctly
         # sequenced when relations follow.  An empty placeholder keeps
-        # the loop's i arithmetic identical to an in-place replacement.
+        # token i inside the item's block for the scope lookups below.
         # kind "synth": code for untokenize, but invisible to every
         # word-shaped scan — the NEXT item's alias parse must not swallow
         # the spliced LV text as its alias
-        lv_tok = Tok("synth", hop_sql + lateral)
+        ins = _from_clause_end(toks, qb, it) - (end - i)
         toks[i : end + 1] = [Tok("synth", "")]
-        ins = len(toks)
-        d2 = 0
-        for x in range(i, len(toks)):
-            t2 = toks[x]
-            if t2.text == "(":
-                d2 += 1
-            elif t2.text == ")":
-                d2 -= 1
-                if d2 < 0:
-                    ins = x
-                    break
-            elif d2 == 0 and t2.kind == "word" and t2.upper in (
-                "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
-                "OFFSET", "UNION", "INTERSECT", "EXCEPT", "MINUS",
-            ):
-                ins = x
-                break
-        toks[ins:ins] = [lv_tok]
-        # indices shifted: recompute scope info for the ref rewrites
-        item_blk = _block_bounds(i)
-        binds = _alias_bindings()
-
-        def _starts_from_item(m: int) -> bool:
-            """A ref that IS the root of a later FROM item must survive
-            for that item's own chained rewrite (registry-resolved)."""
-            p = _prev_code(toks, m - 1)
-            return (
-                p >= 0 and toks[p].text == "," and _in_from_clause(toks, p)
-            )
+        toks[ins:ins] = [Tok("synth", hop_sql + lateral)]
+        # indices shifted: re-parse for the ref rewrites and the next item
+        qb = _query_blocks(toks)
+        items, resume = _from_items(toks, qb), i + 1
+        item_blk = qb.span(i)
+        binds = _binds(items, qb)
+        # a ref that IS the root of a later FROM item must survive for
+        # that item's own chained rewrite (registry-resolved)
+        item_roots = {x.start for x in items if toks[x.trigger].text == ","}
 
         if is_map:
             cj_maps[alias.lower()] = (
@@ -6801,7 +6499,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                     a.kind == "word"
                     and a.text.lower() == alias.lower()
                     and (p < 0 or toks[p].text != ".")
-                    and not _starts_from_item(m)
+                    and m not in item_roots
                     and _owns(alias_low0, item_blk, m, binds)
                 ):
                     d = _next_code(toks, m + 1)
@@ -6836,7 +6534,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                             # alias bare WHOLE select items so the output
                             # column keeps its reference name
                             if (
-                                _select_clause_here(toks, m)
+                                qb.clause_is(m, "SELECT")
                                 and (p < 0 or toks[p].text == ","
                                      or toks[p].upper
                                      in ("SELECT", "DISTINCT"))
@@ -6846,7 +6544,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                                 repl_sql += f" AS {suf}"
                             toks[m] = Tok("word", repl_sql)
                     m += 1
-            i += 1
             continue
         cj_elems[alias.lower()] = (
             f"_cj_{alias}.{alias}" if suffixes else f"_cj_{alias}.col"
@@ -6880,7 +6577,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                                 f"CAST(_cj_{alias}.{alias}__pos AS BIGINT)"
                             )
                             if (
-                                _select_clause_here(toks, m)
+                                qb.clause_is(m, "SELECT")
                                 and (p < 0 or toks[p].text == ","
                                      or toks[p].upper
                                      in ("SELECT", "DISTINCT"))
@@ -6890,7 +6587,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                                 repl_sql += " AS pos"
                             toks[m] = Tok("word", repl_sql)
                 m += 1
-            i += 1
             continue
         m = 0
         while m < len(toks) - 2:
@@ -6900,7 +6596,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 a.kind == "word"
                 and a.text.lower() == alias.lower()
                 and (p < 0 or toks[p].text != ".")
-                and not _starts_from_item(m)
+                and m not in item_roots
                 and _owns(alias_low0, item_blk, m, binds)
             ):
                 d = _next_code(toks, m + 1)
@@ -6921,7 +6617,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                             nxt2 = _next_code(toks, w + 1)
                             prv2 = _prev_code(toks, m - 1)
                             if (
-                                _select_clause_here(toks, m)
+                                qb.clause_is(m, "SELECT")
                                 and (
                                     prv2 < 0
                                     or toks[prv2].text == ","
@@ -6941,8 +6637,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                         else:
                             toks[m] = Tok("word", f"_cj_{alias}.{alias}")
             m += 1
-        i += 1
-    return toks
 
 
 _BOOL_INDICATOR_OPS = {"=", "<", ">", "<=", ">=", "!=", "<>", "<=>"}

@@ -21,8 +21,9 @@ from hopspark import catalog
 from hopspark.ddl import AlterTableMixin
 from hopspark.dialect import translate
 from hopspark.dialect.translate import (
-    FromItem, Tok, _from_items, _is_code, _matching_paren, _next_code,
-    _parse_cast, _prev_code, _select_clause_here, tokenize, untokenize,
+    FromItem, QueryBlock, Tok, _from_items, _is_code, _matching_paren,
+    _next_code, _parse_cast, _prev_code, _query_blocks, tokenize,
+    untokenize,
 )
 from hopspark.functions import register_all
 from hopspark.session import get_spark
@@ -221,14 +222,7 @@ class Engine(AlterTableMixin):
             if_exists, name = m.groups()
             dropped = self.spark.catalog.dropTempView(name)
             self._view_defs.pop(name.lower(), None)
-            # Dropping a CATALOG table's view invalidates the session's
-            # registration marker, mirroring _replace_view: the next
-            # Engine() restores the pristine catalog view (pre-r12
-            # behavior) instead of skipping on a stale marker.
-            if name.lower() in catalog.SCHEMAS and hasattr(
-                self.spark, "_hopspark_tables_registered"
-            ):
-                self.spark._hopspark_tables_registered = None
+            catalog.forget_registration(self.spark, name)
             if not dropped and not if_exists:
                 raise ValueError(f"view does not exist: {name}")
             return self.spark.sql("SELECT 1 AS ok WHERE false")
@@ -374,9 +368,10 @@ class Engine(AlterTableMixin):
         # ---- pass 2: resolve aliases to element types --------------------
         alias_dtype: dict[str, tuple[str, object, tuple]] = {}
         bindings = []  # (alias_as_written, block, fields|None, kind)
+        qb = _query_blocks(toks)
         for j, segs, alias, aend in paths:
             root = segs[0].lower()
-            blk = self._query_block_bounds(toks, j)
+            blk = qb.span(j)
             if len(segs) == 1:
                 rel = self._relation(segs[0])
                 if rel is not None:
@@ -468,7 +463,7 @@ class Engine(AlterTableMixin):
         for j, segs, alias, aend in paths:
             item_idx.update(range(j, aend + 1))
         repls = []  # (tok index, alias, field)
-        oh_cache: dict = {}  # block -> (order/having spans, out aliases)
+        out_aliases: dict[int, set] = {}  # block's SELECT -> output aliases
         for m, tk in enumerate(toks):
             if m in item_idx or tk.kind != "word":
                 continue
@@ -521,17 +516,15 @@ class Engine(AlterTableMixin):
             # ORDER BY / HAVING (Impala analyzer: output names take
             # precedence there — `SELECT o_orderkey AS o_comment ...
             # ORDER BY o_comment` sorts by the alias, not the field)
-            mblk = self._query_block_bounds(toks, m)
-            if mblk not in oh_cache:
-                oh_cache[mblk] = (
-                    self._order_having_spans(toks, mblk),
-                    self._select_output_aliases(toks, mblk),
-                )
-            oh_spans, out_aliases = oh_cache[mblk]
-            if lo in out_aliases and any(
-                a <= m < b for a, b in oh_spans
-            ):
-                continue
+            owner = qb.clause(m)
+            if owner is not None and owner[1] in ("ORDER", "HAVING"):
+                b = owner[0]
+                if b.select not in out_aliases:
+                    out_aliases[b.select] = self._select_output_aliases(
+                        toks, b
+                    )
+                if lo in out_aliases[b.select]:
+                    continue
             repls.append((m, inner[0][0], inner[0][1]))
         if not repls:
             return items
@@ -652,22 +645,10 @@ class Engine(AlterTableMixin):
         caller says which case holds through ``single``.
         Returns the net token-count delta (every edit sits before
         ``from_i``, so the caller shifts its saved indices by it)."""
-        # owning SELECT: nearest SELECT before from_i at the same depth
-        sel_i = -1
-        depth = 0
-        for x in range(from_i - 1, -1, -1):
-            t = toks[x]
-            if t.text == ")":
-                depth += 1
-            elif t.text == "(":
-                depth -= 1
-                if depth < 0:
-                    break
-            elif depth == 0 and t.kind == "word" and t.upper == "SELECT":
-                sel_i = x
-                break
-        if sel_i < 0:
+        owner = _query_blocks(toks).clause(from_i)
+        if owner is None:
             return 0
+        sel_i = owner[0].select
         qcols = ", ".join(f"{alias}.`{c}`" for c in star_cols)
         delta = 0
         # walk the select list (sel_i..from_i) for stars at depth 0
@@ -890,18 +871,10 @@ class Engine(AlterTableMixin):
             ):
                 # walk OUTWARD through nested CTE-body parens (`WITH w1
                 # AS (WITH w2 AS (<block>) ...)`) to the derived table
+                opens = _query_blocks(toks).opens
                 start_x = o
                 while True:
-                    bal2 = 0
-                    open_x = -1
-                    for x in range(start_x - 1, -1, -1):
-                        if toks[x].text == ")":
-                            bal2 += 1
-                        elif toks[x].text == "(":
-                            if bal2 == 0:
-                                open_x = x
-                                break
-                            bal2 -= 1
+                    open_x = opens[start_x]
                     if open_x < 0:
                         break
                     if any(
@@ -924,7 +897,7 @@ class Engine(AlterTableMixin):
             salias = it.alias if it.explicit else None
             tail_from = it.stop + 1
             t1 = None if it is not targets[0] else self._subplan_fast_path(
-                toks, o, close, first, from_i, tail_from, salias,
+                toks, o, close, first, from_i, salias,
                 qpath, coll_dt, p, derived if lateral else None,
             )
             if t1 is not None:
@@ -970,7 +943,7 @@ class Engine(AlterTableMixin):
         return items
 
     def _subplan_fast_path(
-        self, toks, o, close, first, from_i, tail_from, salias,
+        self, toks, o, close, first, from_i, salias,
         qpath, coll_dt, p, derived,
     ):
         """Zero-join lowering for the common subplan shapes.  Catalyst
@@ -1032,21 +1005,11 @@ class Engine(AlterTableMixin):
             [f.name for f in elem.fields]
             if isinstance(elem, T.StructType) else None
         )
-        # depth-1 clause keyword positions after the FROM target
-        depth = 0
-        clauses: dict[str, int] = {}
-        for k in range(o, close):
-            tk = toks[k]
-            if tk.text == "(":
-                depth += 1
-            elif tk.text == ")":
-                depth -= 1
-            elif depth == 1 and tk.kind == "word" and k >= tail_from:
-                u = tk.upper
-                if u in ("WHERE", "LIMIT", "GROUP", "ORDER", "HAVING",
-                         "UNION", "QUALIFY"):
-                    clauses.setdefault(u, k)
-        if {"GROUP", "ORDER", "HAVING", "UNION", "QUALIFY"} & set(clauses):
+        # the subquery is one block with no clause but FROM, WHERE and
+        # LIMIT
+        blk = _query_blocks(toks).at(first)
+        clauses = blk.clauses
+        if blk.end != close or set(clauses) - {"FROM", "WHERE", "LIMIT"}:
             return None
         pred_sql = None
         if "WHERE" in clauses:
@@ -1617,108 +1580,25 @@ class Engine(AlterTableMixin):
                 return False
             aggs.append((name, agg))
         valias = derived.alias if derived.explicit else None
+        blk_s, blk_e = _query_blocks(toks).span(p)
+        n_del = derived.stop + 1 - p
         del toks[p : derived.stop + 1]
         self._substitute_output_names(
-            toks, {n.lower(): (n, a) for n, a in aggs}, valias, bind_i=p,
+            toks, {n.lower(): (n, a) for n, a in aggs}, valias,
+            (blk_s, blk_e - n_del),
         )
         return True
 
     @staticmethod
-    def _query_block_bounds(toks, i):
-        """Token range ``[start, end)`` of the query block owning position
-        ``i``: backward to the SELECT at the same paren level, forward to
-        the unmatched close paren or a same-level set-op keyword."""
-        start = 0
-        bal = 0
-        for k in range(i - 1, -1, -1):
-            t = toks[k]
-            if t.text == ")":
-                bal += 1
-            elif t.text == "(":
-                if bal == 0:
-                    start = k + 1
-                    break
-                bal -= 1
-            elif (
-                bal == 0 and t.kind == "word" and t.upper == "SELECT"
-            ):
-                start = k
-                break
-        end = len(toks)
-        bal = 0
-        for k in range(i, len(toks)):
-            t = toks[k]
-            if t.text == "(":
-                bal += 1
-            elif t.text == ")":
-                if bal == 0:
-                    end = k
-                    break
-                bal -= 1
-            elif bal == 0 and t.kind == "word" and t.upper in (
-                "UNION", "INTERSECT", "EXCEPT", "MINUS",
-            ):
-                end = k
-                break
-        return start, end
-
-    @staticmethod
-    def _order_having_spans(toks, blk):
-        """Token ranges of ``blk``'s own ORDER BY and HAVING clauses
-        (depth 0 within the block) — where select-list output names
-        take precedence over collection element fields."""
-        s, e = blk
-        spans = []
-        depth = 0
-        cur = None
-        for k in range(s, e):
-            t = toks[k]
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-            elif depth == 0 and t.kind == "word":
-                u = t.upper
-                if u in ("ORDER", "HAVING"):
-                    if cur is not None:
-                        spans.append((cur, k))
-                    cur = k
-                elif cur is not None and u in (
-                    "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-                    "MINUS", "WINDOW", "QUALIFY",
-                ):
-                    spans.append((cur, k))
-                    cur = None
-        if cur is not None:
-            spans.append((cur, e))
-        return spans
-
-    @staticmethod
-    def _select_output_aliases(toks, blk):
+    def _select_output_aliases(toks, blk: QueryBlock) -> set:
         """Lowercased select-list OUTPUT aliases of query block ``blk``:
         explicit ``AS name`` plus trailing alias words of multi-token
         select items (``count(*) c``, ``'x' o_comment``).  Bare
         single-column items are excluded — their output name IS the
         column, so qualification stays correct for them."""
-        s, e = blk
         aliases: set = set()
-        sel_i = -1
-        from_i = e
-        depth = 0
-        for k in range(s, e):
-            t = toks[k]
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-            elif depth == 0 and t.kind == "word":
-                if t.upper == "SELECT" and sel_i < 0:
-                    sel_i = k
-                elif t.upper == "FROM" and sel_i >= 0:
-                    from_i = k
-                    break
-        if sel_i < 0:
-            return aliases
+        sel_i = blk.select
+        from_i = min(blk.clauses.values(), default=blk.end)
         depth = 0
         for k in range(sel_i + 1, from_i):
             t = toks[k]
@@ -1748,31 +1628,18 @@ class Engine(AlterTableMixin):
         return aliases
 
     @classmethod
-    def _substitute_output_name(cls, toks, name, valias, expr_sql,
-                                bind_i=None):
-        """Single-name convenience wrapper over
-        :meth:`_substitute_output_names`."""
-        cls._substitute_output_names(
-            toks, {name.lower(): (name, expr_sql)}, valias, bind_i=bind_i,
-        )
-
-    @classmethod
-    def _substitute_output_names(cls, toks, exprs, valias, bind_i=None):
+    def _substitute_output_names(cls, toks, exprs, valias, blk):
         """Replace refs to a removed derived table's output columns
         (bare ``name`` or ``valias.name``; ``exprs`` maps lowercase name
         -> (name, expr_sql)) with their expressions; whole select items
         keep the name via AS.  One pass for ALL names — sequential
         single-name passes would shift the block bounds under each
         other.  Substitution is scoped to the query block that bound the
-        derived table (``bind_i`` = its former FROM position): bare names
-        only at the block's own paren level (a nested subquery may bind
-        its own column of the same name), qualified ``valias.name``
-        anywhere inside the block (correlated inner refs are
-        unambiguous)."""
-        if bind_i is None:
-            blk_s, blk_e = 0, len(toks)
-        else:
-            blk_s, blk_e = cls._query_block_bounds(toks, bind_i)
+        derived table (``blk`` = its [start, end) span): bare names only
+        at the block's own paren level (a nested subquery may bind its own
+        column of the same name), qualified ``valias.name`` anywhere
+        inside the block (correlated inner refs are unambiguous)."""
+        blk_s, blk_e = blk
         in_subq_until = -1  # bare names are blocked inside nested SELECTs
         m = 0
         while m < len(toks):
@@ -1856,7 +1723,7 @@ class Engine(AlterTableMixin):
             nx = _next_code(toks, end_s + 1)
             whole_item = (
                 pv >= 0
-                and _select_clause_here(toks, start)
+                and _query_blocks(toks).clause_is(start, "SELECT")
                 and (toks[pv].text == ","
                      or (toks[pv].kind == "word"
                          and toks[pv].upper in ("SELECT", "DISTINCT")))

@@ -586,11 +586,6 @@ def _simhash_from_tokens(th: DataFrame) -> DataFrame:
     )
 
 
-def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, simhash) for every document (see _simhash_from_tokens)."""
-    return _simhash_from_tokens(_token_hashes(spark, sf_dir))
-
-
 def _simhash_pipeline(th: DataFrame, max_hamming: int, bucket_cap: int) -> DataFrame:
     """Near-dup pipeline over (doc_id, th): exact-dup collapse (identical
     token sequences ⇒ identical simhash) → band buckets over

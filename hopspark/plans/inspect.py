@@ -39,10 +39,3 @@ def scan_read_schema(df: DataFrame) -> list[str]:
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_formatted(df) or "BroadcastNestedLoopJoin" in explain_formatted(df)
 
-
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in explain_formatted(df)
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen", explain_formatted(df)))

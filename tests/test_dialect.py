@@ -1099,29 +1099,23 @@ def test_unix_timestamp_truncation_counts_bytes(spark, sf_dir):
     assert v == 1705276800
 
 
-def test_in_from_clause_stops_at_clause_keywords():
+def test_clause_lookup_stops_at_clause_keywords():
     """r11 advice (low): a depth-0 comma in GROUP BY / ORDER BY / WHERE
     after a FROM is a list comma, not a FROM-item separator; a comma
     after a JOIN ... ON condition IS one (ON is part of the FROM
     clause)."""
-    from hopspark.dialect.translate import _in_from_clause, tokenize
+    from hopspark.dialect.translate import _query_blocks, tokenize
 
-    def comma_positions(sql):
+    def first_comma_in_from(sql):
         toks = tokenize(sql)
-        return toks, [i for i, t in enumerate(toks) if t.text == ","]
+        c = next(i for i, t in enumerate(toks) if t.text == ",")
+        return _query_blocks(toks).clause_is(c, "FROM")
 
-    toks, cs = comma_positions("select a from t1, t2 where x = 1")
-    assert _in_from_clause(toks, cs[0])
-    toks, cs = comma_positions("select a from t group by a, b")
-    assert not _in_from_clause(toks, cs[0])
-    toks, cs = comma_positions("select a from t order by a, b")
-    assert not _in_from_clause(toks, cs[0])
-    toks, cs = comma_positions(
-        "select a from t1 join t2 on t1.x = t2.x, t3"
-    )
-    assert _in_from_clause(toks, cs[0])
-    toks, cs = comma_positions("select a, b from t")
-    assert not _in_from_clause(toks, cs[0])
+    assert first_comma_in_from("select a from t1, t2 where x = 1")
+    assert not first_comma_in_from("select a from t group by a, b")
+    assert not first_comma_in_from("select a from t order by a, b")
+    assert first_comma_in_from("select a from t1 join t2 on t1.x = t2.x, t3")
+    assert not first_comma_in_from("select a, b from t")
 
 
 def test_group_by_dotted_path_not_a_table_path_scan(spark, sf_dir):
@@ -1255,3 +1249,45 @@ def test_full_outer_collection_join(spark):
     assert got == [
         (-1, 1), (-1, 2), (1, 2), (1, 5), (7, -1), (9, -1),
     ]
+
+
+def test_is_distinct_from_in_select_list_opens_no_from_clause(spark, sf_dir):
+    """``IS [NOT] DISTINCT FROM`` in a select list is a comparison: the
+    comma after it is a select-list comma, so the next select item is not
+    a FROM item and the statement is not rewritten as a collection
+    join."""
+    from hopspark.engine import Engine
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    for op, spark_expr in (
+        ("is distinct from", "NOT (n.n_regionkey <=> n.n_nationkey)"),
+        ("is not distinct from", "n.n_regionkey <=> n.n_nationkey"),
+    ):
+        got = eng.sql(
+            f"select n.n_regionkey {op} n.n_nationkey a, n.n_name"
+            " from nation n where n.n_nationkey < 3"
+        ).collect()
+        want = spark.sql(
+            f"select {spark_expr} a, n.n_name from nation n"
+            " where n.n_nationkey < 3"
+        ).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+        assert len(got) == 3
+    rows = eng.sql(
+        "select n.n_regionkey is distinct from n.n_nationkey a, n.n_name"
+        " from nation n where n.n_nationkey < 3"
+    ).collect()
+    assert sorted(map(tuple, rows)) == [
+        (False, "NATION_0"), (False, "NATION_1"), (False, "NATION_2"),
+    ]
+
+
+def test_impala_builtins_namespace_is_stripped(spark, sf_dir):
+    """The reference resolves ``_impala_builtins.upper(...)`` against its
+    builtins database; Spark has no such namespace."""
+    from hopspark.engine import Engine
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    assert eng.sql("select _impala_builtins.upper('hello!') v").head().v == (
+        "HELLO!"
+    )

@@ -11,7 +11,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hopspark.dialect import translate
-from hopspark.dialect.translate import _CONSTANT_SOURCE, tokenize, untokenize
+from hopspark.dialect.translate import (
+    _CONSTANT_SOURCE, _from_items, _prev_code, _query_blocks, tokenize,
+    untokenize,
+)
 
 # Identifiers that never collide with rewrite triggers.
 _IDENT = st.text(alphabet="abcxyz_", min_size=1, max_size=8).filter(
@@ -305,3 +308,149 @@ def test_each_from_less_block_gets_one_source(blocks, ops, order, limit, sp):
             words = rest.split()
             assert not words or words[0].upper() in ("WHERE", "ORDER", "LIMIT")
     assert translate(out).count(_CONSTANT_SOURCE) == out.count(_CONSTANT_SOURCE)
+
+
+# --- one block parse: spans nest, FROM items and window ORDER BYs -------
+
+
+@st.composite
+def _nested_block(draw, depth: int = 0) -> tuple[str, int]:
+    """(a query block with nested subqueries, the number of blocks in it
+    that have a FROM clause)."""
+    sp = draw(_SP)
+    kw = lambda w: draw(_mixed_case(w))  # noqa: E731
+    n_from = 0
+
+    def sub() -> str:
+        nonlocal n_from
+        if depth >= 2:
+            return f"{kw('select')}{sp}{draw(_TERM)}"
+        body, n = draw(_nested_block(depth + 1))
+        n_from += n
+        return body
+
+    def term() -> str:
+        form = draw(st.sampled_from([
+            "term", "distinct", "extract", "window", "within", "subquery",
+        ]))
+        if form == "distinct":
+            nt = f"{kw('not')}{sp}" if draw(st.booleans()) else ""
+            return (
+                f"{draw(_TERM)}{sp}{kw('is')}{sp}{nt}{kw('distinct')}{sp}"
+                f"{kw('from')}{sp}{draw(_TERM)}"
+            )
+        if form == "extract":
+            return f"extract({kw('year')}{sp}{kw('from')}{sp}{draw(_IDENT)})"
+        if form == "window":
+            part = (
+                f"{kw('partition')}{sp}{kw('by')}{sp}{draw(_IDENT)}{sp}"
+                if draw(st.booleans()) else ""
+            )
+            return (
+                f"sum({draw(_IDENT)}){sp}{kw('over')}{sp}({part}"
+                f"{kw('order')}{sp}{kw('by')}{sp}{draw(_IDENT)})"
+            )
+        if form == "within":
+            return (
+                f"percentile_cont(0.5){sp}{kw('within')}{sp}{kw('group')}"
+                f"{sp}({kw('order')}{sp}{kw('by')}{sp}{draw(_IDENT)})"
+            )
+        if form == "subquery":
+            return f"({sub()})"
+        return draw(_TERM)
+
+    items = draw(st.lists(st.just(0), min_size=1, max_size=3))
+    sql = f"{kw('select')}{sp}" + f",{sp}".join(term() for _ in items)
+    if draw(st.booleans()):
+        n_from += 1
+        sql += f"{sp}{kw('from')}{sp}{draw(_IDENT)}{sp}q"
+        for _ in range(draw(st.integers(0, 2))):
+            form = draw(st.sampled_from(["comma", "join", "derived", "lv"]))
+            if form == "comma":
+                sql += f",{sp}q.{draw(_IDENT)}{sp}{draw(_IDENT)}"
+            elif form == "join":
+                sql += (
+                    f"{sp}{kw('left')}{sp}{kw('join')}{sp}{draw(_IDENT)}{sp}r"
+                    f"{sp}{kw('on')}{sp}{term()}{sp}={sp}{term()}"
+                )
+            elif form == "derived":
+                sql += f",{sp}({sub()}){sp}d"
+            else:
+                sql += (
+                    f"{sp}{kw('lateral')}{sp}{kw('view')}{sp}"
+                    f"explode({draw(_IDENT)}){sp}lv{sp}{kw('as')}{sp}e"
+                )
+    if draw(st.booleans()):
+        cond = draw(st.sampled_from(["cmp", "exists", "in"]))
+        sql += f"{sp}{kw('where')}{sp}"
+        if cond == "exists":
+            sql += f"{kw('exists')}{sp}({sub()})"
+        elif cond == "in":
+            sql += f"{draw(_IDENT)}{sp}{kw('in')}{sp}({sub()})"
+        else:
+            sql += f"{term()}{sp}={sp}{term()}"
+    if draw(st.booleans()):
+        sql += (
+            f"{sp}{kw('group')}{sp}{kw('by')}{sp}{draw(_IDENT)},{sp}"
+            f"{draw(_IDENT)}"
+        )
+        if draw(st.booleans()):
+            sql += f"{sp}{kw('having')}{sp}{term()}{sp}>{sp}0"
+    if draw(st.booleans()):
+        sql += f"{sp}{kw('order')}{sp}{kw('by')}{sp}{term()},{sp}1"
+    if draw(st.booleans()):
+        sql += f"{sp}{kw('limit')}{sp}3"
+    return sql, n_from
+
+
+@st.composite
+def _statement(draw) -> tuple[str, int]:
+    """(a statement of WITH bodies and set-operation branches, the number
+    of its blocks that have a FROM clause)."""
+    sp = draw(_SP)
+    n_from = 0
+    parts = []
+    for _ in range(draw(st.integers(0, 2))):
+        body, n = draw(_nested_block())
+        n_from += n
+        parts.append(f"w{len(parts)} AS ({body})")
+    sql = f"WITH {', '.join(parts)}{sp}" if parts else ""
+    body, n = draw(_nested_block())
+    n_from += n
+    sql += body
+    for _ in range(draw(st.integers(0, 2))):
+        body, n = draw(_nested_block())
+        n_from += n
+        sql += f"{sp}{draw(_SET_OP.flatmap(_mixed_case))}{sp}{body}"
+    return sql, n_from
+
+
+@given(stmt=_statement())
+@settings(max_examples=150, deadline=None)
+def test_block_parse_nests_and_owns_from_items(stmt):
+    """Block spans nest and do not otherwise overlap; each FROM item's
+    clause is the FROM of the block that holds it; the FROM of ``IS
+    DISTINCT FROM`` and ``extract(… from …)`` and the ORDER BY of ``OVER
+    (…)`` and ``WITHIN GROUP (…)`` are no block's clause."""
+    sql, n_from = stmt
+    toks = tokenize(sql)
+    qb = _query_blocks(toks)
+    blocks = qb.blocks
+    assert len(blocks) == sum(t.upper == "SELECT" for t in toks), sql
+    for a in blocks:
+        for b in blocks:
+            if a is not b and a.select < b.select < a.end:
+                assert b.end <= a.end, sql
+    assert sum("FROM" in b.clauses for b in blocks) == n_from, sql
+    for it in _from_items(toks):
+        assert qb.at(it.trigger).clauses["FROM"] == it.clause, sql
+    owned = {c for b in blocks for c in b.clauses.values()}
+    for i, t in enumerate(toks):
+        if t.upper not in ("ORDER", "FROM"):
+            continue
+        opener = qb.opens[i]
+        in_call = opener >= 0 and toks[_prev_code(toks, opener - 1)].upper in (
+            "OVER", "GROUP", "EXTRACT",
+        )
+        if in_call or toks[_prev_code(toks, i - 1)].upper == "DISTINCT":
+            assert i not in owned, sql
