@@ -58,6 +58,14 @@ def untokenize(toks: list[Tok]) -> str:
     return "".join(t.text for t in toks)
 
 
+def _splice(toks: list[Tok], lo: int, hi: int, text: str) -> int:
+    """Replace ``toks[lo:hi]`` with the tokens of ``text``; returns how
+    many tokens went in."""
+    new = tokenize(text)
+    toks[lo:hi] = new
+    return len(new)
+
+
 def _is_code(t: Tok) -> bool:
     return t.kind not in ("ws", "comment")
 
@@ -769,7 +777,7 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
             continue
         if up == "INTERVAL":
             op_idx = _prev_code(toks, i - 1)
-            if op_idx < 0 or toks[op_idx].text.strip() not in ("+", "-"):
+            if op_idx < 0 or toks[op_idx].text not in ("+", "-"):
                 i += 1
                 continue
             unit_idx = _scan_interval_unit(toks, _next_code(toks, i + 1))
@@ -802,7 +810,7 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
             # native (unclamped) semantics — documented delta, same policy
             # as VALUES rows above. (round-7 advice, high)
             before_prim = _prev_code(toks, prim - 1)
-            if before_prim >= 0 and toks[before_prim].text.strip() in (
+            if before_prim >= 0 and toks[before_prim].text in (
                 "+", "-", "*", "/", "%", "||", "&", "|", "^",
             ):
                 i += 1
@@ -858,7 +866,7 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
                 _rewrite_timestamp_range(toks[i + 1 : unit_idx])
             ).strip()
             inner = (
-                f"{primary} {toks[op_idx].text.strip()} INTERVAL {qty} "
+                f"{primary} {toks[op_idx].text} INTERVAL {qty} "
                 f"{toks[unit_idx].text}"
             )
             new_toks = tokenize(_ts_range_guard(inner, date_aware=True))
@@ -921,11 +929,10 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 a2 = _next_code(toks, args[1][0])
                 if a2 < close and toks[a2].upper == "INTERVAL":
                     op = "+" if name == "date_add" else "-"
-                    toks[i] = Tok("op", "")  # drop the function name
                     # '(' stays; comma becomes the arithmetic operator.
                     comma = _prev_code(toks, args[1][0] - 1)
-                    toks[comma] = Tok("op", f" {op} ")
-                    i += 1
+                    _splice(toks, comma, comma + 1, f" {op} ")
+                    del toks[i]  # drop the function name
                     continue
         # log family: the reference applies C log() with NO domain guard
         # (math-functions-ir.cc ONE_ARG_MATH_FN(Ln, ..., log) and
@@ -1416,8 +1423,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 )
                 toks[i] = Tok("word", "truncate")
                 if len(args) == 1:
-                    toks.insert(close, Tok("op", ", 0"))
-                    close += 1
+                    close += _splice(toks, close, close, ", 0")
                 if ps is not None and d is not None:
                     # DECIMAL_V2 result typing: truncate(DECIMAL(p,s), d)
                     # → DECIMAL(p-s+s', s') with s' = max(0, min(s, d)) —
@@ -1638,11 +1644,10 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                     toks[i : close + 1] = tokenize(str(out_v))
                     i += 1
                     continue
-            toks.insert(close + 1, Tok("op", "))"))
+            _splice(toks, close + 1, close + 1, "))")
             # upper(typeof(...)) — the typeof-uppercase dialect pass
             # recognizes the already-upper-wrapped form (idempotency)
-            toks[i] = Tok("word", f"{name}_of(upper(typeof")
-            i = j + 1
+            i = j + _splice(toks, i, i + 1, f"{name}_of(upper(typeof")
             continue
         # aggif(p, x) → max(CASE WHEN p THEN x END) — the reference's
         # conditional aggregate (BuiltinsDb.java:1188), defined for
@@ -1653,9 +1658,9 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             if len(args) == 2:
                 toks[i] = Tok("word", "max")
                 comma = _prev_code(toks, args[1][0] - 1)
-                toks.insert(close, Tok("word", " END"))
-                toks[comma] = Tok("word", " THEN ")
-                toks.insert(j + 1, Tok("word", "CASE WHEN "))
+                _splice(toks, close, close, " END")
+                _splice(toks, comma, comma + 1, " THEN ")
+                _splice(toks, j + 1, j + 1, "CASE WHEN ")
                 i += 1
                 continue
         # histogram(x) → sorted comma-joined values — Impala's histogram
@@ -1664,9 +1669,10 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
         if name == "histogram":
             close = _matching_paren(toks, j)
             toks[i] = Tok("word", "array_join")
-            toks.insert(close, Tok("op", " AS STRING))), ', '"))
-            toks.insert(j + 1, Tok("word", "sort_array(collect_list(CAST("))
-            i += 1
+            _splice(toks, close, close, " AS STRING))), ', '")
+            i = j + 1 + _splice(
+                toks, j + 1, j + 1, "sort_array(collect_list(CAST("
+            )
             continue
         # ds_kll_quantile(ds_kll_sketch(x), q) → percentile(x, q): the KLL
         # sketch→quantile composition collapses to the exact percentile
@@ -1685,12 +1691,10 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                         inner_close = _matching_paren(toks, inner_open)
                         # CAST to FLOAT: the reference returns FloatVal
                         # (DsKllQuantile, datasketches-functions-ir.cc:240)
-                        toks.insert(close + 1, Tok("op", " AS FLOAT)"))
-                        toks[i] = Tok("word", "CAST(percentile")
-                        toks[inner_i] = Tok("word", "")
-                        toks[inner_open] = Tok("op", "")
-                        toks[inner_close] = Tok("op", "")
-                        i += 1
+                        _splice(toks, close + 1, close + 1, " AS FLOAT)")
+                        for k in (inner_close, inner_open, inner_i):
+                            del toks[k]
+                        i += _splice(toks, i, i + 1, "CAST(percentile")
                         continue
         # ds_kll_rank(ds_kll_sketch(x), v) → avg(CAST(x < v AS DOUBLE)):
         # the sketch→rank composition collapses to the exact normalized
@@ -1705,11 +1709,10 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                     and toks[inner_i].text.lower() == "ds_kll_sketch"
                 ):
                     comma = _prev_code(toks, args[1][0] - 1)
-                    toks.insert(close, Tok("op", " AS DOUBLE)"))
-                    toks[comma] = Tok("op", " < ")
-                    toks[inner_i] = Tok("word", "")
-                    toks[i] = Tok("word", "avg(CAST")
-                    i += 1
+                    _splice(toks, close, close, " AS DOUBLE)")
+                    _splice(toks, comma, comma + 1, " < ")
+                    del toks[inner_i]
+                    i += _splice(toks, i, i + 1, "avg(CAST")
                     continue
         # ds_kll_n(ds_kll_sketch(x)) → count(x): the sketch's stream length
         # is exactly the non-null count.
@@ -1725,10 +1728,9 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                     inner_open = _next_code(toks, inner_i + 1)
                     if inner_open < close and toks[inner_open].text == "(":
                         inner_close = _matching_paren(toks, inner_open)
+                        for k in (inner_close, inner_open, inner_i):
+                            del toks[k]
                         toks[i] = Tok("word", "count")
-                        toks[inner_i] = Tok("word", "")
-                        toks[inner_open] = Tok("op", "")
-                        toks[inner_close] = Tok("op", "")
                         i += 1
                         continue
         # ds_kll_*_as_string / ds_kll_stringify / ds_hll_estimate_bounds_
@@ -1812,7 +1814,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 comma2 = _prev_code(toks, args[2][0] - 1)
                 del toks[comma2:close]
                 toks.insert(comma2, Tok("op", ")"))
-                toks.insert(args[1][0], Tok("word", f" concat('(?{flags})', "))
+                _splice(toks, args[1][0], args[1][0], f" concat('(?{flags})', ")
                 toks[i] = Tok("word", "rlike")
                 i += 1
                 continue
@@ -2045,7 +2047,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                 defaults = ["'X'", "'x'", "'n'", "CAST(NULL AS STRING)"]
                 pad = ", ".join(defaults[len(args) - 2 :])
                 if pad:
-                    toks.insert(close, Tok("op", f", {pad}"))
+                    _splice(toks, close, close, f", {pad}")
                 toks[i] = Tok("word", name + "6")
                 i += 1
                 continue
@@ -2057,7 +2059,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             if nargs in (3, 4):
                 toks[i] = Tok("word", "instr4")
                 if nargs == 3:
-                    toks.insert(close, Tok("op", ", 1"))
+                    _splice(toks, close, close, ", 1")
                 i += 1
                 continue
         # IS [NOT] DISTINCT FROM exposed as functions (BuiltinsDb
@@ -2067,9 +2069,12 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             args = _split_args(toks, j, close)
             if len(args) == 2:
                 comma = _prev_code(toks, args[1][0] - 1)
-                toks[comma] = Tok("op", " <=> ")
-                toks[i] = Tok("word", "not" if name == "distinctfrom" else "")
-                i += 1
+                _splice(toks, comma, comma + 1, " <=> ")
+                if name == "distinctfrom":
+                    toks[i] = Tok("word", "not")
+                    i += 1
+                else:
+                    del toks[i]
                 continue
         # isnull(a, b) → nvl(a, b); 1-arg isnull passes through untouched.
         if name == "isnull":
@@ -2079,26 +2084,26 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
         elif name == "zeroifnull":
             close = _matching_paren(toks, j)
             toks[i] = Tok("word", "coalesce")
-            toks.insert(close, Tok("op", ", 0"))
+            _splice(toks, close, close, ", 0")
         elif name in _FN_APPEND_ARG:
             new, extra = _FN_APPEND_ARG[name]
             close = _matching_paren(toks, j)
             toks[i] = Tok("word", new)
-            toks.insert(close, Tok("op", f", {extra}"))
+            _splice(toks, close, close, f", {extra}")
         elif name in _FN_DEFAULT_ARG:
             new, default = _FN_DEFAULT_ARG[name]
             close = _matching_paren(toks, j)
             toks[i] = Tok("word", new)
             if len(_split_args(toks, j, close)) == 1:
-                toks.insert(close, Tok("op", f", {default}"))
+                _splice(toks, close, close, f", {default}")
         elif name == "dayname":
             close = _matching_paren(toks, j)
             toks[i] = Tok("word", "date_format")
-            toks.insert(close, Tok("op", ", 'EEEE'"))
+            _splice(toks, close, close, ", 'EEEE'")
         elif name == "monthname":
             close = _matching_paren(toks, j)
             toks[i] = Tok("word", "date_format")
-            toks.insert(close, Tok("op", ", 'MMMM'"))
+            _splice(toks, close, close, ", 'MMMM'")
         elif name == "sampled_ndv":
             # sampled_ndv(x, sample_rate) — the sampling knob has no Spark
             # analogue; the HLL estimate subsumes it. Drop the second arg.
@@ -2137,7 +2142,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             }.get((name, nargs))
             if new_name is not None:
                 toks[i] = Tok("word", new_name)
-                toks.insert(close, Tok("op", f", {width}"))
+                _splice(toks, close, close, f", {width}")
         elif name == "abs":
             # abs() PROMOTES the integer argument's type (IMPALA-4513,
             # impala_functions.py Abs signatures: TINYINT→SMALLINT,
@@ -2733,7 +2738,7 @@ def _rewrite_cast_format(toks: list[Tok]) -> list[Tok]:
         repl = (
             [Tok("word", fn), Tok("op", "(")]
             + expr
-            + [Tok("op", ","), Tok("str", f' "{java_fmt}"'), Tok("op", ")")]
+            + tokenize(f', "{java_fmt}")')
         )
         toks[i : close + 1] = repl
         i += 1
@@ -2843,7 +2848,7 @@ def _rewrite_null_ordering(toks: list[Tok]) -> list[Tok]:
         end_item()
         for pos, d in sorted(pending, reverse=True):
             word = "LAST" if d == "ASC" else "FIRST"
-            toks.insert(pos + 1, Tok("word", f" NULLS {word}"))
+            _splice(toks, pos + 1, pos + 1, f" NULLS {word}")
         i = j + 1
     return toks
 
@@ -2879,7 +2884,7 @@ def _rewrite_utf8_base(toks: list[Tok], i: int, j: int, base: str) -> str:
         nargs = len(_split_args(toks, j, close))
         if nargs in (3, 4):
             if nargs == 3:
-                toks.insert(close, Tok("op", ", 1"))
+                _splice(toks, close, close, ", 1")
             return "instr4"
     if base in ("substr", "substring"):
         # character-semantics substr keeps the reference's position
@@ -2919,7 +2924,7 @@ def _rewrite_datetime_type_contracts(toks: list[Tok]) -> list[Tok]:
         is_date = nargs > 0 and _static_type(toks, *args[0]) == "DATE"
         if name == "to_date" and nargs == 1:
             toks[i] = Tok("word", "date_format")
-            toks.insert(close, Tok("op", ", 'yyyy-MM-dd'"))
+            _splice(toks, close, close, ", 'yyyy-MM-dd'")
         elif name == "next_day" and nargs == 2 and not is_date:
             toks[i] = Tok("word", "next_day2")
         elif name == "next_day" and nargs == 2:
@@ -2936,52 +2941,6 @@ def _rewrite_datetime_type_contracts(toks: list[Tok]) -> list[Tok]:
                 continue
         elif name == "last_day" and nargs == 1 and not is_date:
             toks[i] = Tok("word", "last_day1")
-        i += 1
-    return toks
-
-
-def _rewrite_timestamp_avg(
-    toks: list[Tok], column_types: dict[str, str] | None
-) -> list[Tok]:
-    """avg(TIMESTAMP) returns TIMESTAMP in the reference (BuiltinsDb.java:
-    1359, aggregate-functions-ir.cc TimestampAvg*) — Spark's non-ANSI mode
-    silently implicit-casts to DOUBLE epoch seconds instead.  Rewrite
-    avg(x) → timestamp_micros(CAST(avg(unix_micros(x)) AS BIGINT)) when
-    _static_type proves x TIMESTAMP (a column through the caller's
-    ``column_types``).  The window form avg(ts) OVER (...) wraps the
-    whole windowed expression."""
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.text.lower() == "avg"):
-            i += 1
-            continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        args = _split_args(toks, j, close)
-        if len(args) != 1 or _static_type(
-            toks, *args[0], column_types
-        ) != "TIMESTAMP":
-            i += 1
-            continue
-        x = untokenize(toks[args[0][0] : args[0][1]]).strip()
-        wrap_end = close
-        after = _next_code(toks, close + 1)
-        if (
-            after < len(toks)
-            and toks[after].kind == "word"
-            and toks[after].upper == "OVER"
-        ):
-            op = _next_code(toks, after + 1)
-            if op < len(toks) and toks[op].text == "(":
-                wrap_end = _matching_paren(toks, op)
-        over = untokenize(toks[close + 1 : wrap_end + 1])
-        toks[i : wrap_end + 1] = tokenize(
-            f"timestamp_micros(CAST(avg(unix_micros({x})){over} AS BIGINT))"
-        )
         i += 1
     return toks
 
@@ -3212,7 +3171,7 @@ def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
                     # (ScalarType DEFAULT_PRECISION/SCALE; expr-test pins
                     # typeof(cast(10 as DECIMAL)) = 'DECIMAL(9,0)');
                     # Spark's bare DECIMAL is (10,0)
-                    toks[type_idx] = Tok("word", "DECIMAL(9,0)")
+                    _splice(toks, type_idx, type_idx + 1, "DECIMAL(9,0)")
                 i += 1
                 continue
             # analyzer parity: DATE <-> numeric casts are invalid
@@ -3481,7 +3440,7 @@ def _rewrite_bigint_decimal_arith(
     i = 0
     while i < len(toks):
         t = toks[i]
-        op = t.text.strip()
+        op = t.text
         if not (t.kind == "op" and op in ("+", "-", "*", "/", "%")):
             i += 1
             continue
@@ -3609,7 +3568,7 @@ def _rewrite_div_by_zero_literal(toks: list[Tok]) -> list[Tok]:
             )
             if is_zero and left_ok:
                 toks[i] = Tok("op", "*")
-                toks[j] = Tok("word", "CAST('Infinity' AS DOUBLE)")
+                _splice(toks, j, j + 1, "CAST('Infinity' AS DOUBLE)")
         i += 1
     return toks
 
@@ -3733,9 +3692,8 @@ def _rewrite_nan_comparisons(toks: list[Tok]) -> list[Tok]:
     keep Spark semantics — documented delta."""
 
     def _has_marker(a: int, b: int) -> bool:
-        # the div-by-zero rewrite emits its CAST as ONE word token, the
-        # log/fmod kernels as proper token runs — match the full
-        # CAST(<special> AS DOUBLE/FLOAT) form on normalized text, NOT a
+        # match the full CAST(<special> AS DOUBLE/FLOAT) form the
+        # div-by-zero, log and fmod rewrites emit on normalized text, NOT a
         # bare string literal (``WHERE c = 'NaN'`` on a STRING column is a
         # plain string compare and must stay one)
         txt = " ".join(untokenize(toks[a : b + 1]).upper().split())
@@ -4303,8 +4261,8 @@ def _fold_ns_literal_timestamps(toks: list[Tok]) -> list[Tok]:
 def _enclosing_cast_target(toks: list[Tok], i: int) -> str | None:
     """Normalized (upper, space-free) target type of a CAST that DIRECTLY
     encloses the expression starting at token i — i.e. i sits right after
-    ``CAST (``.  Used by the decimal sum/avg result-type passes to make the
-    idempotency skip exact: only a CAST to the exact type the pass would
+    ``CAST (``.  Used by the DECIMAL rules of _rewrite_result_types to make
+    the idempotency skip exact: only a CAST to the exact type the pass would
     emit is recognized as the pass's own output (round-7 advice, low) —
     a user-written ``CAST(avg(...) AS STRING)`` no longer suppresses the
     DECIMAL_V2 result-type rewrite."""
@@ -4315,111 +4273,99 @@ def _enclosing_cast_target(toks: list[Tok], i: int) -> str | None:
     return c.ty if c is not None else None
 
 
-def _rewrite_decimal_sum(toks: list[Tok]) -> list[Tok]:
-    """sum(DECIMAL(p,s)) returns the MAX-RESOLUTION type DECIMAL(38,s) in
-    the reference (FunctionCallExpr.java:442-444 → ScalarType.
-    getMaxResolutionType:396-397); Spark widens only to DECIMAL(p+10,s).
-    Applied when the argument is a provable top-level CAST to
-    DECIMAL(p,s) — the statically-typed form; values are identical either
-    way, this pins the result TYPE (and the typing of enclosing
-    expressions).  Window sums wrap the whole windowed expression."""
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.text.lower() == "sum"):
-            i += 1
+#: (function, argument type) -> the reference's result type for the
+#: one-argument calls Spark types differently (_rewrite_result_types);
+#: "DECIMAL" stands for any DECIMAL(p,s)
+_RESULT_TYPES = {
+    # BuiltinsDb.java:1359, aggregate-functions-ir.cc TimestampAvg* —
+    # Spark's non-ANSI mode implicit-casts to DOUBLE epoch seconds
+    ("avg", "TIMESTAMP"): "TIMESTAMP",
+    # FunctionCallExpr.java:442-444 → ScalarType.getMaxResolutionType:
+    # DECIMAL(38,s); Spark widens only to DECIMAL(p+10,s)
+    ("sum", "DECIMAL"): "DECIMAL",
+    # DECIMAL_V2 FunctionCallExpr.java:448-461; Spark's DECIMAL(p+4,s+4)
+    ("avg", "DECIMAL"): "DECIMAL",
+    # impala_functions.py:348-349 DOUBLE→DOUBLE; Spark's is BIGINT
+    **{
+        (fn, ty): "DOUBLE"
+        for fn in ("ceil", "ceiling", "dceil", "floor", "dfloor")
+        for ty in ("DOUBLE", "FLOAT")
+    },
+}
+
+
+def _rewrite_result_types(
+    toks: list[Tok], column_types: dict[str, str] | None
+) -> list[Tok]:
+    """Give each one-argument call in _RESULT_TYPES the reference's
+    result type, wrapping the call (and its OVER (…) window, if any):
+
+      * avg(TIMESTAMP) → timestamp_micros(CAST(avg(unix_micros(x)) AS
+        BIGINT));
+      * sum(DECIMAL(p,s)) → CAST(… AS DECIMAL(38, s));
+      * avg(DECIMAL(p,s)) → CAST(… AS DECIMAL((p-s) + max(6,s),
+        max(6,s))), with the adjusted 38-cap (the scale gets at least
+        MIN_ADJUSTED_SCALE for the implicit divide; the CAST back rounds
+        half-up at the result scale like the reference's divide);
+      * ceil/floor(DOUBLE or FLOAT) → CAST(… AS DOUBLE).
+
+    The argument's type is _static_type's; a column is typed through
+    ``column_types`` except for the DECIMAL rules, which take only a
+    provable CAST or literal.  Values are identical either way: this pins
+    the result TYPE and the typing of enclosing expressions.  The walk
+    runs right to left, so a call is typed after its argument's rewrite.
+    A DECIMAL wrap is skipped when the directly enclosing CAST targets the
+    exact type it would emit (_enclosing_cast_target), so a user CAST to
+    any other type does not suppress it."""
+    cols = {
+        name: ty for name, ty in (column_types or {}).items()
+        if not ty.startswith("DECIMAL")
+    }
+    fns = {fn for fn, _ in _RESULT_TYPES}
+    for i in range(len(toks) - 1, -1, -1):
+        fn = toks[i].text.lower()
+        if toks[i].kind != "word" or fn not in fns:
             continue
         j = _next_code(toks, i + 1)
         if j >= len(toks) or toks[j].text != "(":
-            i += 1
             continue
         close = _matching_paren(toks, j)
         args = _split_args(toks, j, close)
         if len(args) != 1:
-            i += 1
             continue
-        ps = _decimal_ps(_static_type(toks, *args[0]))
-        if ps is None:
-            i += 1
+        ty = _static_type(toks, *args[0], cols)
+        ps = _decimal_ps(ty)
+        target = _RESULT_TYPES.get((fn, "DECIMAL" if ps else ty))
+        if target is None:
             continue
-        scale = ps[1]
-        # idempotency: skip ONLY when the directly-enclosing CAST targets
-        # the exact type this pass emits — a user CAST to any other type
-        # (STRING, a different DECIMAL) must not suppress the rewrite
-        if _enclosing_cast_target(toks, i) == f"DECIMAL(38,{scale})":
-            i += 1
-            continue
+        if ps is not None:
+            p, s = ps
+            if fn == "sum":
+                p = 38
+            else:
+                p, s = (p - s) + max(6, s), max(6, s)
+                if p > 38:  # ScalarType.createAdjustedDecimalType
+                    p, s = 38, max(38 - (p - s), min(s, 6))
+            if _enclosing_cast_target(toks, i) == f"DECIMAL({p},{s})":
+                continue
+            target = f"DECIMAL({p}, {s})"
         wrap_end = close
         after = _next_code(toks, close + 1)
-        if (
-            after < len(toks)
-            and toks[after].kind == "word"
-            and toks[after].upper == "OVER"
-        ):
+        if after < len(toks) and toks[after].upper == "OVER":
             op = _next_code(toks, after + 1)
             if op < len(toks) and toks[op].text == "(":
                 wrap_end = _matching_paren(toks, op)
-        inner = untokenize(toks[i : wrap_end + 1])
-        repl = tokenize(f"CAST({inner} AS DECIMAL(38, {scale}))")
-        toks[i : wrap_end + 1] = repl
-        i += len(repl)  # skip the inner sum — it would re-match
-    return toks
-
-
-def _rewrite_decimal_avg(toks: list[Tok]) -> list[Tok]:
-    """avg(DECIMAL(p,s)) in DECIMAL_V2 returns
-    DECIMAL((p-s) + max(6,s), max(6,s)) with the adjusted 38-cap
-    (FunctionCallExpr.java:448-461: scale gets at least MIN_ADJUSTED_SCALE
-    for the implicit divide, precision trims to digits-before + scale);
-    Spark's avg returns DECIMAL(p+4, s+4) — the two coincide ONLY at s=2.
-    Applied to the provable top-level CAST(... AS DECIMAL(p,s)) form, same
-    discipline as _rewrite_decimal_sum; the CAST back rounds half-up at
-    the result scale exactly like the reference's divide."""
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.text.lower() == "avg"):
-            i += 1
-            continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        args = _split_args(toks, j, close)
-        if len(args) != 1:
-            i += 1
-            continue
-        ps = _decimal_ps(_static_type(toks, *args[0]))
-        if ps is None:
-            i += 1
-            continue
-        p, s = ps
-        scale = max(6, s)
-        precision = (p - s) + scale
-        if precision > 38:  # ScalarType.createAdjustedDecimalType
-            int_digits = precision - scale
-            scale = max(38 - int_digits, min(scale, 6))
-            precision = 38
-        # idempotency: skip ONLY when the directly-enclosing CAST targets
-        # the exact type this pass emits (see _enclosing_cast_target)
-        if _enclosing_cast_target(toks, i) == f"DECIMAL({precision},{scale})":
-            i += 1
-            continue
-        wrap_end = close
-        after = _next_code(toks, close + 1)
-        if (
-            after < len(toks)
-            and toks[after].kind == "word"
-            and toks[after].upper == "OVER"
-        ):
-            op = _next_code(toks, after + 1)
-            if op < len(toks) and toks[op].text == "(":
-                wrap_end = _matching_paren(toks, op)
-        inner = untokenize(toks[i : wrap_end + 1])
-        repl = tokenize(f"CAST({inner} AS DECIMAL({precision}, {scale}))")
-        toks[i : wrap_end + 1] = repl
-        i += len(repl)  # skip the inner avg — it would re-match
+        if target == "TIMESTAMP":
+            x = untokenize(toks[args[0][0] : args[0][1]]).strip()
+            over = untokenize(toks[close + 1 : wrap_end + 1])
+            _splice(
+                toks, i, wrap_end + 1,
+                f"timestamp_micros(CAST(avg(unix_micros({x})){over} "
+                f"AS BIGINT))",
+            )
+        else:
+            _splice(toks, wrap_end + 1, wrap_end + 1, f" AS {target})")
+            _splice(toks, i, i, "CAST(")
     return toks
 
 
@@ -4436,43 +4382,6 @@ def _int_literal_value(toks: list[Tok], arg: tuple[int, int]) -> int | None:
     ):
         return -int(toks[code[1]].text)
     return None
-
-
-_CEIL_FLOOR_FNS = ("ceil", "ceiling", "dceil", "floor", "dfloor")
-
-
-def _rewrite_double_ceil_floor(
-    toks: list[Tok], column_types: dict[str, str] | None
-) -> list[Tok]:
-    """ceil/floor over DOUBLE return DOUBLE in the reference
-    (impala_functions.py:348-349 — DOUBLE→DOUBLE; the DECIMAL overloads
-    return DECIMAL, which Spark matches); Spark's ceil/floor of a double
-    return BIGINT.  Wrap arguments _static_type proves DOUBLE or FLOAT
-    with a cast back to DOUBLE."""
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if not (t.kind == "word" and t.text.lower() in _CEIL_FLOOR_FNS):
-            i += 1
-            continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        args = _split_args(toks, j, close)
-        if len(args) == 1 and _static_type(
-            toks, *args[0], column_types
-        ) in ("DOUBLE", "FLOAT"):
-            inner = untokenize(toks[i : close + 1])
-            repl = tokenize(f"CAST({inner} AS DOUBLE)")
-            toks[i : close + 1] = repl
-            # jump past the replacement — its inner ceil(x) would
-            # otherwise re-match and wrap forever
-            i += len(repl)
-            continue
-        i += 1
-    return toks
 
 
 def _count_capture_groups(pattern: str) -> int:
@@ -4563,7 +4472,7 @@ def _rewrite_byte_semantics(toks: list[Tok]) -> list[Tok]:
                     sub_toks = toks[a0s:a0e]
                     s_toks = toks[a1s:a1e]
                     toks[a0s:a1e] = (
-                        s_toks + [Tok("op", ", ")] + sub_toks
+                        s_toks + tokenize(", ") + sub_toks
                     )
                 toks[i] = Tok("word", "byteinstr")
             elif name == "instr" and len(args) in (3, 4):
@@ -4571,7 +4480,7 @@ def _rewrite_byte_semantics(toks: list[Tok]) -> list[Tok]:
                 # (string-functions-ir.cc Instr:788-846)
                 toks[i] = Tok("word", "byteinstr4")
                 if len(args) == 3:
-                    toks.insert(close, Tok("op", ", 1"))
+                    _splice(toks, close, close, ", 1")
             elif name == "locate" and len(args) == 3:
                 # LocatePos byte guard + forward search
                 # (string-functions-ir.cc:863-871); arg order matches
@@ -4610,7 +4519,7 @@ def _rewrite_byte_semantics(toks: list[Tok]) -> list[Tok]:
                 src, dst = _ASCII_LOWER, _ASCII_UPPER
                 if name in ("lower", "lcase"):
                     src, dst = _ASCII_UPPER, _ASCII_LOWER
-                toks.insert(close, Tok("op", f", '{src}', '{dst}'"))
+                _splice(toks, close, close, f", '{src}', '{dst}'")
                 toks[i] = Tok("word", "translate")
         elif name == "initcap":
             # Byte-mode initcap: ASCII word-start byte after whitespace →
@@ -4665,7 +4574,6 @@ def _rewrite_byte_semantics(toks: list[Tok]) -> list[Tok]:
 def _rewrite_right_semi_anti(toks: list[Tok]) -> list[Tok]:
     if not any(t.kind == "word" and t.upper in ("SEMI", "ANTI") for t in toks):
         return toks
-    toks = _real_tokens(toks)
     changed = True
     while changed:
         changed = False
@@ -4694,17 +4602,11 @@ def _rewrite_right_semi_anti(toks: list[Tok]) -> list[Tok]:
                 x.trigger for x in sibs
                 if x.trigger < i and toks[x.trigger].upper != "JOIN"
             ), default=it.block) + 1
-            # ---- ON condition: to the next item's join operator or
-            # comma, else the clause's end ----------------------------
+            # ---- ON condition (_join_condition_end) -----------------
             on_i = _next_code(toks, it.stop + 1)
             if on_i >= len(toks) or toks[on_i].upper != "ON":
                 continue
-            nxt = next((x for x in sibs if x.trigger > it.stop), None)
-            ce = (
-                _from_clause_end(toks, qb, it) if nxt is None
-                else nxt.trigger if toks[nxt.trigger].text == ","
-                else _join_operator(toks, nxt.trigger)[0]
-            )
+            ce = _join_condition_end(toks, qb, items, it)
             left = toks[ls:i]
             right = toks[it.start : it.stop + 1]
             cond = toks[on_i:ce]
@@ -4754,7 +4656,8 @@ def _rewrite_hints(toks: list[Tok]) -> list[Tok]:
             and toks[p].kind == "word"
             and toks[p].upper == "SELECT"
         ):
-            toks[i] = Tok("op", "")
+            del toks[i]
+            continue
         i += 1
     hinted: list[Tok] = []  # the first token of each broadcast operand
     i = 0
@@ -4781,8 +4684,6 @@ def _rewrite_hints(toks: list[Tok]) -> list[Tok]:
     # Spark only parses /*+ ... */ directly after SELECT — hang
     # BROADCAST(alias) of each hinted join operand off the owning block's
     # SELECT (a bare comment after JOIN is a parse error: joins.test#23).
-    # (the split keeps a real token as it is, so the hinted ones survive)
-    toks = _real_tokens(toks)
     qb = _query_blocks(toks)
     spots: list[tuple[int, str]] = []
     for it in _from_items(toks, qb):
@@ -4791,7 +4692,7 @@ def _rewrite_hints(toks: list[Tok]) -> list[Tok]:
             spots.append((owner[0].select, it.alias))
     # back to front; one block's hints in their order, each at SELECT + 1
     for sel, alias in sorted(spots, key=lambda x: -x[0]):
-        toks.insert(sel + 1, Tok("comment", f" /*+ BROADCAST({alias}) */"))
+        _splice(toks, sel + 1, sel + 1, f" /*+ BROADCAST({alias}) */")
     return toks
 
 
@@ -4811,7 +4712,6 @@ def _has_unnest(toks: list[Tok]) -> bool:
 def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
     if not _has_unnest(toks):
         return toks
-    toks = _real_tokens(toks)
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -4842,10 +4742,12 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
             + ", ".join(arg_sql)
             + ")) _unnest AS pos, _z "
         )
-        toks[prev : close + 1] = [Tok("word", lateral)]
-        # rewrite `leaf.item` → `_z.leaf` and `leaf.pos` → `pos` everywhere
-        # (one token for one: the parse stays valid)
+        _splice(toks, prev, close + 1, lateral)
+        # rewrite `leaf.item` → `_z.leaf` (one token for one: the parse
+        # stays valid) and `leaf.pos` → `pos` (spliced back to front
+        # after the scan) everywhere
         qb = _query_blocks(toks)
+        pos_refs: list[tuple[int, int, str]] = []
         k = 0
         while k < len(toks) - 2:
             a = toks[k]
@@ -4882,10 +4784,10 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
                             repl_sql = "CAST(pos AS BIGINT)"
                             if bare_item:
                                 repl_sql += " AS pos"
-                            toks[k] = Tok("word", repl_sql)
-                            toks[d] = Tok("op", "")
-                            toks[m] = Tok("word", "")
+                            pos_refs.append((k, m, repl_sql))
             k += 1
+        for k, m, repl_sql in reversed(pos_refs):
+            _splice(toks, k, m + 1, repl_sql)
         i += 1
     return toks
 
@@ -4911,7 +4813,7 @@ def _rewrite_count_distinct_to_ndv(toks: list[Tok]) -> list[Tok]:
         k = _next_code(toks, j + 1)
         if k < len(toks) and toks[k].upper == "DISTINCT":
             toks[i] = Tok("word", "approx_count_distinct")
-            toks[k] = Tok("word", "")
+            del toks[k]
         i += 1
     return toks
 
@@ -4928,19 +4830,6 @@ def _rewrite_count_distinct_to_ndv(toks: list[Tok]) -> list[Tok]:
 #: resolves a name against the source before a lateral alias.
 _CONSTANT_SOURCE = " FROM (VALUES (0)) AS _hs_one_row(_hs_one_row_c)"
 
-def _real_tokens(toks: list[Tok]) -> list[Tok]:
-    """``toks`` with each spliced Tok (a rewrite's multi-token text
-    emitted as one token) split into the tokens it holds, so that its
-    parens and keywords count for the block and FROM-item parses."""
-    return [
-        part for t in toks
-        for part in (
-            [t] if t.kind == "ws" or _TOKEN_RE.fullmatch(t.text)
-            else tokenize(t.text)
-        )
-    ]
-
-
 def _add_constant_sources(toks: list[Tok]) -> list[Tok]:
     """Give each FROM-less query block at statement level (the main
     query, after any WITH clause, and each set-operation branch) the
@@ -4949,7 +4838,6 @@ def _add_constant_sources(toks: list[Tok]) -> list[Tok]:
     coordinator with no scan (union-node.h).  A block whose select list
     has a ``*`` or ``q.*`` item keeps its bare form (``select *`` is zero
     columns and one row); nested blocks are left alone."""
-    toks = _real_tokens(toks)
     qb = _query_blocks(toks)
     spots: list[int] = []
     for b in qb.blocks:
@@ -4968,12 +4856,54 @@ def _add_constant_sources(toks: list[Tok]) -> list[Tok]:
     return toks
 
 
+def _rewrite_utf8_case_mapping(toks: list[Tok]) -> list[Tok]:
+    """UTF8_MODE=true: masking takes the locale path (MaskTransform with
+    a locale: non-ASCII letters/digits ARE masked), so the ASCII-class
+    kernels the function pass emitted become their Unicode ``_u`` forms;
+    and lower/lcase/initcap get the reference's simple (locale) mapping
+    for U+0130 İ — ``lower(translate(x, 'İ', 'I'))`` — where Java/ICU
+    give i + combining dot.  A call whose argument already starts with
+    that translate is left alone."""
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        if t.kind == "word" and t.text in (
+            "maskchars", "mask_first_n6", "mask_last_n6",
+            "mask_show_first_n6", "mask_show_last_n6",
+        ):
+            toks[i] = Tok("word", t.text + "_u")
+        elif t.kind == "word" and t.text.lower() in (
+            "lower", "lcase", "initcap"
+        ):
+            j = _next_code(toks, i + 1)
+            if j < len(toks) and toks[j].text == "(":
+                close = _matching_paren(toks, j)
+                first = _next_code(toks, j + 1)
+                if not (
+                    first < close
+                    and toks[first].text == "translate"
+                    and any(
+                        toks[q].kind == "str" and "İ" in toks[q].text
+                        for q in range(first, close)
+                    )
+                ):
+                    fn = "lower" if t.upper != "INITCAP" else "initcap"
+                    _splice(toks, close, close, ", 'İ', 'I')")
+                    i += _splice(toks, i, i + 1, f"{fn}(translate")
+                    continue
+        i += 1
+    return toks
+
+
 def translate(
-    sql: str,
+    sql: str | list[Tok],
     options: dict[str, bool] | None = None,
     column_types: dict[str, str] | None = None,
 ) -> str:
-    """Rewrite an Impala-dialect SQL string into Spark-SQL.
+    """Rewrite an Impala-dialect statement into Spark SQL text.  ``sql``
+    is the statement's text or its token list (tokenize), which the
+    passes then edit in place; every pass keeps each token exactly one
+    lexical token.
 
     `options` mirrors the reference's query options (query-options.h);
     supported: appx_count_distinct (CountDistinctToNdvRule), utf8_mode
@@ -4984,8 +4914,8 @@ def translate(
     whose type is unambiguous.  _static_type reads it to type bare and
     dotted column operands the way the reference's analyzer does: ``||``
     on BOOLEAN columns is OR, STRING columns get the string→int cast
-    guard, and TIMESTAMP, DOUBLE and BIGINT columns drive the avg,
-    ceil/floor and DECIMAL promotion rewrites.
+    guard, and TIMESTAMP, DOUBLE and FLOAT columns drive the avg and
+    ceil/floor result types and the DECIMAL promotion rewrites.
 
     Last, each FROM-less query block at statement level (the main query
     and each set-operation branch, but not one with a ``*`` item) gets the
@@ -4993,8 +4923,9 @@ def translate(
     right after its select list (_add_constant_sources).  Catalyst folds
     a projection, filter or limit over it into a LocalRelation, so the
     statement returns from the driver without a Spark job."""
-    sql = _rewrite_create_table_ddl(sql)
-    toks = tokenize(sql)
+    utf8 = bool(options and options.get("utf8_mode"))
+    toks = tokenize(sql) if isinstance(sql, str) else sql
+    toks = _rewrite_create_table_ddl(toks)
     toks = _rewrite_escape_residue(toks)
     toks = _rewrite_builtins_namespace(toks)
     # ns constant folding FIRST — it reads pristine Impala-dialect shapes
@@ -5006,13 +4937,12 @@ def translate(
     toks = _rewrite_postfix_factorial(toks)
     toks = _rewrite_string_int_casts(toks, column_types)
     toks = _rewrite_datetime_type_contracts(toks)
-    toks = _rewrite_timestamp_avg(toks, column_types)
-    toks = _rewrite_decimal_sum(toks)
-    toks = _rewrite_decimal_avg(toks)
+    # result types BEFORE the DECIMAL promotion and DOUBLE→STRING passes,
+    # which read the types they pin
+    toks = _rewrite_result_types(toks, column_types)
     toks = _rewrite_bigint_decimal_arith(toks, column_types)
     toks = _rewrite_double_string_casts(toks)
     toks = _rewrite_div_by_zero_literal(toks)
-    toks = _rewrite_double_ceil_floor(toks, column_types)
     toks = _rewrite_char_casts(toks)
     toks = _rewrite_tablesample(toks)
     toks = _rewrite_right_semi_anti(toks)
@@ -5021,48 +4951,15 @@ def translate(
     toks = _rewrite_unnest(toks)
     toks = _rewrite_select_unnest(toks)
     toks = _rewrite_collection_join(toks)
-    if not (options and options.get("utf8_mode")):
-        toks = _rewrite_byte_semantics(toks)
-    else:
+    if utf8:
         toks = _rewrite_char_mode_substr(toks)
+    else:
+        toks = _rewrite_byte_semantics(toks)
     toks = _rewrite_ignore_nulls(toks)
     toks = _rewrite_posix_classes(toks)
     toks = _rewrite_functions(toks)
-    if options and options.get("utf8_mode"):
-        # utf8-mode masking uses the locale path (MaskTransform with a
-        # locale: non-ASCII letters/digits ARE masked) — swap the
-        # ASCII-class kernel the mask branch emitted for the Unicode one,
-        # and give lower/initcap the reference's simple (locale) mapping
-        # for U+0130 İ (Java/ICU produce i + combining dot instead)
-        _k = 0
-        while _k < len(toks):
-            _t = toks[_k]
-            if _t.kind != "word":
-                _k += 1
-                continue
-            if _t.text == "maskchars":
-                toks[_k] = Tok("word", "maskchars_u")
-            elif _t.text in ("mask_first_n6", "mask_last_n6",
-                             "mask_show_first_n6", "mask_show_last_n6"):
-                toks[_k] = Tok("word", _t.text + "_u")
-            elif _t.text.lower() in ("lower", "lcase", "initcap"):
-                _fn = "initcap" if _t.text.lower() == "initcap" else "lower"
-                _j = _next_code(toks, _k + 1)
-                if _j < len(toks) and toks[_j].text == "(":
-                    _close = _matching_paren(toks, _j)
-                    _first = _next_code(toks, _j + 1)
-                    already = (
-                        _first < _close
-                        and toks[_first].text == "translate"
-                        and any(
-                            toks[_q].kind == "str" and "İ" in toks[_q].text
-                            for _q in range(_first, _close)
-                        )
-                    )
-                    if not already:
-                        toks[_k] = Tok("word", f"{_fn}(translate")
-                        toks.insert(_close, Tok("word", ", 'İ', 'I')"))
-            _k += 1
+    if utf8:
+        toks = _rewrite_utf8_case_mapping(toks)
     if options and options.get("appx_count_distinct"):
         toks = _rewrite_count_distinct_to_ndv(toks)
     # AFTER the div-by-zero and function-kernel passes (their IEEE-special
@@ -5109,7 +5006,7 @@ _ROW_FORMAT_RE = re.compile(
 _CACHED_RE = re.compile(r"\b(?:CACHED\s+IN\s+'[^']*'(?:\s+WITH\s+REPLICATION\s*=\s*\d+)?|UNCACHED)\b", re.I)
 
 
-def _rewrite_create_table_ddl(sql: str) -> str:
+def _rewrite_create_table_ddl(toks: list[Tok]) -> list[Tok]:
     """Impala CREATE TABLE storage clauses → Spark data-source DDL
     (SURVEY §3 entry point C; reference grammar sql-parser.cup
     create_tbl_stmt, HdfsFileFormat.java): ``CREATE EXTERNAL TABLE`` drops
@@ -5119,14 +5016,18 @@ def _rewrite_create_table_ddl(sql: str) -> str:
     ``ROW FORMAT DELIMITED ...`` folds into csv OPTIONS. Text tables keep
     the reference's default ctrl-A field separator. Statements without any
     of these clauses pass through untouched (Spark-native DDL stays
-    Spark-native)."""
+    Spark-native).  The clauses are matched on the statement's text."""
+    k = _next_code(toks, 0)
+    if k >= len(toks) or toks[k].upper != "CREATE":
+        return toks
+    sql = untokenize(toks)
     head = _CREATE_TABLE_HEAD_RE.match(sql)
     if not head:
-        return sql
+        return toks
     m_stored = _STORED_AS_RE.search(sql)
     m_rowfmt = _ROW_FORMAT_RE.search(sql)
     if not (head.group(2) or m_stored or m_rowfmt):
-        return sql
+        return toks
     fmt = (m_stored.group(1).lower() if m_stored else "textfile")
     if fmt in ("sequencefile", "rcfile", "kudu", "iceberg"):
         # Python-DataSource formats (rcfile) can't back catalog-table DDL;
@@ -5192,7 +5093,7 @@ def _rewrite_create_table_ddl(sql: str) -> str:
     out = body[:i] + using + body[i:]
     if head.group(2):
         out = _CREATE_TABLE_HEAD_RE.sub(r"\1\3", out, count=1)
-    return out
+    return tokenize(out)
 
 
 def _rewrite_null_lhs_not_in(toks: list[Tok]) -> list[Tok]:
@@ -5689,7 +5590,6 @@ def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:
     semantics."""
     if not _has_unnest(toks):
         return toks
-    toks = _real_tokens(toks)
     while True:
         # a block whose select list has top-level unnest() calls;
         # re-parse after each rewrite because indices shift
@@ -5731,7 +5631,7 @@ def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:
         # clause keyword or the block's end
         b = _query_blocks(toks).at(s)
         end = b.clause_end(b.clauses["FROM"])
-        toks[end:end] = [Tok("word", lateral)]
+        _splice(toks, end, end, lateral)
 
 
 def _unnest_calls(
@@ -5931,6 +5831,50 @@ def _distinct_from(toks: list[Tok], i: int) -> bool:
     return q >= 0 and toks[q].upper in ("IS", "NOT")
 
 
+def _lateral_view_end(toks: list[Tok], i: int) -> int | None:
+    """The last token of the ``LATERAL VIEW [OUTER] gen(…) tbl [[AS] c1
+    [, c2 …]]`` tail whose LATERAL is token i (Spark's lateralView
+    grammar), None when token i opens no such tail."""
+    if toks[i].kind != "word" or toks[i].upper != "LATERAL":
+        return None
+    k = _next_code(toks, i + 1)
+    if k >= len(toks) or toks[k].upper != "VIEW":
+        return None
+    k = _next_code(toks, k + 1)
+    if k < len(toks) and toks[k].upper == "OUTER":
+        k = _next_code(toks, k + 1)
+    while k < len(toks) and toks[k].kind in ("word", "bquote"):
+        k = _next_code(toks, k + 1)  # the generator's (qualified) name
+        if k >= len(toks) or toks[k].text != ".":
+            break
+        k = _next_code(toks, k + 1)
+    if k >= len(toks) or toks[k].text != "(":
+        return None
+    try:
+        end = _matching_paren(toks, k)
+    except ValueError:
+        return None
+
+    def name(k: int) -> bool:
+        return (
+            k < len(toks) and toks[k].kind in ("word", "bquote")
+            and toks[k].upper != "AS"
+            and toks[k].upper not in _FROM_TAIL_WORDS
+        )
+
+    k = _next_code(toks, end + 1)
+    if name(k):  # the table alias
+        end, k = k, _next_code(toks, k + 1)
+    if k < len(toks) and toks[k].upper == "AS":
+        k = _next_code(toks, k + 1)
+    while name(k):  # the column aliases
+        end, k = k, _next_code(toks, k + 1)
+        if k >= len(toks) or toks[k].text != ",":
+            break
+        k = _next_code(toks, k + 1)
+    return end
+
+
 def _from_items(
     toks: list[Tok], qb: QueryBlocks | None = None
 ) -> list[FromItem]:
@@ -5938,13 +5882,18 @@ def _from_items(
     An item starts after a query block's FROM clause keyword (see
     _query_blocks; ``qb`` is its parse of ``toks`` when the caller has
     one), after a comma of that FROM clause, or after JOIN.  A table
-    function (``range(3)``) is a one-segment path followed by "("."""
+    function (``range(3)``) is a one-segment path followed by "(".  A
+    LATERAL VIEW tail belongs to the item before it: its commas open no
+    item."""
     qb = qb or _query_blocks(toks)
     froms = {b.clauses["FROM"] for b in qb.blocks if "FROM" in b.clauses}
     items: list[FromItem] = []
     i = 0
     while i < len(toks):
         t = toks[i]
+        if (lv_end := _lateral_view_end(toks, i)) is not None:
+            i = lv_end + 1
+            continue
         if i in froms:
             clause = i
         elif t.text == "," or t.kind == "word" and t.upper == "JOIN":
@@ -6015,6 +5964,27 @@ def _from_clause_end(toks: list[Tok], qb: QueryBlocks, it: FromItem) -> int:
     return _matching_paren(toks, it.block) if it.block >= 0 else len(toks)
 
 
+def _join_condition_end(
+    toks: list[Tok], qb: QueryBlocks, items: list[FromItem], it: FromItem
+) -> int:
+    """The token that ends the ON condition of join item ``it``: the
+    next item's comma or join operator, a LATERAL VIEW tail at the
+    item's level, or the end of the clause."""
+    nxt = next((
+        x for x in items if x.trigger > it.stop
+        and x.clause == it.clause and x.block == it.block
+    ), None)
+    end = (
+        _from_clause_end(toks, qb, it) if nxt is None
+        else nxt.trigger if toks[nxt.trigger].text == ","
+        else _join_operator(toks, nxt.trigger)[0]
+    )
+    return next((
+        k for k in range(it.stop + 1, end)
+        if qb.opens[k] == it.block and _lateral_view_end(toks, k) is not None
+    ), end)
+
+
 def _join_operator(toks: list[Tok], j: int) -> tuple[int, set[str]]:
     """The first token of the join operator whose JOIN is token j, and
     the modifier words (_JOIN_MODIFIERS) before that JOIN."""
@@ -6075,7 +6045,6 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
         min-cost subquery reuses s/ps)."""
         return [(x.alias.lower(), qb.span(x.start)) for x in items if x.alias]
 
-    toks = _real_tokens(toks)
     qb = _query_blocks(toks)
     items = _from_items(toks, qb)
     resume = 0  # the items triggered before it are done
@@ -6131,17 +6100,7 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 oi < len(toks) and toks[oi].kind == "word"
                 and toks[oi].upper == "ON"
             ):
-                # the condition runs to the next item of the clause (its
-                # join operator included) or the clause's end
-                nxt = next((
-                    x for x in items if x.trigger > end
-                    and x.clause == it.clause and x.block == it.block
-                ), None)
-                pe = (
-                    _from_clause_end(toks, qb, it) if nxt is None
-                    else nxt.trigger if toks[nxt.trigger].text == ","
-                    else _join_operator(toks, nxt.trigger)[0]
-                )
+                pe = _join_condition_end(toks, qb, items, it)
                 on_pred = untokenize(toks[oi + 1 : pe]).strip()
                 end = pe - 1
             i = del_start  # the splice consumes the join modifiers too
@@ -6239,19 +6198,19 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 f"{arr}[cardinality({arr}) + 1])), {matched}), "
                 f"{unmatched}))"
             )
-            n_del = end + 1 - del_start
-            toks[del_start:end + 1] = [Tok(
-                "synth",
-                f" LATERAL VIEW explode({rows_sql}) _cjf_{alias} "
-                f"AS {ec} ",
+            edits = [(
+                del_start, end + 1,
+                f" LATERAL VIEW explode({rows_sql}) _cjf_{alias} AS {ec} ",
             )]
-            blk1 += 1 - n_del
-            # rewrite refs: alias[.item|.f] -> tagged element; parent
-            # root.y -> NULL-guarded
+            # rewrite refs outside the item: alias[.item|.f] -> tagged
+            # element; parent root.y -> NULL-guarded
             m2 = blk0
-            while m2 < min(blk1, len(toks)):
+            while m2 < blk1:
                 tk = toks[m2]
-                if tk.kind not in ("word",):
+                if del_start <= m2 <= end:
+                    m2 = end + 1
+                    continue
+                if tk.kind != "word":
                     m2 += 1
                     continue
                 p2 = _prev_code(toks, m2 - 1)
@@ -6272,17 +6231,13 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                                 f"{ec}.__v" if f2.lower() == "item"
                                 else f"{ec}.__v.{f2}"
                             )
-                            toks[m2:w2 + 1] = [Tok("synth", repl)]
-                            blk1 += 1 - (w2 + 1 - m2)
-                            m2 += 1
+                            edits.append((m2, w2 + 1, repl))
+                            m2 = w2 + 1
                             continue
-                    else:
-                        nxt2 = d2
-                        if not (nxt2 < len(toks)
-                                and toks[nxt2].text == "("):
-                            toks[m2] = Tok("synth", f"{ec}.__v")
-                            m2 += 1
-                            continue
+                    elif not (d2 < len(toks) and toks[d2].text == "("):
+                        edits.append((m2, m2 + 1, f"{ec}.__v"))
+                        m2 += 1
+                        continue
                 elif low2 == root_al and has_dot:
                     w2 = _next_code(toks, d2 + 1)
                     if w2 < len(toks) and toks[w2].kind in (
@@ -6304,11 +6259,12 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                         repl2 = f"IF({ec}.__m, {path[0]}.{y2}, NULL)"
                         if bare_item:
                             repl2 += f" AS {y2}"
-                        toks[m2:w2 + 1] = [Tok("synth", repl2)]
-                        blk1 += 1 - (w2 + 1 - m2)
-                        m2 += 1
+                        edits.append((m2, w2 + 1, repl2))
+                        m2 = w2 + 1
                         continue
                 m2 += 1
+            for lo, hi, text in sorted(edits, reverse=True):
+                _splice(toks, lo, hi, text)
             qb = _query_blocks(toks)
             items, resume = _from_items(toks, qb), del_start
             continue
@@ -6337,11 +6293,10 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
             ins2 = _from_clause_end(toks, qb, it) - n_del
             del toks[del_start : end + 1]
             if where_at >= 0:
-                toks[where_at - n_del + 1 : where_at - n_del + 1] = [
-                    Tok("synth", f"{pred_txt} AND ")
-                ]
+                at = where_at - n_del + 1
+                _splice(toks, at, at, f"{pred_txt} AND ")
             else:
-                toks[ins2:ins2] = [Tok("synth", f" WHERE {pred_txt} ")]
+                _splice(toks, ins2, ins2, f" WHERE {pred_txt} ")
             qb = _query_blocks(toks)
             items, resume = _from_items(toks, qb), del_start
             continue
@@ -6465,39 +6420,46 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                 f" LATERAL VIEW {gfn}({dotted}) _cj_{alias} "
                 f"AS {alias} "
             )
-        # Spark's grammar puts lateral views AFTER all join relations:
-        # splice at the clause end — identical to in-place when this is
-        # the last item, and loop order keeps chained LVs (an LV whose
-        # explode target references an earlier _cj_ column) correctly
-        # sequenced when relations follow.  An empty placeholder keeps
-        # token i inside the item's block for the scope lookups below.
-        # kind "synth": code for untokenize, but invisible to every
-        # word-shaped scan — the NEXT item's alias parse must not swallow
-        # the spliced LV text as its alias
-        ins = _from_clause_end(toks, qb, it) - (end - i)
-        toks[i : end + 1] = [Tok("synth", "")]
-        toks[ins:ins] = [Tok("synth", hop_sql + lateral)]
-        # indices shifted: re-parse for the ref rewrites and the next item
-        qb = _query_blocks(toks)
-        items, resume = _from_items(toks, qb), i + 1
-        item_blk = qb.span(i)
-        binds = _binds(items, qb)
+        # rewrite the refs outside the item (its tokens i..end go) as
+        # edits of the token list as it stands, then apply them back to
+        # front with the item's removal and its lateral view.  Spark's
+        # grammar puts lateral views AFTER all join relations: splice at
+        # the clause end — identical to in-place when this is the last
+        # item, and loop order keeps chained LVs (an LV whose explode
+        # target references an earlier _cj_ column) correctly sequenced
+        # when relations follow.
+        ins = _from_clause_end(toks, qb, it)
+        edits = [(i, end + 1, ""), (ins, ins, hop_sql + lateral)]
         # a ref that IS the root of a later FROM item must survive for
         # that item's own chained rewrite (registry-resolved)
         item_roots = {x.start for x in items if toks[x.trigger].text == ","}
+
+        def _ref(m: int) -> bool:
+            """Word m is a reference outside the item to rewrite."""
+            return not i <= m <= end and toks[m].kind == "word"
+
+        def _bare_select_item(m: int, p: int, d: int) -> bool:
+            """The ref spanning tokens m..d-1 (p the code token before,
+            d the one after) is a whole select item: alias it so the
+            output column keeps its reference name."""
+            return (
+                qb.clause_is(m, "SELECT")
+                and (p < 0 or toks[p].text == ","
+                     or toks[p].upper in ("SELECT", "DISTINCT"))
+                and (d >= len(toks) or toks[d].text == ","
+                     or toks[d].upper == "FROM")
+            )
 
         if is_map:
             cj_maps[alias.lower()] = (
                 f"_cj_{alias}.{alias}__key",
                 f"_cj_{alias}.{alias}__value",
             )
-            m = 0
-            while m < len(toks) - 2:
-                a = toks[m]
+            for m in range(len(toks) - 2):
                 p = _prev_code(toks, m - 1)
                 if (
-                    a.kind == "word"
-                    and a.text.lower() == alias.lower()
+                    _ref(m)
+                    and toks[m].text.lower() == alias.lower()
                     and (p < 0 or toks[p].text != ".")
                     and m not in item_roots
                     and _owns(alias_low0, item_blk, m, binds)
@@ -6508,135 +6470,85 @@ def _rewrite_collection_join(toks: list[Tok]) -> list[Tok]:
                         if w < len(toks) and toks[w].kind == "word" and \
                                 toks[w].text.lower() in ("key", "value"):
                             suf = toks[w].text.lower()
-                            toks[m] = Tok(
-                                "word", f"_cj_{alias}.{alias}__{suf}"
+                            edits.append(
+                                (m, w + 1, f"_cj_{alias}.{alias}__{suf}")
                             )
-                            toks[d] = Tok("op", "")
-                            toks[w] = Tok("word", "")
-                m += 1
-            if bare_map_refs:
-                m = 0
-                while m < len(toks):
-                    tk = toks[m]
-                    if (
-                        tk.kind == "word"
-                        and tk.text.lower() in bare_map_refs
-                        and item_blk[0] <= m < item_blk[1]
+            for m in range(*item_blk):
+                if _ref(m) and toks[m].text.lower() in bare_map_refs:
+                    p = _prev_code(toks, m - 1)
+                    d = _next_code(toks, m + 1)
+                    if (p < 0 or toks[p].text != ".") and (
+                        d >= len(toks)
+                        or toks[d].text not in (".", "(")
                     ):
-                        p = _prev_code(toks, m - 1)
-                        d = _next_code(toks, m + 1)
-                        if (p < 0 or toks[p].text != ".") and (
-                            d >= len(toks)
-                            or toks[d].text not in (".", "(")
-                        ):
-                            suf = tk.text.lower()
-                            repl_sql = f"_cj_{alias}.{alias}__{suf}"
-                            # alias bare WHOLE select items so the output
-                            # column keeps its reference name
-                            if (
-                                qb.clause_is(m, "SELECT")
-                                and (p < 0 or toks[p].text == ","
-                                     or toks[p].upper
-                                     in ("SELECT", "DISTINCT"))
-                                and (d >= len(toks) or toks[d].text == ","
-                                     or toks[d].upper == "FROM")
-                            ):
-                                repl_sql += f" AS {suf}"
-                            toks[m] = Tok("word", repl_sql)
-                    m += 1
-            continue
-        cj_elems[alias.lower()] = (
-            f"_cj_{alias}.{alias}" if suffixes else f"_cj_{alias}.col"
-        )
+                        suf = toks[m].text.lower()
+                        repl_sql = f"_cj_{alias}.{alias}__{suf}"
+                        if _bare_select_item(m, p, d):
+                            repl_sql += f" AS {suf}"
+                        edits.append((m, m + 1, repl_sql))
+        else:
+            cj_elems[alias.lower()] = (
+                f"_cj_{alias}.{alias}" if suffixes else f"_cj_{alias}.col"
+            )
         # rewrite the collection refs, fully qualified through the lateral
         # view alias so a no-alias join (`FROM t, t.arr` → exploded column
         # also named `arr`) cannot be ambiguous against the source column:
         #   alias.item  → _cj_alias.alias
         #   alias.pos   → _cj_alias.alias__pos
         #   alias.field → _cj_alias.alias.field   (struct elements)
-        if bare_refs:
+        if not is_map and bare_refs:
             # bare item/pos bind to this collection (no alias, no
             # qualified refs anywhere)
-            m = 0
-            while m < len(toks):
-                tk = toks[m]
-                if (
-                    tk.kind == "word"
-                    and tk.text.lower() in bare_refs
-                    and item_blk[0] <= m < item_blk[1]
-                ):
+            for m in range(*item_blk):
+                if _ref(m) and toks[m].text.lower() in bare_refs:
                     p = _prev_code(toks, m - 1)
                     d = _next_code(toks, m + 1)
                     if (p < 0 or toks[p].text != ".") and (
                         d >= len(toks) or toks[d].text not in (".", "(")
                     ):
-                        if tk.text.lower() == "item":
-                            toks[m] = Tok("word", f"_cj_{alias}.{alias}")
+                        if toks[m].text.lower() == "item":
+                            repl_sql = f"_cj_{alias}.{alias}"
                         else:
                             repl_sql = (
                                 f"CAST(_cj_{alias}.{alias}__pos AS BIGINT)"
                             )
-                            if (
-                                qb.clause_is(m, "SELECT")
-                                and (p < 0 or toks[p].text == ","
-                                     or toks[p].upper
-                                     in ("SELECT", "DISTINCT"))
-                                and (d >= len(toks) or toks[d].text == ","
-                                     or toks[d].upper == "FROM")
-                            ):
+                            if _bare_select_item(m, p, d):
                                 repl_sql += " AS pos"
-                            toks[m] = Tok("word", repl_sql)
-                m += 1
-            continue
-        m = 0
-        while m < len(toks) - 2:
-            a = toks[m]
-            p = _prev_code(toks, m - 1)
-            if (
-                a.kind == "word"
-                and a.text.lower() == alias.lower()
-                and (p < 0 or toks[p].text != ".")
-                and m not in item_roots
-                and _owns(alias_low0, item_blk, m, binds)
-            ):
+                        edits.append((m, m + 1, repl_sql))
+        elif not is_map:
+            for m in range(len(toks) - 2):
+                p = _prev_code(toks, m - 1)
+                if not (
+                    _ref(m)
+                    and toks[m].text.lower() == alias.lower()
+                    and (p < 0 or toks[p].text != ".")
+                    and m not in item_roots
+                    and _owns(alias_low0, item_blk, m, binds)
+                ):
+                    continue
                 d = _next_code(toks, m + 1)
-                if d < len(toks) and toks[d].text == ".":
-                    w = _next_code(toks, d + 1)
-                    if w < len(toks) and toks[w].kind == "word":
-                        if toks[w].text.lower() == "item":
-                            toks[m] = Tok("word", f"_cj_{alias}.{alias}")
-                            toks[d] = Tok("op", "")
-                            toks[w] = Tok("word", "")
-                        elif toks[w].text.lower() == "pos":
-                            # BIGINT like the reference's pos item type;
-                            # alias bare select items so the output
-                            # column keeps the name `pos`
-                            repl_sql = (
-                                f"CAST(_cj_{alias}.{alias}__pos AS BIGINT)"
-                            )
-                            nxt2 = _next_code(toks, w + 1)
-                            prv2 = _prev_code(toks, m - 1)
-                            if (
-                                qb.clause_is(m, "SELECT")
-                                and (
-                                    prv2 < 0
-                                    or toks[prv2].text == ","
-                                    or toks[prv2].upper
-                                    in ("SELECT", "DISTINCT")
-                                )
-                                and (
-                                    nxt2 >= len(toks)
-                                    or toks[nxt2].text == ","
-                                    or toks[nxt2].upper == "FROM"
-                                )
-                            ):
-                                repl_sql += " AS pos"
-                            toks[m] = Tok("word", repl_sql)
-                            toks[d] = Tok("op", "")
-                            toks[w] = Tok("word", "")
-                        else:
-                            toks[m] = Tok("word", f"_cj_{alias}.{alias}")
-            m += 1
+                if d >= len(toks) or toks[d].text != ".":
+                    continue
+                w = _next_code(toks, d + 1)
+                if w >= len(toks) or toks[w].kind != "word":
+                    continue
+                if toks[w].text.lower() == "item":
+                    edits.append((m, w + 1, f"_cj_{alias}.{alias}"))
+                elif toks[w].text.lower() == "pos":
+                    # BIGINT like the reference's pos item type;
+                    # alias bare select items so the output
+                    # column keeps the name `pos`
+                    repl_sql = f"CAST(_cj_{alias}.{alias}__pos AS BIGINT)"
+                    if _bare_select_item(m, p, _next_code(toks, w + 1)):
+                        repl_sql += " AS pos"
+                    edits.append((m, w + 1, repl_sql))
+                else:
+                    edits.append((m, m + 1, f"_cj_{alias}.{alias}"))
+        for lo, hi, text in sorted(edits, reverse=True):
+            _splice(toks, lo, hi, text)
+        # indices shifted: re-parse for the next item
+        qb = _query_blocks(toks)
+        items, resume = _from_items(toks, qb), i
 
 
 _BOOL_INDICATOR_OPS = {"=", "<", ">", "<=", ">=", "!=", "<>", "<=>"}
@@ -6913,7 +6825,7 @@ def _rewrite_postfix_factorial(toks: list[Tok]) -> list[Tok]:
         # precedence"): include it in the operand when it is UNARY (start
         # of expression / after an operator, '(' or ',')
         m = _prev_code(toks, start - 1)
-        if m >= 0 and toks[m].text.strip() == "-":
+        if m >= 0 and toks[m].text == "-":
             before = _prev_code(toks, m - 1)
             if (
                 before < 0
@@ -7183,16 +7095,15 @@ def _wrap_char_comparison(toks: list[Tok], i: int, close: int) -> int | None:
         if end is not None:
             # insertions are past `close`; no shift for the cast span
             toks.insert(end, Tok("op", ")"))
-            toks.insert(start, Tok("word", "rtrim("))
+            _splice(toks, start, start, "rtrim(")
         return 0
     prev = _prev_code(toks, i - 1)
     if prev >= 0 and toks[prev].kind == "op" and toks[prev].text in _COMPARISON_OPS:
         opnd_end = _prev_code(toks, prev - 1)
         opnd_start = _simple_term_back(toks, opnd_end)
         if opnd_start is not None:
-            # both insertions land BEFORE the cast span: shift by 2
+            # both insertions land BEFORE the cast span
             toks.insert(opnd_end + 1, Tok("op", ")"))
-            toks.insert(opnd_start, Tok("word", "rtrim("))
-            return 2
+            return 1 + _splice(toks, opnd_start, opnd_start, "rtrim(")
         return 0
     return None

@@ -303,19 +303,18 @@ class Engine(AlterTableMixin):
         """Spark SQL for a query or view body: the three schema-aware
         engine rewrites edit one token list in place, each handing on the
         statement's FROM items (re-parsed only after an edit), then the
-        dialect translator runs, typed from the relations the statement
-        reads.  Starts the statement's relation memo."""
+        dialect translator takes that list, typed from the relations the
+        statement reads.  Starts the statement's relation memo."""
         self._relations = {}
         toks = tokenize(impala_sql)
         items = _from_items(toks)
         items = self._qualify_collection_fields(toks, items)
         items = self._rewrite_table_path_scans(toks, items)
         items = self._rewrite_subplan_derived_tables(toks, items)
-        sql = untokenize(toks)
         return translate(
-            sql,
+            toks,
             options=self.options,
-            column_types=self._schema_columns_for(sql, toks, items),
+            column_types=self._schema_columns_for(toks, items),
         )
 
     def _relation(self, name: str) -> DataFrame | None:
@@ -932,9 +931,7 @@ class Engine(AlterTableMixin):
             )
             toks[o : close + 1] = repl
             if enclose_lateral is not None:
-                toks[enclose_lateral:enclose_lateral] = [
-                    Tok("synth", " LATERAL ")
-                ]
+                toks[enclose_lateral:enclose_lateral] = tokenize(" LATERAL ")
             items = _from_items(toks)
             # re-scan from the replacement start: sibling subqueries
             # inside the rewritten block may also need the rewrite; the
@@ -2157,7 +2154,7 @@ class Engine(AlterTableMixin):
         )
 
     def _schema_columns_for(
-        self, impala_sql: str, toks: list[Tok], items: list[FromItem]
+        self, toks: list[Tok], items: list[FromItem]
     ) -> dict[str, str] | None:
         """Column knowledge for the translator's type dispatches, taken
         from the relations the statement reads (catalog FROM/JOIN items at
@@ -2167,8 +2164,9 @@ class Engine(AlterTableMixin):
         MIXED types across those relations is left out (ambiguous, like
         the analyzer's unresolved-column path), except that FLOAT mixed
         with DOUBLE, or FLOAT alone, maps to DOUBLE.  Only computed when
-        the statement can need it.  ``toks``/``items`` are
-        ``impala_sql``'s tokens and FROM items."""
+        the statement can need it.  ``toks``/``items`` are the
+        statement's tokens and FROM items."""
+        impala_sql = untokenize(toks)
         up = impala_sql.upper()
         need = (
             "||" in impala_sql

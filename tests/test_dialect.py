@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from hopspark.dialect import translate
 
 
@@ -1290,4 +1292,58 @@ def test_impala_builtins_namespace_is_stripped(spark, sf_dir):
     eng = Engine(spark=spark, sf_dir=sf_dir)
     assert eng.sql("select _impala_builtins.upper('hello!') v").head().v == (
         "HELLO!"
+    )
+
+
+def test_lateral_view_column_list_opens_no_from_item():
+    """The column list of a ``LATERAL VIEW … AS c1, c2`` belongs to the
+    lateral view: its comma opens no FROM item."""
+    from hopspark.dialect.translate import _from_items, tokenize
+
+    toks = tokenize(
+        "select x from t LATERAL VIEW posexplode(arrays_zip(t.z)) _unnest"
+        " AS pos, _z"
+    )
+    assert [it.segs for it in _from_items(toks)] == [["t"]]
+
+
+def test_join_condition_ends_at_a_lateral_view(spark):
+    """A JOIN … ON collection join before a comma UNNEST ends its ON
+    condition at the UNNEST's lateral view: Spark parses the result."""
+    spark.sql(
+        "SELECT 1 AS x, array(named_struct('y', 1)) AS arr, array(2) AS z"
+    ).createOrReplaceTempView("lv_t")
+    out = translate(
+        "select a.x from lv_t a left join a.arr b on b.y > 0, unnest(a.z)"
+    )
+    spark.sql(f"EXPLAIN {out}").collect()  # parses and analyzes
+
+
+@pytest.fixture(scope="module")
+def eng(spark, sf_dir):
+    from hopspark.engine import Engine
+
+    return Engine(spark=spark, sf_dir=sf_dir)
+
+
+def _one(eng, sql):
+    return eng.sql(sql).head()[0]
+
+
+def test_ceil_floor_of_double_casts_to_string_as_a_double(eng):
+    """ceil/floor over DOUBLE is DOUBLE before the DOUBLE→STRING cast
+    pass reads it, so it renders like the plain ``CAST(… AS DOUBLE)``."""
+    assert _one(eng, "select cast(ceil(cast(2.5 as double)) as string)") == (
+        _one(eng, "select cast(cast(3 as double) as string)")
+    )
+    assert _one(eng, "select cast(floor(cast(2.5 as double)) as string)") == (
+        _one(eng, "select cast(cast(2 as double) as string)")
+    )
+
+
+def test_ceil_of_double_plus_decimal_is_typed_as_a_double(eng):
+    """ceil over DOUBLE is DOUBLE before the DECIMAL promotion pass reads
+    it: ``ceil(…) + 1.5`` types like ``CAST(… AS DOUBLE) + 1.5``."""
+    assert _one(eng, "select typeof(ceil(cast(2.5 as double)) + 1.5)") == (
+        _one(eng, "select typeof(cast(3 as double) + 1.5)")
     )

@@ -5,7 +5,13 @@ so rewrites must be stable under re-application)."""
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import importlib
+import inspect
+import os
 import re
+from unittest import mock
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -15,6 +21,7 @@ from hopspark.dialect.translate import (
     _CONSTANT_SOURCE, _from_items, _prev_code, _query_blocks, tokenize,
     untokenize,
 )
+from hopspark.golden import parse_test_file
 
 # Identifiers that never collide with rewrite triggers.
 _IDENT = st.text(alphabet="abcxyz_", min_size=1, max_size=8).filter(
@@ -454,3 +461,96 @@ def test_block_parse_nests_and_owns_from_items(stmt):
         )
         if in_call or toks[_prev_code(toks, i - 1)].upper == "DISTINCT":
             assert i not in owned, sql
+
+
+# --- one token list: every pass emits real tokens -----------------------
+
+_T = importlib.import_module("hopspark.dialect.translate")
+#: the passes translate() runs, in its order
+_PASSES = re.findall(r"toks = (_\w+)\(toks", inspect.getsource(translate))
+_GOLDEN_QUERIES = [
+    case.query
+    for path in sorted(glob.glob(os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "golden", "*.test"
+    )))
+    for case in parse_test_file(path)
+]
+_OPTIONS = (None, {"utf8_mode": True}, {"appx_count_distinct": True})
+
+
+@contextlib.contextmanager
+def _pass_outputs_checked():
+    """Wrap every translator pass; yields the list of (pass, token) for
+    each returned token that is not exactly one lexical token."""
+    bad: list[tuple[str, object]] = []
+    real: dict[tuple[str, str], bool] = {}  # (kind, text) -> one token
+
+    def checked(name, fn):
+        def run(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            for t in out:
+                key = (t.kind, t.text)
+                if key not in real:
+                    real[key] = tokenize(t.text) == [t]
+                if not real[key]:
+                    bad.append((name, t))
+            return out
+        return run
+
+    with contextlib.ExitStack() as stack:
+        for name in set(_PASSES):
+            stack.enter_context(mock.patch.object(
+                _T, name, checked(name, getattr(_T, name))
+            ))
+        yield bad
+
+
+def _translated(sql, options):
+    try:
+        return translate(sql, options=options)
+    except Exception as exc:  # noqa: BLE001 - compared, not hidden
+        return f"{type(exc).__name__}: {exc}"
+
+
+def _assert_one_token_list(statements) -> None:
+    with _pass_outputs_checked() as bad:
+        for sql in statements:
+            for options in _OPTIONS:
+                out = _translated(sql, options)
+                assert not bad, (sql, options, bad[:3])
+                assert _translated(tokenize(sql), options) == out, (
+                    sql, options,
+                )
+
+
+def test_passes_cover_the_translator():
+    assert len(_PASSES) > 30 and "_rewrite_functions" in _PASSES
+
+
+_DIALECT_TERMS = [
+    "aggif(x = 1, y)", "isnull(a, b)", "zeroifnull(c)", "histogram(c)",
+    "date_add(d, INTERVAL 3 days)", "distinctfrom(a, b)", "lower(s)",
+    "ds_kll_quantile(ds_kll_sketch(x), 0.5)", "count(distinct x)",
+    "ds_kll_rank(ds_kll_sketch(x), 3)", "precision(CAST(x AS DECIMAL))",
+    "ceil(CAST(x AS DOUBLE))", "sum(CAST(x AS DECIMAL(5,2)))",
+    "avg(CAST(x AS TIMESTAMP))", "x / 0", "s IREGEXP 'a.*'",
+    "regexp_like(s, 'a', 'i')", "mask(s)", "dayname(d)",
+]
+
+
+@given(stmt=_statement(), terms=st.lists(
+    st.sampled_from(_DIALECT_TERMS), min_size=0, max_size=3,
+))
+@settings(max_examples=100, deadline=None)
+def test_every_pass_emits_real_tokens(stmt, terms):
+    """Each token a translator pass returns is exactly one lexical token,
+    and translating a statement's token list gives what translating its
+    text gives."""
+    sql = stmt[0]
+    if terms:
+        sql = f"SELECT {', '.join(terms)} FROM t q ORDER BY 1 UNION ALL {sql}"
+    _assert_one_token_list([sql])
+
+
+def test_every_pass_emits_real_tokens_on_the_golden_corpus():
+    _assert_one_token_list(_GOLDEN_QUERIES)

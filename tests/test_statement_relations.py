@@ -78,8 +78,8 @@ def test_from_less_statement_makes_one_spark_sql_call(spark, monkeypatch):
 def test_statement_is_tokenized_once_by_engine_and_translator(
     eng, monkeypatch
 ):
-    """The engine rewrites share one token list; translate() tokenizes
-    the rewritten text once more."""
+    """The engine rewrites share one token list, and translate() takes
+    that list: the statement is tokenized once."""
     import sys
 
     import hopspark.engine as engine_mod
@@ -98,7 +98,7 @@ def test_statement_is_tokenized_once_by_engine_and_translator(
         "SELECT n.n_name FROM nation n WHERE n.n_nationkey + 1 > 3"
     ).collect()
     assert rows
-    assert len(calls) == 2, calls
+    assert len(calls) == 1, calls
 
 
 def test_replaced_view_is_seen_by_the_next_statement(eng, spark):

@@ -818,3 +818,20 @@ def test_map_root_correlated_ref_wrapped(spark):
         " (select key, value from t.m.value) v order by vv"
     ).collect()
     assert [(r.id, r.vv) for r in rows] == [(7, 10), (7, 20)]
+
+
+def test_rootless_scan_looks_up_only_its_table(eng, monkeypatch):
+    """The rootless scan's LATERAL VIEW column list (``AS __tpp1,
+    __tpe1``) names no relation: only the table is looked up."""
+    names = []
+    relation = Engine._relation
+
+    def counted(self, name):
+        names.append(name)
+        return relation(self, name)
+
+    monkeypatch.setattr(Engine, "_relation", counted)
+    assert _rows(
+        eng, "select item, pos from ctt.int_array order by pos, item"
+    ) == [(1, 0), (2, 1), (3, 2)]
+    assert names and set(names) == {"ctt"}

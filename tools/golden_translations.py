@@ -10,7 +10,7 @@ made it, the Impala-dialect input and the Spark SQL output (or the error
 the translation raised).  Each case also gets one line with the number of
 Spark jobs it launched, counted under its own job group.  Run it at two
 commits and compare the files to see which translations a change moved
-and how many jobs each side launched:
+and which cases launched a different number of jobs:
 
     python tools/golden_translations.py --out /tmp/a.jsonl   # commit A
     python tools/golden_translations.py --out /tmp/b.jsonl   # commit B
@@ -88,15 +88,16 @@ def record(out_path: str) -> None:
 
 
 def compare(old_path: str, new_path: str) -> int:
-    """Print how many recorded translations differ, and each side's
-    Spark-job total; 1 when any translation differs."""
-    def load(path: str) -> tuple[list[dict], int]:
+    """Print each recorded translation that differs, then each case
+    whose Spark-job count differs (marked with whether any of its
+    translations differs: job counts also move on identical
+    translations), and the totals; 1 when any translation differs."""
+    def load(path: str) -> tuple[list[dict], dict[tuple[str, int], int]]:
         with open(path) as f:
             rows = [json.loads(line) for line in f]
-        cases = [r for r in rows if "jobs" in r]
-        return [r for r in rows if "jobs" not in r], sum(
-            r["jobs"] for r in cases
-        )
+        return [r for r in rows if "jobs" not in r], {
+            (r["file"], r["case"]): r["jobs"] for r in rows if "jobs" in r
+        }
 
     (old, old_jobs), (new, new_jobs) = load(old_path), load(new_path)
     keys = ("file", "case", "input", "output", "error")
@@ -106,10 +107,22 @@ def compare(old_path: str, new_path: str) -> int:
     ]
     for a, b in differ:
         print(json.dumps({"old": a, "new": b}))
+    changed = {(r["file"], r["case"]) for pair in differ for r in pair}
+    moved = sorted(
+        case for case in old_jobs.keys() | new_jobs.keys()
+        if old_jobs.get(case) != new_jobs.get(case)
+    )
+    for case in moved:
+        print(json.dumps({
+            "file": case[0], "case": case[1],
+            "jobs": [old_jobs.get(case), new_jobs.get(case)],
+            "translation_differs": case in changed,
+        }))
     print(
         f"{min(len(old), len(new))} statements compared, {len(differ)} "
         f"differ; {len(old)} vs {len(new)} recorded; Spark jobs "
-        f"{old_jobs} vs {new_jobs}",
+        f"{sum(old_jobs.values())} vs {sum(new_jobs.values())}, "
+        f"{len(moved)} cases differ",
         file=sys.stderr,
     )
     return int(bool(differ) or len(old) != len(new))
