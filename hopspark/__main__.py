@@ -13,6 +13,25 @@ from __future__ import annotations
 import argparse
 import sys
 
+from hopspark.dialect.translate import _is_code, tokenize, untokenize
+
+
+def split_statements(script: str) -> list[str]:
+    """The statements of a script: the text between ``;`` operator
+    tokens, from its first code token on, so a ``;`` inside a literal, a
+    quoted identifier or a comment splits nothing.  A chunk with no code
+    token (whitespace and comments only) is no statement."""
+    out: list[str] = []
+    stmt: list = []
+    for t in tokenize(script) + tokenize(";"):
+        if t.kind == "op" and t.text == ";":
+            if stmt:
+                out.append(untokenize(stmt).strip())
+            stmt = []
+        elif stmt or _is_code(t):
+            stmt.append(t)
+    return out
+
 
 def _print_df(df, fmt: str, max_rows: int) -> None:
     if fmt == "tsv":
@@ -57,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     if args.file:
         with open(args.file) as f:
-            for stmt in f.read().split(";"):
+            for stmt in split_statements(f.read()):
                 run(stmt)
         return 0
 

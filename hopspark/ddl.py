@@ -90,62 +90,26 @@ def spark_type(impala_type: str) -> str:
     return {"real": "double"}.get(t, t)
 
 
-_ADD_COLS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+"
-    r"(IF\s+NOT\s+EXISTS\s+)?COLUMNS?\s*"
-    r"(IF\s+NOT\s+EXISTS\s+)?(\(.*\)|\w+\s+.+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_DROP_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(?:COLUMN\s+)?(\w+)\s*;?\s*$",
-    re.I,
-)
-_CHANGE_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+CHANGE\s+(?:COLUMN\s+)?"
-    r"(\w+)\s+(\w+)\s+(.+?)(?:\s+COMMENT\s+'((?:[^']|'')*)')?\s*;?\s*$",
-    re.I | re.S,
-)
-_REPLACE_COLS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+REPLACE\s+COLUMNS\s*(\(.*\))\s*;?\s*$",
-    re.I | re.S,
-)
-_RENAME_RE = re.compile(
-    r"^\s*ALTER\s+(?:TABLE|VIEW)\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)\s*;?\s*$",
-    re.I,
-)
-_SET_PROPS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+SET\s+TBLPROPERTIES\s*\((.*)\)\s*;?\s*$",
-    re.I | re.S,
-)
-_UNSET_PROPS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+UNSET\s+TBLPROPERTIES\s*"
-    r"(IF\s+EXISTS\s+)?\((.*)\)\s*;?\s*$",
-    re.I | re.S,
-)
-_SET_OWNER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+SET\s+OWNER\s+"
-    r"(USER|ROLE)\s+(\w+)\s*;?\s*$",
-    re.I,
-)
 _PROP_PAIR_RE = re.compile(r"'((?:[^']|'')*)'\s*=\s*'((?:[^']|'')*)'")
 
 
 class AlterTableMixin:
-    """engine.sql() dispatch + state for the ALTER TABLE / DESCRIBE surface.
+    """The statement handlers of the ALTER TABLE / DESCRIBE surface.
 
-    Mixed into Engine; uses self.spark and contributes `_tbl_props` /
-    `_col_comments` session-catalog metadata (the metastore-side state the
-    reference keeps in HMS)."""
+    Mixed into Engine; uses self.spark and the session-catalog stores that
+    Engine.__init__ creates: `_tbl_props` / `_col_comments` (the
+    metastore-side state the reference keeps in HMS), the stats caches and
+    the view definitions."""
 
     _tbl_props: dict[str, dict[str, str]]
     _col_comments: dict[str, dict[str, str]]
+    _stats: dict[str, dict]
+    _inc_stats: dict[str, dict]
+    _view_defs: dict[str, str]
 
     def _meta(self, attr: str, table: str) -> dict:
-        store = getattr(self, attr, None)
-        if store is None:
-            store = {}
-            setattr(self, attr, store)
-        return store.setdefault(table.lower(), {})
+        """Table ``table``'s entry in the session store ``attr``."""
+        return getattr(self, attr).setdefault(table.lower(), {})
 
     def _msg(self, text: str) -> DataFrame:
         return self.spark.createDataFrame([(text,)], "summary string")
@@ -154,110 +118,56 @@ class AlterTableMixin:
         df.createOrReplaceTempView(name)
         catalog.forget_registration(self.spark, name)
 
-    # -- dispatch ---------------------------------------------------------
+    # -- statement handlers (the ALTER TABLE / DESCRIBE / COMMENT /
+    #    TRUNCATE / LOAD entries of engine._STATEMENTS; each takes its
+    #    pattern's groups) ---------------------------------------------------
 
-    def try_alter_or_describe(self, sql: str) -> DataFrame | None:
-        """Handle ALTER TABLE / DESCRIBE; None when the statement is
-        neither (caller falls through to query translation)."""
-        m = _ADD_COLS_RE.match(sql)
-        if m:
-            table, ine1, ine2, body = m.groups()
-            return self._add_columns(
-                table, parse_col_defs(body), bool(ine1 or ine2)
-            )
-        m = _CHANGE_COL_RE.match(sql)
-        if m:
-            table, old, new, ctype, comment = m.groups()
-            return self._change_column(table, old, new, ctype, comment)
-        m = _REPLACE_COLS_RE.match(sql)
-        if m:
-            return self._replace_columns(m.group(1), parse_col_defs(m.group(2)))
-        m = _DROP_COL_RE.match(sql)
-        if m:
-            return self._drop_column(m.group(1), m.group(2))
-        m = _RENAME_RE.match(sql)
-        if m:
-            return self._rename(m.group(1), m.group(2))
-        m = _SET_PROPS_RE.match(sql)
-        if m:
-            props = self._meta("_tbl_props", m.group(1))
-            for k, v in _PROP_PAIR_RE.findall(m.group(2)):
-                props[k] = v
-            return self._msg("Updated table.")
-        m = _UNSET_PROPS_RE.match(sql)
-        if m:
-            table, if_exists, body = m.groups()
-            props = self._meta("_tbl_props", table)
-            for k in re.findall(r"'((?:[^']|'')*)'", body):
-                if k in props:
-                    del props[k]
-                elif not if_exists:
-                    raise ValueError(
-                        f"Table property '{k}' does not exist."
-                    )
-            return self._msg("Updated table.")
-        m = _SET_OWNER_RE.match(sql)
-        if m:
-            self._meta("_tbl_props", m.group(1))["owner"] = m.group(3)
-            return self._msg("Updated table.")
-        m = re.match(
-            r"^\s*DESCRIBE\s+(FORMATTED\s+|EXTENDED\s+)?([\w.]+)\s*;?\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            return self._describe(m.group(2), formatted=bool(m.group(1)))
-        m = re.match(
-            r"^\s*COMMENT\s+ON\s+TABLE\s+([\w.]+)\s+IS\s+"
-            r"(?:'((?:[^']|'')*)'|(NULL))\s*;?\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            # COMMENT ON TABLE (AlterTableOrViewSetTblProperties via the
-            # CommentOnTableStmt path) — stored as the HMS 'comment' prop
-            props = self._meta("_tbl_props", m.group(1))
-            if m.group(3):
-                props.pop("comment", None)
-            else:
-                props["comment"] = m.group(2)
-            return self._msg("Updated table.")
-        m = re.match(
-            r"^\s*COMMENT\s+ON\s+COLUMN\s+([\w.]+)\.(\w+)\s+IS\s+"
-            r"(?:'((?:[^']|'')*)'|(NULL))\s*;?\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            table, col, text, null = m.groups()
-            comments = self._meta("_col_comments", table)
-            if null:
-                comments.pop(col.lower(), None)
-            else:
-                comments[col.lower()] = text
-            return self._msg("Column has been altered.")
-        m = re.match(
-            r"^\s*TRUNCATE\s+(?:TABLE\s+)?(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            return self._truncate(m.group(2), bool(m.group(1)))
-        m = re.match(
-            r"^\s*LOAD\s+DATA\s+INPATH\s+'([^']+)'\s+(OVERWRITE\s+)?"
-            r"INTO\s+TABLE\s+([\w.]+)\s*"
-            r"(?:PARTITION\s*\(([^)]*)\))?\s*;?\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            return self._load_data(
-                m.group(1), bool(m.group(2)), m.group(3), m.group(4)
-            )
-        return None
+    def _set_tbl_props(self, table: str, body: str) -> DataFrame:
+        props = self._meta("_tbl_props", table)
+        for k, v in _PROP_PAIR_RE.findall(body):
+            props[k] = v
+        return self._msg("Updated table.")
+
+    def _unset_tbl_props(
+        self, table: str, if_exists: str | None, body: str
+    ) -> DataFrame:
+        props = self._meta("_tbl_props", table)
+        for k in re.findall(r"'((?:[^']|'')*)'", body):
+            if k in props:
+                del props[k]
+            elif not if_exists:
+                raise ValueError(f"Table property '{k}' does not exist.")
+        return self._msg("Updated table.")
+
+    def _set_owner(self, table: str, owner: str) -> DataFrame:
+        self._meta("_tbl_props", table)["owner"] = owner
+        return self._msg("Updated table.")
+
+    def _comment_on_table(
+        self, table: str, text: str | None, null: str | None
+    ) -> DataFrame:
+        """COMMENT ON TABLE (AlterTableOrViewSetTblProperties via the
+        CommentOnTableStmt path) — stored as the HMS 'comment' prop."""
+        props = self._meta("_tbl_props", table)
+        if null:
+            props.pop("comment", None)
+        else:
+            props["comment"] = text
+        return self._msg("Updated table.")
+
+    def _comment_on_column(
+        self, table: str, col: str, text: str | None, null: str | None
+    ) -> DataFrame:
+        comments = self._meta("_col_comments", table)
+        if null:
+            comments.pop(col.lower(), None)
+        else:
+            comments[col.lower()] = text
+        return self._msg("Column has been altered.")
 
     def _load_data(
-        self, src: str, overwrite: bool, table: str, part_spec: str | None
+        self, src: str, overwrite: str | None, table: str,
+        part_spec: str | None,
     ) -> DataFrame:
         """LOAD DATA INPATH (LoadDataStmt,
         fe/.../analysis/LoadDataStmt.java:39-44): MOVE the source file or a
@@ -330,7 +240,7 @@ class AlterTableMixin:
             pass
         return self._table_root(table)
 
-    def _truncate(self, table: str, if_exists: bool) -> DataFrame:
+    def _truncate(self, if_exists: str | None, table: str) -> DataFrame:
         """TRUNCATE TABLE (TruncateStmt, fe/.../analysis/TruncateStmt.java):
         the reference deletes every data file, leaving schema + zero rows.
         The temp-view equivalent replaces the view with a LIMIT-0 projection
@@ -342,22 +252,21 @@ class AlterTableMixin:
                 return self._msg("Table does not exist.")
             raise ValueError(f"Table does not exist: {table}") from None
         self._replace_view(table, df.limit(0))
-        getattr(self, "_stats", {}).pop(table.lower(), None)
-        getattr(self, "_inc_stats", {}).pop(table.lower(), None)
+        self._stats.pop(table.lower(), None)
+        self._inc_stats.pop(table.lower(), None)
         return self._msg("Table has been truncated.")
 
     # -- column DDL -------------------------------------------------------
 
     def _add_columns(
-        self,
-        table: str,
-        defs: list[tuple[str, str, str | None]],
-        if_not_exists: bool,
+        self, table: str, if_not_exists: str | None,
+        if_not_exists_after: str | None, body: str,
     ) -> DataFrame:
+        defs = parse_col_defs(body)
         df = self.spark.table(table)
         have = {f.name.lower() for f in df.schema.fields}
         dups = [n for n, _, _ in defs if n in have]
-        if dups and not if_not_exists:
+        if dups and not (if_not_exists or if_not_exists_after):
             raise ValueError(f"Column already exists: {dups[0]}")
         fresh = [d for d in defs if d[0] not in have]
         if not fresh:
@@ -410,13 +319,12 @@ class AlterTableMixin:
             comments[new.lower()] = comment
         return self._msg("Column has been altered.")
 
-    def _replace_columns(
-        self, table: str, defs: list[tuple[str, str, str | None]]
-    ) -> DataFrame:
+    def _replace_columns(self, table: str, body: str) -> DataFrame:
         """REPLACE COLUMNS maps the new schema onto existing columns BY
         POSITION (the reference's text-table semantics, alter-table.test
         'replace columns' block): surplus old columns are dropped, surplus
         new columns read as NULL."""
+        defs = parse_col_defs(body)
         df = self.spark.table(table)
         names = [f.name for f in df.schema.fields]
         cols = []
@@ -447,15 +355,16 @@ class AlterTableMixin:
         catalog.forget_registration(self.spark, old)
         if view_def is not None:
             self._view_defs[new.lower()] = view_def
-        for attr in ("_tbl_props", "_col_comments", "_stats", "_inc_stats"):
-            store = getattr(self, attr, None)
-            if store and old.lower() in store:
+        for store in (
+            self._tbl_props, self._col_comments, self._stats, self._inc_stats
+        ):
+            if old.lower() in store:
                 store[new.lower()] = store.pop(old.lower())
         return self._msg("Renaming was successful.")
 
     # -- DESCRIBE ---------------------------------------------------------
 
-    def _describe(self, table: str, formatted: bool = False) -> DataFrame:
+    def _describe(self, formatted: str | None, table: str) -> DataFrame:
         """DESCRIBE <t> → (name, type, comment) rows with Impala type
         names (DescribeResultFactory.buildDescribeMinimalResult);
         FORMATTED/EXTENDED appends the detailed-info block with location
@@ -477,7 +386,7 @@ class AlterTableMixin:
             rows.append(("# Detailed Table Information", "", ""))
             try:
                 rows.append(("Location:", self._table_root(table), ""))
-            except Exception:  # noqa: BLE001 - view without storage
+            except ValueError:  # a view or table without storage
                 pass
             props = self._meta("_tbl_props", table)
             if props:

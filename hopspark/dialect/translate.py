@@ -66,6 +66,13 @@ def _splice(toks: list[Tok], lo: int, hi: int, text: str) -> int:
     return len(new)
 
 
+def _single_quoted(body: str) -> str:
+    """The body of a string literal as a single-quoted Spark literal: a
+    quote the body holds unescaped (a double-quoted literal may) gets a
+    backslash."""
+    return "'" + re.sub(r"(?<!\\)((?:\\\\)*)'", r"\1\\'", body) + "'"
+
+
 def _is_code(t: Tok) -> bool:
     return t.kind not in ("ws", "comment")
 
@@ -1463,7 +1470,7 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
                     converted = re.sub(r"\\\\(\d)", r"$\1", converted)
                     converted = re.sub(r"\\(\d)", r"$\1", converted)
                     if converted != inner:
-                        toks[a3] = Tok("str", f"'{converted}'")
+                        toks[a3] = Tok("str", _single_quoted(converted))
             # fall through: the name itself is Spark-native
         # combination (math-functions-ir.cc PmodBigInt:436-440) — negative
         # divisors yield a negative result (pmod(3,-5) = -2). Spark's pmod
@@ -2761,8 +2768,7 @@ def _rewrite_iregexp(toks: list[Tok]) -> list[Tok]:
             toks[i] = Tok("word", "RLIKE")
             j = _next_code(toks, i + 1)
             if j < len(toks) and toks[j].kind == "str":
-                inner = toks[j].text[1:-1]
-                toks[j] = Tok("str", f"'(?i){inner}'")
+                toks[j] = Tok("str", _single_quoted("(?i)" + toks[j].text[1:-1]))
         i += 1
     return toks
 
@@ -4723,7 +4729,8 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
         if j >= len(toks) or toks[j].text != "(" or prev < 0 or toks[prev].text != ",":
             i += 1
             continue
-        if not _query_blocks(toks).clause_is(i, "FROM"):
+        owner = _query_blocks(toks).clause(i)
+        if owner is None or owner[1] != "FROM":
             # a comma-preceded unnest in a SELECT list is the zipping
             # select-list form — handled by _rewrite_select_unnest
             i += 1
@@ -4742,6 +4749,12 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
             + ", ".join(arg_sql)
             + ")) _unnest AS pos, _z "
         )
+        # Spark's grammar puts lateral views after all relations: when FROM
+        # items follow, the lateral view goes at the clause end
+        ins = owner[0].clause_end(owner[0].clauses["FROM"])
+        if _next_code(toks, close + 1) < ins:
+            _splice(toks, ins, ins, lateral)
+            lateral = ""
         _splice(toks, prev, close + 1, lateral)
         # rewrite `leaf.item` → `_z.leaf` (one token for one: the parse
         # stays valid) and `leaf.pos` → `pos` (spliced back to front
@@ -4788,7 +4801,7 @@ def _rewrite_unnest(toks: list[Tok]) -> list[Tok]:
             k += 1
         for k, m, repl_sql in reversed(pos_refs):
             _splice(toks, k, m + 1, repl_sql)
-        i += 1
+        i = 0  # edits on both sides of token i moved it: scan again
     return toks
 
 

@@ -7,12 +7,22 @@ single-node plan → distributed plan → coordinator execution
 fe/.../planner/Planner.java:248-256). On Spark, everything from parse
 onwards is Catalyst + AQE; the engine contributes the dialect translation,
 the function library registration, and the table catalog binding.
+
+The reference decides a statement's kind once, from its statement
+productions (sql-parser.cup:637-731).  Here that decision is one table,
+`_STATEMENTS`: a statement's first word selects its (pattern, handler)
+entries, tried in order, and the first whole-statement match runs its
+handler with the pattern's groups.  A statement that matches no entry,
+including one that opens with a comment, is a query: it is translated and
+handed to Catalyst.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -58,231 +68,40 @@ class Engine(AlterTableMixin):
         # the statement's catalog relations, lowercased name -> DataFrame
         # (None: no such table or view); see _relation
         self._relations: dict[str, DataFrame | None] = {}
+        # COMPUTE [INCREMENTAL] STATS results, keyed by lowercased table
+        # name: the table-level stats SHOW ... STATS reads, and the
+        # per-partition sketches the incremental form merges
+        self._stats: dict[str, dict] = {}
+        self._inc_stats: dict[str, dict] = {}
+        # the metastore-side state the reference keeps in HMS (ddl.py),
+        # keyed by lowercased table name: table properties, column comments
+        self._tbl_props: dict[str, dict[str, str]] = {}
+        self._col_comments: dict[str, dict[str, str]] = {}
         register_all(self.spark)
         if register_tables:
             catalog.register(self.spark, sf_dir)
 
     # -- query surface ------------------------------------------------------
 
-    _SET_RE = re.compile(r"^\s*SET\s+(\w+)\s*=\s*(\S+)\s*;?\s*$", re.I)
     #: options with engine-side semantics — SET coerces these to bool;
     #: everything else is stored verbatim (accepted no-ops, query-options.h)
     _BOOL_OPTIONS = frozenset(
         {"appx_count_distinct", "utf8_mode", "decimal_v2", "explain_verbose"}
     )
-    _COMPUTE_STATS_RE = re.compile(
-        r"^\s*COMPUTE\s+STATS\s+(\w+)\s*;?\s*$", re.I
-    )
-    _COMPUTE_INC_STATS_RE = re.compile(
-        r"^\s*COMPUTE\s+INCREMENTAL\s+STATS\s+(\w+)\s*;?\s*$", re.I
-    )
-    _DROP_STATS_RE = re.compile(
-        r"^\s*DROP\s+(INCREMENTAL\s+)?STATS\s+(\w+)\s*;?\s*$", re.I
-    )
-    _SHOW_STATS_RE = re.compile(
-        r"^\s*SHOW\s+(TABLE|COLUMN)\s+STATS\s+(\w+)\s*;?\s*$", re.I
-    )
-    _REFRESH_RE = re.compile(
-        r"^\s*(?:REFRESH\s+(\w+)|INVALIDATE\s+METADATA(?:\s+(\w+))?)\s*;?\s*$",
-        re.I,
-    )
-    _CREATE_VIEW_RE = re.compile(
-        r"^\s*(CREATE|ALTER)\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
-        r"(\([^)]*\))?\s*AS\s+(.*?);?\s*$",
-        re.I | re.S,
-    )
-    _DROP_VIEW_RE = re.compile(
-        r"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", re.I
-    )
-    _EXPLAIN_RE = re.compile(r"^\s*EXPLAIN\s+(.*?);?\s*$", re.I | re.S)
-    _SHOW_FILES_RE = re.compile(
-        r"^\s*SHOW\s+FILES\s+IN\s+([\w.]+)\s*;?\s*$", re.I
-    )
-    _CREATE_JAVA_FN_RE = re.compile(
-        r"^\s*CREATE\s+FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
-        r"(?:\(([^)]*)\)\s*RETURNS\s+([\w(),]+)\s*)?"
-        r"LOCATION\s+'([^']+)'\s+SYMBOL\s*=\s*'([^']+)'\s*;?\s*$",
-        re.I,
-    )
-    _SHOW_PARTITIONS_RE = re.compile(
-        r"^\s*SHOW\s+PARTITIONS\s+([\w.]+)\s*;?\s*$", re.I
-    )
-    _TS_LIT = r"(?:'[^']*'|\d+)"
-    _DESCRIBE_HISTORY_RE = re.compile(
-        r"^\s*DESCRIBE\s+HISTORY\s+'([^']+)'\s*"
-        rf"(?:FROM\s+({_TS_LIT})|BETWEEN\s+({_TS_LIT})\s+AND\s+({_TS_LIT}))?"
-        r"\s*;?\s*$",
-        re.I,
-    )
-    _SHOW_CREATE_RE = re.compile(
-        r"^\s*SHOW\s+CREATE\s+(TABLE|VIEW)\s+(\w+)\s*;?\s*$", re.I
-    )
 
     def sql(self, impala_sql: str) -> DataFrame:
         """Run an Impala-dialect SQL statement; returns a lazy DataFrame.
 
-        `SET <option>=<value>` statements update engine query options
-        (query-options.h parity); `COMPUTE STATS` / `SHOW TABLE|COLUMN
-        STATS` run the stats surface; everything else is translated and
-        handed to Catalyst."""
-        m = re.match(r"^\s*SET\s*;?\s*$", impala_sql, re.I)
-        if m:
-            # bare SET lists the session's query options (the reference
-            # prints every option with its current value)
-            rows = [(k, str(v)) for k, v in sorted(self.options.items())]
-            return self.spark.createDataFrame(
-                rows or [("", "")], "option string, value string"
-            ).filter("option <> ''")
-        m = self._SET_RE.match(impala_sql)
-        if m:
-            name, raw = m.group(1).lower(), m.group(2).strip().strip("'\"")
-            if name in self._BOOL_OPTIONS:
-                self.set_option(
-                    name, raw.lower() in ("1", "true", "yes", "on")
-                )
-            else:
-                # non-semantic options (MEM_LIMIT, BATCH_SIZE, …) are
-                # accepted and recorded so reference scripts run unchanged;
-                # they have no Spark-side effect (documented delta)
-                self.options[name] = raw
-            return self.spark.sql("SELECT 1 AS ok WHERE false")
-        m = self._COMPUTE_INC_STATS_RE.match(impala_sql)
-        if m:
-            return self.compute_incremental_stats(m.group(1))
-        m = self._DROP_STATS_RE.match(impala_sql)
-        if m:
-            # DROP [INCREMENTAL] STATS (DropStatsStmt): discard cached
-            # table/partition statistics so the next COMPUTE starts clean
-            t = m.group(2).lower()
-            getattr(self, "_stats", {}).pop(t, None)
-            getattr(self, "_inc_stats", {}).pop(t, None)
-            return self.spark.sql("SELECT 1 AS ok WHERE false")
-        m = self._COMPUTE_STATS_RE.match(impala_sql)
-        if m:
-            return self.compute_stats(m.group(1))
-        m = self._SHOW_STATS_RE.match(impala_sql)
-        if m:
-            if m.group(1).upper() == "TABLE":
-                return self.show_table_stats(m.group(2))
-            return self.show_column_stats(m.group(2))
-        m = self._REFRESH_RE.match(impala_sql)
-        if m:
-            self.refresh(m.group(1) or m.group(2))
-            return self.spark.sql("SELECT 1 AS ok WHERE false")
-        m = self._CREATE_VIEW_RE.match(impala_sql)
-        if m:
-            verb, if_not_exists, name, col_list, body = m.groups()
-            # Impala CREATE/ALTER VIEW (sql-parser.cup view DDL). The engine
-            # catalog is session-scoped temp views, so views land there too;
-            # the body goes through the same dialect translation as queries.
-            # Db-qualified names have no home in a temp-view catalog — reject
-            # explicitly rather than failing downstream with a parse error.
-            if "." in name:
-                raise ValueError(
-                    f"view name {name!r}: database-qualified views are not "
-                    "supported by the session (temp-view) catalog"
-                )
-            # Spark's catalog is case-insensitive; compare lowercased so
-            # IF NOT EXISTS V no-ops against an existing v (Impala
-            # analyzer semantics: table/view names are case-insensitive).
-            # SHOW TABLES (one round trip) instead of listTables, which
-            # builds a metadata object per table.
-            exists = any(
-                r.tableName.lower() == name.lower() and r.isTemporary
-                for r in self.spark.sql("SHOW TABLES").collect()
-            )
-            if verb.upper() == "CREATE" and exists:
-                if if_not_exists:
-                    return self.spark.sql("SELECT 1 AS ok WHERE false")
-                # Impala raises AnalysisException: view already exists
-                # (fe CreateViewStmt analysis) — plain CREATE must not
-                # silently replace.
-                raise ValueError(f"view already exists: {name}")
-            translated = self._translate_statement(body)
-            if col_list:
-                cols = [c.strip() for c in col_list.strip("()").split(",")]
-                if any(not c.isidentifier() for c in cols):
-                    raise ValueError(f"bad view column list: {col_list}")
-                translated = (
-                    f"SELECT * FROM ({translated}) AS "
-                    f"hopspark_view_body({', '.join(cols)})"
-                )
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {name} AS " + translated
-            )
-            body_sql = body.strip()
-            if col_list:
-                body_sql = f"{col_list.strip()} AS {body_sql}"
-            else:
-                body_sql = f"AS {body_sql}"
-            self._view_defs[name.lower()] = f"CREATE VIEW {name} {body_sql}"
-            return self.spark.sql("SELECT 1 AS ok WHERE false")
-        m = self._DROP_VIEW_RE.match(impala_sql)
-        if m:
-            if_exists, name = m.groups()
-            dropped = self.spark.catalog.dropTempView(name)
-            self._view_defs.pop(name.lower(), None)
-            catalog.forget_registration(self.spark, name)
-            if not dropped and not if_exists:
-                raise ValueError(f"view does not exist: {name}")
-            return self.spark.sql("SELECT 1 AS ok WHERE false")
-        m = self._SHOW_CREATE_RE.match(impala_sql)
-        if m:
-            # SHOW CREATE TABLE/VIEW (ShowCreateTableStmt): reconstruct the
-            # DDL from catalog schema — one row, 'result' column (the HS2
-            # shape the reference returns). Temp-view-backed tables get a
-            # CREATE EXTERNAL TABLE rendering with Impala type names; views
-            # created through this engine get their ORIGINAL CREATE VIEW
-            # definition (ToSqlUtils.getCreateViewSql emits the view's own
-            # SQL, never a table-shaped DDL).
-            name = m.group(2)
-            view_def = self._view_defs.get(name.lower())
-            if view_def is not None:
-                return self.spark.createDataFrame(
-                    [(view_def,)], "`result` string"
-                )
-            if m.group(1).upper() == "VIEW":
-                # SHOW CREATE VIEW over a name we did not create as a view:
-                # the reference raises for non-view targets
-                raise ValueError(f"{name} is not a view")
-            fields = self.spark.table(name).schema.fields
-            cols = ",\n".join(
-                f"  {f.name} {_impala_type_name(f.dataType)}" for f in fields
-            )
-            ddl = f"CREATE EXTERNAL TABLE {name} (\n{cols}\n) STORED AS PARQUET"
-            return self.spark.createDataFrame([(ddl,)], "`result` string")
-        m = self._CREATE_JAVA_FN_RE.match(impala_sql)
-        if m:
-            name, _params, returns, jar, symbol = m.groups()
-            self.create_java_function(name, jar, symbol, returns)
-            return self.spark.sql("SELECT 1 AS ok WHERE false")
-        m = self._SHOW_FILES_RE.match(impala_sql)
-        if m:
-            return self.show_files(m.group(1))
-        m = self._SHOW_PARTITIONS_RE.match(impala_sql)
-        if m:
-            return self.show_partitions(m.group(1))
-        m = self._DESCRIBE_HISTORY_RE.match(impala_sql)
-        if m:
-            return self.describe_history(
-                m.group(1), m.group(2), m.group(3), m.group(4)
-            )
-        up0 = impala_sql.lstrip()[:8].upper()
-        if up0.startswith(
-            ("ALTER", "DESCRIBE", "DESC", "COMMENT", "TRUNCATE", "LOAD")
-        ):
-            out = self.try_alter_or_describe(impala_sql)
-            if out is not None:
-                return out
-        m = self._EXPLAIN_RE.match(impala_sql)
-        if m:
-            # Impala EXPLAIN returns the plan as rows of 'Explain String'
-            # (impala-server HS2 result shape); surface Catalyst's formatted
-            # plan the same way.
-            lines = self.explain(m.group(1)).splitlines()
-            return self.spark.createDataFrame(
-                [(ln,) for ln in lines], "`Explain String` string"
-            )
+        A statement that the statement table (`_STATEMENTS`) matches runs
+        its handler with the pattern's groups: SET, the stats, view,
+        metadata and ALTER TABLE surfaces, EXPLAIN.  Only the entries of
+        the statement's first word are tried, in table order, and the
+        first match wins.  Everything else is translated and handed to
+        Catalyst."""
+        stmt = _statement(impala_sql)
+        if stmt is not None:
+            handler, groups = stmt
+            return handler(self, *groups)
         translated = self._translate_statement(impala_sql)
         if self._mergeable_udas and re.search(
             r"\b(" + "|".join(map(re.escape, self._mergeable_udas)) + r")\s*\(",
@@ -298,6 +117,138 @@ class Engine(AlterTableMixin):
                 except AnalysisException:
                     pass  # Catalyst rejects the rewrite: whole-group plan
         return self.spark.sql(translated)
+
+    # -- statement handlers (the _STATEMENTS entries; each takes its
+    #    pattern's groups) ---------------------------------------------------
+
+    def _no_rows(self) -> DataFrame:
+        """The result of a statement that returns nothing."""
+        return self.spark.sql("SELECT 1 AS ok WHERE false")
+
+    def _show_options(self) -> DataFrame:
+        """Bare SET lists the session's query options (the reference
+        prints every option with its current value)."""
+        rows = [(k, str(v)) for k, v in sorted(self.options.items())]
+        return self.spark.createDataFrame(
+            rows or [("", "")], "option string, value string"
+        ).filter("option <> ''")
+
+    def _set_statement(self, name: str, raw: str) -> DataFrame:
+        name, raw = name.lower(), raw.strip().strip("'\"")
+        if name in self._BOOL_OPTIONS:
+            self.set_option(name, raw.lower() in ("1", "true", "yes", "on"))
+        else:
+            # non-semantic options (MEM_LIMIT, BATCH_SIZE, …) are
+            # accepted and recorded so reference scripts run unchanged;
+            # they have no Spark-side effect (documented delta)
+            self.options[name] = raw
+        return self._no_rows()
+
+    def _drop_stats(self, table: str) -> DataFrame:
+        """DROP [INCREMENTAL] STATS (DropStatsStmt): discard cached
+        table/partition statistics so the next COMPUTE starts clean."""
+        self._stats.pop(table.lower(), None)
+        self._inc_stats.pop(table.lower(), None)
+        return self._no_rows()
+
+    def _refresh_statement(self, table: str | None) -> DataFrame:
+        self.refresh(table)
+        return self._no_rows()
+
+    def _create_view(
+        self, verb: str, if_not_exists: str | None, name: str,
+        col_list: str | None, body: str,
+    ) -> DataFrame:
+        """Impala CREATE/ALTER VIEW (sql-parser.cup view DDL). The engine
+        catalog is session-scoped temp views, so views land there too;
+        the body goes through the same dialect translation as queries."""
+        # Db-qualified names have no home in a temp-view catalog — reject
+        # explicitly rather than failing downstream with a parse error.
+        if "." in name:
+            raise ValueError(
+                f"view name {name!r}: database-qualified views are not "
+                "supported by the session (temp-view) catalog"
+            )
+        # Spark's catalog is case-insensitive; compare lowercased so
+        # IF NOT EXISTS V no-ops against an existing v (Impala
+        # analyzer semantics: table/view names are case-insensitive).
+        # SHOW TABLES (one round trip) instead of listTables, which
+        # builds a metadata object per table.
+        exists = any(
+            r.tableName.lower() == name.lower() and r.isTemporary
+            for r in self.spark.sql("SHOW TABLES").collect()
+        )
+        if verb.upper() == "CREATE" and exists:
+            if if_not_exists:
+                return self._no_rows()
+            # Impala raises AnalysisException: view already exists
+            # (fe CreateViewStmt analysis) — plain CREATE must not
+            # silently replace.
+            raise ValueError(f"view already exists: {name}")
+        translated = self._translate_statement(body)
+        if col_list:
+            cols = [c.strip() for c in col_list.strip("()").split(",")]
+            if any(not c.isidentifier() for c in cols):
+                raise ValueError(f"bad view column list: {col_list}")
+            translated = (
+                f"SELECT * FROM ({translated}) AS "
+                f"hopspark_view_body({', '.join(cols)})"
+            )
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMPORARY VIEW {name} AS " + translated
+        )
+        body_sql = body.strip()
+        if col_list:
+            body_sql = f"{col_list.strip()} AS {body_sql}"
+        else:
+            body_sql = f"AS {body_sql}"
+        self._view_defs[name.lower()] = f"CREATE VIEW {name} {body_sql}"
+        return self._no_rows()
+
+    def _drop_view(self, if_exists: str | None, name: str) -> DataFrame:
+        dropped = self.spark.catalog.dropTempView(name)
+        self._view_defs.pop(name.lower(), None)
+        catalog.forget_registration(self.spark, name)
+        if not dropped and not if_exists:
+            raise ValueError(f"view does not exist: {name}")
+        return self._no_rows()
+
+    def _show_create(self, kind: str, name: str) -> DataFrame:
+        """SHOW CREATE TABLE/VIEW (ShowCreateTableStmt): reconstruct the
+        DDL from catalog schema — one row, 'result' column (the HS2 shape
+        the reference returns). Temp-view-backed tables get a CREATE
+        EXTERNAL TABLE rendering with Impala type names; views created
+        through this engine get their ORIGINAL CREATE VIEW definition
+        (ToSqlUtils.getCreateViewSql emits the view's own SQL, never a
+        table-shaped DDL)."""
+        view_def = self._view_defs.get(name.lower())
+        if view_def is not None:
+            return self.spark.createDataFrame([(view_def,)], "`result` string")
+        if kind.upper() == "VIEW":
+            # SHOW CREATE VIEW over a name we did not create as a view:
+            # the reference raises for non-view targets
+            raise ValueError(f"{name} is not a view")
+        fields = self.spark.table(name).schema.fields
+        cols = ",\n".join(
+            f"  {f.name} {_impala_type_name(f.dataType)}" for f in fields
+        )
+        ddl = f"CREATE EXTERNAL TABLE {name} (\n{cols}\n) STORED AS PARQUET"
+        return self.spark.createDataFrame([(ddl,)], "`result` string")
+
+    def _create_java_function_statement(
+        self, name: str, returns: str | None, jar: str, symbol: str
+    ) -> DataFrame:
+        self.create_java_function(name, jar, symbol, returns)
+        return self._no_rows()
+
+    def _explain_rows(self, impala_sql: str) -> DataFrame:
+        """Impala EXPLAIN returns the plan as rows of 'Explain String'
+        (impala-server HS2 result shape); surface Catalyst's formatted
+        plan the same way."""
+        lines = self.explain(impala_sql).splitlines()
+        return self.spark.createDataFrame(
+            [(ln,) for ln in lines], "`Explain String` string"
+        )
 
     def _translate_statement(self, impala_sql: str) -> str:
         """Spark SQL for a query or view body: the three schema-aware
@@ -2511,13 +2462,13 @@ class Engine(AlterTableMixin):
                 out[name] = metrics
             # AQE wrappers don't expose their subtree via children():
             # AdaptiveSparkPlanExec -> executedPlan(), QueryStageExec -> plan()
+            # (py4j's hasattr is always true: the call raises instead)
             for unwrap in ("executedPlan", "plan"):
-                if hasattr(node, unwrap):
-                    try:
-                        walk(getattr(node, unwrap)())
-                        return
-                    except Exception:
-                        pass
+                try:
+                    walk(getattr(node, unwrap)())
+                    return
+                except Py4JError:
+                    pass
             cit = node.children().iterator()
             while cit.hasNext():
                 walk(cit.next())
@@ -2673,7 +2624,6 @@ class Engine(AlterTableMixin):
                     float(av if av is not None else -1.0),
                 )
             )
-        self._stats = getattr(self, "_stats", {})
         self._stats[table.lower()] = {"rows": int(row["__rows"]), "cols": cols}
         return self.spark.createDataFrame(
             [(f"Updated 1 partition(s) and {len(cols)} column(s).",)],
@@ -2699,10 +2649,7 @@ class Engine(AlterTableMixin):
         if not layout:
             # unpartitioned: incremental degenerates to a full compute
             return self.compute_stats(table)
-        cache = getattr(self, "_inc_stats", None)
-        if cache is None:
-            cache = self._inc_stats = {}
-        tstate = cache.setdefault(table.lower(), {})
+        tstate = self._inc_stats.setdefault(table.lower(), {})
         missing = [k for k in layout if k not in tstate]
         pcols = [k for k, _ in next(iter(layout))]
         if missing:
@@ -2776,7 +2723,6 @@ class Engine(AlterTableMixin):
                 s["cols"][c]["type"] for s in tstate.values() if c in s["cols"]
             )
             merged_cols.append((c, ctype, ndv, nulls, -1, -1.0))
-        self._stats = getattr(self, "_stats", {})
         self._stats[table.lower()] = {"rows": total_rows, "cols": merged_cols}
         return self.spark.createDataFrame(
             [
@@ -2794,7 +2740,7 @@ class Engine(AlterTableMixin):
         After COMPUTE INCREMENTAL STATS on a partitioned table, one row
         per partition plus the Total row, like the reference's
         partitioned-table result shape."""
-        inc = getattr(self, "_inc_stats", {}).get(table.lower())
+        inc = self._inc_stats.get(table.lower())
         if inc:
             layout = self._partition_layout(table)
             key_cols = [k for k, _ in next(iter(inc))]
@@ -2818,14 +2764,14 @@ class Engine(AlterTableMixin):
                 + ", `#Rows` long, `#Files` long, Size string"
             )
             return self.spark.createDataFrame(rows, schema)
-        st = getattr(self, "_stats", {}).get(table.lower())
+        st = self._stats.get(table.lower())
         rows = st["rows"] if st else -1
         return self.spark.createDataFrame([(rows,)], "`#Rows` long")
 
     def show_column_stats(self, table: str) -> DataFrame:
         """SHOW COLUMN STATS <table> — column, type, #distinct values,
         #nulls, max size, avg size (reference output shape)."""
-        st = getattr(self, "_stats", {}).get(table.lower())
+        st = self._stats.get(table.lower())
         if st is None:
             df = self.table(table)
             data = [
@@ -2868,6 +2814,146 @@ class Engine(AlterTableMixin):
             for r in self.spark.sql(f"DESCRIBE TABLE {table}").collect()
             if r.col_name and not r.col_name.startswith("#")
         ]
+
+
+def _pattern(body: str, flags: int = 0) -> re.Pattern[str]:
+    """A whole statement: ``body`` after leading whitespace, then an
+    optional ``;``."""
+    return re.compile(rf"^\s*{body}\s*;?\s*$", re.I | flags)
+
+
+_TS_LIT = r"(?:'[^']*'|\d+)"
+_COMMENT_TEXT = r"(?:'((?:[^']|'')*)'|(NULL))"
+_VIEW_STATEMENT = (
+    re.compile(
+        r"^\s*(CREATE|ALTER)\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
+        r"(\([^)]*\))?\s*AS\s+(.*?);?\s*$",
+        re.I | re.S,
+    ),
+    Engine._create_view,
+)
+
+#: The statement table — the analogue of the reference's statement
+#: productions (sql-parser.cup:637-731): a statement's first word (upper
+#: case) -> its (pattern, handler) entries in precedence order.  Each
+#: pattern matches a whole statement; `Engine.sql` runs the first
+#: matching entry's handler with the pattern's groups, and a statement no
+#: entry matches is a query.  Within a word: ALTER VIEW … AS before the
+#: ALTER TABLE forms, DESCRIBE HISTORY before DESCRIBE [FORMATTED],
+#: COMPUTE INCREMENTAL STATS before COMPUTE STATS, DROP [INCREMENTAL]
+#: STATS before DROP VIEW.
+_STATEMENTS: dict[
+    str, list[tuple[re.Pattern[str], Callable[..., DataFrame]]]
+] = {
+    "SET": [
+        (_pattern(r"SET"), Engine._show_options),
+        (_pattern(r"SET\s+(\w+)\s*=\s*(\S+)"), Engine._set_statement),
+    ],
+    "COMPUTE": [
+        (_pattern(r"COMPUTE\s+INCREMENTAL\s+STATS\s+(\w+)"),
+         Engine.compute_incremental_stats),
+        (_pattern(r"COMPUTE\s+STATS\s+(\w+)"), Engine.compute_stats),
+    ],
+    "DROP": [
+        (_pattern(r"DROP\s+(?:INCREMENTAL\s+)?STATS\s+(\w+)"),
+         Engine._drop_stats),
+        (_pattern(r"DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(\w+)"), Engine._drop_view),
+    ],
+    "SHOW": [
+        (_pattern(r"SHOW\s+TABLE\s+STATS\s+(\w+)"), Engine.show_table_stats),
+        (_pattern(r"SHOW\s+COLUMN\s+STATS\s+(\w+)"), Engine.show_column_stats),
+        (_pattern(r"SHOW\s+CREATE\s+(TABLE|VIEW)\s+(\w+)"), Engine._show_create),
+        (_pattern(r"SHOW\s+FILES\s+IN\s+([\w.]+)"), Engine.show_files),
+        (_pattern(r"SHOW\s+PARTITIONS\s+([\w.]+)"), Engine.show_partitions),
+    ],
+    "REFRESH": [(_pattern(r"REFRESH\s+(\w+)"), Engine._refresh_statement)],
+    "INVALIDATE": [
+        (_pattern(r"INVALIDATE\s+METADATA(?:\s+(\w+))?"),
+         Engine._refresh_statement),
+    ],
+    "CREATE": [
+        _VIEW_STATEMENT,
+        (_pattern(
+            r"CREATE\s+FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
+            r"(?:\([^)]*\)\s*RETURNS\s+([\w(),]+)\s*)?"
+            r"LOCATION\s+'([^']+)'\s+SYMBOL\s*=\s*'([^']+)'"
+        ), Engine._create_java_function_statement),
+    ],
+    "ALTER": [
+        _VIEW_STATEMENT,
+        (_pattern(
+            r"ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+(IF\s+NOT\s+EXISTS\s+)?"
+            r"COLUMNS?\s*(IF\s+NOT\s+EXISTS\s+)?(\(.*\)|\w+\s+.+?)", re.S
+        ), Engine._add_columns),
+        (_pattern(
+            r"ALTER\s+TABLE\s+([\w.]+)\s+CHANGE\s+(?:COLUMN\s+)?"
+            r"(\w+)\s+(\w+)\s+(.+?)(?:\s+COMMENT\s+'((?:[^']|'')*)')?", re.S
+        ), Engine._change_column),
+        (_pattern(
+            r"ALTER\s+TABLE\s+([\w.]+)\s+REPLACE\s+COLUMNS\s*(\(.*\))", re.S
+        ), Engine._replace_columns),
+        (_pattern(r"ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(?:COLUMN\s+)?(\w+)"),
+         Engine._drop_column),
+        (_pattern(
+            r"ALTER\s+(?:TABLE|VIEW)\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)"
+        ), Engine._rename),
+        (_pattern(
+            r"ALTER\s+TABLE\s+([\w.]+)\s+SET\s+TBLPROPERTIES\s*\((.*)\)", re.S
+        ), Engine._set_tbl_props),
+        (_pattern(
+            r"ALTER\s+TABLE\s+([\w.]+)\s+UNSET\s+TBLPROPERTIES\s*"
+            r"(IF\s+EXISTS\s+)?\((.*)\)", re.S
+        ), Engine._unset_tbl_props),
+        (_pattern(
+            r"ALTER\s+TABLE\s+([\w.]+)\s+SET\s+OWNER\s+(?:USER|ROLE)\s+(\w+)"
+        ), Engine._set_owner),
+    ],
+    "DESCRIBE": [
+        (_pattern(
+            rf"DESCRIBE\s+HISTORY\s+'([^']+)'\s*(?:FROM\s+({_TS_LIT})|"
+            rf"BETWEEN\s+({_TS_LIT})\s+AND\s+({_TS_LIT}))?"
+        ), Engine.describe_history),
+        (_pattern(r"DESCRIBE\s+(FORMATTED\s+|EXTENDED\s+)?([\w.]+)"),
+         Engine._describe),
+    ],
+    "EXPLAIN": [
+        (re.compile(r"^\s*EXPLAIN\s+(.*?);?\s*$", re.I | re.S),
+         Engine._explain_rows),
+    ],
+    "COMMENT": [
+        (_pattern(rf"COMMENT\s+ON\s+TABLE\s+([\w.]+)\s+IS\s+{_COMMENT_TEXT}"),
+         Engine._comment_on_table),
+        (_pattern(
+            rf"COMMENT\s+ON\s+COLUMN\s+([\w.]+)\.(\w+)\s+IS\s+{_COMMENT_TEXT}"
+        ), Engine._comment_on_column),
+    ],
+    "TRUNCATE": [
+        (_pattern(r"TRUNCATE\s+(?:TABLE\s+)?(IF\s+EXISTS\s+)?([\w.]+)"),
+         Engine._truncate),
+    ],
+    "LOAD": [
+        (_pattern(
+            r"LOAD\s+DATA\s+INPATH\s+'([^']+)'\s+(OVERWRITE\s+)?"
+            r"INTO\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?"
+        ), Engine._load_data),
+    ],
+}
+_FIRST_WORD = re.compile(r"\s*(\w+)")
+
+
+def _statement(
+    impala_sql: str,
+) -> tuple[Callable[..., DataFrame], tuple[str | None, ...]] | None:
+    """The handler and pattern groups of the `_STATEMENTS` entry that
+    matches the statement, or None for a query.  Only the entries of the
+    statement's first word are tried, read with the patterns' own ``^\\s*``
+    rule, so a statement that opens with a comment is a query."""
+    m = _FIRST_WORD.match(impala_sql)
+    for pattern, handler in _STATEMENTS.get(m[1].upper(), ()) if m else ():
+        found = pattern.match(impala_sql)
+        if found:
+            return handler, found.groups()
+    return None
 
 
 def _impala_type_name(dt) -> str:

@@ -270,3 +270,27 @@ def test_char_typed_table_columns(spark, sf_dir, tmp_path):
         assert n == 6  # '1'x1, '5'x1, '6'x2 by '6'x2
     finally:
         spark.sql("DROP TABLE IF EXISTS chars_t")
+
+
+def test_script_splits_on_semicolon_tokens_only():
+    """``-f`` splits a script at ``;`` operator tokens: a ``;`` inside a
+    literal, a quoted identifier or a comment splits nothing, and a chunk
+    of whitespace and comments is no statement."""
+    from hopspark.__main__ import split_statements
+
+    script = (
+        "-- setup; first\n"
+        "SET mem_limit=1g;\n"
+        "SELECT 'a;b', \"c;d\" FROM `x;y` /* e; */ WHERE 1 = 1;\n"
+        "  ;\n"
+        "SELECT 2  -- trailing; comment\n"
+        ";\n"
+        "/* only a comment; */\n"
+    )
+    assert split_statements(script) == [
+        "SET mem_limit=1g",
+        "SELECT 'a;b', \"c;d\" FROM `x;y` /* e; */ WHERE 1 = 1",
+        "SELECT 2  -- trailing; comment",
+    ]
+    assert split_statements("SELECT 1") == ["SELECT 1"]
+    assert split_statements("") == []

@@ -235,3 +235,18 @@ def test_set_accepts_non_boolean_options(eng):
     assert opts["mem_limit"] == "2g"
     assert opts["batch_size"] == "1024"
     assert opts["appx_count_distinct"] == "True"
+
+
+def test_describe_formatted_propagates_other_errors(eng, monkeypatch):
+    """DESCRIBE FORMATTED leaves out the location of a table without
+    storage (``_table_root`` raises ValueError); any other error from the
+    lookup propagates."""
+    rows = eng.sql("DESCRIBE FORMATTED t1_alter").collect()
+    assert "Location:" not in {r.name for r in rows}
+
+    def broken(table):
+        raise RuntimeError("lookup failed")
+
+    monkeypatch.setattr(eng, "_table_root", broken)
+    with pytest.raises(RuntimeError, match="lookup failed"):
+        eng.sql("DESCRIBE FORMATTED t1_alter")

@@ -1347,3 +1347,35 @@ def test_ceil_of_double_plus_decimal_is_typed_as_a_double(eng):
     assert _one(eng, "select typeof(ceil(cast(2.5 as double)) + 1.5)") == (
         _one(eng, "select typeof(cast(3 as double) + 1.5)")
     )
+
+
+def test_double_quoted_regex_literal_keeps_its_quote(eng):
+    """A double-quoted pattern or rewrite string may hold ``'``: re-quoted
+    in single quotes, the quote is escaped."""
+    assert translate("select 1 from t where s iregexp \"it's\"") == (
+        "select 1 from t where s RLIKE '(?i)it\\'s'"
+    )
+    assert translate("select regexp_replace(s, 'b', \"$1'\") from t") == (
+        "select regexp_replace(s, 'b', '\\\\$1\\'') from t"
+    )
+    assert _one(eng, "select \"IT'S\" iregexp \"it's\"") is True
+    assert _one(eng, "select regexp_replace('ab', 'b', \"$1'\")") == "a$1'"
+    assert _one(eng, "select regexp_replace('ab', '(b)', \"\\\\1'\")") == (
+        "ab'"
+    )
+
+
+def test_from_clause_unnest_goes_after_the_last_relation(spark):
+    """A FROM-clause UNNEST followed by another FROM item: its lateral
+    view goes after the clause's last relation, where Spark's grammar
+    puts lateral views."""
+    spark.sql("SELECT 1 AS x, array(10, 20) AS arr").createOrReplaceTempView(
+        "un_t"
+    )
+    spark.sql("SELECT 1 AS y").createOrReplaceTempView("un_t2")
+    out = translate(
+        "select un_t.x, arr.item from un_t, unnest(un_t.arr), un_t2"
+        " where un_t2.y = un_t.x"
+    )
+    assert out.index("un_t2") < out.index("LATERAL VIEW")
+    assert sorted(map(tuple, spark.sql(out).collect())) == [(1, 10), (1, 20)]
