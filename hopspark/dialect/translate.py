@@ -9,6 +9,8 @@ are never harmed.
 from __future__ import annotations
 
 import re
+import zoneinfo
+from collections.abc import Callable
 from dataclasses import dataclass
 
 # ---------------------------------------------------------------------------
@@ -205,7 +207,6 @@ _FN_RENAME = {
     "ucase": "upper",
     "char_length": "length",
     "character_length": "length",
-    "chr": "char",
     "is_nan": "isnan",
     # time-of-day ignored + unrounded (MonthsBetween; expr-test.cc:6982)
     "months_between": "months_between2",
@@ -268,6 +269,9 @@ _FN_RENAME = {
 _FN_APPEND_ARG = {
     "appx_median": ("percentile_approx", "0.5"),
     "nullifzero": ("nullif", "0"),
+    "zeroifnull": ("coalesce", "0"),
+    "dayname": ("date_format", "'EEEE'"),
+    "monthname": ("date_format", "'MMMM'"),
 }
 
 # name → (spark_name, default_appended_only_when_one_arg): Impala
@@ -276,10 +280,6 @@ _FN_APPEND_ARG = {
 _FN_DEFAULT_ARG = {
     "group_concat": ("string_agg", "', '"),
 }
-
-# name → (spark_name, args_prepended)
-_FN_SPECIAL: dict[str, tuple[str, str]] = {}
-
 
 #: timezone abbreviations Spark's JVM resolves that zoneinfo does not
 _TZ_ABBRS = {
@@ -301,12 +301,10 @@ def _tz_known(name: str) -> bool:
     if re.fullmatch(r"[+-]\d{1,2}(:\d{2})?", name):
         return True
     try:
-        import zoneinfo
-
         zoneinfo.ZoneInfo(name)
-        return True
-    except Exception:
+    except (zoneinfo.ZoneInfoNotFoundError, ValueError, OSError):
         return False
+    return True
 
 
 def _rewrite_escape_residue(toks: list[Tok]) -> list[Tok]:
@@ -913,7 +911,1248 @@ _DATE_UNIT_FNS = {
 _MONTHS_KEEP_LAST_DAY = {"months_add": "", "add_months": "", "months_sub": "-"}
 
 
+def _span_sql(toks: list[Tok], span: tuple[int, int]) -> str:
+    """The SQL of the token span ``(start, end_exclusive)``, stripped."""
+    return untokenize(toks[span[0]:span[1]]).strip()
+
+
+def _translated_sql(toks: list[Tok], span: tuple[int, int]) -> str:
+    """The span's SQL after this pass, for an argument spliced into a
+    replacement that the walk then steps over (a rescan would see the
+    replacement's own function names again)."""
+    return untokenize(_rewrite_functions(toks[span[0]:span[1]])).strip()
+
+
+def _c_log(fn: str, a: str) -> str:
+    """``fn(a)`` with the C library's domain: -Infinity at 0, NaN below."""
+    return (
+        f"(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS DOUBLE) "
+        f"WHEN ({a}) > 0 THEN {fn}(CAST(({a}) AS DOUBLE)) "
+        f"WHEN ({a}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
+        f"ELSE CAST('NaN' AS DOUBLE) END)"
+    )
+
+
+def _call_date_unit(toks, i, j, close, args):
+    """Type-preserving date arithmetic (see _DATE_UNIT_FNS).  First,
+    date_add(x, INTERVAL n unit) → (x + INTERVAL n unit): Impala's
+    grammar routes INTERVAL arithmetic through the date_add/date_sub
+    builtins (sql-parser.cup:299 KW_INTERVAL), Spark only accepts the
+    infix form."""
+    if len(args) != 2:
+        return None
+    name = toks[i].text.lower()
+    pos, op = _DATE_UNIT_FNS[name]
+    if name in ("date_add", "date_sub"):
+        a2 = _next_code(toks, args[1][0])
+        if a2 < close and toks[a2].upper == "INTERVAL":
+            # '(' stays; comma becomes the arithmetic operator.
+            comma = _prev_code(toks, args[1][0] - 1)
+            _splice(toks, comma, comma + 1, f" {op} ")
+            del toks[i]  # drop the function name
+            return i
+    x = _span_sql(toks, args[0])
+    n = _span_sql(toks, args[1])
+    # cap the quantity: counts far past the full [1,9999] span overflow
+    # make_interval's integer month math (a Spark ArithmeticException) —
+    # the reference returns NULL (IsValidTimeInterval). NULL quantity ->
+    # NULL result.
+    cap = {0: 20000, 1: 240001, 2: 1050000, 3: 7400000}[pos]
+    gn = f"(CASE WHEN abs(CAST(({n}) AS BIGINT)) <= {cap} THEN ({n}) END)"
+    tail = ", 0" * (6 - pos) + ")"
+    _splice(toks, i, close + 1, _ts_range_guard(
+        f"(({x}) {op} make_interval({'0, ' * pos}{gn}{tail})",
+        date_aware=True,
+    ))
+    return i + 1  # re-scan the splice: inner dialect fns still rewrite
+
+
+def _call_c_log(toks, i, j, close, args):
+    """The log family applies C log() with NO domain guard
+    (math-functions-ir.cc ONE_ARG_MATH_FN(Ln, ..., log) and Log10/Log2),
+    so log of 0 is -Infinity and log of a negative is NaN; Spark returns
+    NULL for both.  Re-create the C contract."""
+    if len(args) != 1:
+        return None
+    fn = _FN_RENAME.get(toks[i].text.lower(), toks[i].text.lower())
+    return i + _splice(
+        toks, i, close + 1, _c_log(fn, _translated_sql(toks, args[0]))
+    )
+
+
+def _call_log(toks, i, j, close, args):
+    """2-arg log(base, x) is ln(x)/ln(base) with RAW C semantics on BOTH
+    legs (math-functions-ir.cc Log uses std::log with no domain guard):
+    log(1,2)=Infinity, log(1,1)=NaN, log(0,2)=-0, log(2,0)=-Infinity,
+    log(0,0)=NaN (exprs.test:1917).  Spark's 2-arg log NULLs non-positive
+    operands AND a zero divisor, so build the IEEE division explicitly."""
+    if len(args) != 2:
+        return None
+    lb = _c_log("ln", _translated_sql(toks, args[0]))
+    la = _c_log("ln", _translated_sql(toks, args[1]))
+    return i + _splice(toks, i, close + 1, (
+        f"(CASE WHEN {lb} = 0 THEN "
+        f"(CASE WHEN {la} > 0 THEN CAST('Infinity' AS DOUBLE) "
+        f"WHEN {la} < 0 THEN CAST('-Infinity' AS DOUBLE) "
+        f"WHEN {la} = 0 THEN CAST('NaN' AS DOUBLE) "
+        f"ELSE {la} END) "
+        f"ELSE {la} / {lb} END)"
+    ))
+
+
+def _cast_decimal_result(toks, i, close, ps, d, carry) -> int | None:
+    """DECIMAL_V2 result typing of round/truncate(DECIMAL(p,s), d):
+    DECIMAL(p-s+s'+carry, s') with s' = max(0, min(s, d)).  Wraps the
+    call at ``i`` in that CAST unless an enclosing CAST already names it,
+    and returns the index of the wrapped call."""
+    p, s = ps
+    sr = max(0, min(s, d))
+    pr = min(38, max(1, p - s + sr + carry))
+    if _enclosing_cast_target(toks, i) == f"DECIMAL({pr},{sr})":
+        return None
+    inner = _span_sql(toks, (i, close + 1))
+    _splice(toks, i, close + 1, f"CAST({inner} AS DECIMAL({pr}, {sr}))")
+    return i + 2  # step into the CAST; the inner call skips the wrap
+
+
+def _call_round(toks, i, j, close, args):
+    """round/dround over a FLOAT argument: the reference widens to DOUBLE
+    before rounding, so round(cast(1.1 as float), 2) is a clean 1.1
+    (exprs.test:1775, IMPALA-1508); Spark rounds within FLOAT and the
+    widened display keeps the float artifact.  Over a DECIMAL(p,s)
+    argument the result is DECIMAL(p-s+s'+carry, s'), carry=1 only when
+    d < s (rounding can add a digit); Spark's round gives (p+1, d) —
+    expr-test.cc:8961/8973 pin precision 6 and 4.  DOUBLE arguments keep
+    Spark's native typing."""
+    if len(args) != 2:
+        return None
+    a_ty = _static_type(toks, *args[0])
+    if a_ty == "FLOAT":
+        a = _translated_sql(toks, args[0])
+        n_arg = _span_sql(toks, args[1])
+        return i + _splice(
+            toks, i, close + 1, f"round(CAST(({a}) AS DOUBLE), {n_arg})"
+        )
+    ps = _decimal_ps(a_ty)
+    d = _int_literal_value(toks, args[1])
+    if ps is None or d is None:
+        return None
+    return _cast_decimal_result(toks, i, close, ps, d, int(d < ps[1]))
+
+
+def _call_mask_hash(toks, i, j, close, args):
+    """mask_hash: only STRING inputs hash; every other type is NULL
+    (mask-functions-ir.cc MaskHash non-string overloads)."""
+    if len(args) != 1:
+        return None
+    code = [k for k in range(*args[0]) if _is_code(toks[k])]
+    null_ty = None
+    cast_ty = _span_cast_type(toks, code[0], code[-1]) if code else None
+    if cast_ty is not None and not cast_ty.startswith(
+        ("CHAR", "VARCHAR", "STRING")
+    ):
+        null_ty = cast_ty
+    elif len(code) == 1 and toks[code[0]].kind == "num":
+        null_ty = "DOUBLE" if "." in toks[code[0]].text else "BIGINT"
+    elif (
+        len(code) == 1
+        and toks[code[0]].kind == "word"
+        and toks[code[0]].upper in ("TRUE", "FALSE")
+    ):
+        null_ty = "BOOLEAN"
+    elif (
+        len(code) == 2
+        and toks[code[0]].upper in ("DATE", "TIMESTAMP")
+        and toks[code[1]].kind == "str"
+    ):
+        null_ty = toks[code[0]].upper
+    if null_ty is None:
+        return None
+    _splice(toks, i, close + 1, f"CAST(NULL AS {null_ty})")
+    return i + 1
+
+
+def _call_parse_url(toks, i, j, close, args):
+    """parse_url: an invalid literal part is an error like the
+    reference's (string-functions-ir.cc "Invalid URL part"); parts are
+    case-sensitive UPPERCASE.  The call goes to the reference-scanner
+    kernels (util/url-parser.cc): Java's URI-based parse_url rejects
+    'htt@p' protocols, multiple '@', trailing spaces — the reference's
+    ://-search scanner accepts them (expr-test.cc:5073-5347)."""
+    if len(args) >= 2:
+        p_i = _next_code(toks, args[1][0])
+        if p_i < close and toks[p_i].kind == "str":
+            part = toks[p_i].text[1:-1]
+            if part not in (
+                "PROTOCOL", "HOST", "PATH", "REF", "AUTHORITY",
+                "FILE", "USERINFO", "QUERY",
+            ):
+                raise ValueError(f"Invalid URL part: {part}")
+    if len(args) not in (2, 3):
+        return None
+    toks[i] = Tok("word", f"parse_url{len(args)}")
+    return j + 1
+
+
+def _call_parse_format(toks, i, j, close, args):
+    """2-arg parse formats: Impala's SimpleDateFormat timezone-offset
+    tokens +hh:mm / +hhmm / +hh (datetime-simple-date-format-parser;
+    expr-test.cc:7640-7706 — the offset is parsed and APPLIED) map to
+    Java's XXX / xx / x, and a bare 'T' literal must be quoted for Java's
+    parser (:7628).  The name itself is Spark's."""
+    if len(args) != 2:
+        return None
+    f_i = _next_code(toks, args[1][0])
+    if not (f_i < close and toks[f_i].kind == "str"):
+        return None
+    body = toks[f_i].text[1:-1]
+    # trailing-input lenience: the reference's parser walks PATTERN
+    # tokens only — input past the pattern is never examined
+    # (datetime-simple-date-format-parser.cc:406-416 ParseDateTime
+    # iterates dt_ctx.toks; expr-test.cc:7628 pins
+    # unix_timestamp('2038/01/19T03:14:08+01:00', 'yyyy/MM/ddTHH:mm:ss')
+    # = 2147483648).  Java's parser rejects leftover input, so for a
+    # FIXED-WIDTH pattern (only 2/4-char unit tokens + separators —
+    # single-char units scan ahead and are not fixed) truncate the input
+    # to the pattern length.  Quote chars in the body mean a prior pass
+    # already ran (T-quoting) — skip for idempotency; a bytesubstr3()
+    # first arg means this pass ran.  The byte kernel (not substr)
+    # because the reference parser walks C char pointers — pattern length
+    # counts BYTES.
+    a0_i = _next_code(toks, args[0][0])
+    if (
+        re.fullmatch(r"(?:yyyy|MM|dd|HH|mm|ss|T|[^A-Za-z'])+", body)
+        and not (
+            a0_i < close
+            and toks[a0_i].kind == "word"
+            and toks[a0_i].text.lower() == "bytesubstr3"
+        )
+    ):
+        s0, e0 = args[0]
+        inner = _span_sql(toks, args[0])
+        # pattern length in BYTES, not chars — the separator class admits
+        # non-ASCII (multi-byte UTF-8) separators and the kernel counts
+        # bytes
+        blen = len(body.encode("utf-8"))
+        n = _splice(toks, s0, e0, f"bytesubstr3({inner}, 1, {blen})")
+        f_i += n - (e0 - s0)  # the format literal moves with the splice
+    quote = toks[f_i].text[0]
+    new_body = re.sub(r"[+-]hh:mm", "XXX", body)
+    new_body = re.sub(r"[+-]hhmm", "xx", new_body)
+    new_body = re.sub(r"[+-]hh(?![hm])", "x", new_body)
+    # the quoted 'T' must itself be escaped inside a single-quoted SQL
+    # literal
+    t_quoted = "''T''" if quote == "'" else "'T'"
+    new_body = re.sub(r"(?<!')T(?!')", t_quoted, new_body)
+    if new_body != body:
+        toks[f_i] = Tok("str", f"{quote}{new_body}{quote}")
+    return None
+
+
+def _call_utc_timestamp(toks, i, j, close, args):
+    """from_utc_timestamp/to_utc_timestamp with an UNKNOWN literal
+    timezone return the input unchanged + a warning (timezone_db lookup
+    failure, timestamp-functions.cc; expr-test pins
+    from_utc_timestamp(ts, 'FOOBAR') = ts); Spark throws
+    INVALID_TIMEZONE."""
+    if len(args) != 2:
+        return None
+    tz_i = _next_code(toks, args[1][0])
+    if (
+        tz_i < close
+        and toks[tz_i].kind == "str"
+        and not _tz_known(toks[tz_i].text[1:-1])
+    ):
+        return i + _splice(toks, i, close + 1, f"({_span_sql(toks, args[0])})")
+    return None
+
+
+def _call_width_bucket(toks, i, j, close, args):
+    """width_bucket over DECIMAL args computes in exact int128/256
+    arithmetic (math-functions-ir.cc WidthBucketImpl); Spark's native
+    double math misbuckets near 1e38 — route decimal-typed / huge-literal
+    calls to the exact kernel, keep plain numeric calls (the hot path) on
+    the native."""
+    if len(args) != 4:
+        return None
+
+    def _needs_precise(sp):
+        if _decimal_ps(_static_type(toks, *sp)) is not None:
+            return True
+        lc = [k for k in range(*sp) if _is_code(toks[k])]
+        lit = None
+        if len(lc) == 1 and toks[lc[0]].kind == "num":
+            lit = toks[lc[0]].text
+        elif (
+            len(lc) == 2
+            and toks[lc[0]].text == "-"
+            and toks[lc[1]].kind == "num"
+        ):
+            lit = toks[lc[1]].text
+        return lit is not None and len(lit.replace(".", "")) > 15
+
+    if not any(_needs_precise(sp) for sp in args[:3]):
+        return None
+    a = [_span_sql(toks, sp) for sp in args]
+    return i + _splice(toks, i, close + 1, (
+        f"wb_precise(CAST({a[0]} AS STRING), "
+        f"CAST({a[1]} AS STRING), CAST({a[2]} AS STRING), "
+        f"{a[3]})"
+    ))
+
+
+def _call_typeof(toks, i, j, close, args):
+    """typeof folds what Spark answers differently: an INTEGER LITERAL's
+    smallest-fit type (fe LiteralExpr: 1 is TINYINT, 128 SMALLINT, ...),
+    a CAST's declared CHAR/VARCHAR (Spark erases both to STRING at
+    runtime) and typeof(NULL), which is BOOLEAN (NullLiteral's type).
+    Any other typeof is upper-cased: Impala renders type names UPPERCASE
+    ('DECIMAL(2,1)', 'STRING' — fe ScalarType.toSql); Spark's typeof
+    prints lowercase."""
+    if len(args) != 1:
+        return None
+    code = [k for k in range(*args[0]) if _is_code(toks[k])]
+    ty = _static_type(toks, *args[0])
+    if [toks[k].upper for k in code] == ["NULL"]:
+        ty = "BOOLEAN"
+    elif ty in _INT_WIDTH_TYPES:
+        if toks[code[0]].upper == "CAST":
+            ty = None  # Spark names a CAST's int type itself
+    elif not (ty or "").startswith(("CHAR(", "VARCHAR(")):
+        ty = None
+    if ty is not None:
+        _splice(toks, i, close + 1, f"'{ty}'")
+        return i + 1
+    # Skip when already wrapped (idempotency: the ts-range guard emits
+    # upper(typeof(...)) directly, and translate() may re-run over its
+    # own output, e.g. for stored view bodies).
+    prev_p = _prev_code(toks, i - 1)
+    if prev_p >= 0 and toks[prev_p].text == "(":
+        prev_f = _prev_code(toks, prev_p - 1)
+        if prev_f >= 0 and toks[prev_f].text.lower() == "upper":
+            return None
+    # pre-rewrite the ARGUMENT (paren part only — re-running over the
+    # typeof name itself would recurse) so dialect contracts inside
+    # typeof probes are visible
+    inner = "typeof" + _translated_sql(toks, (j, close + 1))
+    return i + _splice(toks, i, close + 1, f"upper({inner})")
+
+
+def _call_fmod(toks, i, j, close, args):
+    """fmod is the FLOAT/DOUBLE modulo kernel (math-functions-ir.cc
+    FmodFloat/FmodDouble; impala_functions.py:380-381 — only floating
+    signatures exist), so the result type is always floating: cast both
+    args to DOUBLE before Spark's mod, which would otherwise return
+    DECIMAL for decimal literals."""
+    if len(args) != 2:
+        return None
+    a, b = _span_sql(toks, args[0]), _span_sql(toks, args[1])
+    _splice(
+        toks, i, close + 1,
+        f"mod(CAST(({a}) AS DOUBLE), CAST(({b}) AS DOUBLE))",
+    )
+    return i + 1
+
+
+def _call_months_keep_last_day(toks, i, j, close, args):
+    """Month arithmetic with the keep-last-day contract (see
+    _MONTHS_KEEP_LAST_DAY)."""
+    if len(args) != 2:
+        return None
+    x, n = _span_sql(toks, args[0]), _span_sql(toks, args[1])
+    sign = _MONTHS_KEEP_LAST_DAY[toks[i].text.lower()]
+    # month-count cap: see _call_date_unit
+    gn = f"(CASE WHEN abs(CAST(({n}) AS BIGINT)) <= 240001 THEN ({n}) END)"
+    rd = f"(({x}) + make_interval(0, {sign}{gn}))"
+    _splice(toks, i, close + 1, _ts_range_guard(
+        f"(CASE WHEN day({x}) = day(last_day({x})) "
+        f"THEN {rd} + make_interval(0, 0, 0, "
+        f"datediff(last_day({rd}), DATE({rd}))) "
+        f"ELSE {rd} END)",
+        date_aware=True,
+    ))
+    return i + 1
+
+
+def _call_truncate(toks, i, j, close, args):
+    """truncate/dtrunc/trunc are three aliases of BOTH the numeric
+    truncate-toward-zero (1-2 args, impala_functions.py:350,481-486) and
+    the Oracle-style datetime trunc (string unit second arg).  Dispatch on
+    the second argument's shape: string literal → Spark's native date
+    trunc; otherwise → the registered numeric truncate, defaulting the
+    scale to 0 for the 1-arg form."""
+    if len(args) == 2 and toks[_next_code(toks, args[1][0])].kind == "str":
+        # Datetime trunc: the reference accepts the full Oracle unit set
+        # (udf-builtins.cc StrToTruncUnit) and returns TIMESTAMP.  Spark's
+        # native trunc() covers only year/quarter/month and demotes to
+        # DATE; route through date_trunc(unit, ts) (TIMESTAMP-preserving)
+        # via a unit table.  DAY/DY/D = start of week, Monday in both the
+        # reference and Spark's 'WEEK'.  WW/W (same weekday as Jan 1 / 1st
+        # of month) have no Spark unit — synthesized with day arithmetic.
+        # Unknown units raise in the reference; leave the call unrewritten
+        # so Spark raises rather than silently returning NULL.
+        unit = toks[_next_code(toks, args[1][0])].text[1:-1].upper()
+        a1 = _span_sql(toks, args[0])
+        # the reference's DATE overloads of trunc/date_trunc keep DATE
+        # (impala_functions.py); Spark's date_trunc always returns
+        # TIMESTAMP — wrap provably-DATE arguments back
+        is_date_arg = _static_type(toks, *args[0]) == "DATE"
+        if unit in ("MILLENNIUM", "CENTURY", "DECADE"):
+            _splice(toks, i, close + 1, _era_trunc_sql(a1, unit, is_date_arg))
+            return i + 1
+        if unit in _TRUNC_UNITS:
+            repl = f"date_trunc('{_TRUNC_UNITS[unit]}', {a1})"
+        elif unit in ("WW", "W"):
+            anchor = (
+                f"make_date(year({a1}), 1, 1)"
+                if unit == "WW"
+                else f"make_date(year({a1}), month({a1}), 1)"
+            )
+            repl = (
+                f"timestampadd(DAY, "
+                f"-((datediff(DATE(({a1})), {anchor})) % 7)"
+                f", date_trunc('DAY', {a1}))"
+            )
+        else:
+            return i + 1
+        if is_date_arg:
+            repl = f"DATE({repl})"
+        _splice(toks, i, close + 1, repl)
+        return i + 1
+    ps = _decimal_ps(_static_type(toks, *args[0]))
+    d = _int_literal_value(toks, args[1]) if len(args) == 2 else 0
+    toks[i] = Tok("word", "truncate")
+    if len(args) == 1:
+        close += _splice(toks, close, close, ", 0")
+    if ps is not None and d is not None:
+        # DECIMAL_V2 result typing: no carry digit, truncation can't
+        # round up (expr-test.cc:8963-8970)
+        return _cast_decimal_result(toks, i, close, ps, d, 0) or i + 1
+    return i + 1
+
+
+def _call_regexp_replace(toks, i, j, close, args):
+    """regexp_replace: the reference's rewrite strings use RE2 \\N
+    backreferences (string-functions-ir.cc RegexpReplace); Java's
+    Matcher.replaceAll wants $N and treats \\1 as an escaped literal.
+    Convert literal third arguments; the name itself is Spark's."""
+    if len(args) != 3:
+        return None
+    a3 = _next_code(toks, args[2][0])
+    if a3 < close and toks[a3].kind == "str":
+        inner = toks[a3].text[1:-1]
+        # RE2 rewrite strings treat '$' as a literal; Java's
+        # Matcher.replaceAll treats it as the group sigil ('price: $'
+        # throws, '$1' silently substitutes group 1). Escape literal '$'
+        # FIRST, so the '$N' forms the backref conversion emits next stay
+        # live.
+        converted = inner.replace("$", r"\\$")
+        converted = re.sub(r"\\\\(\d)", r"$\1", converted)
+        converted = re.sub(r"\\(\d)", r"$\1", converted)
+        if converted != inner:
+            toks[a3] = Tok("str", _single_quoted(converted))
+    return None
+
+
+def _call_pmod(toks, i, j, close, args):
+    """pmod: ((a % b) + b) % b for every sign combination
+    (math-functions-ir.cc PmodBigInt:436-440) — negative divisors yield a
+    negative result (pmod(3,-5) = -2).  Spark's pmod only normalizes when
+    the remainder is negative (pmod(3,-5) = 3)."""
+    if len(args) != 2:
+        return None
+    a, b = _span_sql(toks, args[0]), _span_sql(toks, args[1])
+    _splice(toks, i, close + 1, f"((({a}) % ({b}) + ({b})) % ({b}))")
+    return i + 1
+
+
+def _call_greatest_least(toks, i, j, close, args):
+    """greatest/least: the reference returns NULL when ANY argument is
+    NULL (math-functions-ir.cc LeastGreatest:619-622); Spark's
+    greatest/least skip NULLs.  Rewrite to a null guard over
+    array_max/array_min.  Each argument is spliced exactly ONCE: the
+    single array literal is bound to a transform() lambda variable, so
+    nondeterministic arguments (rand(), uuid()) and expensive scalar
+    subqueries evaluate once, and no greatest( text remains for the
+    rewrite pass to re-match."""
+    if not args:
+        return None
+    arr = ", ".join(f"({_span_sql(toks, sp)})" for sp in args)
+    fn = "array_max" if toks[i].text.lower() == "greatest" else "array_min"
+    _splice(toks, i, close + 1, (
+        f"element_at(transform(array(array({arr})), "
+        f"__hs_a -> CASE WHEN exists(__hs_a, __hs_x -> "
+        f"__hs_x IS NULL) THEN NULL ELSE {fn}(__hs_a) END), 1)"
+    ))
+    return i + 1
+
+
+def _call_extract(toks, i, j, close, args):
+    """extract(ts, 'unit') — Impala's two-arg form takes the SOURCE first
+    (timestamp-functions-ir.cc; grammar sql-parser.cup also accepts
+    extract(unit FROM ts), which Spark shares).  Spark's two-arg extract
+    wants the field first; swap, and cast to BIGINT (Impala
+    extract/date_part return BIGINT, Spark INT).  The swapped form has a
+    string literal first, so it never re-matches."""
+    name = toks[i].text.lower()
+    if len(args) == 2:
+        first_i = _next_code(toks, args[0][0])
+        second_i = _next_code(toks, args[1][0])
+        a1, a2 = _span_sql(toks, args[0]), _span_sql(toks, args[1])
+        if name == "extract" and toks[first_i].kind != "str":
+            field, src = a2, a1
+        elif (
+            name == "extract"
+            and toks[first_i].kind == "str"
+            and second_i < close
+            and toks[second_i].kind == "str"
+            and toks[second_i].text[1:-1].upper() in _EXTRACT_UNITS
+        ):
+            # extract('<ts string>', 'unit'): the first argument is the
+            # implicit-cast timestamp (udf-builtins.cc Extract;
+            # expr-test.cc:7538)
+            field, src = a2, f"CAST({a1} AS TIMESTAMP)"
+        elif name == "date_part" and toks[first_i].kind == "str":
+            field, src = a1, a2
+        else:
+            return i + 1
+        _splice(toks, i, close + 1, _extract_sql(field, src))
+        return i + 1
+    if len(args) == 1 and name == "extract":
+        # extract(unit FROM ts) — grammar shared with Spark, but Impala
+        # returns BIGINT where Spark returns INT.  Emit the quoted-field
+        # two-arg form, which this pass never re-matches (string first
+        # argument).
+        inner = _span_sql(toks, (j + 1, close))
+        m = re.match(r"(?is)^(.+?)\bFROM\b(.+)$", inner)
+        if m:
+            field, src = m.group(1).strip(), m.group(2).strip()
+            _splice(toks, i, close + 1, _extract_sql(f"'{field}'", src))
+            return i + 1
+    return None
+
+
+def _int_precision(v: int) -> int:
+    """The digit capacity of the smallest integer type holding ``v``
+    (TINYINT 3, SMALLINT 5, INT 10, BIGINT 19)."""
+    return (
+        3 if -(2**7) <= v < 2**7 else
+        5 if -(2**15) <= v < 2**15 else
+        10 if -(2**31) <= v < 2**31 else 19
+    )
+
+
+def _call_precision_scale(toks, i, j, close, args):
+    """precision(x) / scale(x) — decimal type introspection (BuiltinsDb
+    precision/scale; analysis-time in the reference).  Integer types
+    report their digit capacity (TINYINT 3 ... BIGINT 19, scale 0 —
+    ColumnType.precision), decimals their declared (p, s); other types
+    NULL.  LITERAL arguments fold with the reference's smallest-fit /
+    text-derived typing; anything else parses Spark's typeof at runtime."""
+    name = toks[i].text.lower()
+    if len(args) == 1:
+        lc = [k for k in range(*args[0]) if _is_code(toks[k])]
+        neg = (
+            len(lc) == 2
+            and toks[lc[0]].text == "-"
+            and toks[lc[1]].kind == "num"
+        )
+        lit_tok = toks[lc[0]] if len(lc) == 1 else toks[lc[1]] if neg else None
+        if (
+            lit_tok is not None
+            and lit_tok.kind == "num"
+            and "e" not in lit_tok.text.lower()
+        ):
+            txt = lit_tok.text
+            if "." in txt:
+                digits = txt.replace(".", "").lstrip("0") or "0"
+                s_v = len(txt.split(".")[1])
+                p_v = max(len(digits), s_v)
+            else:
+                p_v = _int_precision(int(txt) * (-1 if neg else 1))
+                s_v = 0
+            out_v = p_v if name == "precision" else s_v
+            _splice(toks, i, close + 1, str(out_v))
+            return i + 1
+        # integer-literal ARITHMETIC folds with the analyzer's promotion:
+        # result = next wider int of the wider operand (precision(1 + 1)
+        # is 5 — TINYINT+TINYINT→SMALLINT, expr-test.cc:8955)
+        if (
+            len(lc) == 3
+            and toks[lc[0]].kind == "num"
+            and "." not in toks[lc[0]].text
+            and toks[lc[1]].text in ("+", "-", "*")
+            and toks[lc[2]].kind == "num"
+            and "." not in toks[lc[2]].text
+        ):
+            wider = max(
+                _int_precision(int(toks[lc[0]].text)),
+                _int_precision(int(toks[lc[2]].text)),
+            )
+            p_v = {3: 5, 5: 10, 10: 19, 19: 19}[wider]
+            out_v = p_v if name == "precision" else 0
+            _splice(toks, i, close + 1, str(out_v))
+            return i + 1
+    _splice(toks, close + 1, close + 1, "))")
+    # upper(typeof(...)) — the typeof-uppercase dialect pass recognizes
+    # the already-upper-wrapped form (idempotency)
+    return j + _splice(toks, i, i + 1, f"{name}_of(upper(typeof")
+
+
+def _call_aggif(toks, i, j, close, args):
+    """aggif(p, x) → max(CASE WHEN p THEN x END) — the reference's
+    conditional aggregate (BuiltinsDb.java:1188), defined for predicates
+    selecting one distinct value per group."""
+    if len(args) != 2:
+        return None
+    toks[i] = Tok("word", "max")
+    comma = _prev_code(toks, args[1][0] - 1)
+    _splice(toks, close, close, " END")
+    _splice(toks, comma, comma + 1, " THEN ")
+    _splice(toks, j + 1, j + 1, "CASE WHEN ")
+    return i + 1
+
+
+def _call_histogram(toks, i, j, close, args):
+    """histogram(x) → sorted comma-joined values — Impala's histogram
+    aggregate emits the sample values as a comma-separated string
+    (BuiltinsDb.java:1040; aggregate-functions-ir.cc Histogram)."""
+    toks[i] = Tok("word", "array_join")
+    _splice(toks, close, close, " AS STRING))), ', '")
+    return j + 1 + _splice(toks, j + 1, j + 1, "sort_array(collect_list(CAST(")
+
+
+def _kll_sketch_arg(toks, close, args) -> tuple[int, int, int] | None:
+    """The name, open and close paren of a ``ds_kll_sketch(…)`` call that
+    opens the first argument, or None."""
+    if not args:
+        return None
+    k = _next_code(toks, args[0][0])
+    if k < close and toks[k].text.lower() == "ds_kll_sketch":
+        o = _next_code(toks, k + 1)
+        if o < close and toks[o].text == "(":
+            return k, o, _matching_paren(toks, o)
+    return None
+
+
+def _call_ds_kll_quantile(toks, i, j, close, args):
+    """ds_kll_quantile(ds_kll_sketch(x), q) → percentile(x, q): the KLL
+    sketch→quantile composition collapses to the exact percentile
+    (BuiltinsDb ds_kll_sketch:1420, datasketches-functions-ir.cc)."""
+    sk = _kll_sketch_arg(toks, close, args) if len(args) == 2 else None
+    if sk is None:
+        return None
+    # CAST to FLOAT: the reference returns FloatVal (DsKllQuantile,
+    # datasketches-functions-ir.cc:240)
+    _splice(toks, close + 1, close + 1, " AS FLOAT)")
+    for k in reversed(sk):
+        del toks[k]
+    return i + _splice(toks, i, i + 1, "CAST(percentile")
+
+
+def _call_ds_kll_rank(toks, i, j, close, args):
+    """ds_kll_rank(ds_kll_sketch(x), v) → avg(CAST(x < v AS DOUBLE)): the
+    sketch→rank composition collapses to the exact normalized rank
+    (DataSketches KLL get_rank = fraction of items < v)."""
+    sk = _kll_sketch_arg(toks, close, args) if len(args) == 2 else None
+    if sk is None:
+        return None
+    comma = _prev_code(toks, args[1][0] - 1)
+    _splice(toks, close, close, " AS DOUBLE)")
+    _splice(toks, comma, comma + 1, " < ")
+    del toks[sk[0]]
+    return i + _splice(toks, i, i + 1, "avg(CAST")
+
+
+def _call_ds_kll_n(toks, i, j, close, args):
+    """ds_kll_n(ds_kll_sketch(x)) → count(x): the sketch's stream length
+    is exactly the non-null count."""
+    sk = _kll_sketch_arg(toks, close, args) if len(args) == 1 else None
+    if sk is None:
+        return None
+    for k in reversed(sk):
+        del toks[k]
+    toks[i] = Tok("word", "count")
+    return i + 1
+
+
+def _call_ds_kll_render(toks, i, j, close, args):
+    """ds_kll_*_as_string / ds_kll_stringify — the DataSketches STRING
+    RENDERINGS (datasketches-functions-ir.cc DsKllQuantilesAsString:284,
+    GetDsKllPMFOrCDF:304, DsKllStringify:337).  The sketch→render
+    compositions collapse to exact aggregates formatted with
+    ds_format_value (C++ stream "%.6g" — the formatting the reference
+    inherits from std::stringstream).  NULL on an empty sketch, like the
+    reference, falls out of concat()'s null propagation (min/avg/
+    percentile over zero rows are NULL)."""
+    name = toks[i].text.lower()
+    sk = _kll_sketch_arg(toks, close, args)
+    if sk is None or (len(args) < 2 and name != "ds_kll_stringify"):
+        return None
+    x = _span_sql(toks, (sk[1] + 1, sk[2]))
+    ps = [_span_sql(toks, sp) for sp in args[1:]]
+    _splice(toks, i, close + 1, _ds_kll_render_sql(name, x, ps))
+    return i + 1
+
+
+def _call_ds_hll_bounds(toks, i, j, close, args):
+    """ds_hll_estimate_bounds_as_string (datasketches-functions-ir.cc
+    DsHllEstimateBoundsAsString:54), rendered like the ds_kll ones."""
+    if len(args) not in (1, 2):
+        return None
+    sk = _span_sql(toks, args[0])
+    kappa = 2  # DS_DEFAULT_KAPPA (datasketches-common.h:45)
+    if len(args) == 2:
+        ktext = _span_sql(toks, args[1])
+        try:
+            kappa = int(ktext)
+        except ValueError as exc:
+            raise ValueError(
+                "No matching function with signature: "
+                f"ds_hll_estimate_bounds_as_string(STRING, {ktext})"
+            ) from exc
+        if kappa not in (1, 2, 3):
+            raise ValueError("Kappa must be 1, 2 or 3")
+    # lgK = 12 (DS_SKETCH_CONFIG, datasketches-common.h:43) ⇒ HLL
+    # relative standard error ≈ 1.04/sqrt(2^12).  The library bounds are
+    # slightly asymmetric; est/(1±κ·rse) is the documented approximation
+    # (FUNCTIONS.md).
+    rse = 1.04 / 64.0
+    est = f"CAST(hll_sketch_estimate({sk}) AS DOUBLE)"
+    _splice(toks, i, close + 1, (
+        f"concat(ds_format_value({est}), ',', ds_format_value("
+        f"{est} / {1 + kappa * rse!r}), ',', ds_format_value("
+        f"{est} * {1 + kappa * rse!r}))"
+    ))
+    return i + 1
+
+
+def _call_regexp_like(toks, i, j, close, args):
+    """regexp_like(s, pat, 'flags') → rlike(s, concat('(?flags)', pat))
+    when the flags are a literal made of Impala's i (case-insensitive), m
+    (multi-line) and n (newline-matches-dot, Java's s) alone
+    (string-functions-ir.cc).  Any other flags — c, whose order against i
+    decides, an illegal letter, or a runtime value — go to the
+    NULL-propagating validating kernel regexp_like3."""
+    if len(args) != 3:
+        return None
+    f = _next_code(toks, args[2][0])
+    if (
+        toks[f].kind == "str"
+        and _next_code(toks, f + 1) == close
+        and set(toks[f].text[1:-1]) <= set("imn")
+    ):
+        flags = toks[f].text[1:-1].replace("n", "s")
+        comma2 = _prev_code(toks, args[2][0] - 1)
+        del toks[comma2:close]
+        toks.insert(comma2, Tok("op", ")"))
+        _splice(toks, args[1][0], args[1][0], f" concat('(?{flags})', ")
+        toks[i] = Tok("word", "rlike")
+    else:
+        toks[i] = Tok("word", "regexp_like3")
+    return i + 1
+
+
+#: the date_trunc units Spark's date_trunc accepts
+_SPARK_TRUNC_UNITS = {
+    "YEAR", "YYYY", "YY", "QUARTER", "MONTH", "MM", "MON", "WEEK", "DAY",
+    "DD", "HOUR", "MINUTE", "SECOND", "MILLISECOND", "MICROSECOND",
+}
+
+
+def _call_date_trunc(toks, i, j, close, args):
+    """date_trunc(unit, x): the DATE overload returns DATE in the
+    reference; Spark's always returns TIMESTAMP — wrap back."""
+    if len(args) != 2:
+        return None
+    u_i = _next_code(toks, args[0][0])
+    if u_i < close and toks[u_i].kind == "str":
+        unit = toks[u_i].text[1:-1].upper()
+        # the reference spells sub-second units PLURAL ONLY (udf-builtins.cc
+        # StrToDateTruncUnit "milliseconds"/"microseconds"); Spark accepts
+        # the singular — map.
+        if unit in ("MILLISECONDS", "MICROSECONDS"):
+            unit = unit[:-1]
+            toks[u_i] = Tok("str", f"'{unit}'")
+        if unit in ("MILLENNIUM", "CENTURY", "DECADE"):
+            x = _span_sql(toks, args[1])
+            is_date = _static_type(toks, *args[1]) == "DATE"
+            _splice(toks, i, close + 1, _era_trunc_sql(x, unit, is_date))
+            return i + 1
+        if unit not in _SPARK_TRUNC_UNITS:
+            # the reference raises on unknown units (udf-builtins.cc
+            # StrToTruncUnit); Spark NULLs
+            raise ValueError(f"Invalid Date/Time Unit: {toks[u_i].text}")
+    prev = _prev_code(toks, i - 1)
+    inside_date = (
+        prev >= 0
+        and toks[prev].text == "("
+        and _prev_code(toks, prev - 1) >= 0
+        and toks[_prev_code(toks, prev - 1)].upper == "DATE"
+    )
+    if (
+        _static_type(toks, *args[1]) == "DATE"
+        and not inside_date
+        and not _in_guard_context(toks, i)
+    ):
+        _splice(toks, i, close + 1, f"DATE({_span_sql(toks, (i, close + 1))})")
+        return i + 2  # step past DATE( so the inner call isn't re-seen
+    return None
+
+
+def _call_get_json_object(toks, i, j, close, args):
+    """get_json_object: the reference's JSON-path parser skips whitespace
+    around structural tokens (' $ . abc [ 2 ] ' works — expr-test
+    get_json_object rows); Spark's requires a compact path.  Normalize
+    LITERAL paths by stripping whitespace."""
+    if len(args) != 2:
+        return None
+    pc = [k for k in range(*args[1]) if _is_code(toks[k])]
+    if len(pc) != 1 or toks[pc[0]].kind != "str":
+        return None
+    raw = toks[pc[0]].text
+    quote, body = raw[0], raw[1:-1]
+    compact = "".join(body.split())
+    if compact != body:
+        toks[pc[0]] = Tok("str", f"{quote}{compact}{quote}")
+    if "*" not in compact:
+        return None
+    # wildcard steps ($.* / [*]) — Spark's native get_json_object lacks
+    # the object wildcard and renders multi-matches differently; route to
+    # the BFS kernel (string-functions.cc GetJsonObjectImpl)
+    toks[i] = Tok("word", "gjo_wild")
+    return j + 1
+
+
+def _call_mask(toks, i, j, close, args):
+    """mask family (mask-functions-ir.cc):
+      * the char position arg n defaults to 4 in 1-arg mask_*_n;
+      * char arguments may be INT CODEPOINTS (65 -> 'A'); -1 means KEEP
+        the class (maskchars handles the '-1' sentinel);
+      * NUMERIC first arguments mask digits with '1' (or the 6th "number
+        char" argument) and keep an integer result;
+      * plain mask() gains the 6-arg form Spark lacks."""
+    name = toks[i].text.lower()
+    is_n_form = name != "mask"
+    char_args = args[2:] if is_n_form else args[1:]
+    # a provably-NULL first argument passes through typed
+    # (mask(cast(NULL as DATE)) is NULL DATE — expr-test.cc:10605;
+    # Spark's mask raises on non-string types)
+    a0_up = " ".join(
+        toks[k].upper for k in range(*args[0]) if _is_code(toks[k])
+    )
+    if a0_up == "NULL" or (
+        a0_up.startswith("CAST ( NULL AS ") and len(args) == 1
+    ):
+        toks[i : close + 1] = toks[args[0][0] : args[0][1]]
+        return i + 1
+    # DATE overload (MaskImpl(DateVal)): day/month/year replacement args
+    # sit at positions 6..8 of the 9-arg form; the 1-arg form masks every
+    # component to the defaults (1, 0=January, 1)
+    if (
+        name == "mask"
+        and len(args) in (1, 9)
+        and _static_type(toks, *args[0]) == "DATE"
+    ):
+        a0 = _span_sql(toks, args[0])
+        if len(args) == 9:
+            dmy = [_span_sql(toks, sp) for sp in args[6:9]]
+        else:
+            dmy = ["1", "0", "1"]
+        return i + _splice(
+            toks, i, close + 1,
+            f"mask_date3(({a0}), {dmy[0]}, {dmy[1]}, {dmy[2]})",
+        )
+    is_numeric = _static_type(toks, *args[0]) in _INT_WIDTH_TYPES
+
+    def _char_arg(span):
+        code = [k for k in range(span[0], span[1]) if _is_code(toks[k])]
+        neg = (
+            len(code) == 2
+            and toks[code[0]].text == "-"
+            and toks[code[1]].kind == "num"
+        )
+        if neg:
+            return "'-1'"
+        if len(code) == 1 and toks[code[0]].kind == "num":
+            cp = int(float(toks[code[0]].text))
+            # codepoints beyond U+10FFFF can't be chr()'d; the reference's
+            # fast path assigns the masked codepoint to a BYTE
+            # (mask-functions-ir.cc MaskSubStr `result.ptr[i] =
+            # MaskTransform(...)`) — mirror the low-byte truncation
+            if cp > 0x10FFFF or cp < 0:
+                cp &= 0xFF
+            ch = chr(cp).replace("'", "''")
+            return f"'{ch}'"
+        return _span_sql(toks, span)
+
+    def _num_char_arg(span):
+        # the NUMBER mask argument is a digit VALUE in [0,9]
+        # (mask-functions-ir.cc getNumArg) — out-of-range or -1 falls back
+        # to the default 1; never a codepoint
+        code = [k for k in range(span[0], span[1]) if _is_code(toks[k])]
+        if len(code) == 1 and toks[code[0]].kind == "num":
+            v = int(float(toks[code[0]].text))
+            return f"'{v}'" if 0 <= v <= 9 else "'1'"
+        if (
+            len(code) == 1
+            and toks[code[0]].kind == "str"
+            and toks[code[0]].text[1:-1].isdigit()
+            and len(toks[code[0]].text) == 3
+        ):
+            return toks[code[0]].text
+        return "'1'"
+
+    needs_kernel = (
+        is_numeric
+        or len(char_args) >= 4  # other/number args present
+        or any(
+            _char_arg(sp).startswith("'")
+            and _span_sql(toks, sp) != _char_arg(sp)
+            for sp in char_args
+        )
+        or (is_n_form and len(args) == 1)
+    )
+    if needs_kernel and 1 <= len(args) <= (7 if is_n_form else 6):
+        chars = [_char_arg(sp) for sp in char_args]
+        num_char = (
+            _num_char_arg(char_args[4]) if len(char_args) >= 5 else "'1'"
+        )
+        u = chars[0] if len(chars) >= 1 else "'X'"
+        l = chars[1] if len(chars) >= 2 else "'x'"
+        d = chars[2] if len(chars) >= 3 else "'n'"
+        o = chars[3] if len(chars) >= 4 else "CAST(NULL AS STRING)"
+        a = _span_sql(toks, args[0])
+        src = f"CAST({a} AS STRING)" if is_numeric else f"({a})"
+        if is_numeric:
+            d = num_char
+        if is_n_form:
+            n_arg = (
+                _span_sql(toks, args[1])
+                if len(args) >= 2
+                else "4"  # MaskShowFirstN/MaskFirstN default
+            )
+            body = f"{name}6({src}, {n_arg}, {u}, {l}, {d}, {o})"
+        else:
+            body = f"maskchars({src}, {u}, {l}, {d}, {o})"
+        if is_numeric:
+            body = f"CAST({body} AS BIGINT)"
+        return i + _splice(toks, i, close + 1, body)
+    if is_n_form and 3 <= len(args) <= 6:
+        defaults = ["'X'", "'x'", "'n'", "CAST(NULL AS STRING)"]
+        pad = ", ".join(defaults[len(args) - 2 :])
+        if pad:
+            _splice(toks, close, close, f", {pad}")
+        toks[i] = Tok("word", name + "6")
+        return i + 1
+    return None
+
+
+def _call_distinct_from(toks, i, j, close, args):
+    """IS [NOT] DISTINCT FROM exposed as functions (BuiltinsDb
+    distinctfrom/notdistinct) → the <=> null-safe-equals operator."""
+    if len(args) != 2:
+        return None
+    comma = _prev_code(toks, args[1][0] - 1)
+    _splice(toks, comma, comma + 1, " <=> ")
+    if toks[i].text.lower() == "distinctfrom":
+        toks[i] = Tok("word", "not")
+        return i + 1
+    del toks[i]
+    return i
+
+
+def _call_sampled_ndv(toks, i, j, close, args):
+    """sampled_ndv(x, sample_rate) — the sampling knob has no Spark
+    analogue; the HLL estimate subsumes it.  Drop the second arg."""
+    if len(args) != 2:
+        return None
+    toks[i] = Tok("word", "approx_count_distinct")
+    comma = _prev_code(toks, args[1][0] - 1)
+    del toks[comma:close]
+    return i + 1
+
+
+#: width-typed bit kernels (bit-byte-functions-ir.cc: one instantiation
+#: per int width — rotation wraps within sizeof(T)*8, countset counts
+#: within the width, positions past the width are errors): (name,
+#: argument count) → kernel, which takes the width as an extra argument
+_WIDTH_KERNELS = {
+    ("rotateleft", 2): "rotl3",
+    ("rotateright", 2): "rotr3",
+    ("countset", 1): "countset1w",
+    ("countset", 2): "countset2w",
+    ("getbit", 2): "getbitw",
+    ("setbit", 2): "setbitw",
+    ("setbit", 3): "setbit4w",
+}
+
+
+def _call_width_kernel(toks, i, j, close, args):
+    """The width is the first argument's _static_type: CAST form, or
+    Impala's smallest-fit literal typing (LiteralExpr); columns fall back
+    to 64 (documented — this pass does not see column_types)."""
+    kernel = _WIDTH_KERNELS.get((toks[i].text.lower(), len(args)))
+    if kernel is None:
+        return None
+    width = _INT_WIDTH_TYPES.get(_static_type(toks, *args[0]), 64)
+    toks[i] = Tok("word", kernel)
+    _splice(toks, close, close, f", {width}")
+    return i + 1
+
+
+def _call_abs(toks, i, j, close, args):
+    """abs() PROMOTES the integer argument's type (IMPALA-4513,
+    impala_functions.py Abs signatures: TINYINT→SMALLINT, SMALLINT→INT,
+    INT→BIGINT) so abs(INT_MIN) cannot overflow; Spark keeps the input
+    type.  Promote the provably-int shapes (CAST form / smallest-fit
+    literals); other types unchanged."""
+    if len(args) != 1:
+        return None
+    w = _INT_WIDTH_TYPES.get(_static_type(toks, *args[0]))
+    if w in (8, 16, 32):
+        # width-named kernel promotes BEFORE abs (abs(TINYINT -128) must
+        # be 128 in SMALLINT, not the wrapped -128)
+        toks[i] = Tok("word", f"abs{w}")
+    elif w == 64:
+        # BIGINT has no wider int to promote into: the reference NULLs the
+        # one unrepresentable input (INT64_MIN), Spark wraps — abs64
+        # kernel pins the NULL
+        toks[i] = Tok("word", "abs64")
+    return i + 1
+
+
+def _call_shift(toks, i, j, close, args):
+    """Width-typed shifts (bit-byte-functions-ir.cc ShiftLeftImpl /
+    ShiftRightLogicalImpl): the C++ result truncates back to the
+    argument's int width (shiftleft(TINYINT 1, 8) is 0, not 256), right
+    shift is LOGICAL within that width (shiftright(cast(-1 as INT), 1) =
+    0x7FFFFFFF, expr-test.cc:9947), and a NEGATIVE count shifts the other
+    way (:9951-9952).  Routed to the shl3/shr3 kernels for provable
+    widths; unprovable args keep Spark's native shift."""
+    if len(args) != 2:
+        return None
+    ty = _static_type(toks, *args[0])
+    w = _INT_WIDTH_TYPES.get(ty)
+    if w is None:
+        return None
+    a = _translated_sql(toks, args[0])
+    n_arg = _translated_sql(toks, args[1])
+    kern = "shl3" if toks[i].text.lower() == "shiftleft" else "shr3"
+    return i + _splice(
+        toks, i, close + 1,
+        f"CAST({kern}(CAST(({a}) AS BIGINT), {n_arg}, {w}) AS {ty})",
+    )
+
+
+def _call_regexp_extract(toks, i, j, close, args):
+    """Group index past the pattern's capture count (or negative) → empty
+    string (RegexpExtract:976-998; Spark raises INVALID_PARAMETER_VALUE).
+    Foldable at translate time when pattern and index are literals — the
+    common form; dynamic patterns keep Spark's native behavior
+    (documented delta)."""
+    if len(args) != 3:
+        return None
+    pat_toks = [tk for tk in toks[args[1][0] : args[1][1]] if _is_code(tk)]
+    s0, e0 = args[2]
+    # unwrap CAST(<intlit> AS <int type>) around the index (expr-test.cc:4888
+    # uses cast(2 as bigint))
+    c = _parse_cast(toks, _next_code(toks, s0))
+    if (
+        c is not None
+        and _next_code(toks, c.close + 1) >= e0
+        and c.fmt is None
+        and c.ty in _INT_WIDTH_TYPES
+    ):
+        s0, e0 = c.open + 1, c.as_
+    idx_toks = [tk for tk in toks[s0:e0] if _is_code(tk)]
+    neg = (
+        len(idx_toks) == 2
+        and idx_toks[0].text == "-"
+        and idx_toks[1].kind == "num"
+    )
+    if not (len(pat_toks) == 1 and pat_toks[0].kind == "str" and (
+        neg or (len(idx_toks) == 1 and idx_toks[0].kind == "num")
+    )):
+        return None
+    try:
+        idx = -int(idx_toks[1].text) if neg else int(idx_toks[0].text)
+    except ValueError:
+        return None
+    if 0 <= idx <= _count_capture_groups(pat_toks[0].text[1:-1]):
+        return None
+    subj = _span_sql(toks, args[0])
+    _splice(toks, i, close + 1, (
+        f"CASE WHEN ({subj}) IS NULL THEN CAST(NULL AS STRING) ELSE '' END"
+    ))
+    return i + 1
+
+
+#: calls that pick a registered kernel by argument count alone: (name,
+#: argument count) → (kernel, arguments appended to reach its arity)
+_ARITY_KERNELS = {
+    # factorial: the reference computes n<=1 as 1 (incl. negatives) and
+    # ERRORS past 20 ("too large for BIGINT"); Spark's native NULLs both
+    ("factorial", 1): ("factorial_k", ""),
+    # 2-arg ltrim/rtrim/btrim: the reference's order is (src, chars) while
+    # Spark's builtin 2-arg form is (trimStr, str) — the swapping kernels
+    # (which also pin NULL-chars → src unchanged, expr-test.cc:4511/4524)
+    ("ltrim", 2): ("ltrim2", ""),
+    ("rtrim", 2): ("rtrim2", ""),
+    ("btrim", 2): ("btrim2", ""),
+    # conv with digit validation (ConvString: invalid digit for the source
+    # base -> NULL; Spark parses the valid prefix to '0')
+    ("conv", 3): ("conv3", ""),
+    # regexp_match_count 3/4-arg forms (Spark temp functions cannot
+    # overload arity)
+    ("regexp_match_count", 3): ("regexp_match_count3", ""),
+    ("regexp_match_count", 4): ("regexp_match_count4", ""),
+    # from_unixtime: out-of-range epoch seconds -> NULL (the TIMESTAMP
+    # valid-range contract applied to the epoch producer); values
+    # unchanged in range
+    ("from_unixtime", 1): ("from_unixtime1", ""),
+    ("from_unixtime", 2): ("from_unixtime2", ""),
+    # unhex returns STRING in Impala (string-functions-ir.cc) and
+    # validates: odd length / non-hex chars give the EMPTY string (the
+    # kernel also does the BINARY->STRING cast Spark needs)
+    ("unhex", 1): ("unhex1", ""),
+    # chr: out-of-[0,255] → empty string (Chr:1338-1343; Spark wraps the
+    # codepoint mod 256 instead)
+    ("chr", 1): ("chr1", ""),
+    # negative target length → NULL (string-functions-ir.cc
+    # Lpad/Rpad:192-225: `len.val < 0` returns null; Spark's lpad/rpad
+    # return '' instead)
+    ("lpad", 3): ("lpad3", ""),
+    ("rpad", 3): ("rpad3", ""),
+    # empty delimiter → the whole string (SplitPart:1374; Spark returns
+    # ''); field 0 still errors in both engines
+    ("split_part", 3): ("split_part3", ""),
+    # isnull(a, b) is nvl(a, b); 1-arg isnull is Spark's
+    ("isnull", 2): ("nvl", ""),
+    # instr 3/4-arg → the position/occurrence window kernel (2-arg stays
+    # native; string-functions-ir.cc Instr:788-846)
+    ("instr", 3): ("instr4", ", 1"),
+    ("instr", 4): ("instr4", ""),
+}
+
+
+def _call_arity_kernel(toks, i, j, close, args):
+    row = _ARITY_KERNELS.get((toks[i].text.lower(), len(args)))
+    if row is None:
+        return None
+    toks[i] = Tok("word", row[0])
+    _splice(toks, close, close, row[1])
+    return i + 1
+
+
+def _call_append_arg(toks, i, j, close, args):
+    new, extra = _FN_APPEND_ARG[toks[i].text.lower()]
+    toks[i] = Tok("word", new)
+    _splice(toks, close, close, f", {extra}")
+    return i + 1
+
+
+def _call_default_arg(toks, i, j, close, args):
+    new, default = _FN_DEFAULT_ARG[toks[i].text.lower()]
+    toks[i] = Tok("word", new)
+    if len(args) == 1:
+        _splice(toks, close, close, f", {default}")
+    return i + 1
+
+
+def _call_ignore_nulls(toks, i, j, close, args):
+    """Impala puts IGNORE NULLS INSIDE the analytic call's parens —
+    ``last_value(x ignore nulls)`` (grammar sql-parser.cup:3729
+    ``expr_list KW_IGNORE KW_NULLS``) — where Spark wants it after:
+    ``last_value(x) IGNORE NULLS``.  The reference accepts it only on
+    first_value/last_value (AnalyticExpr.java:446-449); lag/lead here are
+    a harmless SUPERSET — Impala would reject the spelling, Spark
+    evaluates it meaningfully."""
+    p_nulls = _prev_code(toks, close - 1)
+    p_ignore = _prev_code(toks, p_nulls - 1) if p_nulls > j else -1
+    if (
+        p_ignore > j
+        and toks[p_nulls].upper == "NULLS"
+        and toks[p_ignore].upper == "IGNORE"
+    ):
+        del toks[p_ignore:close]
+        _splice(toks, p_ignore + 1, p_ignore + 1, " IGNORE NULLS")
+    return None
+
+
+#: lower-case function name → handler(toks, i, j, close, args) for a call
+#: whose name is at toks[i], its '(' at j and ')' at close; args are the
+#: argument spans (_split_args).  The handler returns the index the walk
+#: goes on from, or None to fall through to the renames.
+_CALLS: dict[str, Callable[
+    [list[Tok], int, int, int, list[tuple[int, int]]], int | None
+]] = {
+    **{name: _call_date_unit for name in _DATE_UNIT_FNS},
+    **{name: _call_months_keep_last_day for name in _MONTHS_KEEP_LAST_DAY},
+    **{name: _call_arity_kernel for name, _ in _ARITY_KERNELS},
+    **{name: _call_width_kernel for name, _ in _WIDTH_KERNELS},
+    **{name: _call_append_arg for name in _FN_APPEND_ARG},
+    **{name: _call_default_arg for name in _FN_DEFAULT_ARG},
+    **dict.fromkeys(("ln", "dlog1", "log10", "dlog10", "log2"), _call_c_log),
+    "log": _call_log,
+    "round": _call_round,
+    "dround": _call_round,
+    "mask_hash": _call_mask_hash,
+    "parse_url": _call_parse_url,
+    "unix_timestamp": _call_parse_format,
+    "to_timestamp": _call_parse_format,
+    "from_utc_timestamp": _call_utc_timestamp,
+    "to_utc_timestamp": _call_utc_timestamp,
+    "width_bucket": _call_width_bucket,
+    "typeof": _call_typeof,
+    "fmod": _call_fmod,
+    **dict.fromkeys(("truncate", "dtrunc", "trunc"), _call_truncate),
+    "regexp_replace": _call_regexp_replace,
+    "pmod": _call_pmod,
+    "greatest": _call_greatest_least,
+    "least": _call_greatest_least,
+    "extract": _call_extract,
+    "date_part": _call_extract,
+    "precision": _call_precision_scale,
+    "scale": _call_precision_scale,
+    "aggif": _call_aggif,
+    "histogram": _call_histogram,
+    "ds_kll_quantile": _call_ds_kll_quantile,
+    "ds_kll_rank": _call_ds_kll_rank,
+    "ds_kll_n": _call_ds_kll_n,
+    **dict.fromkeys((
+        "ds_kll_quantiles_as_string", "ds_kll_cdf_as_string",
+        "ds_kll_pmf_as_string", "ds_kll_stringify",
+    ), _call_ds_kll_render),
+    "ds_hll_estimate_bounds_as_string": _call_ds_hll_bounds,
+    "regexp_like": _call_regexp_like,
+    "date_trunc": _call_date_trunc,
+    "get_json_object": _call_get_json_object,
+    **dict.fromkeys((
+        "mask", "mask_first_n", "mask_last_n", "mask_show_first_n",
+        "mask_show_last_n",
+    ), _call_mask),
+    "distinctfrom": _call_distinct_from,
+    "notdistinct": _call_distinct_from,
+    "sampled_ndv": _call_sampled_ndv,
+    "abs": _call_abs,
+    "shiftleft": _call_shift,
+    "shiftright": _call_shift,
+    "regexp_extract": _call_regexp_extract,
+    **dict.fromkeys(
+        ("first_value", "last_value", "lag", "lead"), _call_ignore_nulls
+    ),
+}
+
+
 def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
+    """Rewrite Impala builtin calls into Spark ones, left to right.  For
+    each ``name (`` the walk looks the lower-case name up once in
+    ``_CALLS``; on a hit it finds the call's close paren and argument
+    spans once and calls the entry's handler.  A handler that returns
+    None, and a name with no entry, fall through to the renames:
+    ``_FN_RENAME``, then the ``*_utf8`` / ``utf8_*`` / ``*_ascii``
+    variants."""
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -925,1389 +2164,26 @@ def _rewrite_functions(toks: list[Tok]) -> list[Tok]:
             i += 1
             continue
         name = t.text.lower()
-        # date_add(x, INTERVAL n unit) → (x + INTERVAL n unit); Impala's
-        # grammar routes INTERVAL arithmetic through the date_add/date_sub
-        # builtins (sql-parser.cup:299 KW_INTERVAL), Spark only accepts the
-        # infix form. Plain date_add(x, n) passes through (same in Spark).
-        if name in ("date_add", "date_sub"):
+        handler = _CALLS.get(name)
+        if handler is not None:
             close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                a2 = _next_code(toks, args[1][0])
-                if a2 < close and toks[a2].upper == "INTERVAL":
-                    op = "+" if name == "date_add" else "-"
-                    # '(' stays; comma becomes the arithmetic operator.
-                    comma = _prev_code(toks, args[1][0] - 1)
-                    _splice(toks, comma, comma + 1, f" {op} ")
-                    del toks[i]  # drop the function name
-                    continue
-        # log family: the reference applies C log() with NO domain guard
-        # (math-functions-ir.cc ONE_ARG_MATH_FN(Ln, ..., log) and
-        # Log10/Log2), so log of 0 is -Infinity and log of a negative is
-        # NaN; Spark returns NULL for both. Re-create the C contract.
-        if name in ("ln", "dlog1", "log10", "dlog10", "log2"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 1:
-                fn = {"dlog1": "ln", "dlog10": "log10"}.get(name, name)
-                # pre-translate the argument (it is spliced in verbatim
-                # and the scan then skips the splice, so inner dialect
-                # functions must be rewritten here, recursively)
-                a = untokenize(
-                    _rewrite_functions(toks[args[0][0]:args[0][1]])
-                ).strip()
-                repl = (
-                    f"(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS DOUBLE) "
-                    f"WHEN ({a}) > 0 THEN {fn}(CAST(({a}) AS DOUBLE)) "
-                    f"WHEN ({a}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
-                    f"ELSE CAST('NaN' AS DOUBLE) END)"
-                )
-                new_toks = tokenize(repl)
-                toks[i:close + 1] = new_toks
-                # skip past the splice — it contains the same fn name
-                # (the argument expression inside was already processed)
-                i += len(new_toks)
+            nxt = handler(toks, i, j, close, _split_args(toks, j, close))
+            if nxt is not None:
+                i = nxt
                 continue
-        # 2-arg log(base, x) is ln(x)/ln(base) with RAW C semantics on BOTH
-        # legs (math-functions-ir.cc Log uses std::log with no domain
-        # guard): log(1,2)=Infinity, log(1,1)=NaN, log(0,2)=-0,
-        # log(2,0)=-Infinity, log(0,0)=NaN (exprs.test:1917). Spark's
-        # 2-arg log NULLs non-positive operands AND a zero divisor, so
-        # build the IEEE division explicitly.
-        if name == "log":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                b = untokenize(
-                    _rewrite_functions(toks[args[0][0]:args[0][1]])
-                ).strip()
-                x = untokenize(
-                    _rewrite_functions(toks[args[1][0]:args[1][1]])
-                ).strip()
-
-                def _cln(a: str) -> str:
-                    return (
-                        f"(CASE WHEN ({a}) IS NULL THEN CAST(NULL AS DOUBLE) "
-                        f"WHEN ({a}) > 0 THEN ln(CAST(({a}) AS DOUBLE)) "
-                        f"WHEN ({a}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
-                        f"ELSE CAST('NaN' AS DOUBLE) END)"
-                    )
-
-                la, lb = _cln(x), _cln(b)
-                repl = (
-                    f"(CASE WHEN {lb} = 0 THEN "
-                    f"(CASE WHEN {la} > 0 THEN CAST('Infinity' AS DOUBLE) "
-                    f"WHEN {la} < 0 THEN CAST('-Infinity' AS DOUBLE) "
-                    f"WHEN {la} = 0 THEN CAST('NaN' AS DOUBLE) "
-                    f"ELSE {la} END) "
-                    f"ELSE {la} / {lb} END)"
-                )
-                new_toks = tokenize(repl)
-                toks[i:close + 1] = new_toks
-                i += len(new_toks)
-                continue
-        # round/dround over a FLOAT argument: the reference widens to
-        # DOUBLE before rounding, so round(cast(1.1 as float), 2) is a
-        # clean 1.1 (exprs.test:1775, IMPALA-1508); Spark rounds within
-        # FLOAT and the widened display keeps the float artifact. Only a
-        # provably-FLOAT argument is rewritten — DECIMAL/DOUBLE arguments
-        # keep Spark's native typing.
-        if name in ("round", "dround"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                a_ty = _static_type(toks, *args[0])
-                if a_ty == "FLOAT":
-                    a = untokenize(
-                        _rewrite_functions(toks[args[0][0]:args[0][1]])
-                    ).strip()
-                    n_arg = untokenize(toks[args[1][0]:args[1][1]]).strip()
-                    new_toks = tokenize(
-                        f"round(CAST(({a}) AS DOUBLE), {n_arg})"
-                    )
-                    toks[i:close + 1] = new_toks
-                    i += len(new_toks)
-                    continue
-                # DECIMAL_V2 result typing (FunctionCallExpr round):
-                # round(DECIMAL(p,s), d) → DECIMAL(p-s+s'+carry, s') with
-                # s' = max(0, min(s, d)) and carry=1 only when d < s
-                # (rounding can add a digit). Spark's round gives (p+1, d)
-                # — expr-test.cc:8961/8973 pin precision 6 and 4.
-                ps = _decimal_ps(a_ty)
-                d = _int_literal_value(toks, args[1])
-                if ps is not None and d is not None:
-                    p, s = ps
-                    sr = max(0, min(s, d))
-                    pr = min(38, max(1, p - s + sr + (1 if d < s else 0)))
-                    target = f"DECIMAL({pr},{sr})"
-                    if _enclosing_cast_target(toks, i) != target:
-                        inner = untokenize(toks[i : close + 1]).strip()
-                        repl = tokenize(
-                            f"CAST({inner} AS DECIMAL({pr}, {sr}))"
-                        )
-                        toks[i : close + 1] = repl
-                        i += 2  # step into the CAST; inner round skips
-                        continue
-        # mask_hash: only STRING inputs hash; every other type is NULL
-        # (mask-functions-ir.cc MaskHash non-string overloads)
-        if name == "mask_hash":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 1:
-                code = [
-                    k for k in range(*args[0]) if _is_code(toks[k])
-                ]
-                null_ty = None
-                cast_ty = (
-                    _span_cast_type(toks, code[0], code[-1])
-                    if code
-                    else None
-                )
-                if cast_ty is not None and not cast_ty.startswith(
-                    ("CHAR", "VARCHAR", "STRING")
-                ):
-                    null_ty = cast_ty
-                elif len(code) == 1 and toks[code[0]].kind == "num":
-                    null_ty = (
-                        "DOUBLE" if "." in toks[code[0]].text else "BIGINT"
-                    )
-                elif (
-                    len(code) == 1
-                    and toks[code[0]].kind == "word"
-                    and toks[code[0]].upper in ("TRUE", "FALSE")
-                ):
-                    null_ty = "BOOLEAN"
-                elif (
-                    len(code) == 2
-                    and toks[code[0]].upper in ("DATE", "TIMESTAMP")
-                    and toks[code[1]].kind == "str"
-                ):
-                    null_ty = toks[code[0]].upper
-                if null_ty is not None:
-                    toks[i : close + 1] = tokenize(
-                        f"CAST(NULL AS {null_ty})"
-                    )
-                    i += 1
-                    continue
-        # parse_url: invalid literal part -> error like the reference
-        # (string-functions-ir.cc "Invalid URL part"); parts are
-        # case-sensitive UPPERCASE
-        if name == "parse_url":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) >= 2:
-                p_i = _next_code(toks, args[1][0])
-                if p_i < close and toks[p_i].kind == "str":
-                    part = toks[p_i].text[1:-1]
-                    if part not in (
-                        "PROTOCOL", "HOST", "PATH", "REF", "AUTHORITY",
-                        "FILE", "USERINFO", "QUERY",
-                    ):
-                        raise ValueError(f"Invalid URL part: {part}")
-            # route to the reference-scanner kernels (util/url-parser.cc):
-            # Java's URI-based parse_url rejects 'htt@p' protocols,
-            # multiple '@', trailing spaces — the reference's ://-search
-            # scanner accepts them (expr-test.cc:5073-5347)
-            if len(args) in (2, 3):
-                toks[i] = Tok("word", f"parse_url{len(args)}")
-                i = j + 1
-                continue
-        # 2-arg parse formats: Impala's SimpleDateFormat timezone-offset
-        # tokens +hh:mm / +hhmm / +hh (datetime-simple-date-format-parser;
-        # expr-test.cc:7640-7706 — the offset is parsed and APPLIED) map to
-        # Java's XXX / xx / x, and a bare 'T' literal must be quoted for
-        # Java's parser (:7628)
-        if name in ("unix_timestamp", "to_timestamp"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                f_i = _next_code(toks, args[1][0])
-                if f_i < close and toks[f_i].kind == "str":
-                    body = toks[f_i].text[1:-1]
-                    # trailing-input lenience: the reference's parser walks
-                    # PATTERN tokens only — input past the pattern is never
-                    # examined (datetime-simple-date-format-parser.cc:406-416
-                    # ParseDateTime iterates dt_ctx.toks; expr-test.cc:7628
-                    # pins unix_timestamp('2038/01/19T03:14:08+01:00',
-                    # 'yyyy/MM/ddTHH:mm:ss') = 2147483648).  Java's parser
-                    # rejects leftover input, so for a FIXED-WIDTH pattern
-                    # (only 2/4-char unit tokens + separators — single-char
-                    # units scan ahead and are not fixed) truncate the input
-                    # to the pattern length.  Quote chars in the body mean a
-                    # prior pass already ran (T-quoting) — skip for
-                    # idempotency; a bytesubstr3() first arg means this
-                    # pass ran.  The byte kernel (not substr) because the
-                    # reference parser walks C char pointers — pattern
-                    # length counts BYTES.
-                    a0_i = _next_code(toks, args[0][0])
-                    if (
-                        re.fullmatch(r"(?:yyyy|MM|dd|HH|mm|ss|T|[^A-Za-z'])+",
-                                     body)
-                        and not (
-                            a0_i < close
-                            and toks[a0_i].kind == "word"
-                            and toks[a0_i].text.lower() == "bytesubstr3"
-                        )
-                    ):
-                        s0, e0 = args[0]
-                        inner = untokenize(toks[s0:e0]).strip()
-                        # pattern length in BYTES, not chars — the
-                        # separator class admits non-ASCII (multi-byte
-                        # UTF-8) separators and the kernel counts bytes
-                        blen = len(body.encode("utf-8"))
-                        wrap = tokenize(
-                            f"bytesubstr3({inner}, 1, {blen})"
-                        )
-                        toks[s0:e0] = wrap
-                        close = _matching_paren(toks, j)
-                        args = _split_args(toks, j, close)
-                        f_i = _next_code(toks, args[1][0])
-                    quote = toks[f_i].text[0]
-                    body = toks[f_i].text[1:-1]
-                    new_body = re.sub(r"[+-]hh:mm", "XXX", body)
-                    new_body = re.sub(r"[+-]hhmm", "xx", new_body)
-                    new_body = re.sub(r"[+-]hh(?![hm])", "x", new_body)
-                    # the quoted 'T' must itself be escaped inside a
-                    # single-quoted SQL literal
-                    t_quoted = "''T''" if quote == "'" else "'T'"
-                    new_body = re.sub(r"(?<!')T(?!')", t_quoted, new_body)
-                    if new_body != body:
-                        toks[f_i] = Tok(
-                            "str", f"{quote}{new_body}{quote}"
-                        )
-        # from_utc_timestamp/to_utc_timestamp with an UNKNOWN literal
-        # timezone return the input unchanged + a warning
-        # (timezone_db lookup failure, timestamp-functions.cc; expr-test
-        # pins from_utc_timestamp(ts, 'FOOBAR') = ts); Spark throws
-        # INVALID_TIMEZONE
-        if name in ("from_utc_timestamp", "to_utc_timestamp"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                tz_i = _next_code(toks, args[1][0])
-                if (
-                    tz_i < close
-                    and toks[tz_i].kind == "str"
-                    and not _tz_known(toks[tz_i].text[1:-1])
-                ):
-                    a0 = untokenize(
-                        toks[args[0][0] : args[0][1]]
-                    ).strip()
-                    repl = tokenize(f"({a0})")
-                    toks[i : close + 1] = repl
-                    i += len(repl)
-                    continue
-        # width_bucket over DECIMAL args computes in exact int128/256
-        # arithmetic (math-functions-ir.cc WidthBucketImpl); Spark's
-        # native double math misbuckets near 1e38 — route decimal-typed /
-        # huge-literal calls to the exact kernel, keep plain numeric calls
-        # (the hot path) on the native
-        if name == "width_bucket":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 4:
-                def _needs_precise(sp):
-                    if _decimal_ps(_static_type(toks, *sp)) is not None:
-                        return True
-                    lc = [k for k in range(*sp) if _is_code(toks[k])]
-                    lit = None
-                    if len(lc) == 1 and toks[lc[0]].kind == "num":
-                        lit = toks[lc[0]].text
-                    elif (
-                        len(lc) == 2
-                        and toks[lc[0]].text == "-"
-                        and toks[lc[1]].kind == "num"
-                    ):
-                        lit = toks[lc[1]].text
-                    return (
-                        lit is not None
-                        and len(lit.replace(".", "")) > 15
-                    )
-                if any(_needs_precise(sp) for sp in args[:3]):
-                    a = [
-                        untokenize(toks[s0:e0]).strip()
-                        for s0, e0 in args
-                    ]
-                    repl = tokenize(
-                        f"wb_precise(CAST({a[0]} AS STRING), "
-                        f"CAST({a[1]} AS STRING), CAST({a[2]} AS STRING), "
-                        f"{a[3]})"
-                    )
-                    toks[i : close + 1] = repl
-                    i += len(repl)
-                    continue
-        # factorial: the reference computes n<=1 as 1 (incl. negatives) and
-        # ERRORS past 20 ("too large for BIGINT"); Spark's native NULLs both
-        if name == "factorial":
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 1:
-                toks[i] = Tok("word", "factorial_k")
-                i += 1
-                continue
-        # typeof folds what Spark answers differently: an INTEGER
-        # LITERAL's smallest-fit type (fe LiteralExpr: 1 is TINYINT, 128
-        # SMALLINT, ...), a CAST's declared CHAR/VARCHAR (Spark erases both
-        # to STRING at runtime) and typeof(NULL), which is BOOLEAN
-        # (NullLiteral's type)
-        if name == "typeof":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 1:
-                code = [
-                    k for k in range(*args[0]) if _is_code(toks[k])
-                ]
-                ty = _static_type(toks, *args[0])
-                if [toks[k].upper for k in code] == ["NULL"]:
-                    ty = "BOOLEAN"
-                elif ty in _INT_WIDTH_TYPES:
-                    if toks[code[0]].upper == "CAST":
-                        ty = None  # Spark names a CAST's int type itself
-                elif not (ty or "").startswith(("CHAR(", "VARCHAR(")):
-                    ty = None
-                if ty is not None:
-                    toks[i : close + 1] = tokenize(f"'{ty}'")
-                    i += 1
-                    continue
-        # 2-arg ltrim/rtrim: the reference's order is (src, chars) while
-        # Spark's builtin 2-arg form is (trimStr, str) — dispatched to the
-        # swapping kernels (which also pin NULL-chars → src unchanged,
-        # expr-test.cc:4511/4524)
-        if name in ("ltrim", "rtrim", "btrim"):
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 2:
-                toks[i] = Tok("word", name + "2")
-                i += 1
-                continue
-        # conv with digit validation (ConvString: invalid digit for the
-        # source base -> NULL; Spark parses the valid prefix to '0')
-        if name == "conv":
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 3:
-                toks[i] = Tok("word", "conv3")
-                i += 1
-                continue
-        # regexp_match_count 3/4-arg forms dispatch to the arity-named
-        # kernels (Spark temp functions cannot overload arity)
-        if name == "regexp_match_count":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) in (3, 4):
-                toks[i] = Tok("word", f"regexp_match_count{len(args)}")
-                i += 1
-                continue
-        # fmod is the FLOAT/DOUBLE modulo kernel (math-functions-ir.cc
-        # FmodFloat/FmodDouble; impala_functions.py:380-381 — only
-        # floating signatures exist), so the result type is always
-        # floating: cast both args to DOUBLE before Spark's mod, which
-        # would otherwise return DECIMAL for decimal literals.
-        if name == "fmod":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                a = untokenize(toks[args[0][0]:args[0][1]]).strip()
-                b = untokenize(toks[args[1][0]:args[1][1]]).strip()
-                repl = (
-                    f"mod(CAST(({a}) AS DOUBLE), CAST(({b}) AS DOUBLE))"
-                )
-                toks[i:close + 1] = tokenize(repl)
-                i += 1
-                continue
-        # month arithmetic with the keep-last-day contract (see
-        # _MONTHS_KEEP_LAST_DAY)
-        if name in _MONTHS_KEEP_LAST_DAY:
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                x = untokenize(toks[args[0][0]:args[0][1]]).strip()
-                n = untokenize(toks[args[1][0]:args[1][1]]).strip()
-                sign = _MONTHS_KEEP_LAST_DAY[name]
-                # month-count cap: see the _DATE_UNIT_FNS branch below
-                gn = (
-                    f"(CASE WHEN abs(CAST(({n}) AS BIGINT)) <= 240001 "
-                    f"THEN ({n}) END)"
-                )
-                rd = f"(({x}) + make_interval(0, {sign}{gn}))"
-                repl = _ts_range_guard(
-                    f"(CASE WHEN day({x}) = day(last_day({x})) "
-                    f"THEN {rd} + make_interval(0, 0, 0, "
-                    f"datediff(last_day({rd}), DATE({rd}))) "
-                    f"ELSE {rd} END)",
-                    date_aware=True,
-                )
-                toks[i:close + 1] = tokenize(repl)
-                i += 1
-                continue
-        # type-preserving date arithmetic (see _DATE_UNIT_FNS); the
-        # date_add INTERVAL form above takes precedence when it matches.
-        if name in _DATE_UNIT_FNS:
-            pos, op = _DATE_UNIT_FNS[name]
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                x = untokenize(toks[args[0][0]:args[0][1]]).strip()
-                n = untokenize(toks[args[1][0]:args[1][1]]).strip()
-                # cap the quantity: counts far past the full [1,9999] span
-                # overflow make_interval's integer month math (a Spark
-                # ArithmeticException) — the reference returns NULL
-                # (IsValidTimeInterval). NULL quantity -> NULL result.
-                cap = {0: 20000, 1: 240001, 2: 1050000, 3: 7400000}[pos]
-                gn = (
-                    f"(CASE WHEN abs(CAST(({n}) AS BIGINT)) <= {cap} "
-                    f"THEN ({n}) END)"
-                )
-                tail = ", 0" * (6 - pos) + ")"
-                repl = _ts_range_guard(
-                    f"(({x}) {op} make_interval({'0, ' * pos}{gn}{tail})",
-                    date_aware=True,
-                )
-                toks[i:close + 1] = tokenize(repl)
-                i += 1  # re-scan the splice: inner dialect fns still rewrite
-                continue
-        # truncate/dtrunc/trunc are three aliases of BOTH the numeric
-        # truncate-toward-zero (1-2 args, impala_functions.py:350,481-486)
-        # and the Oracle-style datetime trunc (string unit second arg).
-        # Dispatch on the second argument's shape: string literal → Spark's
-        # native date trunc; otherwise → the registered numeric truncate,
-        # defaulting the scale to 0 for the 1-arg form.
-        if name in ("truncate", "dtrunc", "trunc"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            second_is_str = (
-                len(args) == 2
-                and toks[_next_code(toks, args[1][0])].kind == "str"
-            )
-            if second_is_str:
-                # Datetime trunc: the reference accepts the full Oracle
-                # unit set (udf-builtins.cc StrToTruncUnit) and returns
-                # TIMESTAMP. Spark's native trunc() covers only
-                # year/quarter/month and demotes to DATE; route through
-                # date_trunc(unit, ts) (TIMESTAMP-preserving) via a unit
-                # table. DAY/DY/D = start of week, Monday in both the
-                # reference and Spark's 'WEEK'. WW/W (same weekday as
-                # Jan 1 / 1st of month) have no Spark unit — synthesized
-                # with day arithmetic. Unknown units raise in the
-                # reference; leave the call unrewritten so Spark raises
-                # rather than silently returning NULL.
-                s_i = _next_code(toks, args[1][0])
-                unit = toks[s_i].text[1:-1].upper()
-                a1 = untokenize(toks[args[0][0] : args[0][1]]).strip()
-                # the reference's DATE overloads of trunc/date_trunc keep
-                # DATE (impala_functions.py); Spark's date_trunc always
-                # returns TIMESTAMP — wrap provably-DATE arguments back
-                is_date_arg = _static_type(toks, *args[0]) == "DATE"
-                if unit in ("MILLENNIUM", "CENTURY", "DECADE"):
-                    repl = _era_trunc_sql(a1, unit, is_date_arg)
-                    toks[i : close + 1] = tokenize(repl)
-                    i += 1
-                    continue
-                if unit in _TRUNC_UNITS:
-                    repl = f"date_trunc('{_TRUNC_UNITS[unit]}', {a1})"
-                elif unit in ("WW", "W"):
-                    anchor = (
-                        f"make_date(year({a1}), 1, 1)"
-                        if unit == "WW"
-                        else f"make_date(year({a1}), month({a1}), 1)"
-                    )
-                    repl = (
-                        f"timestampadd(DAY, "
-                        f"-((datediff(DATE(({a1})), {anchor})) % 7)"
-                        f", date_trunc('DAY', {a1}))"
-                    )
-                else:
-                    i += 1
-                    continue
-                if is_date_arg:
-                    repl = f"DATE({repl})"
-                toks[i : close + 1] = tokenize(repl)
-                i += 1
-                continue
-            else:
-                ps = _decimal_ps(_static_type(toks, *args[0]))
-                d = (
-                    _int_literal_value(toks, args[1])
-                    if len(args) == 2
-                    else 0
-                )
-                toks[i] = Tok("word", "truncate")
-                if len(args) == 1:
-                    close += _splice(toks, close, close, ", 0")
-                if ps is not None and d is not None:
-                    # DECIMAL_V2 result typing: truncate(DECIMAL(p,s), d)
-                    # → DECIMAL(p-s+s', s') with s' = max(0, min(s, d)) —
-                    # no carry digit, truncation can't round up
-                    # (expr-test.cc:8963-8970)
-                    p, s = ps
-                    sr = max(0, min(s, d))
-                    pr = min(38, max(1, p - s + sr))
-                    target = f"DECIMAL({pr},{sr})"
-                    if _enclosing_cast_target(toks, i) != target:
-                        inner = untokenize(toks[i : close + 1]).strip()
-                        repl = tokenize(
-                            f"CAST({inner} AS DECIMAL({pr}, {sr}))"
-                        )
-                        toks[i : close + 1] = repl
-                        i += 2
-                        continue
-            i += 1
-            continue
-        # regexp_replace: the reference's rewrite strings use RE2 \N
-        # backreferences (string-functions-ir.cc RegexpReplace); Java's
-        # Matcher.replaceAll wants $N and treats \1 as an escaped literal.
-        # Convert literal third arguments.
-        if name == "regexp_replace":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 3:
-                a3 = _next_code(toks, args[2][0])
-                if a3 < close and toks[a3].kind == "str":
-                    inner = toks[a3].text[1:-1]
-                    # RE2 rewrite strings treat '$' as a literal; Java's
-                    # Matcher.replaceAll treats it as the group sigil
-                    # ('price: $' throws, '$1' silently substitutes group
-                    # 1). Escape literal '$' FIRST, so the '$N' forms the
-                    # backref conversion emits next stay live.
-                    converted = inner.replace("$", r"\\$")
-                    converted = re.sub(r"\\\\(\d)", r"$\1", converted)
-                    converted = re.sub(r"\\(\d)", r"$\1", converted)
-                    if converted != inner:
-                        toks[a3] = Tok("str", _single_quoted(converted))
-            # fall through: the name itself is Spark-native
-        # combination (math-functions-ir.cc PmodBigInt:436-440) — negative
-        # divisors yield a negative result (pmod(3,-5) = -2). Spark's pmod
-        # only normalizes when the remainder is negative (pmod(3,-5) = 3).
-        if name == "pmod":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                a = untokenize(toks[args[0][0]:args[0][1]]).strip()
-                b = untokenize(toks[args[1][0]:args[1][1]]).strip()
-                repl = f"((({a}) % ({b}) + ({b})) % ({b}))"
-                toks[i : close + 1] = tokenize(repl)
-                i += 1
-                continue
-        # greatest/least: the reference returns NULL when ANY argument is
-        # NULL (math-functions-ir.cc LeastGreatest:619-622); Spark's
-        # greatest/least skip NULLs. Rewrite to a null guard over
-        # array_max/array_min. Each argument is spliced exactly ONCE: the
-        # single array literal is bound to a transform() lambda variable,
-        # so nondeterministic arguments (rand(), uuid()) and expensive
-        # scalar subqueries evaluate once, and no greatest( text remains
-        # for the rewrite pass to re-match.
-        if name in ("greatest", "least"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if args:
-                exprs = [untokenize(toks[a:b]).strip() for a, b in args]
-                arr = ", ".join(f"({e})" for e in exprs)
-                fn = "array_max" if name == "greatest" else "array_min"
-                repl = (
-                    f"element_at(transform(array(array({arr})), "
-                    f"__hs_a -> CASE WHEN exists(__hs_a, __hs_x -> "
-                    f"__hs_x IS NULL) THEN NULL ELSE {fn}(__hs_a) END), 1)"
-                )
-                toks[i : close + 1] = tokenize(repl)
-                i += 1
-                continue
-        # from_unixtime: out-of-range epoch seconds -> NULL (the TIMESTAMP
-        # valid-range contract applied to the epoch producer); arity-named
-        # kernels, values unchanged in range
-        if name == "from_unixtime":
-            close = _matching_paren(toks, j)
-            nargs = len(_split_args(toks, j, close))
-            if nargs in (1, 2):
-                toks[i] = Tok("word", f"from_unixtime{nargs}")
-                i += 1
-                continue
-        # extract(ts, 'unit') — Impala's two-arg form takes the SOURCE
-        # first (timestamp-functions-ir.cc; grammar sql-parser.cup also
-        # accepts extract(unit FROM ts), which Spark shares). Spark's
-        # two-arg extract wants the field first; swap, and cast to BIGINT
-        # (Impala extract/date_part return BIGINT, Spark INT). The swapped
-        # form has a string literal first, so it never re-matches.
-        if name in ("extract", "date_part"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                first_i = _next_code(toks, args[0][0])
-                a1 = untokenize(toks[args[0][0]:args[0][1]]).strip()
-                a2 = untokenize(toks[args[1][0]:args[1][1]]).strip()
-                second_i = _next_code(toks, args[1][0])
-                if name == "extract" and toks[first_i].kind != "str":
-                    field, src = a2, a1
-                elif (
-                    name == "extract"
-                    and toks[first_i].kind == "str"
-                    and second_i < close
-                    and toks[second_i].kind == "str"
-                    and toks[second_i].text[1:-1].upper() in _EXTRACT_UNITS
-                ):
-                    # extract('<ts string>', 'unit'): the first argument is
-                    # the implicit-cast timestamp (udf-builtins.cc Extract;
-                    # expr-test.cc:7538)
-                    field, src = a2, f"CAST({a1} AS TIMESTAMP)"
-                elif name == "date_part" and toks[first_i].kind == "str":
-                    field, src = a1, a2
-                else:
-                    i += 1
-                    continue
-                repl = tokenize(_extract_sql(field, src))
-                toks[i:close + 1] = repl
-                i += 1
-                continue
-            if len(args) == 1 and name == "extract":
-                # extract(unit FROM ts) — grammar shared with Spark, but
-                # Impala returns BIGINT where Spark returns INT. Emit the
-                # quoted-field two-arg form, which this pass never
-                # re-matches (string first argument).
-                inner = untokenize(toks[j + 1 : close]).strip()
-                m = re.match(r"(?is)^(.+?)\bFROM\b(.+)$", inner)
-                if m:
-                    field = m.group(1).strip()
-                    src = m.group(2).strip()
-                    toks[i : close + 1] = tokenize(
-                        _extract_sql(f"'{field}'", src)
-                    )
-                    i += 1
-                    continue
-        # unhex returns STRING in Impala (string-functions-ir.cc) and
-        # validates: odd length / non-hex chars give the EMPTY string —
-        # dispatched to the unhex1 kernel (also does the BINARY->STRING
-        # cast Spark needs).
-        if name == "unhex":
-            toks[i] = Tok("word", "unhex1")
-            i = j + 1
-            continue
-        # precision(x) / scale(x) — decimal type introspection
-        # (BuiltinsDb precision/scale; analysis-time in the reference).
-        # Runtime equivalent: parse Spark's typeof(); NULL for non-decimals.
-        if name in ("precision", "scale"):
-            # integer types report their digit capacity (TINYINT 3 ...
-            # BIGINT 19, scale 0 — ColumnType.precision), decimals their
-            # declared (p, s); other types NULL. LITERAL arguments fold
-            # with the reference's smallest-fit / text-derived typing.
-            close = _matching_paren(toks, j)
-            largs = _split_args(toks, j, close)
-            if len(largs) == 1:
-                lc = [
-                    k for k in range(*largs[0]) if _is_code(toks[k])
-                ]
-                neg = (
-                    len(lc) == 2
-                    and toks[lc[0]].text == "-"
-                    and toks[lc[1]].kind == "num"
-                )
-                lit_tok = (
-                    toks[lc[0]] if len(lc) == 1 else
-                    toks[lc[1]] if neg else None
-                )
-                if (
-                    lit_tok is not None
-                    and lit_tok.kind == "num"
-                    and "e" not in lit_tok.text.lower()
-                ):
-                    txt = lit_tok.text
-                    if "." in txt:
-                        digits = txt.replace(".", "").lstrip("0") or "0"
-                        p_v = len(digits)
-                        s_v = len(txt.split(".")[1])
-                        p_v = max(p_v, s_v)
-                    else:
-                        v = int(txt) * (-1 if neg else 1)
-                        p_v = (
-                            3 if -(2**7) <= v < 2**7 else
-                            5 if -(2**15) <= v < 2**15 else
-                            10 if -(2**31) <= v < 2**31 else 19
-                        )
-                        s_v = 0
-                    out_v = p_v if name == "precision" else s_v
-                    toks[i : close + 1] = tokenize(str(out_v))
-                    i += 1
-                    continue
-                # integer-literal ARITHMETIC folds with the analyzer's
-                # promotion: result = next wider int of the wider operand
-                # (precision(1 + 1) is 5 — TINYINT+TINYINT→SMALLINT,
-                # expr-test.cc:8955)
-                if (
-                    len(lc) == 3
-                    and toks[lc[0]].kind == "num"
-                    and "." not in toks[lc[0]].text
-                    and toks[lc[1]].text in ("+", "-", "*")
-                    and toks[lc[2]].kind == "num"
-                    and "." not in toks[lc[2]].text
-                ):
-                    def _w(v: int) -> int:
-                        return (
-                            8 if -(2**7) <= v < 2**7 else
-                            16 if -(2**15) <= v < 2**15 else
-                            32 if -(2**31) <= v < 2**31 else 64
-                        )
-                    wmax = max(
-                        _w(int(toks[lc[0]].text)),
-                        _w(int(toks[lc[2]].text)),
-                    )
-                    wp = min(wmax * 2, 64)
-                    p_v = {8: 3, 16: 5, 32: 10, 64: 19}[wp]
-                    out_v = p_v if name == "precision" else 0
-                    toks[i : close + 1] = tokenize(str(out_v))
-                    i += 1
-                    continue
-            _splice(toks, close + 1, close + 1, "))")
-            # upper(typeof(...)) — the typeof-uppercase dialect pass
-            # recognizes the already-upper-wrapped form (idempotency)
-            i = j + _splice(toks, i, i + 1, f"{name}_of(upper(typeof")
-            continue
-        # aggif(p, x) → max(CASE WHEN p THEN x END) — the reference's
-        # conditional aggregate (BuiltinsDb.java:1188), defined for
-        # predicates selecting one distinct value per group.
-        if name == "aggif":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                toks[i] = Tok("word", "max")
-                comma = _prev_code(toks, args[1][0] - 1)
-                _splice(toks, close, close, " END")
-                _splice(toks, comma, comma + 1, " THEN ")
-                _splice(toks, j + 1, j + 1, "CASE WHEN ")
-                i += 1
-                continue
-        # histogram(x) → sorted comma-joined values — Impala's histogram
-        # aggregate emits the sample values as a comma-separated string
-        # (BuiltinsDb.java:1040; aggregate-functions-ir.cc Histogram).
-        if name == "histogram":
-            close = _matching_paren(toks, j)
-            toks[i] = Tok("word", "array_join")
-            _splice(toks, close, close, " AS STRING))), ', '")
-            i = j + 1 + _splice(
-                toks, j + 1, j + 1, "sort_array(collect_list(CAST("
-            )
-            continue
-        # ds_kll_quantile(ds_kll_sketch(x), q) → percentile(x, q): the KLL
-        # sketch→quantile composition collapses to the exact percentile
-        # (BuiltinsDb ds_kll_sketch:1420, datasketches-functions-ir.cc).
-        if name == "ds_kll_quantile":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                inner_i = _next_code(toks, args[0][0])
-                if (
-                    inner_i < len(toks)
-                    and toks[inner_i].text.lower() == "ds_kll_sketch"
-                ):
-                    inner_open = _next_code(toks, inner_i + 1)
-                    if inner_open < close and toks[inner_open].text == "(":
-                        inner_close = _matching_paren(toks, inner_open)
-                        # CAST to FLOAT: the reference returns FloatVal
-                        # (DsKllQuantile, datasketches-functions-ir.cc:240)
-                        _splice(toks, close + 1, close + 1, " AS FLOAT)")
-                        for k in (inner_close, inner_open, inner_i):
-                            del toks[k]
-                        i += _splice(toks, i, i + 1, "CAST(percentile")
-                        continue
-        # ds_kll_rank(ds_kll_sketch(x), v) → avg(CAST(x < v AS DOUBLE)):
-        # the sketch→rank composition collapses to the exact normalized
-        # rank (DataSketches KLL get_rank = fraction of items < v).
-        if name == "ds_kll_rank":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                inner_i = _next_code(toks, args[0][0])
-                if (
-                    inner_i < len(toks)
-                    and toks[inner_i].text.lower() == "ds_kll_sketch"
-                ):
-                    comma = _prev_code(toks, args[1][0] - 1)
-                    _splice(toks, close, close, " AS DOUBLE)")
-                    _splice(toks, comma, comma + 1, " < ")
-                    del toks[inner_i]
-                    i += _splice(toks, i, i + 1, "avg(CAST")
-                    continue
-        # ds_kll_n(ds_kll_sketch(x)) → count(x): the sketch's stream length
-        # is exactly the non-null count.
-        if name == "ds_kll_n":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 1:
-                inner_i = _next_code(toks, args[0][0])
-                if (
-                    inner_i < len(toks)
-                    and toks[inner_i].text.lower() == "ds_kll_sketch"
-                ):
-                    inner_open = _next_code(toks, inner_i + 1)
-                    if inner_open < close and toks[inner_open].text == "(":
-                        inner_close = _matching_paren(toks, inner_open)
-                        for k in (inner_close, inner_open, inner_i):
-                            del toks[k]
-                        toks[i] = Tok("word", "count")
-                        i += 1
-                        continue
-        # ds_kll_*_as_string / ds_kll_stringify / ds_hll_estimate_bounds_
-        # as_string — the DataSketches STRING RENDERINGS
-        # (datasketches-functions-ir.cc DsKllQuantilesAsString:284,
-        # GetDsKllPMFOrCDF:304, DsKllStringify:337,
-        # DsHllEstimateBoundsAsString:54). The sketch→render compositions
-        # collapse to exact aggregates formatted with ds_format_value
-        # (C++ stream "%.6g" — the formatting the reference inherits from
-        # std::stringstream). NULL on an empty sketch, like the reference,
-        # falls out of concat()'s null propagation (min/avg/percentile over
-        # zero rows are NULL).
-        if name in (
-            "ds_kll_quantiles_as_string",
-            "ds_kll_cdf_as_string",
-            "ds_kll_pmf_as_string",
-            "ds_kll_stringify",
-        ):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            inner_i = _next_code(toks, args[0][0]) if args else len(toks)
-            if (
-                inner_i < len(toks)
-                and toks[inner_i].text.lower() == "ds_kll_sketch"
-                and (len(args) >= 2 or name == "ds_kll_stringify")
-            ):
-                inner_open = _next_code(toks, inner_i + 1)
-                inner_close = _matching_paren(toks, inner_open)
-                x = untokenize(toks[inner_open + 1 : inner_close]).strip()
-                ps = [
-                    untokenize(toks[a:b]).strip() for a, b in args[1:]
-                ]
-                new_sql = _ds_kll_render_sql(name, x, ps)
-                toks[i : close + 1] = tokenize(new_sql)
-                i += 1
-                continue
-        if name == "ds_hll_estimate_bounds_as_string":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) in (1, 2):
-                sk = untokenize(toks[args[0][0] : args[0][1]]).strip()
-                kappa = 2  # DS_DEFAULT_KAPPA (datasketches-common.h:45)
-                if len(args) == 2:
-                    ktext = untokenize(toks[args[1][0] : args[1][1]]).strip()
-                    try:
-                        kappa = int(ktext)
-                    except ValueError as exc:
-                        raise ValueError(
-                            "No matching function with signature: "
-                            f"ds_hll_estimate_bounds_as_string(STRING, {ktext})"
-                        ) from exc
-                    if kappa not in (1, 2, 3):
-                        raise ValueError("Kappa must be 1, 2 or 3")
-                # lgK = 12 (DS_SKETCH_CONFIG, datasketches-common.h:43) ⇒
-                # HLL relative standard error ≈ 1.04/sqrt(2^12). The library
-                # bounds are slightly asymmetric; est/(1±κ·rse) is the
-                # documented approximation (FUNCTIONS.md).
-                rse = 1.04 / 64.0
-                est = f"CAST(hll_sketch_estimate({sk}) AS DOUBLE)"
-                new_sql = (
-                    "concat(ds_format_value("
-                    + est
-                    + "), ',', ds_format_value("
-                    + est
-                    + f" / {1 + kappa * rse!r}), ',', ds_format_value("
-                    + est
-                    + f" * {1 + kappa * rse!r}))"
-                )
-                toks[i : close + 1] = tokenize(new_sql)
-                i += 1
-                continue
-        # regexp_like(s, pat, 'flags') → rlike(s, concat('(?flags)', pat)).
-        # Impala flags (string-functions-ir.cc): i=case-insensitive,
-        # m=multi-line, n=newline-matches-dot (Java's s).
-        if name == "regexp_like":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            flag_i = _next_code(toks, args[2][0]) if len(args) == 3 else -1
-            if len(args) == 3 and flag_i < close and toks[flag_i].kind == "str":
-                flags = toks[flag_i].text[1:-1].lower().replace("n", "s")
-                comma2 = _prev_code(toks, args[2][0] - 1)
-                del toks[comma2:close]
-                toks.insert(comma2, Tok("op", ")"))
-                _splice(toks, args[1][0], args[1][0], f" concat('(?{flags})', ")
-                toks[i] = Tok("word", "rlike")
-                i += 1
-                continue
-            if len(args) == 3:
-                # runtime (non-literal / NULL) params: the NULL-propagating
-                # validating kernel
-                toks[i] = Tok("word", "regexp_like3")
-                i += 1
-                continue
-        # date_trunc(unit, x): the DATE overload returns DATE in the
-        # reference; Spark's always returns TIMESTAMP — wrap back
-        if name == "date_trunc":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                u_i = _next_code(toks, args[0][0])
-                if u_i < close and toks[u_i].kind == "str":
-                    unit = toks[u_i].text[1:-1].upper()
-                    # the reference spells sub-second units PLURAL ONLY
-                    # (udf-builtins.cc StrToDateTruncUnit "milliseconds"/
-                    # "microseconds"); Spark accepts the singular — map.
-                    if unit in ("MILLISECONDS", "MICROSECONDS"):
-                        unit = unit[:-1]
-                        toks[u_i] = Tok("str", f"'{unit}'")
-                    _SPARK_UNITS = {
-                        "YEAR", "YYYY", "YY", "QUARTER", "MONTH", "MM",
-                        "MON", "WEEK", "DAY", "DD", "HOUR", "MINUTE",
-                        "SECOND", "MILLISECOND", "MICROSECOND",
-                    }
-                    if unit in ("MILLENNIUM", "CENTURY", "DECADE"):
-                        x = untokenize(
-                            toks[args[1][0] : args[1][1]]
-                        ).strip()
-                        repl = _era_trunc_sql(
-                            x, unit, _static_type(toks, *args[1]) == "DATE"
-                        )
-                        toks[i : close + 1] = tokenize(repl)
-                        i += 1
-                        continue
-                    if unit not in _SPARK_UNITS:
-                        # the reference raises on unknown units
-                        # (udf-builtins.cc StrToTruncUnit); Spark NULLs
-                        raise ValueError(
-                            f"Invalid Date/Time Unit: {toks[u_i].text}"
-                        )
-            prev = _prev_code(toks, i - 1)
-            inside_date = (
-                prev >= 0
-                and toks[prev].text == "("
-                and _prev_code(toks, prev - 1) >= 0
-                and toks[_prev_code(toks, prev - 1)].upper == "DATE"
-            )
-            if (
-                len(args) == 2
-                and _static_type(toks, *args[1]) == "DATE"
-                and not inside_date
-                and not _in_guard_context(toks, i)
-            ):
-                inner = untokenize(toks[i : close + 1]).strip()
-                repl = tokenize(f"DATE({inner})")
-                toks[i : close + 1] = repl
-                i += 2  # step past DATE( so the inner call isn't re-seen
-                continue
-        # get_json_object: the reference's JSON-path parser skips
-        # whitespace around structural tokens (' $ . abc [ 2 ] ' works —
-        # expr-test get_json_object rows); Spark's requires a compact
-        # path. Normalize LITERAL paths by stripping whitespace.
-        if name == "get_json_object":
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                pc = [
-                    k for k in range(*args[1]) if _is_code(toks[k])
-                ]
-                if len(pc) == 1 and toks[pc[0]].kind == "str":
-                    raw = toks[pc[0]].text
-                    quote = raw[0]
-                    body = raw[1:-1]
-                    compact = "".join(body.split())
-                    if compact != body:
-                        toks[pc[0]] = Tok(
-                            "str", f"{quote}{compact}{quote}"
-                        )
-                    if "*" in compact:
-                        # wildcard steps ($.* / [*]) — Spark's native
-                        # get_json_object lacks the object wildcard and
-                        # renders multi-matches differently; route to the
-                        # BFS kernel (string-functions.cc
-                        # GetJsonObjectImpl)
-                        toks[i] = Tok("word", "gjo_wild")
-                        i = j + 1
-                        continue
-        # mask family (mask-functions-ir.cc):
-        #   * the char position arg n defaults to 4 in 1-arg mask_*_n;
-        #   * char arguments may be INT CODEPOINTS (65 -> 'A'); -1 means
-        #     KEEP the class (maskchars handles the '-1' sentinel);
-        #   * NUMERIC first arguments mask digits with '1' (or the 6th
-        #     "number char" argument) and keep an integer result;
-        #   * plain mask() gains the 6-arg form Spark lacks.
-        if name in ("mask", "mask_first_n", "mask_last_n",
-                    "mask_show_first_n", "mask_show_last_n"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            is_n_form = name != "mask"
-            char_args = args[2:] if is_n_form else args[1:]
-            # a provably-NULL first argument passes through typed
-            # (mask(cast(NULL as DATE)) is NULL DATE — expr-test.cc:10605;
-            # Spark's mask raises on non-string types)
-            a0_code = [
-                k for k in range(*args[0]) if _is_code(toks[k])
-            ]
-            a0_up = " ".join(toks[k].upper for k in a0_code)
-            if (
-                a0_up == "NULL"
-                or (a0_up.startswith("CAST ( NULL AS ") and len(args) == 1)
-            ):
-                repl = toks[args[0][0] : args[0][1]]
-                toks[i : close + 1] = repl
-                i += 1
-                continue
-            # DATE overload (MaskImpl(DateVal)): day/month/year replacement
-            # args sit at positions 6..8 of the 9-arg form; the 1-arg form
-            # masks every component to the defaults (1, 0=January, 1)
-            if (
-                name == "mask"
-                and len(args) in (1, 9)
-                and _static_type(toks, *args[0]) == "DATE"
-            ):
-                a0 = untokenize(toks[args[0][0] : args[0][1]]).strip()
-                if len(args) == 9:
-                    dmy = [
-                        untokenize(toks[s0:e0]).strip()
-                        for s0, e0 in args[6:9]
-                    ]
-                else:
-                    dmy = ["1", "0", "1"]
-                repl = tokenize(
-                    f"mask_date3(({a0}), {dmy[0]}, {dmy[1]}, {dmy[2]})"
-                )
-                toks[i : close + 1] = repl
-                i += len(repl)
-                continue
-            is_numeric = _static_type(toks, *args[0]) in _INT_WIDTH_TYPES
-
-            def _char_arg(span):
-                code = [
-                    k for k in range(span[0], span[1]) if _is_code(toks[k])
-                ]
-                neg = (
-                    len(code) == 2
-                    and toks[code[0]].text == "-"
-                    and toks[code[1]].kind == "num"
-                )
-                if neg:
-                    return "'-1'"
-                if len(code) == 1 and toks[code[0]].kind == "num":
-                    cp = int(float(toks[code[0]].text))
-                    # codepoints beyond U+10FFFF can't be chr()'d; the
-                    # reference's fast path assigns the masked codepoint
-                    # to a BYTE (mask-functions-ir.cc MaskSubStr
-                    # `result.ptr[i] = MaskTransform(...)`) — mirror the
-                    # low-byte truncation (round-8 advice, low)
-                    if cp > 0x10FFFF or cp < 0:
-                        cp &= 0xFF
-                    ch = chr(cp).replace("'", "''")
-                    return f"'{ch}'"
-                return untokenize(toks[span[0] : span[1]]).strip()
-
-            def _num_char_arg(span):
-                # the NUMBER mask argument is a digit VALUE in [0,9]
-                # (mask-functions-ir.cc getNumArg) — out-of-range or -1
-                # falls back to the default 1; never a codepoint
-                code = [
-                    k for k in range(span[0], span[1]) if _is_code(toks[k])
-                ]
-                if len(code) == 1 and toks[code[0]].kind == "num":
-                    v = int(float(toks[code[0]].text))
-                    return f"'{v}'" if 0 <= v <= 9 else "'1'"
-                if (
-                    len(code) == 1
-                    and toks[code[0]].kind == "str"
-                    and toks[code[0]].text[1:-1].isdigit()
-                    and len(toks[code[0]].text) == 3
-                ):
-                    return toks[code[0]].text
-                return "'1'"
-
-            needs_kernel = (
-                is_numeric
-                or len(char_args) >= 4  # other/number args present
-                or any(
-                    _char_arg(sp).startswith("'")
-                    and untokenize(toks[sp[0] : sp[1]]).strip()
-                    != _char_arg(sp)
-                    for sp in char_args
-                )
-                or (is_n_form and len(args) == 1)
-            )
-            if needs_kernel and 1 <= len(args) <= (7 if is_n_form else 6):
-                chars = [_char_arg(sp) for sp in char_args]
-                num_char = (
-                    _num_char_arg(char_args[4])
-                    if len(char_args) >= 5
-                    else "'1'"
-                )
-                u = chars[0] if len(chars) >= 1 else "'X'"
-                l = chars[1] if len(chars) >= 2 else "'x'"
-                d = chars[2] if len(chars) >= 3 else "'n'"
-                o = chars[3] if len(chars) >= 4 else "CAST(NULL AS STRING)"
-                a = untokenize(toks[args[0][0] : args[0][1]]).strip()
-                src = f"CAST({a} AS STRING)" if is_numeric else f"({a})"
-                if is_numeric:
-                    d = num_char
-                if is_n_form:
-                    n_arg = (
-                        untokenize(toks[args[1][0] : args[1][1]]).strip()
-                        if len(args) >= 2
-                        else "4"  # MaskShowFirstN/MaskFirstN default
-                    )
-                    body = f"{name}6({src}, {n_arg}, {u}, {l}, {d}, {o})"
-                else:
-                    body = f"maskchars({src}, {u}, {l}, {d}, {o})"
-                if is_numeric:
-                    body = f"CAST({body} AS BIGINT)"
-                repl = tokenize(body)
-                toks[i : close + 1] = repl
-                i += len(repl)
-                continue
-            if is_n_form and 3 <= len(args) <= 6:
-                defaults = ["'X'", "'x'", "'n'", "CAST(NULL AS STRING)"]
-                pad = ", ".join(defaults[len(args) - 2 :])
-                if pad:
-                    _splice(toks, close, close, f", {pad}")
-                toks[i] = Tok("word", name + "6")
-                i += 1
-                continue
-        # instr 3/4-arg → the registered instr4 kernel (2-arg stays native;
-        # string-functions-ir.cc Instr:788-846)
-        if name == "instr":
-            close = _matching_paren(toks, j)
-            nargs = len(_split_args(toks, j, close))
-            if nargs in (3, 4):
-                toks[i] = Tok("word", "instr4")
-                if nargs == 3:
-                    _splice(toks, close, close, ", 1")
-                i += 1
-                continue
-        # IS [NOT] DISTINCT FROM exposed as functions (BuiltinsDb
-        # distinctfrom/notdistinct) → the <=> null-safe-equals operator.
-        if name in ("distinctfrom", "notdistinct"):
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                comma = _prev_code(toks, args[1][0] - 1)
-                _splice(toks, comma, comma + 1, " <=> ")
-                if name == "distinctfrom":
-                    toks[i] = Tok("word", "not")
-                    i += 1
-                else:
-                    del toks[i]
-                continue
-        # isnull(a, b) → nvl(a, b); 1-arg isnull passes through untouched.
-        if name == "isnull":
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 2:
-                toks[i] = Tok("word", "nvl")
-        elif name == "zeroifnull":
-            close = _matching_paren(toks, j)
-            toks[i] = Tok("word", "coalesce")
-            _splice(toks, close, close, ", 0")
-        elif name in _FN_APPEND_ARG:
-            new, extra = _FN_APPEND_ARG[name]
-            close = _matching_paren(toks, j)
-            toks[i] = Tok("word", new)
-            _splice(toks, close, close, f", {extra}")
-        elif name in _FN_DEFAULT_ARG:
-            new, default = _FN_DEFAULT_ARG[name]
-            close = _matching_paren(toks, j)
-            toks[i] = Tok("word", new)
-            if len(_split_args(toks, j, close)) == 1:
-                _splice(toks, close, close, f", {default}")
-        elif name == "dayname":
-            close = _matching_paren(toks, j)
-            toks[i] = Tok("word", "date_format")
-            _splice(toks, close, close, ", 'EEEE'")
-        elif name == "monthname":
-            close = _matching_paren(toks, j)
-            toks[i] = Tok("word", "date_format")
-            _splice(toks, close, close, ", 'MMMM'")
-        elif name == "sampled_ndv":
-            # sampled_ndv(x, sample_rate) — the sampling knob has no Spark
-            # analogue; the HLL estimate subsumes it. Drop the second arg.
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                toks[i] = Tok("word", "approx_count_distinct")
-                comma = _prev_code(toks, args[1][0] - 1)
-                del toks[comma:close]
-            i += 1
-            continue
-        elif name in (
-            "rotateleft", "rotateright", "countset", "getbit", "setbit"
-        ):
-            # width-typed bit kernels (bit-byte-functions-ir.cc: one
-            # instantiation per int width — rotation wraps within
-            # sizeof(T)*8, countset counts within the width, positions
-            # past the width are errors). The width is the first
-            # argument's _static_type: CAST form, or Impala's smallest-fit
-            # literal typing (LiteralExpr); columns fall back to 64
-            # (documented — this pass does not see column_types).
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            width = _INT_WIDTH_TYPES.get(
-                _static_type(toks, *args[0]) if args else None, 64
-            )
-            nargs = len(args)
-            new_name = {
-                ("rotateleft", 2): "rotl3",
-                ("rotateright", 2): "rotr3",
-                ("countset", 1): "countset1w",
-                ("countset", 2): "countset2w",
-                ("getbit", 2): "getbitw",
-                ("setbit", 2): "setbitw",
-                ("setbit", 3): "setbit4w",
-            }.get((name, nargs))
-            if new_name is not None:
-                toks[i] = Tok("word", new_name)
-                _splice(toks, close, close, f", {width}")
-        elif name == "abs":
-            # abs() PROMOTES the integer argument's type (IMPALA-4513,
-            # impala_functions.py Abs signatures: TINYINT→SMALLINT,
-            # SMALLINT→INT, INT→BIGINT) so abs(INT_MIN) cannot overflow;
-            # Spark keeps the input type. Promote the provably-int shapes
-            # (CAST form / smallest-fit literals); other types unchanged.
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            w = _INT_WIDTH_TYPES.get(
-                _static_type(toks, *args[0]) if len(args) == 1 else None
-            )
-            if w in (8, 16, 32):
-                # width-named kernel promotes BEFORE abs (abs(TINYINT
-                # -128) must be 128 in SMALLINT, not the wrapped -128)
-                toks[i] = Tok("word", f"abs{w}")
-            elif w == 64:
-                # BIGINT has no wider int to promote into: the reference
-                # NULLs the one unrepresentable input (INT64_MIN), Spark
-                # wraps — abs64 kernel pins the NULL
-                toks[i] = Tok("word", "abs64")
-        elif name in ("shiftleft", "shiftright"):
-            # width-typed shifts (bit-byte-functions-ir.cc ShiftLeftImpl /
-            # ShiftRightLogicalImpl): the C++ result truncates back to the
-            # argument's int width (shiftleft(TINYINT 1, 8) is 0, not 256),
-            # right shift is LOGICAL within that width
-            # (shiftright(cast(-1 as INT), 1) = 0x7FFFFFFF,
-            # expr-test.cc:9947), and a NEGATIVE count shifts the other
-            # way (:9951-9952). Routed to the shl3/shr3 kernels for
-            # provable widths; unprovable args keep Spark's native shift.
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 2:
-                ty = _static_type(toks, *args[0])
-                w = _INT_WIDTH_TYPES.get(ty)
-                if w is not None:
-                    a = untokenize(
-                        _rewrite_functions(toks[args[0][0]:args[0][1]])
-                    ).strip()
-                    n_arg = untokenize(
-                        _rewrite_functions(toks[args[1][0]:args[1][1]])
-                    ).strip()
-                    kern = "shl3" if name == "shiftleft" else "shr3"
-                    new_toks = tokenize(
-                        f"CAST({kern}(CAST(({a}) AS BIGINT), {n_arg}, {w}) "
-                        f"AS {ty})"
-                    )
-                    toks[i:close + 1] = new_toks
-                    i += len(new_toks)
-                    continue
-        elif name == "chr":
-            # out-of-[0,255] → empty string (Chr:1338-1343; Spark wraps
-            # the codepoint mod 256 instead)
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 1:
-                toks[i] = Tok("word", "chr1")
-        elif name == "regexp_extract":
-            # group index past the pattern's capture count (or negative) →
-            # empty string (RegexpExtract:976-998; Spark raises
-            # INVALID_PARAMETER_VALUE). Foldable at translate time when
-            # pattern and index are literals — the common form; dynamic
-            # patterns keep Spark's native behavior (documented delta).
-            close = _matching_paren(toks, j)
-            args = _split_args(toks, j, close)
-            if len(args) == 3:
-                pat_toks = [
-                    tk for tk in toks[args[1][0] : args[1][1]] if _is_code(tk)
-                ]
-                s0, e0 = args[2]
-                # unwrap CAST(<intlit> AS <int type>) around the index
-                # (expr-test.cc:4888 uses cast(2 as bigint))
-                c = _parse_cast(toks, _next_code(toks, s0))
-                if (
-                    c is not None
-                    and _next_code(toks, c.close + 1) >= e0
-                    and c.fmt is None
-                    and c.ty in _INT_WIDTH_TYPES
-                ):
-                    s0, e0 = c.open + 1, c.as_
-                idx_toks = [tk for tk in toks[s0:e0] if _is_code(tk)]
-                neg = (
-                    len(idx_toks) == 2
-                    and idx_toks[0].text == "-"
-                    and idx_toks[1].kind == "num"
-                )
-                if len(pat_toks) == 1 and pat_toks[0].kind == "str" and (
-                    neg or (len(idx_toks) == 1 and idx_toks[0].kind == "num")
-                ):
-                    try:
-                        idx = -int(idx_toks[1].text) if neg else int(
-                            idx_toks[0].text
-                        )
-                    except ValueError:
-                        idx = None
-                    if idx is not None:
-                        groups = _count_capture_groups(pat_toks[0].text[1:-1])
-                        if idx < 0 or idx > groups:
-                            subj = untokenize(
-                                toks[args[0][0] : args[0][1]]
-                            ).strip()
-                            toks[i : close + 1] = tokenize(
-                                f"CASE WHEN ({subj}) IS NULL "
-                                f"THEN CAST(NULL AS STRING) ELSE '' END"
-                            )
-                            i += 1
-                            continue
-        elif name == "typeof":
-            # Impala renders type names UPPERCASE ('DECIMAL(2,1)', 'STRING'
-            # — fe ScalarType.toSql); Spark's typeof prints lowercase.
-            # Skip when already wrapped (idempotency: the ts-range guard
-            # emits upper(typeof(...)) directly, and translate() may re-run
-            # over its own output, e.g. for stored view bodies).
-            prev_p = _prev_code(toks, i - 1)
-            already = False
-            if prev_p >= 0 and toks[prev_p].text == "(":
-                prev_f = _prev_code(toks, prev_p - 1)
-                already = (
-                    prev_f >= 0 and toks[prev_f].text.lower() == "upper"
-                )
-            close = _matching_paren(toks, j)
-            if not already and len(_split_args(toks, j, close)) == 1:
-                # pre-rewrite the ARGUMENT (paren part only — re-running
-                # over the typeof name itself would recurse) so dialect
-                # contracts inside typeof probes are visible
-                inner = "typeof" + untokenize(
-                    _rewrite_functions(toks[j : close + 1])
-                )
-                repl = tokenize(f"upper({inner})")
-                toks[i : close + 1] = repl
-                i += len(repl)  # don't re-match the inner typeof
-                continue
-        elif name in ("lpad", "rpad"):
-            # negative target length → NULL (string-functions-ir.cc
-            # Lpad/Rpad:192-225: `len.val < 0` returns null; Spark's
-            # lpad/rpad return '' instead)
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 3:
-                toks[i] = Tok("word", f"{name}3")
-        elif name == "split_part":
-            # empty delimiter → the whole string (SplitPart:1374; Spark
-            # returns ''); field 0 still errors in both engines
-            close = _matching_paren(toks, j)
-            if len(_split_args(toks, j, close)) == 3:
-                toks[i] = Tok("word", "split_part3")
-        elif name in _FN_RENAME:
+        if name in _FN_RENAME:
             toks[i] = Tok("word", _FN_RENAME[name])
         elif name.endswith("_utf8") and len(name) > 5:
             # Impala's *_utf8 variants opt into UTF-8 character semantics
             # (UTF8_MODE, impala_functions.py); Spark string functions are
             # UTF-8-native, so the base function IS the utf8 variant.
-            base = name[:-5]
-            toks[i] = Tok("word", _rewrite_utf8_base(toks, i, j, base))
+            toks[i] = Tok("word", _rewrite_utf8_base(toks, i, j, name[:-5]))
         elif name.startswith("utf8_") and len(name) > 5:
             # prefix form (utf8_length/utf8_reverse/utf8_substr[ing])
-            base = name[5:]
-            toks[i] = Tok("word", _rewrite_utf8_base(toks, i, j, base))
+            toks[i] = Tok("word", _rewrite_utf8_base(toks, i, j, name[5:]))
         elif name.endswith("_ascii") and len(name) > 6:
-            # *_ascii fast-path variants — identical results on ASCII input,
-            # and Spark's UTF-8 natives are a strict superset.
+            # *_ascii fast-path variants — identical results on ASCII
+            # input, and Spark's UTF-8 natives are a strict superset.
             base = name[:-6]
             toks[i] = Tok("word", _FN_RENAME.get(base, base))
         i += 1
@@ -2887,11 +2763,10 @@ def _rewrite_utf8_base(toks: list[Tok], i: int, j: int, base: str) -> str:
     plain rename would hit Spark's 2-arg-only builtin."""
     if base == "instr":
         close = _matching_paren(toks, j)
-        nargs = len(_split_args(toks, j, close))
-        if nargs in (3, 4):
-            if nargs == 3:
-                _splice(toks, close, close, ", 1")
-            return "instr4"
+        row = _ARITY_KERNELS.get(("instr", len(_split_args(toks, j, close))))
+        if row is not None:
+            _splice(toks, close, close, row[1])
+            return row[0]
     if base in ("substr", "substring"):
         # character-semantics substr keeps the reference's position
         # contract (pos = 0 / resolved-past-start → empty — Utf8Substring)
@@ -4968,7 +4843,6 @@ def translate(
         toks = _rewrite_char_mode_substr(toks)
     else:
         toks = _rewrite_byte_semantics(toks)
-    toks = _rewrite_ignore_nulls(toks)
     toks = _rewrite_posix_classes(toks)
     toks = _rewrite_functions(toks)
     if utf8:
@@ -5546,49 +5420,6 @@ def _rewrite_interval_exprs(toks: list[Tok]) -> list[Tok]:
         out.extend(tokenize(repl))
         i = unit_idx + 1
     return out
-
-
-# The reference accepts IGNORE NULLS only on first_value/last_value
-# (AnalyticExpr.java:446-449); lag/lead here are a harmless SUPERSET —
-# Impala would reject the spelling, Spark evaluates it meaningfully.
-_IGNORE_NULLS_FNS = {"first_value", "last_value", "lag", "lead"}
-
-
-def _rewrite_ignore_nulls(toks: list[Tok]) -> list[Tok]:
-    """Impala puts IGNORE NULLS INSIDE the analytic call's parens —
-    ``last_value(x ignore nulls)`` (grammar sql-parser.cup:3729
-    ``expr_list KW_IGNORE KW_NULLS``) — where Spark wants it after:
-    ``last_value(x) IGNORE NULLS``.  Move the trailing keyword pair
-    outside the close paren for the four functions the reference's
-    analyzer accepts it on."""
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if t.kind != "word" or t.text.lower() not in _IGNORE_NULLS_FNS:
-            i += 1
-            continue
-        j = _next_code(toks, i + 1)
-        if j >= len(toks) or toks[j].text != "(":
-            i += 1
-            continue
-        close = _matching_paren(toks, j)
-        p_nulls = _prev_code(toks, close - 1)
-        p_ignore = _prev_code(toks, p_nulls - 1) if p_nulls > j else -1
-        if (
-            p_ignore > j
-            and toks[p_nulls].upper == "NULLS"
-            and toks[p_ignore].upper == "IGNORE"
-        ):
-            del toks[p_ignore:close]
-            close = p_ignore  # ')' shifted down
-            toks[close + 1 : close + 1] = [
-                Tok("ws", " "),
-                Tok("word", "IGNORE"),
-                Tok("ws", " "),
-                Tok("word", "NULLS"),
-            ]
-        i = close + 1
-    return toks
 
 
 def _rewrite_select_unnest(toks: list[Tok]) -> list[Tok]:

@@ -2847,7 +2847,7 @@ _STATEMENTS: dict[
 ] = {
     "SET": [
         (_pattern(r"SET"), Engine._show_options),
-        (_pattern(r"SET\s+(\w+)\s*=\s*(\S+)"), Engine._set_statement),
+        (_pattern(r"SET\s+(\w+)\s*=\s*([^\s;]+)"), Engine._set_statement),
     ],
     "COMPUTE": [
         (_pattern(r"COMPUTE\s+INCREMENTAL\s+STATS\s+(\w+)"),

@@ -277,16 +277,21 @@ def test_utf8_variants_and_approx_family(spark, sf_dir):
 
 def test_regexp_like_flags(spark, sf_dir):
     """3-arg regexp_like with literal flags (i/m/n) folds the flags into
-    the pattern; 2-arg form is Spark-native and untouched."""
+    the pattern; 2-arg form is Spark-native and untouched.  Other flags
+    follow the reference: the later of c and i wins, and any other letter
+    is an error."""
     from hopspark.dialect import translate
     from hopspark.engine import Engine
 
     assert translate("SELECT regexp_like(s, 'x') FROM t") == "SELECT regexp_like(s, 'x') FROM t"
     eng = Engine(spark=spark, sf_dir=sf_dir)
     r = eng.sql(
-        "SELECT regexp_like('ABC', 'abc', 'i') AS a, regexp_like('ABC', 'abc') AS b"
+        "SELECT regexp_like('ABC', 'abc', 'i') AS a, regexp_like('ABC', 'abc') AS b, "
+        "regexp_like('abc', 'ABC', 'ic') AS c, regexp_like('abc', 'ABC', 'ci') AS d"
     ).head()
-    assert r.a is True and r.b is False
+    assert r.a is True and r.b is False and r.c is False and r.d is True
+    with pytest.raises(Exception, match="Illegal match parameter x"):
+        eng.sql("SELECT regexp_like('abc', 'abc', 'x') AS e").collect()
 
 
 def test_utf8_mode_byte_semantics_default(spark, sf_dir):

@@ -113,6 +113,17 @@ def test_examples_cover_every_table_entry():
 
 
 @pytest.mark.parametrize(
+    "sql,groups",
+    [
+        ("SET appx_count_distinct=true;", ("appx_count_distinct", "true")),
+        ("SET mem_limit='2g';", ("mem_limit", "'2g'")),
+    ],
+)
+def test_set_value_stops_before_the_semicolon(sql, groups):
+    assert _statement(sql) == (Engine._set_statement, groups)
+
+
+@pytest.mark.parametrize(
     "sql",
     [
         "SELECT 1",

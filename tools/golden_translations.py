@@ -18,11 +18,23 @@ and which cases launched a different number of jobs:
 
 A case whose result check fails is still recorded; the failures are
 counted on stderr.
+
+``--strings OUT`` needs no Spark session: it collects (with ``ast``)
+every string constant in ``tests/*.py`` and ``tools/*.py`` of two or
+more words whose first word is SELECT, WITH, VALUES, CREATE, INSERT or
+EXPLAIN, and writes one line per string and option set of
+``tests/test_dialect_properties.py`` with what ``translate()`` makes of
+it (or ``Type: message`` when it raises).  ``--compare`` reads these
+files too:
+
+    python tools/golden_translations.py --strings /tmp/a.jsonl
 """
 
 from __future__ import annotations
 
 import argparse
+import ast
+import collections
 import glob
 import json
 import os
@@ -87,27 +99,90 @@ def record(out_path: str) -> None:
     )
 
 
+#: the first words of the string constants --strings translates
+_STATEMENT_WORDS = {"SELECT", "WITH", "VALUES", "CREATE", "INSERT", "EXPLAIN"}
+#: the option sets of tests/test_dialect_properties.py
+_OPTIONS = (None, {"utf8_mode": True}, {"appx_count_distinct": True})
+
+
+def _sql_strings(path: str) -> list[str]:
+    """The distinct string constants of one Python file that open with a
+    statement word and go on; the literal parts of f-strings are not
+    whole strings and are skipped."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    parts = {
+        id(v) for node in ast.walk(tree) if isinstance(node, ast.JoinedStr)
+        for v in node.values
+    }
+    found = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and id(node) not in parts
+        ):
+            words = node.value.split(None, 1)
+            if len(words) == 2 and words[0].upper() in _STATEMENT_WORDS:
+                found.add(node.value)
+    return sorted(found)
+
+
+def record_strings(out_path: str) -> None:
+    from hopspark.dialect.translate import translate
+
+    rows = []
+    for pattern in ("tests/*.py", "tools/*.py"):
+        for path in sorted(glob.glob(os.path.join(ROOT, pattern))):
+            rel = os.path.relpath(path, ROOT)
+            for sql in _sql_strings(path):
+                for case, options in enumerate(_OPTIONS):
+                    row = {"file": rel, "case": case, "input": sql}
+                    try:
+                        row["output"] = translate(sql, options=options)
+                    except Exception as exc:  # noqa: BLE001 - recorded
+                        row["error"] = f"{type(exc).__name__}: {exc}"
+                    rows.append(row)
+    with open(out_path, "w") as f:
+        for row in rows:
+            f.write(json.dumps(row) + "\n")
+    print(
+        f"{len(rows)} translations written to {out_path}; "
+        f"{sum('error' in r for r in rows)} raised",
+        file=sys.stderr,
+    )
+
+
 def compare(old_path: str, new_path: str) -> int:
-    """Print each recorded translation that differs, then each case
-    whose Spark-job count differs (marked with whether any of its
-    translations differs: job counts also move on identical
-    translations), and the totals; 1 when any translation differs."""
-    def load(path: str) -> tuple[list[dict], dict[tuple[str, int], int]]:
+    """Print each recorded translation that differs (rows are paired by
+    file, case, input and the input's occurrence in the case; a row with
+    no partner prints against null), then each case whose Spark-job
+    count differs (marked with whether any of its translations differs:
+    job counts also move on identical translations), and the totals; 1
+    when any translation differs or has no partner."""
+    def load(path: str) -> tuple[dict[tuple, dict], dict[tuple, int]]:
         with open(path) as f:
             rows = [json.loads(line) for line in f]
-        return [r for r in rows if "jobs" not in r], {
+        keyed: dict[tuple, dict] = {}
+        seen: collections.Counter = collections.Counter()
+        for r in rows:
+            if "jobs" not in r:
+                key = (r["file"], r["case"], r["input"])
+                keyed[key + (seen[key],)] = r
+                seen[key] += 1
+        return keyed, {
             (r["file"], r["case"]): r["jobs"] for r in rows if "jobs" in r
         }
 
     (old, old_jobs), (new, new_jobs) = load(old_path), load(new_path)
-    keys = ("file", "case", "input", "output", "error")
     differ = [
-        (a, b) for a, b in zip(old, new)
-        if tuple(a.get(k) for k in keys) != tuple(b.get(k) for k in keys)
+        (old.get(k), new.get(k)) for k in dict.fromkeys([*old, *new])
+        if k not in old or k not in new
+        or (old[k].get("output"), old[k].get("error"))
+        != (new[k].get("output"), new[k].get("error"))
     ]
     for a, b in differ:
         print(json.dumps({"old": a, "new": b}))
-    changed = {(r["file"], r["case"]) for pair in differ for r in pair}
+    changed = {(r["file"], r["case"]) for pair in differ for r in pair if r}
     moved = sorted(
         case for case in old_jobs.keys() | new_jobs.keys()
         if old_jobs.get(case) != new_jobs.get(case)
@@ -119,18 +194,22 @@ def compare(old_path: str, new_path: str) -> int:
             "translation_differs": case in changed,
         }))
     print(
-        f"{min(len(old), len(new))} statements compared, {len(differ)} "
-        f"differ; {len(old)} vs {len(new)} recorded; Spark jobs "
-        f"{sum(old_jobs.values())} vs {sum(new_jobs.values())}, "
-        f"{len(moved)} cases differ",
+        f"{len(old.keys() & new.keys())} statements compared, "
+        f"{len(differ)} differ or have no partner; {len(old)} vs "
+        f"{len(new)} recorded; Spark jobs {sum(old_jobs.values())} vs "
+        f"{sum(new_jobs.values())}, {len(moved)} cases differ",
         file=sys.stderr,
     )
-    return int(bool(differ) or len(old) != len(new))
+    return int(bool(differ))
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--out", help="JSON-lines file to write")
+    ap.add_argument(
+        "--strings", metavar="OUT",
+        help="translate the SQL strings of tests/ and tools/ into OUT",
+    )
     ap.add_argument(
         "--compare", nargs=2, metavar=("OLD", "NEW"),
         help="compare two recordings instead of making one",
@@ -138,8 +217,11 @@ def main() -> int:
     args = ap.parse_args()
     if args.compare:
         return compare(*args.compare)
+    if args.strings:
+        record_strings(args.strings)
+        return 0
     if not args.out:
-        ap.error("--out or --compare is required")
+        ap.error("--out, --strings or --compare is required")
     record(args.out)
     return 0
 
