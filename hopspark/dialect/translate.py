@@ -587,6 +587,22 @@ def _in_guard_context(toks: list[Tok], start: int) -> bool:
     return False
 
 
+def _after_values_rows(toks: list[Tok], i: int) -> int:
+    """The index after the row list of the VALUES keyword at ``i``.  Spark
+    inline tables reject non-foldable expressions such as CASE
+    (INVALID_INLINE_TABLE), so the passes that splice guards or kernels
+    skip the rows: values written there keep Spark's native semantics
+    (documented delta)."""
+    k = _next_code(toks, i + 1)
+    while k < len(toks) and toks[k].text == "(":
+        k = _next_code(toks, _matching_paren(toks, k) + 1)
+        if k < len(toks) and toks[k].text == ",":
+            k = _next_code(toks, k + 1)
+        else:
+            break
+    return k
+
+
 def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
     """Apply the TIMESTAMP valid-range contract (see _ts_range_guard) to the
     three producer shapes the reference NULLs out-of-range:
@@ -608,18 +624,7 @@ def _rewrite_timestamp_range(toks: list[Tok]) -> list[Tok]:
         up = t.upper
         low = t.text.lower()
         if up == "VALUES":
-            # Spark inline tables (VALUES rows) reject CASE expressions
-            # (INVALID_INLINE_TABLE), so the guard cannot be applied there:
-            # skip the whole row list. Out-of-range literals in VALUES rows
-            # keep Spark's native (unclamped) semantics — documented delta.
-            k = _next_code(toks, i + 1)
-            while k < len(toks) and toks[k].text == "(":
-                k = _next_code(toks, _matching_paren(toks, k) + 1)
-                if k < len(toks) and toks[k].text == ",":
-                    k = _next_code(toks, k + 1)
-                else:
-                    break
-            i = k
+            i = _after_values_rows(toks, i)
             continue
         if up == "CAST":
             c = _parse_cast(toks, i)
@@ -1029,7 +1034,7 @@ def _call_round(toks, i, j, close, args):
     a_ty = _static_type(toks, *args[0])
     if a_ty == "FLOAT":
         a = _translated_sql(toks, args[0])
-        n_arg = _span_sql(toks, args[1])
+        n_arg = _translated_sql(toks, args[1])
         return i + _splice(
             toks, i, close + 1, f"round(CAST(({a}) AS DOUBLE), {n_arg})"
         )
@@ -1163,7 +1168,9 @@ def _call_utc_timestamp(toks, i, j, close, args):
         and toks[tz_i].kind == "str"
         and not _tz_known(toks[tz_i].text[1:-1])
     ):
-        return i + _splice(toks, i, close + 1, f"({_span_sql(toks, args[0])})")
+        return i + _splice(
+            toks, i, close + 1, f"({_translated_sql(toks, args[0])})"
+        )
     return None
 
 
@@ -1193,7 +1200,7 @@ def _call_width_bucket(toks, i, j, close, args):
 
     if not any(_needs_precise(sp) for sp in args[:3]):
         return None
-    a = [_span_sql(toks, sp) for sp in args]
+    a = [_translated_sql(toks, sp) for sp in args]
     return i + _splice(toks, i, close + 1, (
         f"wb_precise(CAST({a[0]} AS STRING), "
         f"CAST({a[1]} AS STRING), CAST({a[2]} AS STRING), "
@@ -1280,7 +1287,10 @@ def _call_truncate(toks, i, j, close, args):
     the Oracle-style datetime trunc (string unit second arg).  Dispatch on
     the second argument's shape: string literal → Spark's native date
     trunc; otherwise → the registered numeric truncate, defaulting the
-    scale to 0 for the 1-arg form."""
+    scale to 0 for the 1-arg form.  A call without arguments is left to
+    Spark's analysis error."""
+    if not args:
+        return None
     if len(args) == 2 and toks[_next_code(toks, args[1][0])].kind == "str":
         # Datetime trunc: the reference accepts the full Oracle unit set
         # (udf-builtins.cc StrToTruncUnit) and returns TIMESTAMP.  Spark's
@@ -1731,7 +1741,10 @@ def _call_mask(toks, i, j, close, args):
         the class (maskchars handles the '-1' sentinel);
       * NUMERIC first arguments mask digits with '1' (or the 6th "number
         char" argument) and keep an integer result;
-      * plain mask() gains the 6-arg form Spark lacks."""
+      * plain mask() gains the 6-arg form Spark lacks.
+    A call without arguments is left to Spark's analysis error."""
+    if not args:
+        return None
     name = toks[i].text.lower()
     is_n_form = name != "mask"
     char_args = args[2:] if is_n_form else args[1:]
@@ -1754,9 +1767,9 @@ def _call_mask(toks, i, j, close, args):
         and len(args) in (1, 9)
         and _static_type(toks, *args[0]) == "DATE"
     ):
-        a0 = _span_sql(toks, args[0])
+        a0 = _translated_sql(toks, args[0])
         if len(args) == 9:
-            dmy = [_span_sql(toks, sp) for sp in args[6:9]]
+            dmy = [_translated_sql(toks, sp) for sp in args[6:9]]
         else:
             dmy = ["1", "0", "1"]
         return i + _splice(
@@ -1765,7 +1778,9 @@ def _call_mask(toks, i, j, close, args):
         )
     is_numeric = _static_type(toks, *args[0]) in _INT_WIDTH_TYPES
 
-    def _char_arg(span):
+    def _char_literal(span):
+        """A codepoint or -1 character argument as the string literal the
+        kernels take, else None."""
         code = [k for k in range(span[0], span[1]) if _is_code(toks[k])]
         neg = (
             len(code) == 2
@@ -1784,7 +1799,7 @@ def _call_mask(toks, i, j, close, args):
                 cp &= 0xFF
             ch = chr(cp).replace("'", "''")
             return f"'{ch}'"
-        return _span_sql(toks, span)
+        return None
 
     def _num_char_arg(span):
         # the NUMBER mask argument is a digit VALUE in [0,9]
@@ -1806,15 +1821,13 @@ def _call_mask(toks, i, j, close, args):
     needs_kernel = (
         is_numeric
         or len(char_args) >= 4  # other/number args present
-        or any(
-            _char_arg(sp).startswith("'")
-            and _span_sql(toks, sp) != _char_arg(sp)
-            for sp in char_args
-        )
+        or any(_char_literal(sp) is not None for sp in char_args)
         or (is_n_form and len(args) == 1)
     )
     if needs_kernel and 1 <= len(args) <= (7 if is_n_form else 6):
-        chars = [_char_arg(sp) for sp in char_args]
+        chars = [
+            _char_literal(sp) or _translated_sql(toks, sp) for sp in char_args
+        ]
         num_char = (
             _num_char_arg(char_args[4]) if len(char_args) >= 5 else "'1'"
         )
@@ -1822,13 +1835,13 @@ def _call_mask(toks, i, j, close, args):
         l = chars[1] if len(chars) >= 2 else "'x'"
         d = chars[2] if len(chars) >= 3 else "'n'"
         o = chars[3] if len(chars) >= 4 else "CAST(NULL AS STRING)"
-        a = _span_sql(toks, args[0])
+        a = _translated_sql(toks, args[0])
         src = f"CAST({a} AS STRING)" if is_numeric else f"({a})"
         if is_numeric:
             d = num_char
         if is_n_form:
             n_arg = (
-                _span_sql(toks, args[1])
+                _translated_sql(toks, args[1])
                 if len(args) >= 2
                 else "4"  # MaskShowFirstN/MaskFirstN default
             )
@@ -2975,21 +2988,8 @@ def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
             i += 1
             continue
         if t.upper == "VALUES":
-            # Spark inline tables reject non-foldable expressions
-            # (INVALID_INLINE_TABLE), so the to_date_strict kernel cannot
-            # be spliced into VALUES rows: skip the row list, same policy
-            # as _rewrite_timestamp_range. DATE literals inside rows are
-            # still validated by the literal branch on a later scan? No —
-            # skipping skips validation too; out-of-range literals in
-            # VALUES rows keep Spark semantics (documented delta).
-            k = _next_code(toks, i + 1)
-            while k < len(toks) and toks[k].text == "(":
-                k = _next_code(toks, _matching_paren(toks, k) + 1)
-                if k < len(toks) and toks[k].text == ",":
-                    k = _next_code(toks, k + 1)
-                else:
-                    break
-            i = k
+            # DATE literals in the rows go unvalidated too
+            i = _after_values_rows(toks, i)
             continue
         if t.upper == "DATE":
             j = _next_code(toks, i + 1)

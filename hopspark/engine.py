@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
+from typing import NamedTuple
 
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
@@ -315,8 +316,9 @@ class Engine(AlterTableMixin):
         # flat queries (the vast majority) exit with zero schema calls
         if not any(len(segs) > 1 for _j, segs, _a, _e in paths):
             return items
-        # ---- pass 2: resolve aliases to element types --------------------
-        alias_dtype: dict[str, tuple[str, object, tuple]] = {}
+        # the type each FROM alias binds: a table's row, a collection's
+        # element
+        alias_dtype: dict[str, tuple[object, tuple]] = {}
         bindings = []  # (alias_as_written, block, fields|None, kind)
         qb = _query_blocks(toks)
         for j, segs, alias, aend in paths:
@@ -326,7 +328,7 @@ class Engine(AlterTableMixin):
                 rel = self._relation(segs[0])
                 if rel is not None:
                     schema = rel.schema
-                    alias_dtype[alias.lower()] = ("row", schema, blk)
+                    alias_dtype[alias.lower()] = (schema, blk)
                     bindings.append((
                         alias, blk,
                         {f.name.lower(): f.name for f in schema.fields},
@@ -339,66 +341,28 @@ class Engine(AlterTableMixin):
                 rel = self._relation(segs[0])
                 if rel is None:
                     continue
-                base = ("row", rel.schema, blk)
-            if from_alias and base[2] != blk:
+                base = (rel.schema, blk)
+            if from_alias and base[1] != blk:
                 # a subquery FROM rooted at an OUTER alias (table OR
                 # collection) is a correlated SUBPLAN target — its own
                 # rewrite resolves bare element fields; qualifying them
                 # here would defeat the lambda substitution
                 continue
-            cur: object = base[1]
-            ok = True
-            for seg in segs[1:]:
-                sl = seg.lower()
-                if isinstance(cur, T.StructType):
-                    fld = next(
-                        (f for f in cur.fields
-                         if f.name.lower() == sl), None,
-                    )
-                    if fld is None:
-                        ok = False
-                        break
-                    cur = fld.dataType
-                elif isinstance(cur, T.ArrayType):
-                    el = cur.elementType
-                    if sl == "item":
-                        cur = el
-                    elif isinstance(el, T.StructType):
-                        fld = next(
-                            (f for f in el.fields
-                             if f.name.lower() == sl), None,
-                        )
-                        if fld is None:
-                            ok = False
-                            break
-                        cur = fld.dataType
-                    else:
-                        ok = False
-                        break
-                elif isinstance(cur, T.MapType):
-                    if sl == "value":
-                        cur = cur.valueType
-                    elif sl == "key":
-                        cur = cur.keyType
-                    else:
-                        ok = False
-                        break
-                else:
-                    ok = False
-                    break
-            if not ok:
+            steps = _resolve_path(base[0], segs[1:])
+            if steps is None:
                 continue
+            cur = steps[-1].dtype
             if isinstance(cur, T.ArrayType):
                 el = cur.elementType
-                alias_dtype[alias.lower()] = ("elem", el, blk)
+                alias_dtype[alias.lower()] = (el, blk)
                 flds = (
                     {f.name.lower(): f.name for f in el.fields}
                     if isinstance(el, T.StructType) else None
                 )
                 bindings.append((alias, blk, flds, "elem"))
             elif isinstance(cur, T.MapType):
-                alias_dtype[alias.lower()] = ("elem", cur.valueType, blk)
-        # ---- pass 3: qualify bare field refs -----------------------------
+                alias_dtype[alias.lower()] = (cur.valueType, blk)
+        # then qualify the bare refs to a visible element field
         elem_binds = [
             (alias, blk, flds) for alias, blk, flds, kind in bindings
             if kind == "elem" and flds
@@ -555,10 +519,9 @@ class Engine(AlterTableMixin):
                     return True
                 return False
 
-            want_item = _mentions("item")
-            want_pos = _mentions("pos")
-            res = self._table_path_subquery(
-                segs, rel.schema, want_pos, want_item
+            steps = _resolve_path(rel.schema, segs[1:])
+            res = None if steps is None else self._table_path_subquery(
+                segs[0], steps, _mentions("pos"), _mentions("item")
             )
             if res is None:
                 continue
@@ -736,14 +699,14 @@ class Engine(AlterTableMixin):
             if res is None:
                 i += 1
                 continue
-            qpath, coll_dt, root_info = res
+            qpath, coll_dt, steps, root_info = res
             # Catalyst REJECTS map-typed correlated column references
             # outright ("Correlated column reference ... cannot be map
             # type").  When the subplan path roots at a top-level MAP
             # column (t.map_map_col.value — with-clause.test#4), wrap
             # the binding FROM item so the correlated ref is the
             # pre-computed map_entries ARRAY instead, then re-resolve.
-            mw = self._map_root_wrap(toks, items, segs, root_info, qpath)
+            mw = self._map_root_wrap(toks, items, segs, steps, root_info)
             if mw is not None:
                 if mw[0] == "respan":
                     for s0, s1, w_txt in sorted(mw[1], reverse=True):
@@ -751,43 +714,23 @@ class Engine(AlterTableMixin):
                     items = _from_items(toks)
                     i = 0
                     continue
-                qpath = mw[1]
-            gen = None
-            if isinstance(coll_dt, T.ArrayType):
-                if isinstance(coll_dt.elementType, T.MapType) and re.search(
-                    r"\bkey\b|\bvalue\b",
-                    untokenize(toks[o:close]).lower(),
-                ) and not re.search(
-                    r"\bitem\b|\bpos\b", untokenize(toks[o:close]).lower()
-                ):
-                    # a COLLECTION OF MAPS (`t.map_map_col.value` — the
-                    # outer map's values are maps) scans every inner
-                    # map's ENTRIES (nested-types-with-clause.test#4);
-                    # flatten one entries level so key/value resolve
-                    gen = (
-                        "SELECT inline(flatten(transform("
-                        f"{qpath}, __mm -> map_entries(__mm))))"
-                    )
-                elif isinstance(coll_dt.elementType, T.StructType):
-                    gen = f"SELECT inline({qpath})"
-                else:
-                    body = untokenize(toks[o:close]).lower()
-                    if re.search(r"\bpos\b", body):
-                        # pos is BIGINT in the reference; posexplode
-                        # yields INT
-                        gen = (
-                            "SELECT CAST(__spp AS BIGINT) AS pos,"
-                            " __spi AS item FROM (SELECT"
-                            f" posexplode({qpath})"
-                            " AS (__spp, __spi))"
-                        )
-                    else:
-                        gen = f"SELECT explode({qpath}) AS item"
-            elif isinstance(coll_dt, T.MapType):
+                qpath, coll_dt = mw[1]
+            body = untokenize(toks[o:close])
+            arr, arr_dt = self._subplan_elements(body, qpath, coll_dt)
+            if isinstance(coll_dt, T.MapType):
                 gen = f"SELECT explode({qpath})"  # key, value
-            if gen is None:
-                i += 1
-                continue
+            elif isinstance(arr_dt.elementType, T.StructType):
+                gen = f"SELECT inline({arr})"
+            elif re.search(r"\bpos\b", body, re.I):
+                # pos is BIGINT in the reference; posexplode yields INT
+                gen = (
+                    "SELECT CAST(__spp AS BIGINT) AS pos,"
+                    " __spi AS item FROM (SELECT"
+                    f" posexplode({arr})"
+                    " AS (__spp, __spi))"
+                )
+            else:
+                gen = f"SELECT explode({arr}) AS item"
             # LATERAL derived table whose select list is a single
             # aggregate — (SELECT COUNT(*)/SUM(x)/... AS n FROM c.path
             # [WHERE pred]) v — lowers to an inline HOF expression: the
@@ -799,7 +742,7 @@ class Engine(AlterTableMixin):
             # the derived FROM item this block is the body of, if any
             derived = next((x for x in items if x.start == o), None)
             if it is targets[0] and self._subplan_lateral_agg(
-                toks, o, close, first, it, derived, qpath, coll_dt
+                toks, o, close, first, it, derived, arr, arr_dt
             ):
                 items = _from_items(toks)
                 i = 0  # spans shifted: rescan
@@ -848,7 +791,7 @@ class Engine(AlterTableMixin):
             tail_from = it.stop + 1
             t1 = None if it is not targets[0] else self._subplan_fast_path(
                 toks, o, close, first, from_i, salias,
-                qpath, coll_dt, p, derived if lateral else None,
+                arr, arr_dt, p, derived if lateral else None,
             )
             if t1 is not None:
                 start, stop, text = t1
@@ -907,47 +850,11 @@ class Engine(AlterTableMixin):
           * ``, (SELECT * FROM c.path [x] [WHERE pred] [LIMIT n]) v``
             -> ``LATERAL VIEW inline/explode(slice(filter(c.path,..),1,n))``
 
-        ``derived`` is the comma/JOIN derived FROM item whose body the
-        block is, None for an expression subquery.  Returns (start, stop,
-        replacement_sql) or None to take the general decorrelated path."""
-        if isinstance(coll_dt, T.MapType):
-            # a MAP subplan target exposes key/value (MapType.java);
-            # lower onto map_entries() so the array machinery below
-            # applies unchanged — Catalyst REJECTS map-typed correlated
-            # refs outright, so this is the only plan for these shapes
-            # (r10 verdict item 6, nested-types-scanner-maps.test)
-            qpath = f"map_entries({qpath})"
-            coll_dt = T.ArrayType(T.StructType([
-                T.StructField("key", coll_dt.keyType),
-                T.StructField("value", coll_dt.valueType),
-            ]))
-        if (
-            isinstance(coll_dt, T.ArrayType)
-            and isinstance(coll_dt.elementType, T.MapType)
-        ):
-            # a path landing on a COLLECTION OF MAPS (`t.map_map_col
-            # .value` — the outer map's values are maps) scans every
-            # inner map's ENTRIES, parent-correlated
-            # (nested-types-with-clause.test#4's correlated WITH view);
-            # flatten one entries level so key/value resolve.  Bare
-            # item/pos refs keep the element-as-map reading — but maps
-            # are not materializable columns, so key/value is the only
-            # shape the reference accepts here.
-            body_txt = untokenize(toks[o + 1 : close])
-            if re.search(r"\b(key|value)\b", body_txt, re.I) and not (
-                re.search(r"\b(item|pos)\b", body_txt, re.I)
-            ):
-                mt = coll_dt.elementType
-                qpath = (
-                    f"flatten(transform({qpath},"
-                    f" __mm -> map_entries(__mm)))"
-                )
-                coll_dt = T.ArrayType(T.StructType([
-                    T.StructField("key", mt.keyType),
-                    T.StructField("value", mt.valueType),
-                ]))
-        if not isinstance(coll_dt, T.ArrayType):
-            return None
+        ``qpath`` is the target as an array of its elements (of type
+        ``coll_dt``, see ``_subplan_elements``); ``derived`` is the
+        comma/JOIN derived FROM item whose body the block is, None for an
+        expression subquery.  Returns (start, stop, replacement_sql) or
+        None to take the general decorrelated path."""
         elem = coll_dt.elementType
         fields = (
             [f.name for f in elem.fields]
@@ -1024,16 +931,13 @@ class Engine(AlterTableMixin):
         return p, stop, text  # p = the comma: consumed by LATERAL VIEW
 
     def _resolve_subplan_target(self, toks, items, segs, candidates):
-        """Resolve a subquery FROM target path to ``(collection_expr_sql,
-        collection_dtype, root_info)`` or None.  Roots, in order: a
+        """Resolve a subquery FROM target path to ``(collection_sql,
+        collection_dtype, steps, root_info)`` or None.  Roots, in order: a
         candidate TABLE (or temp view); a COLLECTION ALIAS bound by an
         earlier dotted FROM item (``t.int_array_array a1`` then ``FROM
         a1.item``); a DERIVED-TABLE alias (schema probed with an
-        analysis-only query).  Interior segments: struct fields navigate;
-        ``item`` on a nested array flattens one level (NULL inner arrays
-        dropped, like the reference's scan); a field name on an
-        array<struct> maps to a per-element transform; ``value`` on a map
-        takes map_values.  ``root_info`` is ``("table", <name>)`` /
+        analysis-only query).  ``steps`` are the path's below its root
+        (``_resolve_path``).  ``root_info`` is ``("table", <name>)`` /
         ``("collection", (<root word>, <root table or None>, <top-level
         column>))`` / ``("derived", None)`` — the decorrelation-landmine
         guard needs the provenance."""
@@ -1041,104 +945,70 @@ class Engine(AlterTableMixin):
             rel = self._relation(table)
             if rel is None:
                 continue
-            r = self._walk_collection_path(segs[0], rel.schema, segs[1:])
+            r = self._collection_path(segs[0], rel.schema, segs[1:])
             if r is not None:
                 return (*r, ("table", table))
         r = self._from_collection_alias_target(toks, items, segs)
         if r is not None:
-            expr, dt, root = r
-            return expr, dt, ("collection", root)
+            *r, root = r
+            return (*r, ("collection", root))
         schema = self._derived_alias_schema(toks, items, segs[0])
         if schema is not None:
-            r = self._walk_collection_path(segs[0], schema, segs[1:])
+            r = self._collection_path(segs[0], schema, segs[1:])
             if r is not None:
                 return (*r, ("derived", None))
         return None
 
+    @classmethod
+    def _collection_path(cls, base_expr, base_dt, segs):
+        """``segs`` resolved below ``base_expr`` (of type ``base_dt``) and
+        rendered: ``(collection_sql, collection_dtype, steps)``, or None."""
+        steps = _resolve_path(base_dt, segs)
+        r = None if steps is None else cls._render_collection(
+            base_expr, base_dt, steps
+        )
+        return None if r is None else (*r, steps)
+
     @staticmethod
-    def _walk_collection_path(base_expr, base_dt, rest):
-        """Walk ``rest`` from ``(base_expr, base_dt)`` per the reference's
-        Path resolution; returns (expr, dtype) when the terminal is a
-        collection, else None."""
-        cur_expr, cur_dt = base_expr, base_dt
-        for idx, seg in enumerate(rest):
-            sl = seg.lower()
-            last = idx == len(rest) - 1
-            if isinstance(cur_dt, T.StructType):
-                fld = next(
-                    (f for f in cur_dt.fields
-                     if f.name.lower() == sl), None,
-                )
-                if fld is None:
-                    return None
-                cur_expr = f"{cur_expr}.`{fld.name}`"
-                cur_dt = fld.dataType
-            elif isinstance(cur_dt, T.ArrayType):
-                el = cur_dt.elementType
-                if sl == "item":
-                    if isinstance(el, T.ArrayType):
-                        # one flatten per nesting hop; NULL inner arrays
-                        # contribute no elements (flatten itself NULLs
-                        # the whole result on a NULL element)
-                        cur_expr = (
-                            f"flatten(filter({cur_expr},"
-                            " __tf -> __tf IS NOT NULL))"
-                        )
-                        cur_dt = el
-                    elif last:
-                        pass  # path ends AT the elements: same array
-                    else:
-                        # item then more segs: fields of struct elements
-                        if not isinstance(el, T.StructType):
-                            return None
-                        continue  # next seg handled by the array+field arm
-                elif isinstance(el, T.StructType):
-                    fld = next(
-                        (f for f in el.fields
-                         if f.name.lower() == sl), None,
-                    )
-                    if fld is None:
-                        return None
-                    if isinstance(fld.dataType, T.ArrayType):
-                        # a COLLECTION field reached through an array is
-                        # implicitly unnested (Path.java: the FROM target
-                        # c.c_orders.o_lineitems is the union of every
-                        # order's lineitems) — flatten, dropping NULL
-                        # inner collections like the reference's scan
-                        cur_expr = (
-                            f"flatten(filter(transform({cur_expr},"
-                            f" __tw -> __tw.`{fld.name}`),"
-                            " __tf -> __tf IS NOT NULL))"
-                        )
-                        cur_dt = fld.dataType
-                    else:
-                        cur_expr = (
-                            f"transform({cur_expr},"
-                            f" __tw -> __tw.`{fld.name}`)"
-                        )
-                        cur_dt = T.ArrayType(fld.dataType)
-                else:
-                    return None
-            elif isinstance(cur_dt, T.MapType):
-                if sl != "value":
-                    return None
-                cur_expr = f"map_values({cur_expr})"
-                cur_dt = T.ArrayType(cur_dt.valueType)
-            else:
+    def _render_collection(expr, dt, steps):
+        """The resolved path ``steps`` below ``expr`` (of type ``dt``) as
+        one SQL expression holding every value the path reaches: below an
+        array a field becomes a per-element ``transform``, a collection
+        reached through an array is flattened (one flatten per nesting
+        hop; NULL inner collections contribute no elements, like the
+        reference's scan — flatten itself NULLs the whole result on a NULL
+        element), and a map's ``value`` takes ``map_values``.  Returns
+        ``(sql, dtype)`` when that is a collection, else None; a map's
+        ``key``, and a map reached through an array, are not rendered."""
+        for st in steps:
+            if st.kind == "field" and not isinstance(dt, T.ArrayType):
+                expr, dt = f"{expr}.`{st.name}`", st.dtype
+                continue
+            if st.kind == "value" and isinstance(dt, T.MapType):
+                expr, dt = f"map_values({expr})", T.ArrayType(st.dtype)
+                continue
+            if st.kind == "field":  # below an array: per element
+                expr = f"transform({expr}, __tw -> __tw.`{st.name}`)"
+                dt = T.ArrayType(st.dtype)
+            elif st.kind != "item":
                 return None
-        if isinstance(cur_dt, (T.ArrayType, T.MapType)):
-            return cur_expr, cur_dt
+            if isinstance(dt.elementType, T.ArrayType):
+                expr = f"flatten(filter({expr}, __tf -> __tf IS NOT NULL))"
+                dt = dt.elementType
+        if isinstance(dt, (T.ArrayType, T.MapType)):
+            return expr, dt
         return None
 
     def _from_collection_alias_target(self, toks, items, segs):
         """segs[0] bound by a DOTTED FROM item (``<root>.<path> [alias]``;
         without an alias the trailing path segment doubles as it): the
         alias names that collection's ELEMENTS (post-translate, the
-        exploded column keeps the alias name), so the walk continues from
-        the element type with the bare alias as the base expression.
-        Returns ``(expr, dtype, root)`` or None; ``root`` is the binding
-        item's ``(root word, root table or None when derived, top-level
-        column)``, which the decorrelation-landmine guard normalizes."""
+        exploded column keeps the alias name), so the path continues from
+        the binding's element type with the bare alias as the base
+        expression.  Returns ``(sql, dtype, steps, root)`` or None;
+        ``root`` is the binding item's ``(root word, root table or None
+        when derived, top-level column)``, which the decorrelation-
+        landmine guard normalizes."""
         alias = segs[0].lower()
         for item in items:
             path = item.segs
@@ -1159,10 +1029,10 @@ class Engine(AlterTableMixin):
                     schema = None if rel is None else rel.schema
                 if schema is None:
                     continue
-                r = self._walk_collection_path(path[0], schema, path[1:])
-                if r is None or not hasattr(r[1], "elementType"):
+                r = self._collection_path(path[0], schema, path[1:])
+                if r is None or not isinstance(r[1], T.ArrayType):
                     continue
-                r = self._walk_collection_path(
+                r = self._collection_path(
                     segs[0], r[1].elementType, segs[1:]
                 )
                 return None if r is None else (*r, (path[0], table, path[1]))
@@ -1388,33 +1258,23 @@ class Engine(AlterTableMixin):
             return []
         return [(item.start, item.stop + 1, f" {inner} {word} ")]
 
-    def _map_root_wrap(self, toks, items, segs, root_info, qpath):
-        """Handle a subplan path rooted at a top-level MAP column, whose
-        correlated reference Catalyst rejects.  Returns ``("respan",
-        spans)`` to wrap the binding FROM item with a map_entries
-        pre-computation (caller splices + rescans), ``("patch",
-        new_qpath)`` once the wrapper is in place (the correlated ref
-        rides the entries ARRAY), or None when not applicable."""
-        if len(segs) < 2:
+    def _map_root_wrap(self, toks, items, segs, steps, root_info):
+        """Handle a subplan path whose first step is a top-level MAP
+        column's ``value`` (``t.map_map_col.value``): Catalyst rejects
+        its correlated reference.  Returns ``("respan", spans)`` to wrap
+        the binding FROM item with a map_entries pre-computation (caller
+        splices + rescans), ``("patch", (collection_sql, dtype))``
+        rendered over that entries ARRAY once the wrapper is in place, or
+        None when not applicable."""
+        if (
+            len(steps) < 2
+            or not isinstance(steps[0].dtype, T.MapType)
+            or steps[1].kind != "value"
+        ):
             return None
         col = segs[1]
-        pat = next(
-            (p for p in (
-                f"map_values({segs[0]}.`{col}`)",
-                f"map_values({segs[0]}.{col})",
-            ) if p in qpath),
-            None,
-        )
-        if pat is None:
-            return None
         kind, table = root_info
         if kind == "table":
-            dt = {
-                f.name.lower(): f.dataType
-                for f in self._relation(table).schema.fields
-            }.get(col.lower())
-            if not isinstance(dt, T.MapType):
-                return None
             spans = self._table_binding_spans(items, table, segs[0])
             if not spans:
                 return None
@@ -1427,16 +1287,47 @@ class Engine(AlterTableMixin):
             ])
         if kind == "derived":
             item = self._derived_item(items, segs[0])
-            if item is None:
+            entries = f"__me_{col}".lower()
+            if item is None or not any(
+                t.text.lower() == entries
+                for t in toks[item.start + 1 : item.end]
+            ):
                 return None
-            body = untokenize(toks[item.start + 1 : item.end])
-            if f"__me_{col}" not in body:
-                return None
-            return ("patch", qpath.replace(
-                pat,
+            return ("patch", self._render_collection(
                 f"transform({segs[0]}.__me_{col}, __mv -> __mv.value)",
+                T.ArrayType(steps[1].dtype), steps[2:],
             ))
         return None
+
+    @staticmethod
+    def _subplan_elements(body, qpath, coll_dt):
+        """The subplan target ``qpath`` (of collection type ``coll_dt``)
+        as an array of its elements, ``(sql, ArrayType)``.  A map becomes
+        its ``map_entries``: a MAP subplan target exposes key/value
+        (MapType.java), and Catalyst rejects map-typed correlated refs
+        outright.  A collection of maps (``t.map_map_col.value``: the
+        outer map's values are maps) scans every inner map's entries
+        (nested-types-with-clause.test#4) when the subquery ``body``
+        names key or value and neither item nor pos; bare item/pos refs
+        keep the element-as-map reading."""
+        def entries(mt):
+            return T.ArrayType(T.StructType([
+                T.StructField("key", mt.keyType),
+                T.StructField("value", mt.valueType),
+            ]))
+
+        if isinstance(coll_dt, T.MapType):
+            return f"map_entries({qpath})", entries(coll_dt)
+        if (
+            isinstance(coll_dt.elementType, T.MapType)
+            and re.search(r"\b(key|value)\b", body, re.I)
+            and not re.search(r"\b(item|pos)\b", body, re.I)
+        ):
+            return (
+                f"flatten(transform({qpath}, __mm -> map_entries(__mm)))",
+                entries(coll_dt.elementType),
+            )
+        return qpath, coll_dt
 
     def _subplan_lateral_agg(
         self, toks, o, close, first, target, derived, qpath, coll_dt
@@ -1448,16 +1339,8 @@ class Engine(AlterTableMixin):
         struct-rooted paths Catalyst REJECTS the correlated fallback, so
         these shapes have no other plan).  ``target`` is the block's
         ``c.path [x]`` FROM item, ``derived`` the FROM item the block is
-        the body of.  Returns True when rewritten in place."""
-        if isinstance(coll_dt, T.MapType):
-            # key/value over map_entries(), like the expression path
-            qpath = f"map_entries({qpath})"
-            coll_dt = T.ArrayType(T.StructType([
-                T.StructField("key", coll_dt.keyType),
-                T.StructField("value", coll_dt.valueType),
-            ]))
-        if not isinstance(coll_dt, T.ArrayType):
-            return False
+        the body of, ``qpath`` the target as an array of its elements (of
+        type ``coll_dt``).  Returns True when rewritten in place."""
         if derived is None or toks[derived.trigger].text != ",":
             return False
         p = derived.trigger
@@ -1981,100 +1864,55 @@ class Engine(AlterTableMixin):
 
     @staticmethod
     def _table_path_subquery(
-        segs: list[str], schema, want_pos: bool, want_item: bool
+        table: str, steps: list[PathStep], want_pos: bool, want_item: bool
     ) -> tuple[str, list[str], bool] | None:
-        """Inline subquery SQL for a collection path rooted at the table
-        ``segs[0]`` (whose schema is ``schema``), or None when the path
-        does not resolve to a collection scan.  Returns
-        ``(sql, star_cols, has_virtual)``: the columns the reference's
-        ``*`` exposes, and whether any VIRTUAL column (pos / item-on-
-        struct) was added to the subquery beyond them."""
-        cur_dt: object = schema
-        cur_expr: str | None = None
-        steps: list[tuple[str, str]] = []  # (kind, source expr)
-        for seg in segs[1:]:
-            sl = seg.lower()
-            if isinstance(cur_dt, T.StructType):
-                fld = next(
-                    (f for f in cur_dt.fields if f.name.lower() == sl), None
-                )
-                if fld is None:
-                    return None
+        """Inline subquery SQL scanning what the resolved path ``steps``
+        reaches below the table ``table``: one LATERAL VIEW per element
+        step, and one more when the path ends at a collection.  None when
+        the path ends at neither a collection nor an element, or steps
+        through a map key.  Returns ``(sql, star_cols, has_virtual)``:
+        the columns the reference's ``*`` exposes, and whether any
+        VIRTUAL column (pos / item-on-struct) was added to the subquery
+        beyond them."""
+        cur_expr = ""
+        views: list[tuple[bool, str]] = []  # (is array, source expr)
+        for st in steps:
+            if st.kind == "field":
                 cur_expr = (
-                    f"{cur_expr}.`{fld.name}`" if cur_expr
-                    else f"`{fld.name}`"
+                    f"{cur_expr}.`{st.name}`" if cur_expr
+                    else f"`{st.name}`"
                 )
-                cur_dt = fld.dataType
-            elif isinstance(cur_dt, T.ArrayType):
-                if sl == "item":
-                    steps.append(("arr", cur_expr or ""))
-                    cur_expr = f"__tpe{len(steps)}"
-                    cur_dt = cur_dt.elementType
-                    continue
-                # a FIELD of the struct element implicitly unnests the
-                # array first (Path.java: customer.c_orders.o_lineitems
-                # == customer.c_orders.item.o_lineitems — the reference's
-                # nested TPC-H idiom, tpch_nested-q1.test)
-                el = cur_dt.elementType
-                fld = (
-                    next((f for f in el.fields if f.name.lower() == sl),
-                         None)
-                    if isinstance(el, T.StructType) else None
-                )
-                if fld is None:
-                    return None
-                steps.append(("arr", cur_expr or ""))
-                cur_expr = f"__tpe{len(steps)}.`{fld.name}`"
-                cur_dt = fld.dataType
-            elif isinstance(cur_dt, T.MapType):
-                # path THROUGH a map descends into its values (the
-                # reference's nested_struct.g.value.h.i shape,
-                # nested-types-scanner-maps.test); a path cannot continue
-                # through keys (scalar)
-                if sl != "value":
-                    return None
-                steps.append(("mapv", cur_expr or ""))
-                cur_expr = f"__tpe{len(steps)}"
-                cur_dt = cur_dt.valueType
+            elif st.kind == "key":
+                return None  # a path cannot continue through keys
             else:
-                return None  # path through a scalar: unsupported
-        terminal_map = False
-        if isinstance(cur_dt, T.ArrayType):
-            steps.append(("arr", cur_expr or ""))
-            elem_expr = f"__tpe{len(steps)}"
-            elem_dt = cur_dt.elementType
-        elif isinstance(cur_dt, T.MapType):
-            steps.append(("map", cur_expr or ""))
-            terminal_map = True
-            elem_expr, elem_dt = "", None
-        elif steps and cur_expr == f"__tpe{len(steps)}":
-            elem_expr, elem_dt = cur_expr, cur_dt  # path ended AT an element
+                # an array's elements, or a map's values (the reference's
+                # nested_struct.g.value.h.i shape, nested-types-scanner-
+                # maps.test), become the element stream
+                views.append((st.kind == "item", cur_expr))
+                cur_expr = f"__tpe{len(views)}"
+        end = steps[-1]
+        terminal_map = isinstance(end.dtype, T.MapType)
+        if terminal_map or isinstance(end.dtype, T.ArrayType):
+            views.append((not terminal_map, cur_expr))
+            elem_expr = f"__tpe{len(views)}"
+            elem_dt = None if terminal_map else end.dtype.elementType
+        elif end.kind != "field":
+            elem_expr, elem_dt = cur_expr, end.dtype  # ended AT an element
         else:
             return None  # not a collection scan
-        lvs = []
-        for idx, (kind, src) in enumerate(steps, 1):
-            if kind == "arr":
-                lvs.append(
-                    f"LATERAL VIEW posexplode({src}) __tpv{idx}"
-                    f" AS __tpp{idx}, __tpe{idx}"
-                )
-            elif kind == "mapv":
-                # intermediate map hop: values become the element stream
-                lvs.append(
-                    f"LATERAL VIEW explode({src}) __tpv{idx}"
-                    f" AS __tpk{idx}, __tpe{idx}"
-                )
-            else:
-                # reserved names, re-aliased in the select list — the
-                # table may itself have key/value columns (the
-                # reference's pos_item_key_value_complextypestbl shape)
-                lvs.append(
-                    f"LATERAL VIEW explode({src}) __tpv{idx}"
-                    f" AS __tpk{idx}, __tpe{idx}"
-                )
+        # a map's key and value get reserved names, re-aliased in the
+        # select list — the table may itself have key/value columns (the
+        # reference's pos_item_key_value_complextypestbl shape)
+        lvs = [
+            f"LATERAL VIEW posexplode({src}) __tpv{idx}"
+            f" AS __tpp{idx}, __tpe{idx}" if is_array else
+            f"LATERAL VIEW explode({src}) __tpv{idx}"
+            f" AS __tpk{idx}, __tpe{idx}"
+            for idx, (is_array, src) in enumerate(views, 1)
+        ]
+        n = len(views)
         has_virtual = False
         if terminal_map:
-            n = len(steps)
             cols = [f"__tpk{n} AS `key`", f"__tpe{n} AS `value`"]
             star_cols = ["key", "value"]
         elif isinstance(elem_dt, T.StructType):
@@ -2089,17 +1927,17 @@ class Engine(AlterTableMixin):
             if want_pos:
                 # pos is BIGINT in the reference (CollectionTableRef's
                 # position item type); Spark's posexplode yields INT
-                cols.append(f"CAST(__tpp{len(steps)} AS BIGINT) AS pos")
+                cols.append(f"CAST(__tpp{n} AS BIGINT) AS pos")
                 has_virtual = True
         else:
             cols = [f"{elem_expr} AS item"]
             star_cols = ["item"]
             if want_pos:
-                cols.append(f"CAST(__tpp{len(steps)} AS BIGINT) AS pos")
+                cols.append(f"CAST(__tpp{n} AS BIGINT) AS pos")
                 has_virtual = True
         return (
             "(SELECT " + ", ".join(cols)
-            + f" FROM `{segs[0]}` " + " ".join(lvs) + ")",
+            + f" FROM `{table}` " + " ".join(lvs) + ")",
             star_cols,
             has_virtual,
         )
@@ -2981,3 +2819,47 @@ def _impala_type_name(dt) -> str:
         )
         return f"STRUCT<{inner}>"
     return dt.simpleString().upper()
+
+
+class PathStep(NamedTuple):
+    """One step of a resolved collection path.  ``kind`` is ``field`` (a
+    struct field, ``name`` spelled as the schema spells it), ``item`` (an
+    array's elements, written or implied by a field of array<struct>),
+    ``value`` or ``key`` (a map's); ``dtype`` is the type it lands on."""
+
+    kind: str
+    name: str
+    dtype: T.DataType
+
+
+def _resolve_path(schema: T.DataType, segs: list[str]) -> list[PathStep] | None:
+    """The steps of the dotted path ``segs`` below a value of type
+    ``schema``, by the reference's Path rules (fe Path.java): a struct
+    field navigates (names match case-insensitively); ``item`` steps into
+    an array's elements; a field of an array<struct> implicitly unnests the
+    array first (``c.c_orders.o_lineitems`` is
+    ``c.c_orders.item.o_lineitems``); ``value``/``key`` step into a map.
+    None when a segment does not resolve."""
+    steps: list[PathStep] = []
+    cur = schema
+    for seg in segs:
+        sl = seg.lower()
+        if isinstance(cur, T.ArrayType) and (
+            sl == "item" or isinstance(cur.elementType, T.StructType)
+        ):
+            cur = cur.elementType
+            steps.append(PathStep("item", "item", cur))
+            if sl == "item":
+                continue
+        if isinstance(cur, T.StructType):
+            fld = next((f for f in cur.fields if f.name.lower() == sl), None)
+            if fld is None:
+                return None
+            cur = fld.dataType
+            steps.append(PathStep("field", fld.name, cur))
+        elif isinstance(cur, T.MapType) and sl in ("key", "value"):
+            cur = cur.keyType if sl == "key" else cur.valueType
+            steps.append(PathStep(sl, sl, cur))
+        else:
+            return None
+    return steps

@@ -1384,3 +1384,13 @@ def test_from_clause_unnest_goes_after_the_last_relation(spark):
     )
     assert out.index("un_t2") < out.index("LATERAL VIEW")
     assert sorted(map(tuple, spark.sql(out).collect())) == [(1, 10), (1, 20)]
+
+
+@pytest.mark.parametrize("call", ["trunc()", "mask()", "mask_first_n()"])
+def test_call_without_arguments_is_an_analysis_error(eng, call):
+    """A wrong call reaches Spark's analysis instead of failing in the
+    translator."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        eng.sql(f"select {call}")

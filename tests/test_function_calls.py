@@ -576,3 +576,33 @@ def test_regexp_like_folds_only_i_m_n_flags(call, expected):
 )
 def test_unknown_timezones_are_not_known(name, known):
     assert T._tz_known(name) is known
+
+
+@pytest.mark.parametrize(
+    "call,expected",
+    [
+        (
+            "mask(dayname(d), 65)",
+            "maskchars((date_format(d, 'EEEE')), 'A', 'x', 'n', "
+            "CAST(NULL AS STRING))",
+        ),
+        (
+            "mask(cast(d as date), 1, 2, 3, 4, 5, zeroifnull(a), 0, 1)",
+            "mask_date3((cast(d as date)), coalesce(a, 0), 0, 1)",
+        ),
+        (
+            "width_bucket(zeroifnull(x), 0.5, 100, 10)",
+            "wb_precise(CAST(coalesce(x, 0) AS STRING), CAST(0.5 AS STRING), "
+            "CAST(100 AS STRING), 10)",
+        ),
+        ("from_utc_timestamp(zeroifnull(ts), 'FOOBAR')", "(coalesce(ts, 0))"),
+        (
+            "round(cast(x as float), zeroifnull(n))",
+            "round(CAST((cast(x as float)) AS DOUBLE), coalesce(n, 0))",
+        ),
+    ],
+)
+def test_spliced_arguments_are_translated(call, expected):
+    """A handler that splices its arguments and steps over the splice
+    rewrites the dialect calls inside them first."""
+    assert _rewritten(call) == expected

@@ -820,6 +820,48 @@ def test_map_root_correlated_ref_wrapped(spark):
     assert [(r.id, r.vv) for r in rows] == [(7, 10), (7, 20)]
 
 
+def test_map_of_map_value_hop_aggregates_over_entries(spark):
+    """A lateral aggregate over `t.map_map_col.value` counts and sums the
+    inner maps' entries: the rows the same path's ``SELECT *`` returns."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW mm_t3 AS SELECT CAST(1 AS INT) AS id,"
+        " map('a', map('x', 1, 'y', 2), 'b', map('z', 3)) AS map_map_col"
+    )
+    eng = Engine(spark)
+
+    def rows(agg, where=""):
+        df = eng.sql(
+            f"select t.id, v.n from mm_t3 t, (select {agg} n"
+            f" from t.map_map_col.value {where}) v"
+        )
+        assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
+        return [tuple(r) for r in df.collect()]
+
+    assert rows("count(*)") == [(1, 3)]
+    assert rows("sum(value)") == [(1, 6)]
+    assert rows("count(*)", "where value > 1") == [(1, 2)]
+
+
+def test_field_of_map_value_array_unnests_in_a_subplan(spark):
+    """``t.m.value.y`` with array<struct<y: array>> values unnests the
+    value arrays (Path.java): the correlated subplan reads the elements
+    the rootless scan of the same path returns."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW mv_t AS SELECT CAST(1 AS INT) AS id,"
+        " map('a', array(named_struct('y', array(1, 2)),"
+        " named_struct('y', array(3))), 'b', array(named_struct('y',"
+        " array(4)))) AS m"
+    )
+    eng = Engine(spark)
+    scan = eng.sql("select item from mv_t.m.value.y").collect()
+    assert sorted(r.item for r in scan) == [1, 2, 3, 4]
+    rows = eng.sql(
+        "select t.id, (select count(*) from t.m.value.y) n,"
+        " (select sum(item) from t.m.value.y) s from mv_t t"
+    ).collect()
+    assert [tuple(r) for r in rows] == [(1, 4, 10)]
+
+
 def test_rootless_scan_looks_up_only_its_table(eng, monkeypatch):
     """The rootless scan's LATERAL VIEW column list (``AS __tpp1,
     __tpe1``) names no relation: only the table is looked up."""
