@@ -1052,26 +1052,14 @@ def _call_mask_hash(toks, i, j, close, args):
         return None
     code = [k for k in range(*args[0]) if _is_code(toks[k])]
     null_ty = None
-    cast_ty = _span_cast_type(toks, code[0], code[-1]) if code else None
-    if cast_ty is not None and not cast_ty.startswith(
-        ("CHAR", "VARCHAR", "STRING")
-    ):
-        null_ty = cast_ty
-    elif len(code) == 1 and toks[code[0]].kind == "num":
+    if len(code) == 1 and toks[code[0]].kind == "num":
         null_ty = "DOUBLE" if "." in toks[code[0]].text else "BIGINT"
-    elif (
-        len(code) == 1
-        and toks[code[0]].kind == "word"
-        and toks[code[0]].upper in ("TRUE", "FALSE")
-    ):
+    elif len(code) == 1 and toks[code[0]].upper in ("TRUE", "FALSE"):
         null_ty = "BOOLEAN"
-    elif (
-        len(code) == 2
-        and toks[code[0]].upper in ("DATE", "TIMESTAMP")
-        and toks[code[1]].kind == "str"
-    ):
-        null_ty = toks[code[0]].upper
-    if null_ty is None:
+    elif code and toks[code[0]].kind == "word":
+        # a cast, a typed literal or a call of fixed type
+        null_ty = _static_type(toks, *args[0])
+    if null_ty is None or null_ty.startswith(("CHAR", "VARCHAR", "STRING")):
         return None
     _splice(toks, i, close + 1, f"CAST(NULL AS {null_ty})")
     return i + 1
@@ -2290,7 +2278,7 @@ _ISO_TO_JAVA = [
 # 1/3 digits, while Java's y/yyy print the full year (only yy 2-digit
 # special-cases). In the date_format direction these map to private-use
 # placeholder characters (non-letters — literal to Java's formatter), which
-# _rewrite_cast_format then replace()s with a substring of the full year.
+# _cast_format then replace()s with a substring of the full year.
 # Parse direction agrees between the dialects, so it keeps y/yyy.
 _Y1_PH = "\ue001"
 _Y3_PH = "\ue003"
@@ -2332,7 +2320,7 @@ def _iso_format_to_java(
             continue
         if for_format and up.startswith("SSSSS", i):
             # second-of-day: no Java token; placeholder, resolved by
-            # _rewrite_cast_format with hour/minute/second arithmetic
+            # _cast_format with hour/minute/second arithmetic
             if consumed is not None:
                 consumed.append("SSSSS")
             out.append(_SOD_PH)
@@ -2517,128 +2505,114 @@ def _flexible_parse_sql(
     return True, f'{fn}({pre}, "{jf}")'
 
 
-def _rewrite_cast_format(toks: list[Tok]) -> list[Tok]:
-    i = 0
-    while i < len(toks):
-        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
-        if c is None or c.fmt is None:
-            i += 1
-            continue
-        j, as_idx, close = c.open, c.as_, c.close
-        s_idx = _next_code(toks, c.fmt + 1)
-        if s_idx >= close or toks[s_idx].kind != "str":
-            i += 1
-            continue
-        type_name = toks[c.type_s].upper
-        expr = toks[j + 1 : as_idx]
-        if type_name in _DATETIME_TYPES:
-            fn = "to_timestamp" if type_name == "TIMESTAMP" else "to_date"
-        elif type_name in _STRING_TYPES:
-            fn = "date_format"
+def _cast_format(toks, i, c, column_types):
+    """A FORMAT clause (cast-format-expr.cc): a string parses to DATE or
+    TIMESTAMP with to_date/to_timestamp, and a datetime prints to STRING,
+    CHAR or VARCHAR with date_format, the ISO-SQL pattern converted to a
+    Java one (_iso_format_to_java).  A pattern that is not a literal, and
+    any other target type, are left as written."""
+    j, as_idx, close = c.open, c.as_, c.close
+    s_idx = _next_code(toks, c.fmt + 1)
+    if s_idx >= close or toks[s_idx].kind != "str":
+        return None
+    type_name = toks[c.type_s].upper
+    if type_name in _DATETIME_TYPES:
+        fn = "to_timestamp" if type_name == "TIMESTAMP" else "to_date"
+    elif type_name in _STRING_TYPES:
+        fn = "date_format"
+    else:
+        return None
+    expr = toks[j + 1 : as_idx]
+    expr_sql = untokenize(expr).strip()
+    iso_fmt = toks[s_idx].text[1:-1]
+    consumed: list = []
+    # double-quoted SQL literal: the Java pattern may itself contain
+    # single-quoted literal sections ('T', 'Z', converted "text")
+    java_fmt = _iso_format_to_java(
+        iso_fmt, for_format=(fn == "date_format"), consumed=consumed
+    )
+    if fn == "to_date" and any(t in _TIME_TOKENS for t in consumed):
+        # Time tokens are rejected for the DATE type at parse time
+        # (cast-format-expr.cc / datetime-iso-sql-format-parser.cc).
+        raise ValueError("PARSE ERROR: Time tokens provided with date type.")
+    if fn in ("to_timestamp", "to_date"):
+        done, repl_sql = _flexible_parse_sql(expr_sql, java_fmt, consumed, fn)
+        if done:
+            _splice(toks, i, close + 1, repl_sql)
+            return None
+    if fn in ("to_timestamp", "to_date") and (
+        "Y" in consumed or "YYY" in consumed
+    ):
+        # Sub-4-digit year parse: the reference prefixes the missing
+        # high-order digits from the CURRENT year
+        # (iso-sql-format-parser.cc PrefixYearFromCurrentYear:393-400:
+        # year + (current_year / 10^len) * 10^len); Java's y/yyy parse
+        # '7'/'026' as literal years 7/26. Add the runtime prefix.
+        # (YY needs no wrap: Java's yy pivots into 2000-2099, which IS
+        # the prefix rule for current years in that window — the same
+        # window contract as the RR adjustment below.)
+        k = 10 if "Y" in consumed else 1000
+        inner = f'{fn}({expr_sql}, "{java_fmt}")'
+        adj = f"(year(current_date()) div {k}) * {k}"
+        if fn == "to_date":
+            repl_sql = f"add_months({inner}, 12 * ({adj}))"
         else:
-            i += 1
-            continue
-        consumed: list = []
-        java_fmt = _iso_format_to_java(
-            toks[s_idx].text[1:-1],
-            for_format=(fn == "date_format"),
-            consumed=consumed,
+            repl_sql = f"({inner} + make_interval({adj}))"
+        _splice(toks, i, close + 1, repl_sql)
+        return None
+    if fn in ("to_timestamp", "to_date") and _has_round_year(iso_fmt):
+        # RR round-year (iso-sql-format-parser.cc
+        # RoundYearFromCurrentYear:402-408): 2-digit years land in the
+        # half-century nearest the session's current year. Java's 'yy'
+        # parses to 20yy; adjust ±100 years when the Oracle-rule century
+        # differs. Window contract: correct for current years 2000-2099,
+        # like the base-2000 the Java pattern anchors on.
+        inner = f'{fn}({expr_sql}, "{java_fmt}")'
+        repl_sql = (
+            f"(CASE WHEN year({inner}) % 100 < 50 "
+            f"AND year(current_date()) % 100 > 49 "
+            f"THEN {inner} + make_interval(100) "
+            f"WHEN year({inner}) % 100 > 49 "
+            f"AND year(current_date()) % 100 < 50 "
+            f"THEN {inner} - make_interval(100) "
+            f"ELSE {inner} END)"
         )
-        # double-quoted SQL literal: the Java pattern may itself contain
-        # single-quoted literal sections ('T', 'Z', converted "text")
-        iso_fmt = toks[s_idx].text[1:-1]
-        if fn == "to_date" and any(c in _TIME_TOKENS for c in consumed):
-            # Time tokens are rejected for the DATE type at parse time
-            # (cast-format-expr.cc / datetime-iso-sql-format-parser.cc).
-            raise ValueError("PARSE ERROR: Time tokens provided with date type.")
-        if fn in ("to_timestamp", "to_date"):
-            done, repl_sql = _flexible_parse_sql(
-                untokenize(expr).strip(), java_fmt, consumed, fn
+        _splice(toks, i, close + 1, repl_sql)
+        return None
+    if fn == "date_format" and any(
+        ph in java_fmt for ph in (_Y1_PH, _Y3_PH, _MER_PH, _SOD_PH)
+    ):
+        # Placeholder post-processing: the converter emitted literal
+        # (non-letter) chars; swap them for the last 1/3 digits of the
+        # full year (Y/YYY) and the period-style meridiem (A.M./P.M.).
+        inner = f'date_format({expr_sql}, "{java_fmt}")'
+        yr = f"date_format({expr_sql}, 'yyyy')"
+        if _Y3_PH in java_fmt:
+            inner = f"replace({inner}, '{_Y3_PH}', substr({yr}, -3, 3))"
+        if _Y1_PH in java_fmt:
+            inner = f"replace({inner}, '{_Y1_PH}', substr({yr}, -1, 1))"
+        if _MER_PH in java_fmt:
+            mer = (
+                f"(CASE WHEN hour({expr_sql}) >= 12 "
+                f"THEN 'P.M.' ELSE 'A.M.' END)"
             )
-            if done:
-                toks[i : close + 1] = tokenize(repl_sql)
-                i += 1
-                continue
-        if fn in ("to_timestamp", "to_date") and (
-            "Y" in consumed or "YYY" in consumed
-        ):
-            # Sub-4-digit year parse: the reference prefixes the missing
-            # high-order digits from the CURRENT year
-            # (iso-sql-format-parser.cc PrefixYearFromCurrentYear:393-400:
-            # year + (current_year / 10^len) * 10^len); Java's y/yyy parse
-            # '7'/'026' as literal years 7/26. Add the runtime prefix.
-            # (YY needs no wrap: Java's yy pivots into 2000-2099, which IS
-            # the prefix rule for current years in that window — the same
-            # window contract as the RR adjustment below.)
-            k = 10 if "Y" in consumed else 1000
-            expr_sql = untokenize(expr).strip()
-            inner = f'{fn}({expr_sql}, "{java_fmt}")'
-            adj = f"(year(current_date()) div {k}) * {k}"
-            if fn == "to_date":
-                repl_sql = f"add_months({inner}, 12 * ({adj}))"
-            else:
-                repl_sql = f"({inner} + make_interval({adj}))"
-            toks[i : close + 1] = tokenize(repl_sql)
-            i += 1
-            continue
-        if fn in ("to_timestamp", "to_date") and _has_round_year(iso_fmt):
-            # RR round-year (iso-sql-format-parser.cc
-            # RoundYearFromCurrentYear:402-408): 2-digit years land in the
-            # half-century nearest the session's current year. Java's 'yy'
-            # parses to 20yy; adjust ±100 years when the Oracle-rule century
-            # differs. Window contract: correct for current years 2000-2099,
-            # like the base-2000 the Java pattern anchors on.
-            expr_sql = untokenize(expr).strip()
-            inner = f'{fn}({expr_sql}, "{java_fmt}")'
-            repl_sql = (
-                f"(CASE WHEN year({inner}) % 100 < 50 "
-                f"AND year(current_date()) % 100 > 49 "
-                f"THEN {inner} + make_interval(100) "
-                f"WHEN year({inner}) % 100 > 49 "
-                f"AND year(current_date()) % 100 < 50 "
-                f"THEN {inner} - make_interval(100) "
-                f"ELSE {inner} END)"
+            inner = f"replace({inner}, '{_MER_PH}', {mer})"
+        if _SOD_PH in java_fmt:
+            sod = (
+                f"lpad(CAST(hour({expr_sql}) * 3600 + "
+                f"minute({expr_sql}) * 60 + second({expr_sql}) "
+                f"AS STRING), 5, '0')"
             )
-            toks[i : close + 1] = tokenize(repl_sql)
-            i += 1
-            continue
-        if fn == "date_format" and any(
-            ph in java_fmt for ph in (_Y1_PH, _Y3_PH, _MER_PH, _SOD_PH)
-        ):
-            # Placeholder post-processing: the converter emitted literal
-            # (non-letter) chars; swap them for the last 1/3 digits of the
-            # full year (Y/YYY) and the period-style meridiem (A.M./P.M.).
-            expr_sql = untokenize(expr).strip()
-            inner = f'date_format({expr_sql}, "{java_fmt}")'
-            yr = f"date_format({expr_sql}, 'yyyy')"
-            if _Y3_PH in java_fmt:
-                inner = f"replace({inner}, '{_Y3_PH}', substr({yr}, -3, 3))"
-            if _Y1_PH in java_fmt:
-                inner = f"replace({inner}, '{_Y1_PH}', substr({yr}, -1, 1))"
-            if _MER_PH in java_fmt:
-                mer = (
-                    f"(CASE WHEN hour({expr_sql}) >= 12 "
-                    f"THEN 'P.M.' ELSE 'A.M.' END)"
-                )
-                inner = f"replace({inner}, '{_MER_PH}', {mer})"
-            if _SOD_PH in java_fmt:
-                sod = (
-                    f"lpad(CAST(hour({expr_sql}) * 3600 + "
-                    f"minute({expr_sql}) * 60 + second({expr_sql}) "
-                    f"AS STRING), 5, '0')"
-                )
-                inner = f"replace({inner}, '{_SOD_PH}', {sod})"
-            toks[i : close + 1] = tokenize(inner)
-            i += 1
-            continue
-        repl = (
-            [Tok("word", fn), Tok("op", "(")]
-            + expr
-            + tokenize(f', "{java_fmt}")')
-        )
-        toks[i : close + 1] = repl
-        i += 1
-    return toks
+            inner = f"replace({inner}, '{_SOD_PH}', {sod})"
+        _splice(toks, i, close + 1, inner)
+        return None
+    repl = (
+        [Tok("word", fn), Tok("op", "(")]
+        + expr
+        + tokenize(f', "{java_fmt}")')
+    )
+    toks[i : close + 1] = repl
+    return None
 
 
 # ---------------------------------------------------------------------------
@@ -2647,17 +2621,22 @@ def _rewrite_cast_format(toks: list[Tok]) -> list[Tok]:
 
 
 def _rewrite_iregexp(toks: list[Tok]) -> list[Tok]:
-    """`a IREGEXP 'pat'` → `a RLIKE '(?i)pat'` (literal rhs); general rhs →
-    `a RLIKE concat('(?i)', (rhs…))` would need full expression bounds, so we
-    only handle the literal/paren forms the reference test corpus uses."""
+    """`a IREGEXP p` → `a RLIKE '(?i)p'` for a literal pattern, and
+    `a RLIKE concat('(?i)', p)` for any other pattern primary (a column,
+    a call, a parenthesized expression — _primary_end bounds it), so the
+    match stays case-insensitive either way."""
     i = 0
     while i < len(toks):
         t = toks[i]
         if t.kind == "word" and t.upper == "IREGEXP":
             toks[i] = Tok("word", "RLIKE")
             j = _next_code(toks, i + 1)
-            if j < len(toks) and toks[j].kind == "str":
+            end = _primary_end(toks, j)
+            if end is not None and toks[j].kind == "str":
                 toks[j] = Tok("str", _single_quoted("(?i)" + toks[j].text[1:-1]))
+            elif end is not None:
+                toks.insert(end + 1, Tok("op", ")"))
+                _splice(toks, j, j, "concat('(?i)', ")
         i += 1
     return toks
 
@@ -2966,19 +2945,14 @@ def _era_trunc_sql(x: str, unit: str, is_date: bool) -> str:
     )
 
 
-def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
-    """The reference's string→DATE contract (runtime-date.cc;
-    QueryTest/date.test:95-165):
+def _rewrite_date_literals(toks: list[Tok]) -> list[Tok]:
+    """The reference's DATE literal and IN-list contracts (date.test;
+    its CAST contract is _cast_date's row of the cast table):
 
-      * ``CAST(x AS DATE)`` without FORMAT must ERROR — not NULL — on an
-        unparseable or out-of-range string ("UDF ERROR: String to Date
-        parse failed"), with the valid range [0001-01-01, 9999-12-31].
-        Stock Spark NULLs bad strings and silently produces year-0 /
-        year-10000 dates that crash the Python collect path. Rewritten to
-        the session kernel ``to_date_strict`` (functions/registry.py) —
-        idempotent because the output contains no ``CAST(... AS DATE)``.
       * ``DATE '<text>'`` literals are validated at TRANSLATE time (the
-        analyzer's "Invalid date literal" AnalysisException)."""
+        analyzer's "Invalid date literal" AnalysisException);
+      * string items of an IN list whose left operand is provably DATE
+        become DATE, as the reference compares them."""
     import datetime as _dt
 
     i = 0
@@ -3012,9 +2986,9 @@ def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
             # DATE-vs-STRING in an IN list compares as DATE in the
             # reference (date.test:539: the Hive 3.1 implicit-conversion
             # contract) while Spark coerces the DATE side to STRING.
-            # When the LHS primary is provably DATE (e.g. a to_date_strict
-            # call this pass just produced, or a DATE literal), cast the
-            # string items.
+            # When the LHS primary is provably DATE (e.g. the
+            # to_date_strict call of a DATE cast, or a DATE literal), cast
+            # the string items.
             p = _prev_code(toks, i - 1)
             if p >= 0 and toks[p].upper == "NOT":  # x NOT IN (...)
                 p = _prev_code(toks, p - 1)
@@ -3033,63 +3007,6 @@ def _rewrite_date_casts(toks: list[Tok]) -> list[Tok]:
                         toks[code[0] : code[0] + 1] = tokenize(
                             f"to_date_strict({lit})"
                         )
-                i += 1
-                continue
-        c = _parse_cast(toks, i)
-        if c is not None:
-            if c.fmt is not None:
-                i += 1
-                continue
-            j, as_idx, close, type_idx = c.open, c.as_, c.close, c.type_s
-            inner_code = [
-                k for k in range(j + 1, as_idx) if _is_code(toks[k])
-            ]
-            target_up = toks[type_idx].upper
-            if target_up in ("DECIMAL", "NUMERIC"):
-                after_ty = _next_code(toks, type_idx + 1)
-                if after_ty >= len(toks) or toks[after_ty].text != "(":
-                    # bare DECIMAL defaults to (9,0) in the reference
-                    # (ScalarType DEFAULT_PRECISION/SCALE; expr-test pins
-                    # typeof(cast(10 as DECIMAL)) = 'DECIMAL(9,0)');
-                    # Spark's bare DECIMAL is (10,0)
-                    _splice(toks, type_idx, type_idx + 1, "DECIMAL(9,0)")
-                i += 1
-                continue
-            # analyzer parity: DATE <-> numeric casts are invalid
-            # (date.test:213-222 "Invalid type cast") — enforced for the
-            # PROVABLE literal forms at translate time
-            _numerics = (
-                "INT", "BIGINT", "SMALLINT", "TINYINT", "INTEGER",
-                "DOUBLE", "FLOAT", "REAL", "DECIMAL", "NUMERIC",
-            )
-            if (
-                target_up in _numerics
-                and len(inner_code) == 2
-                and toks[inner_code[0]].upper == "DATE"
-                and toks[inner_code[1]].kind == "str"
-            ):
-                raise ValueError(
-                    f"Invalid type cast of DATE "
-                    f"{toks[inner_code[1]].text} from DATE to {target_up}"
-                )
-            if (
-                target_up == "DATE"
-                and len(inner_code) == 1
-                and toks[inner_code[0]].kind == "num"
-            ):
-                raise ValueError(
-                    f"Invalid type cast of {toks[inner_code[0]].text} "
-                    f"to DATE"
-                )
-            if target_up != "DATE":
-                i += 1
-                continue
-            inner = untokenize(toks[j + 1 : as_idx]).strip()
-            repl = tokenize(f"to_date_strict({inner})")
-            toks[i : close + 1] = repl
-            # re-scan INSIDE the spliced argument for nested DATE casts
-            i += 1
-            continue
         i += 1
     return toks
 
@@ -3189,15 +3106,8 @@ def _parse_cast(toks: list[Tok], i: int) -> CastParts | None:
     )
 
 
-def _span_cast_type(toks: list[Tok], s: int, e: int) -> str | None:
-    """Normalized target type when toks[s..e] (inclusive) is exactly one
-    CAST (a FORMAT clause is not part of the type), else None."""
-    c = _parse_cast(toks, s)
-    return c.ty if c is not None and c.close == e else None
-
-
 #: calls whose result type is fixed: the DATE(...) cast function, the
-#: strict DATE cast _rewrite_date_casts emits, and the TIMESTAMP producers
+#: strict DATE cast _cast_date emits, and the TIMESTAMP producers
 _CALL_TYPES = {
     "date": "DATE",
     "to_date_strict": "DATE",
@@ -3358,58 +3268,318 @@ def _rewrite_bigint_decimal_arith(
     return toks
 
 
-def _rewrite_double_string_casts(toks: list[Tok]) -> list[Tok]:
-    """CAST(<provably double/float> AS STRING) renders with gutil's
+# ---------------------------------------------------------------------------
+# The cast table: every CAST is settled by its target type, in one walk
+# (the reference's CastExpr looks its cast function up by target and
+# source type; cast-functions-ir.cc).
+# ---------------------------------------------------------------------------
+
+#: the reference's integer parse (util/string-parser.h StringToIntInternal:
+#: 295-345): optional sign, digits only, trailing whitespace allowed,
+#: leading whitespace allowed via the SkipLeadingWhitespace retry — any
+#: other character (including '.') is PARSE_FAILURE -> NULL
+_REF_INT_RE = re.compile(r"^\s*[+-]?[0-9]+\s*$")
+
+_CHAR_N_RE = re.compile(r"(CHAR|VARCHAR)\((\d+)\)")
+
+_COMPARISON_OPS = {"=", "==", "!=", "<>", "<", ">", "<=", ">=", "<=>"}
+
+
+def _cast_number(toks, i, c, column_types):
+    """FLOAT/DOUBLE, and the integer row's first check: a DATE literal
+    cast to a number is an invalid cast (date.test:213-222 "Invalid type
+    cast"); Spark's cast is otherwise the reference's."""
+    code = [k for k in range(c.open + 1, c.as_) if _is_code(toks[k])]
+    if (
+        len(code) == 2
+        and toks[code[0]].upper == "DATE"
+        and toks[code[1]].kind == "str"
+    ):
+        raise ValueError(
+            f"Invalid type cast of DATE {toks[code[1]].text} from DATE "
+            f"to {toks[c.type_s].upper}"
+        )
+    return None
+
+
+def _cast_int(toks, i, c, column_types):
+    """TINYINT/SMALLINT/INT/BIGINT: the reference parses a string with
+    StringToInt (digits + sign + surrounding whitespace ONLY; '3.9' is
+    PARSE_FAILURE -> NULL, cast-functions-ir.cc CAST_FROM_STRING:113-127)
+    while Spark's non-ANSI cast truncates through the decimal point.
+    String LITERALS are folded; bare STRING-typed column operands
+    (``column_types``, like the || dispatch) get a digits-only guard."""
+    _cast_number(toks, i, c, column_types)
+    operand = [toks[k] for k in range(c.open + 1, c.as_) if _is_code(toks[k])]
+    if len(operand) == 1 and operand[0].kind == "str":
+        if not _REF_INT_RE.match(operand[0].text[1:-1]):
+            _splice(toks, i, c.close + 1, f"CAST(NULL AS {c.ty})")
+        return None
+    words = [p for p in operand if p.kind == "word"]
+    if (
+        column_types
+        and words
+        and len(words) <= 2
+        and all(p.kind == "word" or p.text == "." for p in operand)
+        and column_types.get(words[-1].text.lower()) == "STRING"
+    ):
+        col = untokenize(operand).strip()
+        _splice(toks, i, c.close + 1, (
+            f"CAST(CASE WHEN ({col}) rlike "
+            f"'^\\\\s*[+-]?[0-9]+\\\\s*$' THEN ({col}) "
+            f"ELSE NULL END AS {c.ty})"
+        ))
+    return None
+
+
+def _cast_decimal(toks, i, c, column_types):
+    """Bare DECIMAL defaults to (9,0) in the reference (ScalarType
+    DEFAULT_PRECISION/SCALE; expr-test pins typeof(cast(10 as DECIMAL)) =
+    'DECIMAL(9,0)'); Spark's bare DECIMAL is (10,0)."""
+    if toks[_next_code(toks, c.type_s + 1)].text != "(":
+        _splice(toks, c.type_s, c.type_s + 1, "DECIMAL(9,0)")
+    return None
+
+
+def _cast_string(toks, i, c, column_types):
+    """STRING: a provably double/float operand renders with gutil's
     shortest-roundtrip %g — 'inf'/'nan' specials, 'e+09' exponents —
     where Java gives 'Infinity'/'1.29387251E9' (expr-test.cc:5675-5676,
-    :7072). Provable: an operand _static_type types DOUBLE/FLOAT, or a
+    :7072).  Provable: an operand _static_type types DOUBLE/FLOAT, or a
     depth-0 '/' over non-decimal operands (the reference's `/` is always
-    C++ double division). Routed to the dtos/ftos kernels (TIMESTAMP
-    operands to tstos) with an explicit NULL guard (NULL and NaN
-    collapse in the Arrow float64 transfer)."""
-    i = 0
-    while i < len(toks):
-        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
-        if c is None or c.fmt is not None or toks[c.type_s].upper != "STRING":
-            i += 1
-            continue
-        j, as_idx, close = c.open, c.as_, c.close
-        # provably-TIMESTAMP operands render fractions 9-digit
-        # zero-padded (TimestampValue::ToString via boost posix_time;
-        # expr-test.cc:7080 pins '...56.448500000')
-        kernel = {"DOUBLE": "dtos", "FLOAT": "ftos", "TIMESTAMP": "tstos"}.get(
-            _static_type(toks, j + 1, as_idx)
-        )
-        if kernel is None:
-            # depth-0 '/' over non-decimal operands → double division
-            depth = 0
-            has_div = False
-            non_double = False
-            for k in range(j + 1, as_idx):
-                tk = toks[k]
-                if tk.text == "(":
-                    depth += 1
-                elif tk.text == ")":
-                    depth -= 1
-                elif depth == 0:
-                    if tk.text == "/":
-                        has_div = True
-                    elif tk.kind == "num" and "." in tk.text:
-                        non_double = True  # decimal literal operand
-                    elif tk.kind == "word" and tk.upper == "DECIMAL":
-                        non_double = True
-            if has_div and not non_double:
-                kernel = "dtos"
-        if kernel is None:
-            i += 1
-            continue
+    C++ double division).  Routed to the dtos/ftos kernels (TIMESTAMP
+    operands to tstos, whose fractions are 9-digit zero-padded —
+    expr-test.cc:7080) with an explicit NULL guard (NULL and NaN collapse
+    in the Arrow float64 transfer).
+
+    Otherwise a provably boolean operand (a top-level predicate marker)
+    goes through INT first: the reference prints a boolean '1'/'0'
+    (cast-functions-ir.cc CAST_EXACT_NUMERIC_TO_STRING with
+    MAX_BOOLEAN_CHARS=1) where Spark prints true/false."""
+    j, as_idx = c.open, c.as_
+    kernel = {"DOUBLE": "dtos", "FLOAT": "ftos", "TIMESTAMP": "tstos"}.get(
+        _static_type(toks, j + 1, as_idx)
+    )
+    if kernel is None:
+        depth = 0
+        has_div = non_double = False
+        for k in range(j + 1, as_idx):
+            tk = toks[k]
+            if tk.text == "(":
+                depth += 1
+            elif tk.text == ")":
+                depth -= 1
+            elif depth == 0:
+                if tk.text == "/":
+                    has_div = True
+                elif tk.kind == "num" and "." in tk.text:
+                    non_double = True  # decimal literal operand
+                elif tk.kind == "word" and tk.upper == "DECIMAL":
+                    non_double = True
+        if has_div and not non_double:
+            kernel = "dtos"
+    if kernel is not None:
         inner = untokenize(toks[j + 1 : as_idx]).strip()
-        repl = tokenize(
+        _splice(toks, i, c.close + 1, (
             f"(CASE WHEN ({inner}) IS NOT NULL "
             f"THEN {kernel}(({inner})) END)"
+        ))
+    elif _span_has_predicate_marker(toks, j + 1, as_idx):
+        inner = untokenize(toks[j + 1 : as_idx]).strip()
+        _splice(toks, i, c.close + 1, f"CAST(CAST(({inner}) AS INT) AS STRING)")
+    return None
+
+
+def _cast_char(toks, i, c, column_types):
+    """CHAR(n)/VARCHAR(n): the reference truncates to n and, for CHAR,
+    space-pads to exactly n (chars.test: cast('6a' as CHAR(5)) = '6a   ');
+    Spark's cast leaves expression values unmodified.  Rewritten to
+    substr/rpad over STRING — the rendering Impala's own HS2 surface uses
+    for CHAR results.  A directly enclosing typeof folds to the declared
+    type, and a FORMAT clause formats to STRING before the length
+    adjustment."""
+    m = _CHAR_N_RE.fullmatch(c.ty)
+    if m is None:
+        return None
+    close, n = c.close, m.group(2)
+    # typeof(CAST(x AS CHAR/VARCHAR(n))) folds to the DECLARED type —
+    # Spark erases both to STRING at runtime, but the analyzer's answer
+    # is static (expr-test typeOf CHAR/VARCHAR rows)
+    prev_p = _prev_code(toks, i - 1)
+    if prev_p >= 0 and toks[prev_p].text == "(":
+        fn_i = _prev_code(toks, prev_p - 1)
+        after = _next_code(toks, close + 1)
+        if (
+            fn_i >= 0
+            and toks[fn_i].kind == "word"
+            and toks[fn_i].text.lower() == "typeof"
+            and after < len(toks)
+            and toks[after].text == ")"
+        ):
+            _splice(toks, fn_i, after + 1, f"'{c.ty}'")
+            return fn_i + 1
+    expr = untokenize(toks[c.open + 1 : c.as_]).strip()
+    if c.fmt is not None:
+        # the FORMAT clause belongs to the datetime-format path
+        # (cast-format-expr.cc): the value is FORMATTED first (the STRING
+        # cast this emits is the FORMAT row's), and only then
+        # length-adjusted to n
+        s_i = _next_code(toks, c.fmt + 1)
+        if s_i >= close or toks[s_i].kind != "str":
+            return None
+        cut = f"substr(CAST(({expr}) AS STRING FORMAT {toks[s_i].text}), 1, {n})"
+    else:
+        if _span_has_predicate_marker(toks, c.open + 1, c.as_):
+            # boolean operand: '1'/'0', the STRING cast's print path
+            expr = f"CAST(({expr}) AS INT)"
+        cut = f"substr(CAST(({expr}) AS STRING), 1, {n})"
+    if m.group(1) == "VARCHAR":
+        _splice(toks, i, close + 1, cut)
+        return None
+    # pad by OCTET length — CHAR(n) is n BYTES (ScalarType CHAR); a
+    # char-count rpad would over-pad multibyte values in the default
+    # byte mode
+    repl = f"concat({cut}, repeat(' ', greatest({n} - octet_length({cut}), 0)))"
+    if c.fmt is None:
+        # CHAR comparisons are pad-INSENSITIVE (both operands pad to the
+        # longer length before comparing — chars.test `cs = cast('6a' as
+        # CHAR(2))` matches a CHAR(5) column).  When this cast is a direct
+        # comparison operand, compare rtrim'd values on BOTH sides —
+        # equivalent to the pad-to-common-length rule, since CHAR values
+        # differ only by trailing spaces.
+        shift = _wrap_char_comparison(toks, i, close)
+        if shift is not None:
+            repl = f"rtrim({repl})"
+            i += shift
+            close += shift
+    _splice(toks, i, close + 1, repl)
+    return i + 1
+
+
+def _wrap_char_comparison(toks: list[Tok], i: int, close: int) -> int | None:
+    """If toks[i:close+1] (a CHAR cast) is a direct operand of a
+    comparison, wrap the OPPOSITE operand in rtrim() when it is one
+    primary, and return the index shift the insertions caused for
+    positions at/after `i` (the caller rtrims the cast side).  None = not
+    a comparison operand."""
+    def extends(k: int) -> bool:  # an operator beyond the primary
+        return 0 <= k < len(toks) and toks[k].kind == "op" and (
+            toks[k].text not in ("(", ")", ",", ";")
         )
-        toks[i : close + 1] = repl
-        i += len(repl)
+
+    nxt = _next_code(toks, close + 1)
+    if nxt < len(toks) and toks[nxt].kind == "op" and toks[nxt].text in _COMPARISON_OPS:
+        start = _next_code(toks, nxt + 1)
+        end = _primary_end(toks, start)
+        if end is not None and not extends(_next_code(toks, end + 1)):
+            # insertions are past `close`; no shift for the cast span
+            toks.insert(end + 1, Tok("op", ")"))
+            _splice(toks, start, start, "rtrim(")
+        return 0
+    prev = _prev_code(toks, i - 1)
+    if prev >= 0 and toks[prev].kind == "op" and toks[prev].text in _COMPARISON_OPS:
+        opnd_end = _prev_code(toks, prev - 1)
+        opnd_start = _primary_start(toks, opnd_end)
+        if opnd_start is not None and not extends(
+            _prev_code(toks, opnd_start - 1)
+        ):
+            # both insertions land BEFORE the cast span
+            toks.insert(opnd_end + 1, Tok("op", ")"))
+            return 1 + _splice(toks, opnd_start, opnd_start, "rtrim(")
+        return 0
+    return None
+
+
+def _cast_boolean(toks, i, c, column_types):
+    """BOOLEAN: the reference converts only 'true'/'false'
+    (case-insensitive, util/string-parser.h StringToBool); Spark also
+    accepts 'yes'/'no'/'y'/'n'/'0'/'1'.  A string LITERAL folds to the
+    reference's answer; other operands keep Spark semantics (a
+    documented delta: their type is unknown at token level)."""
+    s_i = _next_code(toks, c.open + 1)
+    if toks[s_i].kind == "str" and _next_code(toks, s_i + 1) == c.as_:
+        lit = toks[s_i].text[1:-1].strip().lower()
+        repl = {"true": "TRUE", "false": "FALSE"}.get(
+            lit, "CAST(NULL AS BOOLEAN)"
+        )
+        _splice(toks, i, c.close + 1, repl)
+    return None
+
+
+def _in_values_rows(toks: list[Tok], i: int) -> bool:
+    """True when toks[i] lies in the row list of a VALUES clause
+    (_after_values_rows)."""
+    return any(
+        toks[v].kind == "word" and toks[v].upper == "VALUES"
+        and _after_values_rows(toks, v) > i
+        for v in range(i)
+    )
+
+
+def _cast_date(toks, i, c, column_types):
+    """DATE (runtime-date.cc; date.test:95-165): an unparseable or
+    out-of-range string must ERROR — not NULL — ("UDF ERROR: String to
+    Date parse failed"), with the valid range [0001-01-01, 9999-12-31].
+    Stock Spark NULLs bad strings and silently produces year-0 /
+    year-10000 dates that crash the Python collect path.  Rewritten to
+    the session kernel ``to_date_strict`` (functions/registry.py); a
+    numeric literal operand is an invalid cast (date.test:213-222).
+    VALUES rows are left as written (_after_values_rows)."""
+    if _in_values_rows(toks, i):
+        return None
+    code = [k for k in range(c.open + 1, c.as_) if _is_code(toks[k])]
+    if len(code) == 1 and toks[code[0]].kind == "num":
+        raise ValueError(f"Invalid type cast of {toks[code[0]].text} to DATE")
+    inner = untokenize(toks[c.open + 1 : c.as_]).strip()
+    _splice(toks, i, c.close + 1, f"to_date_strict({inner})")
+    return None
+
+
+#: cast row → handler(toks, i, c, column_types) for the CAST whose keyword
+#: is toks[i] and whose parts are c (_parse_cast).  A cast's row is its
+#: normalized target type without length or precision (``CHAR(5)`` is
+#: CHAR), or FORMAT when it has a FORMAT clause — except on CHAR(n) and
+#: VARCHAR(n), whose row formats through a STRING cast and then adjusts
+#: the length.  The handler returns the index the walk goes on from, or
+#: None for the token after the CAST keyword, so the walk re-reads what
+#: the handler spliced in.  TIMESTAMP has no row: its range guard
+#: (_rewrite_timestamp_range) runs after the function pass, whose
+#: rewrites emit TIMESTAMP casts too.
+_CASTS: dict[str, Callable[
+    [list[Tok], int, CastParts, dict[str, str] | None], int | None
+]] = {
+    **dict.fromkeys(_INT_WIDTH_TYPES, _cast_int),
+    "FLOAT": _cast_number,
+    "DOUBLE": _cast_number,
+    "DECIMAL": _cast_decimal,
+    "NUMERIC": _cast_decimal,
+    "STRING": _cast_string,
+    "CHAR": _cast_char,
+    "VARCHAR": _cast_char,
+    "FORMAT": _cast_format,
+    "BOOLEAN": _cast_boolean,
+    "DATE": _cast_date,
+}
+
+
+def _rewrite_casts(
+    toks: list[Tok], column_types: dict[str, str] | None
+) -> list[Tok]:
+    """Settle every CAST in one walk, outer casts before the casts in
+    their operands: each CAST is parsed once (_parse_cast) and handed to
+    its row of _CASTS."""
+    i = 0
+    while i < len(toks):
+        c = _parse_cast(toks, i)
+        if c is None:
+            i += 1
+            continue
+        if c.fmt is not None and not _CHAR_N_RE.fullmatch(c.ty):
+            handler = _CASTS["FORMAT"]
+        else:
+            handler = _CASTS.get(c.ty.split("(", 1)[0])
+        nxt = handler(toks, i, c, column_types) if handler else None
+        i = i + 1 if nxt is None else nxt
     return toks
 
 
@@ -4823,19 +4993,16 @@ def translate(
     toks = _rewrite_null_lhs_not_in(toks)
     toks = _rewrite_logical_ops(toks, column_types)
     toks = _rewrite_postfix_factorial(toks)
-    toks = _rewrite_string_int_casts(toks, column_types)
     toks = _rewrite_datetime_type_contracts(toks)
-    # result types BEFORE the DECIMAL promotion and DOUBLE→STRING passes,
-    # which read the types they pin
+    # result types BEFORE the DECIMAL promotion and the cast table, which
+    # read the types they pin
     toks = _rewrite_result_types(toks, column_types)
     toks = _rewrite_bigint_decimal_arith(toks, column_types)
-    toks = _rewrite_double_string_casts(toks)
+    toks = _rewrite_casts(toks, column_types)
     toks = _rewrite_div_by_zero_literal(toks)
-    toks = _rewrite_char_casts(toks)
     toks = _rewrite_tablesample(toks)
     toks = _rewrite_right_semi_anti(toks)
     toks = _rewrite_hints(toks)
-    toks = _rewrite_cast_format(toks)
     toks = _rewrite_unnest(toks)
     toks = _rewrite_select_unnest(toks)
     toks = _rewrite_collection_join(toks)
@@ -4857,7 +5024,7 @@ def translate(
     # the interval rewrite (non-literal quantities inside the guard still
     # need their make_interval form)
     toks = _rewrite_timestamp_range(toks)
-    toks = _rewrite_date_casts(toks)
+    toks = _rewrite_date_literals(toks)
     toks = _rewrite_interval_exprs(toks)
     toks = _rewrite_iregexp(toks)
     toks = _rewrite_null_ordering(toks)
@@ -5047,19 +5214,10 @@ def _rewrite_null_lhs_not_in(toks: list[Tok]) -> list[Tok]:
 
 
 def _rewrite_null_predicates(toks: list[Tok]) -> list[Tok]:
-    """Two NULL/BOOLEAN acceptance deltas the reference is permissive on:
-
-    1. ``CASE WHEN NULL THEN`` / ``IF(NULL, ...)`` — the reference types a
-       bare NULL predicate as BOOLEAN (fe analysis NullLiteral
-       type-coercion); Spark 4's analyzer rejects VOID in a condition.
-       Rewrite the bare literal to ``CAST(NULL AS BOOLEAN)``.
-    2. ``CAST('<lit>' AS BOOLEAN)`` — the reference converts only
-       'true'/'false' (case-insensitive, util/string-parser.h
-       StringToBool); Spark also accepts 'yes'/'no'/'y'/'n'/'0'/'1'.
-       Fold literal string→boolean casts at translate time to the
-       reference's contract (non-literal operands keep Spark semantics —
-       a documented delta, type unknown at token level).
-    """
+    """``CASE WHEN NULL THEN`` / ``IF(NULL, ...)`` — the reference types a
+    bare NULL predicate as BOOLEAN (fe analysis NullLiteral
+    type-coercion); Spark 4's analyzer rejects VOID in a condition.
+    Rewrite the bare literal to ``CAST(NULL AS BOOLEAN)``."""
     i = 0
     while i < len(toks):
         t = toks[i]
@@ -5075,22 +5233,6 @@ def _rewrite_null_predicates(toks: list[Tok]) -> list[Tok]:
                 and next_u == ","
             ):
                 toks[i : i + 1] = tokenize("CAST(NULL AS BOOLEAN)")
-                i += 1
-                continue
-        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
-        if c is not None and c.fmt is None and c.ty == "BOOLEAN":
-            s_i = _next_code(toks, c.open + 1)
-            if toks[s_i].kind == "str" and _next_code(toks, s_i + 1) == c.as_:
-                lit = toks[s_i].text[1:-1].strip().lower()
-                if lit == "true":
-                    repl = "TRUE"
-                elif lit == "false":
-                    repl = "FALSE"
-                else:
-                    repl = "CAST(NULL AS BOOLEAN)"
-                toks[i : c.close + 1] = tokenize(repl)
-                i += 1
-                continue
         i += 1
     return toks
 
@@ -6644,23 +6786,7 @@ def _rewrite_postfix_factorial(toks: list[Tok]) -> list[Tok]:
         ):
             start = p
         elif pt.text == ")":
-            # matching open paren, plus a directly-preceding fn name
-            bal = 0
-            for k in range(p, -1, -1):
-                tk = toks[k]
-                if not _is_code(tk):
-                    continue
-                if tk.text == ")":
-                    bal += 1
-                elif tk.text == "(":
-                    bal -= 1
-                    if bal == 0:
-                        start = k
-                        w = _prev_code(toks, k - 1)
-                        if w >= 0 and toks[w].kind == "word" and \
-                                toks[w].upper not in _OPERAND_BOUNDARY_KWS:
-                            start = w
-                        break
+            start = _primary_start(toks, p)
         if start is None:
             i += 1
             continue
@@ -6685,269 +6811,3 @@ def _rewrite_postfix_factorial(toks: list[Tok]) -> list[Tok]:
         toks[start : i + 1] = tokenize(f"factorial_k({operand})")
         i = start + 1
     return toks
-
-
-#: the reference's integer parse (util/string-parser.h StringToIntInternal:
-#: 295-345): optional sign, digits only, trailing whitespace allowed,
-#: leading whitespace allowed via the SkipLeadingWhitespace retry — any
-#: other character (including '.') is PARSE_FAILURE -> NULL
-_REF_INT_RE = re.compile(r"^\s*[+-]?[0-9]+\s*$")
-
-
-def _rewrite_string_int_casts(
-    toks: list[Tok], column_types: dict[str, str] | None = None
-) -> list[Tok]:
-    """CAST(string AS integer type): the reference parses with
-    StringToInt (digits + sign + surrounding whitespace ONLY; '3.9' is
-    PARSE_FAILURE -> NULL, cast-functions-ir.cc CAST_FROM_STRING:113-127)
-    while Spark's non-ANSI cast truncates through the decimal point.
-    String LITERALS are folded here; bare STRING-typed column operands
-    (``column_types``, like the || dispatch) get a digits-only guard."""
-    i = 0
-    while i < len(toks):
-        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
-        if c is None or c.ty not in _INT_WIDTH_TYPES:
-            i += 1
-            continue
-        close, ty = c.close, c.ty
-        operand = [
-            toks[k] for k in range(c.open + 1, c.as_) if _is_code(toks[k])
-        ]
-        if len(operand) == 1 and operand[0].kind == "str":
-            # literal: fold with the reference parser contract
-            lit = operand[0].text[1:-1]
-            if _REF_INT_RE.match(lit):
-                i += 1  # digits-only literal: Spark parses identically
-                continue
-            toks[i : close + 1] = tokenize(f"CAST(NULL AS {ty})")
-            i += 1
-            continue
-        if column_types and operand:
-            words = [p for p in operand if p.kind == "word"]
-            is_path = all(
-                (p.kind == "word") or (p.text == ".") for p in operand
-            ) and words
-            if (
-                is_path
-                and len(words) <= 2
-                and column_types.get(words[-1].text.lower()) == "STRING"
-            ):
-                col = untokenize(operand).strip()
-                repl = (
-                    f"CAST(CASE WHEN ({col}) rlike "
-                    f"'^\\\\s*[+-]?[0-9]+\\\\s*$' THEN ({col}) "
-                    f"ELSE NULL END AS {ty})"
-                )
-                toks[i : close + 1] = tokenize(repl)
-                i += 1
-                continue
-        i += 1
-    return toks
-
-
-def _rewrite_char_casts(toks: list[Tok]) -> list[Tok]:
-    """Impala CAST to CHAR(n)/VARCHAR(n) truncates to n and, for CHAR,
-    space-pads to exactly n (chars.test: cast('6a' as CHAR(5)) = '6a   ');
-    Spark's cast leaves expression values unmodified.  Rewrite to
-    substr/rpad over STRING — the rendering Impala's own HS2 surface uses
-    for CHAR results."""
-    i = 0
-    while i < len(toks):
-        c = _parse_cast(toks, i) if toks[i].kind == "word" else None
-        if c is None:
-            i += 1
-            continue
-        j, as_i, close = c.open, c.as_, c.close
-        if c.ty == "STRING":
-            # Impala renders CAST(boolean AS STRING) as '1'/'0' — the
-            # boolean goes through the exact-numeric print path
-            # (cast-functions-ir.cc CAST_EXACT_NUMERIC_TO_STRING with
-            # MAX_BOOLEAN_CHARS=1) — while Spark prints true/false.
-            # When the cast operand is PROVABLY boolean (top-level
-            # predicate marker), route through INT first.  No FORMAT
-            # clause may follow (that path belongs to the format rewrite).
-            if c.fmt is None and _span_has_predicate_marker(
-                toks, j + 1, as_i
-            ):
-                expr = untokenize(toks[j + 1 : as_i]).strip()
-                toks[i : close + 1] = tokenize(
-                    f"CAST(CAST(({expr}) AS INT) AS STRING)"
-                )
-            i += 1
-            continue
-        m = re.fullmatch(r"(CHAR|VARCHAR)\((\d+)\)", c.ty)
-        if m is None:
-            i += 1
-            continue
-        n = m.group(2)
-        # typeof(CAST(x AS CHAR/VARCHAR(n))) folds to the DECLARED type —
-        # Spark erases both to STRING at runtime, but the analyzer's
-        # answer is static (expr-test typeOf CHAR/VARCHAR rows). Detect
-        # the directly-enclosing typeof BEFORE this pass rewrites the
-        # cast into substr/rpad.
-        prev_p = _prev_code(toks, i - 1)
-        if prev_p >= 0 and toks[prev_p].text == "(":
-            fn_i = _prev_code(toks, prev_p - 1)
-            after = _next_code(toks, close + 1)
-            if (
-                fn_i >= 0
-                and toks[fn_i].kind == "word"
-                and toks[fn_i].text.lower() == "typeof"
-                and after < len(toks)
-                and toks[after].text == ")"
-            ):
-                toks[fn_i : after + 1] = tokenize(f"'{c.ty}'")
-                i = fn_i + 1
-                continue
-        expr = untokenize(toks[j + 1 : as_i]).strip()
-        # CAST(x AS CHAR/VARCHAR(n) FORMAT '...') — the FORMAT clause
-        # belongs to the datetime-format path (cast-format-expr.cc): the
-        # value is FORMATTED first, and only then length-adjusted to n.
-        # Re-emit the format as a STRING-typed cast (this pass runs before
-        # _rewrite_cast_format, which translates it to date_format) and
-        # apply the truncate/pad to the formatted result. Without this
-        # guard the FORMAT clause was silently dropped.
-        if c.fmt is not None:
-            s_i = _next_code(toks, c.fmt + 1)
-            if s_i < close and toks[s_i].kind == "str":
-                inner = f"CAST(({expr}) AS STRING FORMAT {toks[s_i].text})"
-                cut = f"substr({inner}, 1, {n})"
-                if m.group(1) == "CHAR":
-                    repl = (
-                        f"concat({cut}, repeat(' ', "
-                        f"greatest({n} - octet_length({cut}), 0)))"
-                    )
-                else:
-                    repl = cut
-                toks[i : close + 1] = tokenize(repl)
-                i += 1
-                continue
-            i += 1
-            continue
-        if _span_has_predicate_marker(toks, j + 1, as_i):
-            # boolean operand: render through INT first so the CHAR/
-            # VARCHAR value is '1'/'0' (the same numeric print path the
-            # STRING cast uses)
-            expr = f"CAST(({expr}) AS INT)"
-        cut = f"substr(CAST(({expr}) AS STRING), 1, {n})"
-        if m.group(1) == "CHAR":
-            # pad by OCTET length — CHAR(n) is n BYTES (ScalarType CHAR);
-            # a char-count rpad would over-pad multibyte values in the
-            # default byte mode
-            repl = (
-                f"concat({cut}, repeat(' ', "
-                f"greatest({n} - octet_length({cut}), 0)))"
-            )
-            # CHAR comparisons are pad-INSENSITIVE (both operands pad to
-            # the longer length before comparing — chars.test
-            # `cs = cast('6a' as CHAR(2))` matches a CHAR(5) column).
-            # When this cast is a direct comparison operand, compare
-            # rtrim'd values on BOTH sides — equivalent to the pad-to-
-            # common-length rule, since CHAR values differ only by
-            # trailing spaces.
-            shift = _wrap_char_comparison(toks, i, close)
-            if shift is not None:
-                repl = f"rtrim({repl})"
-                i += shift
-                close += shift
-        else:
-            repl = cut
-        toks[i : close + 1] = tokenize(repl)
-        i += 1
-    return toks
-
-
-_COMPARISON_OPS = {"=", "==", "!=", "<>", "<", ">", "<=", ">=", "<=>"}
-
-
-def _simple_term_fwd(toks: list[Tok], start: int) -> int | None:
-    """End index (exclusive) of a simple term starting at `start`: a
-    literal, or a (dotted) identifier chain optionally ending in a call's
-    parenthesized args. None when the shape is more complex."""
-    k = start
-    if k >= len(toks):
-        return None
-    if toks[k].kind in ("str", "num"):
-        return k + 1
-    if toks[k].kind != "word":
-        return None
-    k += 1
-    while True:
-        nxt = _next_code(toks, k)
-        if nxt < len(toks) and toks[nxt].text == ".":
-            after = _next_code(toks, nxt + 1)
-            if after < len(toks) and toks[after].kind == "word":
-                k = after + 1
-                continue
-            return None
-        break
-    nxt = _next_code(toks, k)
-    if nxt < len(toks) and toks[nxt].text == "(":
-        return _matching_paren(toks, nxt) + 1
-    return k
-
-
-def _simple_term_back(toks: list[Tok], end: int) -> int | None:
-    """Start index of a simple term ENDING at `end` (inclusive): a
-    literal, a dotted identifier chain, or a call (close-paren walking
-    back to the function name). None when the shape is more complex."""
-    k = end
-    if k < 0:
-        return None
-    if toks[k].kind in ("str", "num"):
-        return k
-    if toks[k].text == ")" and toks[k].kind == "op":
-        depth = 0
-        while k >= 0:
-            if toks[k].text == ")":
-                depth += 1
-            elif toks[k].text == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
-        if k < 0:
-            return None
-        prev = _prev_code(toks, k - 1)
-        if prev >= 0 and toks[prev].kind == "word":
-            return prev
-        return None
-    if toks[k].kind != "word":
-        return None
-    while True:
-        prev = _prev_code(toks, k - 1)
-        if prev >= 0 and toks[prev].text == ".":
-            before = _prev_code(toks, prev - 1)
-            if before >= 0 and toks[before].kind == "word":
-                k = before
-                continue
-            return None
-        break
-    return k
-
-
-def _wrap_char_comparison(toks: list[Tok], i: int, close: int) -> int | None:
-    """If toks[i:close+1] (a CHAR cast) is a direct operand of a
-    comparison, wrap the OPPOSITE simple-term operand in rtrim() and
-    return the index shift the insertions caused for positions at/after
-    `i` (the caller rtrims the cast side). None = not a comparison
-    operand."""
-    nxt = _next_code(toks, close + 1)
-    if nxt < len(toks) and toks[nxt].kind == "op" and toks[nxt].text in _COMPARISON_OPS:
-        start = _next_code(toks, nxt + 1)
-        end = _simple_term_fwd(toks, start)
-        if end is not None:
-            # insertions are past `close`; no shift for the cast span
-            toks.insert(end, Tok("op", ")"))
-            _splice(toks, start, start, "rtrim(")
-        return 0
-    prev = _prev_code(toks, i - 1)
-    if prev >= 0 and toks[prev].kind == "op" and toks[prev].text in _COMPARISON_OPS:
-        opnd_end = _prev_code(toks, prev - 1)
-        opnd_start = _simple_term_back(toks, opnd_end)
-        if opnd_start is not None:
-            # both insertions land BEFORE the cast span
-            toks.insert(opnd_end + 1, Tok("op", ")"))
-            return 1 + _splice(toks, opnd_start, opnd_start, "rtrim(")
-        return 0
-    return None

@@ -697,6 +697,21 @@ class Engine(AlterTableMixin):
                 toks, items, segs, candidates
             )
             if res is None:
+                # a root the statement binds to a relation makes the path
+                # a collection reference that does not resolve (Path.java);
+                # any other root may name a database
+                rel = next((
+                    self._relation(x.segs[0]) for x in items
+                    if len(x.segs) == 1
+                    and x.alias.lower() == segs[0].lower()
+                ), None)
+                if rel is not None and _resolve_path(
+                    rel.schema, segs[1:]
+                ) is None:
+                    raise ValueError(
+                        "Could not resolve table reference: "
+                        f"'{'.'.join(segs)}'"
+                    )
                 i += 1
                 continue
             qpath, coll_dt, steps, root_info = res

@@ -1370,6 +1370,18 @@ def test_double_quoted_regex_literal_keeps_its_quote(eng):
     )
 
 
+def test_iregexp_pattern_that_is_not_a_literal(eng):
+    """A column, a call and a NOT IREGEXP pattern stay case-insensitive:
+    the pattern is prefixed with (?i) at runtime."""
+    assert translate("select 'ABC' iregexp concat('a','b')") == (
+        "select 'ABC' RLIKE concat('(?i)', concat('a','b'))"
+        " FROM (VALUES (0)) AS _hs_one_row(_hs_one_row_c)"
+    )
+    assert _one(eng, "select s iregexp p from (select 'ABC' s, 'a.c' p) v")
+    assert _one(eng, "select 'ABC' iregexp concat('a', 'b')") is True
+    assert _one(eng, "select 'ABC' not iregexp concat('a', 'b')") is False
+
+
 def test_from_clause_unnest_goes_after_the_last_relation(spark):
     """A FROM-clause UNNEST followed by another FROM item: its lateral
     view goes after the clause's last relation, where Spark's grammar

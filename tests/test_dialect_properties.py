@@ -193,7 +193,7 @@ def test_static_type_of_a_cast_is_its_target(
     operand, ty, fmt, cast_kw, as_kw, fmt_kw, ws
 ):
     from hopspark.dialect.translate import (
-        _is_code, _parse_cast, _span_cast_type, _static_type,
+        _is_code, _parse_cast, _static_type,
     )
 
     written, norm = ty
@@ -207,7 +207,6 @@ def test_static_type_of_a_cast_is_its_target(
     assert untokenize(toks[c.type_s : c.type_e]).strip() == written.strip()
     assert (c.fmt is not None) == fmt, sql
     assert untokenize(toks[c.open + 1 : c.as_]).strip() == operand.strip()
-    assert _span_cast_type(toks, code[0], code[-1]) == norm
     assert _static_type(toks, 0, len(toks)) == norm
 
 

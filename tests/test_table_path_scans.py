@@ -862,6 +862,31 @@ def test_field_of_map_value_array_unnests_in_a_subplan(spark):
     assert [tuple(r) for r in rows] == [(1, 4, 10)]
 
 
+def test_unresolvable_subplan_path_is_an_analysis_error(spark):
+    """A subquery FROM path whose root the statement binds to a relation
+    but which does not resolve (``item`` of a BIGINT) is the reference's
+    analysis error naming the path; a root bound to nothing (a database
+    name) still reaches Spark."""
+    from pyspark.errors import AnalysisException
+
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW np_t AS SELECT CAST(1 AS INT) AS id,"
+        " array(named_struct('o_orderkey', CAST(7 AS BIGINT))) AS c_orders"
+    )
+    eng = Engine(spark)
+    with pytest.raises(ValueError, match=(
+        "Could not resolve table reference: 't.c_orders.o_orderkey.item'"
+    )):
+        eng.sql(
+            "select t.id, (select count(*) from t.c_orders.o_orderkey.item)"
+            " n from np_t t"
+        )
+    with pytest.raises(AnalysisException):
+        eng.sql(
+            "select t.id, (select count(*) from nosuchdb.tbl) n from np_t t"
+        ).collect()
+
+
 def test_rootless_scan_looks_up_only_its_table(eng, monkeypatch):
     """The rootless scan's LATERAL VIEW column list (``AS __tpp1,
     __tpe1``) names no relation: only the table is looked up."""

@@ -1008,7 +1008,7 @@ class DialectGen:
         if kind == "char_cmp":
             # round-6 CHAR pad-insensitive comparison: a CHAR(n) cast as a
             # comparison operand pads/truncates, then compares modulo
-            # trailing spaces (chars.test; _rewrite_char_casts comparison
+            # trailing spaces (chars.test; _cast_char comparison
             # wrap). DuckDB twin: byte-truncate both sides, rtrim, compare.
             scs = self._cols(tbl, "str")
             c = r.choice(scs)
