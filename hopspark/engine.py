@@ -36,7 +36,7 @@ from hopspark.dialect.translate import (
     _next_code, _parse_cast, _prev_code, _query_blocks, tokenize,
     untokenize,
 )
-from hopspark.functions import register_all
+from hopspark.functions import register_all, register_sql_functions
 from hopspark.session import get_spark
 
 
@@ -79,6 +79,7 @@ class Engine(AlterTableMixin):
         self._tbl_props: dict[str, dict[str, str]] = {}
         self._col_comments: dict[str, dict[str, str]] = {}
         register_all(self.spark)
+        register_sql_functions(self.spark)
         if register_tables:
             catalog.register(self.spark, sf_dir)
 

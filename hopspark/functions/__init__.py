@@ -7,11 +7,13 @@ fe/.../catalog/BuiltinsDb.java in the reference tree). The vast majority map
 renames the rest (hopspark/dialect/translate.py). This package supplies the
 residue that needs real code:
 
-  * python-UDF implementations of Impala-only scalars (fnv_hash,
-    jaro_winkler, rotateleft, ...) registered under their Impala names
-  * column-level helpers used by the operators package
+  * `register_all`: python-UDF implementations of Impala-only scalars
+    (fnv_hash, jaro_winkler, dtos, ...) registered under their Impala names
+  * `register_sql_functions`: the dialect's SQL-bodied functions (istrue,
+    rotateleft, years_add, pid, ...), which only translated statements call;
+    `Engine.__init__` registers them
 """
 
-from hopspark.functions.registry import register_all
+from hopspark.functions.registry import register_all, register_sql_functions
 
-__all__ = ["register_all"]
+__all__ = ["register_all", "register_sql_functions"]

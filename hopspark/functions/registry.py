@@ -7,15 +7,19 @@ Kernel parity targets (reference files):
   * istrue/isfalse family — be/src/exprs/conditional-functions.cc
 
 Everything here is either a pure-SQL expression registered via
-`CREATE TEMPORARY FUNCTION`-equivalent (fast path, JVM-side) or an
-Arrow-vectorized pandas UDF (slow path, only where SQL can't express it).
-Row-at-a-time Python UDFs are deliberately absent.
+`CREATE TEMPORARY FUNCTION` (fast path, JVM-side; `register_sql_functions`)
+or an Arrow-vectorized pandas UDF (slow path, only where SQL can't express
+it; `register_all`). Row-at-a-time Python UDFs are deliberately absent.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import os
 import re
+import socket
+
+import pandas as pd
+from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -193,9 +197,11 @@ def _damerau_levenshtein_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([f(x, y) for x, y in zip(a, b)], dtype="object")
 
 
-# SQL-expression functions: registered as SQL temp functions so both the
-# DataFrame API (F.expr) and engine.sql() can call them by Impala name.
-# Each is a pure Catalyst expression — whole-stage-codegen'd, no Python.
+# SQL-expression functions: the dialect's library, registered as SQL temp
+# functions by register_sql_functions, which Engine.__init__ calls — the
+# translator is the only code that emits these names. Each is a pure
+# Catalyst expression — whole-stage-codegen'd, no Python. Registration runs
+# in dict order, so a body may call only entries defined before it.
 _SQL_FUNCTIONS: dict[str, tuple[str, str, str]] = {
     # name: (param list, return type, body expression)
     "istrue": ("b BOOLEAN", "BOOLEAN", "b IS NOT NULL AND b"),
@@ -742,8 +748,6 @@ _SQL_FUNCTIONS: dict[str, tuple[str, str, str]] = {
         "ELSE concat(date_format(t, 'yyyy-MM-dd HH:mm:ss.SSSSSS'), '000') "
         "END",
     ),
-    # -- conditional aliases not shipped by this Spark --------------------
-    "zeroifnull": ("x DOUBLE", "DOUBLE", "coalesce(x, 0)"),
     # months_between (timestamp-functions-ir.cc MonthsBetween): the TIME
     # component is IGNORED (day-of-month diff / 31 only) and the result is
     # UNROUNDED — Spark includes time and rounds to 8 dp, so truncate to
@@ -1403,57 +1407,20 @@ def _sleep_udf(ms: pd.Series) -> pd.Series:
     return ms.map(f)
 
 
-def _register_utility_misc(spark: SparkSession) -> None:
-    """Utility-misc family (impala_functions.py:682-694): version, pid,
-    coordinator, current_session, sleep. typeof / current_database /
-    current_user / uuid are Spark-native with identical contracts.
-    version/pid/coordinator/current_session describe the COORDINATOR
-    (Spark: the driver), so they are resolved driver-side at registration
-    and registered as constant SQL bodies — no executor call needed."""
-    import os
-    import socket
+def register_all(spark: SparkSession) -> None:
+    """Register the Python-UDF kernels on this session (idempotent).
 
-    import pyspark
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    host = socket.gethostname()
-    consts = {
-        # version() is a Spark builtin (engine version string) — identical
-        # contract, the builtin wins via the except below.
-        "version": f"'hopspark 0.2 (pyspark {pyspark.__version__})'",
-        "pid": str(os.getpid()),
-        "coordinator": f"'{host}'",
-        "current_session": f"'{host}:{os.getpid()}'",
-    }
-    rtypes = {"version": "STRING", "pid": "INT", "coordinator": "STRING",
-              "current_session": "STRING"}
-    for name, body in consts.items():
-        try:
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}() "
-                f"RETURNS {rtypes[name]} RETURN {body}"
-            )
-        except AnalysisException:
-            pass  # native builtin with the same contract wins
-    spark.udf.register("sleep", _sleep_udf)
-    spark.udf.register("ds_format_value", _ds_format_value_udf)
-
-
-def register_all(spark: SparkSession, force: bool = False) -> None:
-    """Register the Impala-only function residue on this session (idempotent).
-
-    Registration is ~150 CREATE TEMPORARY FUNCTION statements (each a py4j
-    round trip + parse); callers invoke it defensively on every query, so a
-    repeat call on the same live session is skipped (r12, guide §1.2 —
-    fixed per-query overhead).  The marker is an attribute on the session
-    object itself: it dies with the session, so a fresh session always
-    registers.  Pass ``force=True`` to re-register regardless."""
-    if not force and getattr(spark, "_hopspark_fns_registered", False):
+    These are the Impala-only scalars SQL cannot express; no SQL-bodied
+    function calls them.  The dialect's SQL-bodied library is registered
+    by `register_sql_functions`.  A repeat call on the same live session
+    is skipped; the marker is an attribute on the session object itself,
+    so it dies with the session and a fresh session always registers."""
+    if getattr(spark, "_hopspark_fns_registered", False):
         return
     spark.udf.register("fnv_hash", _fnv_hash_udf)
     spark.udf.register("murmur_hash", _murmur_hash_udf)
-    _register_utility_misc(spark)
+    spark.udf.register("sleep", _sleep_udf)
+    spark.udf.register("ds_format_value", _ds_format_value_udf)
     spark.udf.register("gjo_wild", _gjo_wild_udf)
     spark.udf.register("wb_precise", _wb_precise_udf)
     spark.udf.register("dtos", _dtos_udf)
@@ -1465,16 +1432,41 @@ def register_all(spark: SparkSession, force: bool = False) -> None:
     spark.udf.register("jaro_winkler_similarity", _jaro_winkler_similarity_udf)
     spark.udf.register("jaro_winkler_distance", _jaro_winkler_distance_udf)
     spark.udf.register("damerau_levenshtein", _damerau_levenshtein_udf)
-    from pyspark.errors.exceptions.captured import AnalysisException
+    spark._hopspark_fns_registered = True
 
-    for name, (params, rtype, body) in _SQL_FUNCTIONS.items():
+
+def register_sql_functions(spark: SparkSession) -> None:
+    """Register the dialect's SQL-bodied functions on this session
+    (idempotent): every `_SQL_FUNCTIONS` entry, and the utility constants
+    pid, coordinator and current_session (impala_functions.py:682-694).
+
+    Only the translator emits these names, so `Engine.__init__` calls this
+    and a session that never runs `Engine.sql` does not pay for ~130
+    CREATE TEMPORARY FUNCTION statements (seconds on a cold JVM).  The
+    constants describe the COORDINATOR (Spark: the driver), so they are
+    resolved driver-side here and registered as constant SQL bodies.  A
+    repeat call on the same live session is skipped (session-object
+    marker, as in `register_all`)."""
+    if getattr(spark, "_hopspark_sql_fns_registered", False):
+        return
+    host = socket.gethostname()
+    functions = {
+        "pid": ("", "INT", str(os.getpid())),
+        "coordinator": ("", "STRING", f"'{host}'"),
+        "current_session": ("", "STRING", f"'{host}:{os.getpid()}'"),
+        **_SQL_FUNCTIONS,
+    }
+    for name, (params, rtype, body) in functions.items():
         try:
             spark.sql(
                 f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
                 f"RETURNS {rtype} RETURN {body}"
             )
-        except AnalysisException:
-            # Name already provided natively by this Spark version with the
-            # same semantics — the builtin wins.
-            pass
-    spark._hopspark_fns_registered = True
+        except AnalysisException as exc:
+            # a builtin of the same name, in a Spark version that ships
+            # one, wins; any other failure is a broken body
+            if exc.getCondition() != (
+                "USER_DEFINED_FUNCTIONS.CANNOT_REPLACE_NON_SQL_UDF_WITH_SQL_UDF"
+            ):
+                raise
+    spark._hopspark_sql_fns_registered = True

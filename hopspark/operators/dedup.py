@@ -593,13 +593,13 @@ def _simhash_pipeline(th: DataFrame, max_hamming: int, bucket_cap: int) -> DataF
     the bucket combinatorics → expansion back to all doc pairs (within an
     exact-dup group, hamming = 0).
 
-    Shared frames are localCheckpoint()ed like the MinHash pipeline (r12):
-    `base` feeds collapse + members, `rep_th` feeds the SimHash signature
-    fold, `members` feeds four expansion joins — one computation per stage
-    per run instead of one per consumer."""
+    Frames with more than one consumer are localCheckpoint()ed like the
+    MinHash pipeline: `base` feeds collapse + members, `members` feeds four
+    expansion joins — one computation per stage per run instead of one per
+    consumer.  `rep_th` has one consumer, the SimHash signature fold, so a
+    checkpoint there would only add an eager job."""
     base = materialize(th.withColumn("fp", F.xxhash64("th")))
     rep_th, members = _exact_groups(base, "th")
-    rep_th = materialize(rep_th)
     members = materialize(members)
     sigs = _simhash_from_tokens(rep_th)
     band_width = SIMHASH_BITS // SIMHASH_BANDS

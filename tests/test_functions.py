@@ -334,3 +334,64 @@ def test_refresh_invalidate_surface(spark, sf_dir):
     assert eng.sql("INVALIDATE METADATA").collect() == []
     assert eng.sql("INVALIDATE METADATA nation").collect() == []
     assert eng.sql("SELECT count(*) AS n FROM nation").collect()[0]["n"] == 25
+
+
+def test_sql_bodies_call_only_earlier_entries():
+    """register_sql_functions creates the bodies in `_SQL_FUNCTIONS` order,
+    and Spark analyzes a body when it is created, so a body may call only
+    entries defined before it."""
+    import re
+
+    from hopspark.functions.registry import _SQL_FUNCTIONS
+
+    order = {name: i for i, name in enumerate(_SQL_FUNCTIONS)}
+    callers = 0
+    for name, (_params, _rtype, body) in _SQL_FUNCTIONS.items():
+        code = re.sub(r"'(?:[^']|'')*'", "''", body)
+        called = {
+            c.lower() for c in re.findall(r"\b([A-Za-z_]\w*)\s*\(", code)
+        } & order.keys()
+        callers += bool(called)
+        late = sorted(c for c in called if order[c] >= order[name])
+        assert not late, f"{name} calls {late}, defined at or after it"
+    assert callers == 19
+
+
+def test_sql_library_is_registered_by_the_engine(spark):
+    """register_all registers only the Python-UDF kernels; the SQL-bodied
+    library and the utility constants come with an Engine. A new session
+    has its own temp-function registry and no registration markers."""
+    from hopspark.engine import Engine
+    from hopspark.functions import register_all
+    from hopspark.functions.registry import _SQL_FUNCTIONS
+
+    names = [*_SQL_FUNCTIONS, "pid", "coordinator", "current_session"]
+    session = spark.newSession()
+    register_all(session)
+    assert session.catalog.functionExists("fnv_hash")
+    assert [n for n in names if session.catalog.functionExists(n)] == []
+    Engine(spark=session, register_tables=False)
+    assert [n for n in names if not session.catalog.functionExists(n)] == []
+
+
+def test_sql_registration_raises_on_a_broken_body(spark, monkeypatch):
+    """Only a collision with a builtin of the same name is tolerated; a
+    body that fails analysis raises instead of leaving its name unset."""
+    from pyspark.errors.exceptions.captured import AnalysisException
+
+    from hopspark.functions import registry
+
+    monkeypatch.setattr(
+        registry, "_SQL_FUNCTIONS", {"version": ("", "STRING", "'x'")}
+    )
+    session = spark.newSession()
+    registry.register_sql_functions(session)
+    assert session.sql("SELECT version() AS v").head().v != "x"
+
+    monkeypatch.setattr(
+        registry,
+        "_SQL_FUNCTIONS",
+        {"broken_body": ("x INT", "INT", "no_such_function(x)")},
+    )
+    with pytest.raises(AnalysisException):
+        registry.register_sql_functions(spark.newSession())
