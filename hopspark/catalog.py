@@ -146,6 +146,7 @@ def _events_ts_is_int64(path: str) -> bool:
     schema.  Failed sniffs (e.g. file not written yet) are NOT cached, so a
     later read re-probes instead of inheriting a stale False.
     """
+    import pyarrow as pa
     import pyarrow.parquet as pq
     import pyarrow.types as pt
 
@@ -160,7 +161,8 @@ def _events_ts_is_int64(path: str) -> bool:
             field = pq.read_schema(probe).field("ts")
             _EVENTS_TS_IS_INT64[key] = pt.is_integer(field.type)
         return _EVENTS_TS_IS_INT64[key]
-    except Exception:
+    except (OSError, KeyError, pa.ArrowInvalid):
+        # no file yet, no ts column, or not a parquet file
         return False
 
 

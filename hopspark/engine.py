@@ -37,7 +37,7 @@ from hopspark.dialect.translate import (
     untokenize,
 )
 from hopspark.functions import register_all, register_sql_functions
-from hopspark.session import get_spark
+from hopspark.session import get_spark, warming
 
 
 class Engine(AlterTableMixin):
@@ -50,7 +50,14 @@ class Engine(AlterTableMixin):
         register_tables: bool = True,
         options: dict[str, bool] | None = None,
     ) -> None:
-        """`options` mirrors the reference's query options
+        """Bind `spark` (default: `get_spark()`): register the pandas-UDF
+        kernels, the dialect's SQL library and, with `register_tables`,
+        the `sf_dir` tables.  On a session that does not hold the SQL
+        library yet, Catalyst is warmed on a side session while these
+        run (`session.warming`), so the first statements do not pay the
+        JVM's cold start; an error of that warm-up raises here.
+
+        `options` mirrors the reference's query options
         (be/src/service/query-options.h); supported:
         appx_count_distinct — rewrite COUNT(DISTINCT x) to the approximate
         ndv (fe/.../rewrite/CountDistinctToNdvRule.java)."""
@@ -78,10 +85,11 @@ class Engine(AlterTableMixin):
         # keyed by lowercased table name: table properties, column comments
         self._tbl_props: dict[str, dict[str, str]] = {}
         self._col_comments: dict[str, dict[str, str]] = {}
-        register_all(self.spark)
-        register_sql_functions(self.spark)
-        if register_tables:
-            catalog.register(self.spark, sf_dir)
+        with warming(self.spark):
+            register_all(self.spark)
+            register_sql_functions(self.spark)
+            if register_tables:
+                catalog.register(self.spark, sf_dir)
 
     # -- query surface ------------------------------------------------------
 
@@ -1107,7 +1115,7 @@ class Engine(AlterTableMixin):
         nested fixture."""
         try:
             s = df._jdf.queryExecution().analyzed().toString()
-        except Exception:  # noqa: BLE001 - cannot prove safe
+        except Py4JError:  # the plan cannot be read: cannot prove safe
             return True
         for m in self._NONDET_FN_RE.finditer(s):
             if m.group(1) in ("collect_list", "collect_set"):

@@ -24,6 +24,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hopspark.session import SQL_LIBRARY_MARKER
+
 _FNV64_PRIME = 0x100000001B3
 _FNV64_SEED = 0xCBF29CE484222325
 _MASK64 = (1 << 64) - 1
@@ -1177,7 +1179,7 @@ def _gjo_wild_udf(js: pd.Series, path: pd.Series) -> pd.Series:
             return None
         try:
             doc = _json.loads(str(doc_s))
-        except Exception:
+        except ValueError:  # not a JSON document
             return None
         cur = [doc]
         for kind, arg in steps:
@@ -1447,7 +1449,7 @@ def register_sql_functions(spark: SparkSession) -> None:
     resolved driver-side here and registered as constant SQL bodies.  A
     repeat call on the same live session is skipped (session-object
     marker, as in `register_all`)."""
-    if getattr(spark, "_hopspark_sql_fns_registered", False):
+    if getattr(spark, SQL_LIBRARY_MARKER, False):
         return
     host = socket.gethostname()
     functions = {
@@ -1469,4 +1471,4 @@ def register_sql_functions(spark: SparkSession) -> None:
                 "USER_DEFINED_FUNCTIONS.CANNOT_REPLACE_NON_SQL_UDF_WITH_SQL_UDF"
             ):
                 raise
-    spark._hopspark_sql_fns_registered = True
+    setattr(spark, SQL_LIBRARY_MARKER, True)

@@ -23,12 +23,50 @@ Local-mode notes: tests/bench run on local[N]; on a real cluster only
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 # Columns under this many bytes on the build side should broadcast; AQE will
 # also convert to broadcast at runtime when post-shuffle stats allow.
 _BROADCAST_THRESHOLD = str(64 * 1024 * 1024)
+
+
+#: The session attribute `register_sql_functions` sets once the session
+#: holds the dialect's SQL library; `warming` reads it.
+SQL_LIBRARY_MARKER = "_hopspark_sql_fns_registered"
+
+#: Job-free statements that warm Catalyst (analysis, optimization, planning
+#: and the collect path) for a new session's first queries.  Each reads a
+#: FROM VALUES source, which Catalyst folds to a LocalRelation, so all of
+#: it runs on the driver and no Spark job is launched
+#: (tests/test_warming.py pins that).  They cover the dialect's expression
+#: families: arithmetic, DECIMAL and CAST; string, LIKE/regexp and CASE;
+#: date/time.
+WARMUP_STATEMENTS = (
+    "SELECT a + b * 2 - a % 3 AS i, a / b AS q, a DIV b AS dv, abs(-a) AS ab,"
+    " pow(b, 2) AS p, d * 3 + 1.5 AS dm, round(d, 2) AS r,"
+    " CAST(d AS DECIMAL(20,4)) / 7 AS dq, CAST(s AS INT) AS ci,"
+    " CAST(a AS STRING) AS cs, CAST(d AS DOUBLE) AS cd, CAST(s AS BIGINT) AS cb"
+    " FROM VALUES (7, 2, CAST(12.345 AS DECIMAL(9,3)), '42') AS t(a, b, d, s)"
+    " WHERE a > b",
+    "SELECT concat(upper(s), lower(s)) AS c, substr(s, 2, 3) AS ss,"
+    " length(s) AS l, trim(s) AS tr, lpad(s, 8, 'x') AS lp, instr(s, 'b') AS ix,"
+    " s LIKE 'ab%' AS lk, s RLIKE '^a.*z$' AS rl,"
+    " regexp_replace(s, '[aeiou]', '_') AS rr, regexp_extract(s, '(b+)', 1) AS re,"
+    " CASE WHEN n > 1 THEN 'big' WHEN n IS NULL THEN NULL ELSE 'small' END AS cw,"
+    " coalesce(m, n) AS co, if(n = 1, s, NULL) AS f"
+    " FROM VALUES ('abcz', 3, CAST(NULL AS INT)) AS t(s, n, m)",
+    "SELECT date_add(d, 3) AS da, datediff(d, DATE '2020-01-01') AS dd,"
+    " year(ts) AS y, month(ts) AS mo, hour(ts) AS h, add_months(d, 1) AS am,"
+    " date_format(ts, 'yyyy-MM-dd HH:mm') AS df, unix_timestamp(ts) AS u,"
+    " CAST(ts AS DATE) AS cdt, CAST(d AS TIMESTAMP) AS cts, trunc(d, 'MM') AS tm,"
+    " ts + INTERVAL 2 HOURS AS ti"
+    " FROM VALUES (DATE '2024-01-31', TIMESTAMP '2024-01-31 12:34:56') AS t(d, ts)",
+)
 
 
 def default_parallelism() -> int:
@@ -96,3 +134,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def warming(spark: SparkSession) -> Iterator[None]:
+    """Warm the JVM's Catalyst on a side session while the body runs.
+
+    A new session's first statements pay for class loading and JIT of
+    Catalyst, several times a warm statement's cost.  The body is set-up
+    that keeps the driver JVM about one core busy (the SQL library's
+    registration), so one `InheritableThread` collects `WARMUP_STATEMENTS`
+    beside it.  They run on `spark.newSession()`, whose own catalog takes
+    none of the body's catalog locks and keeps no state of theirs; the
+    JVM thread py4j pins to it ends with it.  On exit the
+    thread is stopped before its next statement and joined; a warm-up
+    error is raised then, unless the body raised first.
+
+    Nothing runs for a session that already holds the SQL library
+    (`SQL_LIBRARY_MARKER`): it has been set up, and its JVM has warmed.
+    """
+    if getattr(spark, SQL_LIBRARY_MARKER, False):
+        yield
+        return
+    side = spark.newSession()
+    stop = threading.Event()
+    errors: list[Exception] = []
+
+    def run() -> None:
+        try:
+            for stmt in WARMUP_STATEMENTS:
+                if stop.is_set():
+                    return
+                side.sql(stmt).collect()
+        except Exception as exc:  # noqa: BLE001 - raised again on exit
+            errors.append(exc)
+
+    thread = InheritableThread(target=run)
+    thread.start()
+    try:
+        yield
+    finally:
+        stop.set()
+        thread.join()
+    if errors:
+        raise errors[0]

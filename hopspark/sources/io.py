@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -176,6 +177,12 @@ def read_orc(spark: SparkSession, path: str, schema: T.StructType | None = None)
     return reader.orc(path)
 
 
+#: The condition of the AnalysisException Spark 4.1 raises when the
+#: spark-avro data source is not on the classpath ("Failed to find data
+#: source: avro").
+_NO_AVRO_SOURCE = "_LEGACY_ERROR_TEMP_1139"
+
+
 def read_avro(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
@@ -184,12 +191,14 @@ def read_avro(
     pure-Python container codec in avro_codec.py (binaryFile + mapInPandas,
     name-based schema resolution with numeric promotions — the same
     resolution rules the reference scanner implements)."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
         return reader.format("avro").load(path)
-    except Exception:
+    except AnalysisException as exc:
+        if exc.getCondition() != _NO_AVRO_SOURCE:
+            raise
         from hopspark.sources.avro_codec import read_avro_native
 
         return read_avro_native(spark, path, schema)

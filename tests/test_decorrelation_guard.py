@@ -237,3 +237,27 @@ def test_decimal_avg_result_type(spark):
     assert df.schema["a"].dataType.simpleString() == "decimal(16,6)"
     [row] = df.collect()
     assert float(row.a) == pytest.approx(150.375)
+
+
+class _Plan:
+    """A stand-in DataFrame whose plan read raises ``exc``."""
+
+    def __init__(self, exc):
+        self._exc = exc
+
+    @property
+    def _jdf(self):
+        raise self._exc
+
+
+def test_unreadable_plan_counts_as_order_nondet(spark):
+    from py4j.protocol import Py4JError
+
+    eng = Engine(spark, register_tables=False)
+    assert eng._plan_is_order_nondet(_Plan(Py4JError("gateway gone")))
+
+
+def test_plan_read_bug_is_not_taken_for_order_nondet(spark):
+    eng = Engine(spark, register_tables=False)
+    with pytest.raises(RuntimeError, match="bug"):
+        eng._plan_is_order_nondet(_Plan(RuntimeError("bug")))

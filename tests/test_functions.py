@@ -395,3 +395,29 @@ def test_sql_registration_raises_on_a_broken_body(spark, monkeypatch):
     )
     with pytest.raises(AnalysisException):
         registry.register_sql_functions(spark.newSession())
+
+
+def test_gjo_wild_reads_bad_json_as_null():
+    import pandas as pd
+
+    from hopspark.functions.registry import _gjo_wild_udf
+
+    out = _gjo_wild_udf.func(
+        pd.Series(['{"a": 1, "b": 2}', "{not json"]), pd.Series(["$.*", "$.*"])
+    )
+    assert out.tolist() == ["[1,2]", None]
+
+
+def test_gjo_wild_raises_unexpected_errors(monkeypatch):
+    import json
+
+    import pandas as pd
+
+    from hopspark.functions.registry import _gjo_wild_udf
+
+    def boom(doc):
+        raise RuntimeError("bug in the parse")
+
+    monkeypatch.setattr(json, "loads", boom)
+    with pytest.raises(RuntimeError, match="bug in the parse"):
+        _gjo_wild_udf.func(pd.Series(['{"a": 1}']), pd.Series(["$.*"]))

@@ -640,3 +640,20 @@ def test_text_escaped_sink_adversarial(spark, tmpdir_repo):
     assert back[2].s is None and back[2].t == "back\\slash"
     assert back[3].s == "\\N"  # escaped marker stays a literal string
     assert back[4].s == "trail\\" and back[4].t is None
+
+
+def test_avro_read_error_is_not_taken_for_a_missing_source(spark, monkeypatch):
+    """Only Spark's "Failed to find data source: avro" falls back to the
+    native codec; any other read error of the avro source is raised."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    def load(self, path=None, format=None, schema=None, **options):
+        raise AnalysisException(
+            message=f"Path does not exist: {path}", errorClass="PATH_NOT_FOUND"
+        )
+
+    monkeypatch.setattr(DataFrameReader, "load", load)
+    with pytest.raises(AnalysisException) as info:
+        read_avro(spark, "/no/such/avro")
+    assert info.value.getCondition() == "PATH_NOT_FOUND"

@@ -338,3 +338,34 @@ def test_append_stream_sink_removed_at_exit(spark, sf_dir, monkeypatch):
     for fn, args, kwargs in registered:
         fn(*args, **kwargs)
     assert not os.path.exists(sinks[0])
+
+
+def test_events_ts_sniff_reads_a_bad_footer_as_not_int64(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hopspark.catalog import _events_ts_is_int64
+
+    p = tmp_path / "events.parquet"
+    p.write_bytes(b"not a parquet file")
+    assert _events_ts_is_int64(str(p)) is False
+    # no ts column
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64())}), p)
+    assert _events_ts_is_int64(str(p)) is False
+
+
+def test_events_ts_sniff_raises_unexpected_errors(tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hopspark.catalog import _events_ts_is_int64
+
+    p = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"ts": pa.array([1], pa.int64())}), p)
+
+    def boom(path):
+        raise RuntimeError("bug in the sniff")
+
+    monkeypatch.setattr(pq, "read_schema", boom)
+    with pytest.raises(RuntimeError, match="bug in the sniff"):
+        _events_ts_is_int64(str(p))
